@@ -24,108 +24,102 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-EDGES_SCHEMA = T.StructType([
-    T.StructField("src_bundle", T.StringType(), False),
-    T.StructField("src_version", T.StringType(), False),
-    T.StructField("dep_type", T.StringType(), False),
-    T.StructField("dep_pkg", T.StringType(), False),
-    T.StructField("dep_range", T.StringType(), False),
-])
-
-VERSIONS_SCHEMA = T.StructType([
-    T.StructField("pkg", T.StringType(), False),
-    T.StructField("version", T.StringType(), False),
-])
-
-TAGS_SCHEMA = T.StructType([
-    T.StructField("pkg", T.StringType(), False),
-    T.StructField("tag", T.StringType(), False),
-    T.StructField("tag_version", T.StringType(), False),
-    # the tag's FULLY-resolved concrete version: multi-level tag chains
-    # ("next" -> "beta" -> "1.2.3") are followed at extraction time,
-    # where the whole package doc (versions + all tags) is local to the
-    # row — zero extra shuffles, exact kernel recursion semantics
-    # (kernel/pipeline.py resolve_module_version, NpmBundle.js:41-59)
-    T.StructField("tag_resolved", T.StringType(), True),
-])
-
 _DEP_KEYS = ("dependencies", "devDependencies", "peerDependencies",
              "optionalDependencies")
 
+# One row per fact of a manifest, tagged by ``row_kind``: "edge" rows
+# fill (pkg, version) as (src_bundle, src_version) plus the dep_*
+# columns, "version" rows (pkg, version), "tag" rows (pkg, tag_*).
+# ``tag_resolved`` is the tag's FULLY-resolved concrete version:
+# multi-level tag chains ("next" -> "beta" -> "1.2.3") are followed at
+# extraction time, where the whole package doc (versions + all tags) is
+# local to the row — zero extra shuffles, exact kernel recursion
+# semantics (kernel/pipeline.py resolve_module_version,
+# NpmBundle.js:41-59).
+MANIFEST_ROWS_SCHEMA = T.StructType([
+    T.StructField("row_kind", T.StringType(), False),
+    T.StructField("pkg", T.StringType(), True),
+    T.StructField("version", T.StringType(), True),
+    T.StructField("dep_type", T.StringType(), True),
+    T.StructField("dep_pkg", T.StringType(), True),
+    T.StructField("dep_range", T.StringType(), True),
+    T.StructField("tag", T.StringType(), True),
+    T.StructField("tag_version", T.StringType(), True),
+    T.StructField("tag_resolved", T.StringType(), True),
+])
 
-def _edges_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _manifest_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Parse each manifest once and emit its edge, version and tag rows."""
     from ..functions.semver import valid_range
+    from ..kernel.pipeline import resolve_module_version
 
-    cols = [f.name for f in EDGES_SCHEMA.fields]
+    cols = [f.name for f in MANIFEST_ROWS_SCHEMA.fields]
     for pdf in batches:
         rows = []
         for doc_json in pdf["doc_json"]:
             doc = jsonlib.loads(doc_json)
             name = doc.get("name") or doc.get("_id")
             for ver, manifest in (doc.get("versions") or {}).items():
+                rows.append(("version", name, ver, None, None, None, None, None, None))
                 if not isinstance(manifest, dict):
                     continue
                 for dep_type in _DEP_KEYS:
                     for pkg, rng in (manifest.get(dep_type) or {}).items():
                         if isinstance(rng, str) and valid_range(rng):
-                            rows.append((name, ver, dep_type, pkg, rng))
+                            rows.append(("edge", name, ver, dep_type, pkg, rng,
+                                         None, None, None))
+            for tag, ver in (doc.get("dist-tags") or {}).items():
+                # follow the chain: the tag's value may itself be a tag
+                # (or a range) — exact kernel recursion, depth-capped
+                rows.append(("tag", name, None, None, None, None, tag, ver,
+                             resolve_module_version(doc, ver)))
         yield pd.DataFrame(rows, columns=cols)
+
+
+def manifest_rows(docs: DataFrame) -> DataFrame:
+    """The npm_manifest docs parsed once into tagged rows
+    (MANIFEST_ROWS_SCHEMA). The edge, version and tag tables are JVM
+    projections of it; checkpoint it when more than one is needed."""
+    return (
+        docs.filter(F.col("doc_kind") == "npm_manifest")
+        .select("doc_json")
+        .mapInPandas(_manifest_partition, schema=MANIFEST_ROWS_SCHEMA)
+    )
+
+
+def edges_of(rows: DataFrame) -> DataFrame:
+    return rows.filter(F.col("row_kind") == "edge").select(
+        F.col("pkg").alias("src_bundle"), F.col("version").alias("src_version"),
+        "dep_type", "dep_pkg", "dep_range")
+
+
+def versions_of(rows: DataFrame) -> DataFrame:
+    return (rows.filter(F.col("row_kind") == "version")
+            .select("pkg", "version")
+            .dropDuplicates(["pkg", "version"]))
+
+
+def tags_of(rows: DataFrame) -> DataFrame:
+    return (rows.filter(F.col("row_kind") == "tag")
+            .select("pkg", "tag", "tag_version", "tag_resolved")
+            .dropDuplicates(["pkg", "tag"]))
 
 
 def dependency_edges(docs: DataFrame) -> DataFrame:
     """(src_bundle, src_version, dep_type, dep_pkg, dep_range) for every
     semver-range dependency in npm_manifest docs."""
-    return (
-        docs.filter(F.col("doc_kind") == "npm_manifest")
-        .select("doc_json")
-        .mapInPandas(_edges_partition, schema=EDGES_SCHEMA)
-    )
-
-
-def _versions_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in VERSIONS_SCHEMA.fields]
-    for pdf in batches:
-        rows = []
-        for doc_json in pdf["doc_json"]:
-            doc = jsonlib.loads(doc_json)
-            name = doc.get("name") or doc.get("_id")
-            for ver in (doc.get("versions") or {}).keys():
-                rows.append((name, ver))
-        yield pd.DataFrame(rows, columns=cols)
+    return edges_of(manifest_rows(docs))
 
 
 def version_rows(docs: DataFrame) -> DataFrame:
-    return (
-        docs.filter(F.col("doc_kind") == "npm_manifest")
-        .select("doc_json")
-        .mapInPandas(_versions_partition, schema=VERSIONS_SCHEMA)
-        .dropDuplicates(["pkg", "version"])
-    )
-
-
-def _tags_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..kernel.pipeline import resolve_module_version
-
-    cols = [f.name for f in TAGS_SCHEMA.fields]
-    for pdf in batches:
-        rows = []
-        for doc_json in pdf["doc_json"]:
-            doc = jsonlib.loads(doc_json)
-            name = doc.get("name") or doc.get("_id")
-            for tag, ver in (doc.get("dist-tags") or {}).items():
-                # follow the chain: the tag's value may itself be a tag
-                # (or a range) — exact kernel recursion, depth-capped
-                rows.append((name, tag, ver, resolve_module_version(doc, ver)))
-        yield pd.DataFrame(rows, columns=cols)
+    """(pkg, version): every version key of every manifest, deduplicated."""
+    return versions_of(manifest_rows(docs))
 
 
 def dist_tag_rows(docs: DataFrame) -> DataFrame:
-    return (
-        docs.filter(F.col("doc_kind") == "npm_manifest")
-        .select("doc_json")
-        .mapInPandas(_tags_partition, schema=TAGS_SCHEMA)
-        .dropDuplicates(["pkg", "tag"])
-    )
+    """(pkg, tag, tag_version, tag_resolved): see MANIFEST_ROWS_SCHEMA."""
+    return tags_of(manifest_rows(docs))
 
 
 @F.pandas_udf(T.StringType())
@@ -158,7 +152,7 @@ def resolve_ranges(edges: DataFrame, versions: DataFrame,
     (AQE picks broadcast when the pair table is small, which it almost
     always is relative to the edges). Dist-tag fallback coalesces the
     tag's pre-resolved version (multi-level chains already followed at
-    extraction, see TAGS_SCHEMA.tag_resolved); exact-before-tag order
+    extraction, see MANIFEST_ROWS_SCHEMA); exact-before-tag order
     matches NpmBundle.js:41-59."""
     vsets = versions.groupBy("pkg").agg(
         F.sort_array(F.collect_list("version")).alias("version_set"))

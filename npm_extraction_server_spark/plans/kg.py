@@ -11,7 +11,10 @@ Scale notes (the 100 TB design):
 - all Python work is Arrow-batched ``mapInPandas`` (no per-row UDFs);
   everything after the triple stage is built-in column ops.
 - per-partition lineage rows (A6/SN2) are derived from the same rows
-  that form the triples table — one pass, no second job.
+  that form the triples table: the builds (plans/warehouse.py
+  materialize_graph, plans/resume.py run_resumable) materialize the
+  fused stage once, and the triples, errors and lineage tables are JVM
+  reads of that one result — one Python pass over the pages.
 - failed bundles emit an error row instead of triples (T2 per-bundle
   atomicity; mirrors the -e/-E sidecar files,
   /root/reference/bin/exportTriples.js:168-180).

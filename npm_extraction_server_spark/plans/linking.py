@@ -225,8 +225,11 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
 
 def _cc_iterate(labels: DataFrame, sym: DataFrame,
                 max_rounds: int) -> DataFrame:
+    from .graph import _stats_fresh
+
     for _ in range(max_rounds):
-        # (1) neighbor min
+        # (1) neighbor min; the round's input label rides along as
+        # p_label so convergence is counted on the checkpoint, no join
         neighbor_min = (
             sym.join(labels, sym.dst == labels.entity_iri)
             .groupBy("src")
@@ -239,6 +242,7 @@ def _cc_iterate(labels: DataFrame, sym: DataFrame,
                 F.least(F.col("canonical_id"),
                         F.coalesce(F.col("nbr_min"), F.col("canonical_id")))
                 .alias("canonical_id"),
+                F.col("canonical_id").alias("p_label"),
             )
         )
         # (2) pointer doubling: l(v) <- l(l(v)); halves path lengths each
@@ -252,19 +256,11 @@ def _cc_iterate(labels: DataFrame, sym: DataFrame,
                 F.least(F.col("canonical_id"),
                         F.coalesce(F.col("rep_label"), F.col("canonical_id")))
                 .alias("new_label"),
-                F.col("canonical_id").alias("old_label"),
+                "p_label",
             )
         )
-        from .graph import _stats_fresh
-
         updated = _stats_fresh(updated)
-        prev = labels.select(F.col("entity_iri").alias("p_iri"),
-                             F.col("canonical_id").alias("p_label"))
-        n_changed = (
-            updated.join(prev, updated.entity_iri == prev.p_iri)
-            .filter(F.col("new_label") != F.col("p_label"))
-            .count()
-        )
+        n_changed = updated.filter(F.col("new_label") != F.col("p_label")).count()
         labels = updated.select("entity_iri", F.col("new_label").alias("canonical_id"))
         if n_changed == 0:
             return labels

@@ -54,13 +54,17 @@ def run_resumable(pages: DataFrame, out_dir: str, n_chunks: int = 8,
         chunk_pages = pages.filter(_chunk_col(n_chunks) == chunk)
         # fused single python stage (BENCH lesson 1: chained
         # extract->triples mapInPandas stages pin 2 workers per task
-        # slot — measured CPU oversubscription)
-        raw = pages_to_triples(chunk_pages, root)
-        triples, _ = split_errors(raw)
-        (triples.withColumn("chunk", F.lit(chunk))
-         .write.mode("overwrite").parquet(f"{out_dir}/triples/chunk={chunk}"))
-        (lineage(raw).withColumn("chunk", F.lit(chunk))
-         .write.mode("overwrite").parquet(f"{out_dir}/lineage/chunk={chunk}"))
+        # slot — measured CPU oversubscription), computed once per chunk:
+        # the triples write fills the cache the lineage write reads
+        raw = pages_to_triples(chunk_pages, root).persist()
+        try:
+            triples, _ = split_errors(raw)
+            (triples.withColumn("chunk", F.lit(chunk))
+             .write.mode("overwrite").parquet(f"{out_dir}/triples/chunk={chunk}"))
+            (lineage(raw).withColumn("chunk", F.lit(chunk))
+             .write.mode("overwrite").parquet(f"{out_dir}/lineage/chunk={chunk}"))
+        finally:
+            raw.unpersist()
         # commit marker LAST: chunk is either fully present or redone
         Path(out_dir, f"_chunk_{chunk}.done").write_text(
             json.dumps({"chunk": chunk}))

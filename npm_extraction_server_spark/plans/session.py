@@ -13,6 +13,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def _default_driver_mem() -> str:
+    """Half of the memory this host gives the process, capped at 48g:
+    ``MemTotal``, or the cgroup v2 ``memory.max`` when that is lower.
+    48g when neither can be read."""
+    try:
+        with open("/proc/meminfo") as fh:
+            total = next(int(line.split()[1]) * 1024 for line in fh
+                         if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{_DRIVER_MEM_CAP_MB}m"
+    try:
+        with open("/sys/fs/cgroup/memory.max") as fh:
+            limit = fh.read().strip()
+        if limit != "max":
+            total = min(total, int(limit))
+    except (OSError, ValueError):
+        pass
+    return f"{min(total // (2 * 1024 * 1024), _DRIVER_MEM_CAP_MB)}m"
+
 
 def get_spark(app: str = "npm_extraction_server_spark",
               master: str | None = None,
@@ -22,7 +44,9 @@ def get_spark(app: str = "npm_extraction_server_spark",
     """``java_opts``: extra -XX flags appended after the ParallelGC
     default (the simulated-executor benchmark right-sizes GC/JIT thread
     counts to its CPU pin). ``driver_mem``: override the default heap —
-    a 2-core pinned simulated executor should not claim 48g."""
+    a 2-core pinned simulated executor should not claim 48g. Without
+    it, ``SPARK_GRAFT_DRIVER_MEM`` sets the heap, else
+    ``_default_driver_mem()`` sizes it to the host."""
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -33,7 +57,8 @@ def get_spark(app: str = "npm_extraction_server_spark",
     # G1 collapsed at 32 concurrent tasks (measured 2.8x slower than
     # ParallelGC on the fused pipeline)
     jopts = ("-XX:+UseParallelGC " + java_opts).strip()
-    mem = driver_mem or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    mem = (driver_mem or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+           or _default_driver_mem())
     builder = (
         SparkSession.builder.master(master)
         .appName(app)

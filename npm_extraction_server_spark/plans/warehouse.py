@@ -14,10 +14,18 @@ needed on a real cluster):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .kg import extract_docs, lineage, run_pipeline, split_errors, write_triples
+from .kg import (
+    engine_triples,
+    extract_docs,
+    lineage,
+    maybe_repartition_pages,
+    pages_to_triples,
+    split_errors,
+    write_triples,
+)
 from .linking import canonicalize_triples, link_entities
 
 
@@ -26,19 +34,21 @@ def max_satisfying_edges(docs: DataFrame,
     """J1 over the whole corpus: dependency ranges resolved against the
     corpus's version sets, materialized as npm:maxSatisfying triples
     (the 307-redirect triple of /root/reference/bin/index.js:167-171,
-    batch-wide). Returns rows in the triples-table shape."""
+    batch-wide). Returns rows in the triples-table shape.
+
+    Each manifest is parsed once: its tagged rows are checkpointed, and
+    the edge, version and dist-tag tables are JVM projections of them."""
     from ..operators.semver_join import (
-        dependency_edges,
-        dist_tag_rows,
+        edges_of,
+        manifest_rows,
         max_satisfying_triples,
         resolve_ranges,
-        version_rows,
+        tags_of,
+        versions_of,
     )
 
-    edges = dependency_edges(docs)
-    versions = version_rows(docs)
-    tags = dist_tag_rows(docs)
-    resolved = resolve_ranges(edges, versions, tags, root)
+    rows = manifest_rows(docs).localCheckpoint(eager=True)
+    resolved = resolve_ranges(edges_of(rows), versions_of(rows), tags_of(rows), root)
     t = max_satisfying_triples(resolved, root)
     return t.select(
         F.lit(None).cast("string").alias("src_url"),
@@ -95,18 +105,26 @@ def materialize_graph(pages: DataFrame, out_dir: str,
                       root: str = "http://example.org/",
                       n_buckets: int = 64, do_linking: bool = True,
                       resolve_ranges: bool = True) -> dict:
-    """pages -> {triples, entities, lineage, errors} tables on disk."""
+    """pages -> {triples, entities, lineage, errors} tables on disk.
+
+    Each Python stage runs once per build. The fused pages->triples
+    stage is materialized by one eager checkpoint, which the triples,
+    errors and lineage tables all read. The engine dimension is
+    generated on the driver and unioned in. Semver resolution extracts
+    the docs once and parses each manifest once (max_satisfying_edges).
+    The returned row counts are observed on the two writes."""
     spark = pages.sparkSession
-    result = run_pipeline(pages, root=root)
-    raw = result["raw"]
+    pages_p = maybe_repartition_pages(pages)
+    raw = pages_to_triples(pages_p, root).localCheckpoint(eager=True)
     triples, errors = split_errors(raw)
-    triples = triples.unionByName(
-        result["triples"].filter(F.col("bundle") == "engines"))
+    triples = triples.unionByName(engine_triples(spark, root).drop("error"))
     if resolve_ranges:
         triples = triples.unionByName(
-            max_satisfying_edges(result["docs"], root).withColumn(
+            max_satisfying_edges(extract_docs(pages_p), root).withColumn(
                 "part_id", F.col("part_id").cast("int")))
-    triples = triples.localCheckpoint(eager=True)  # one pass over pages
+    # linking reads the triples several times; keep the semver join and
+    # its Python UDFs to one run
+    triples = triples.localCheckpoint(eager=True)
 
     if do_linking:
         entities = link_entities(triples)
@@ -116,16 +134,20 @@ def materialize_graph(pages: DataFrame, out_dir: str,
         entities = None
         canonical = triples
 
-    write_triples(canonical, f"{out_dir}/triples", n_buckets=n_buckets)
+    n_triples = Observation("triples")
+    write_triples(canonical.observe(n_triples, F.count(F.lit(1)).alias("n")),
+                  f"{out_dir}/triples", n_buckets=n_buckets)
+    n_entities = 0
     if entities is not None:
-        entities.write.mode("overwrite").parquet(f"{out_dir}/entities")
+        seen = Observation("entities")
+        (entities.observe(seen, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").parquet(f"{out_dir}/entities"))
+        n_entities = seen.get["n"]
     lineage(raw).write.mode("overwrite").parquet(f"{out_dir}/lineage")
     errors.write.mode("overwrite").parquet(f"{out_dir}/errors")
-
-    back = spark.read.parquet(f"{out_dir}/triples")
     return {
-        "n_triples": back.count(),
-        "n_entities": entities.count() if entities is not None else 0,
+        "n_triples": n_triples.get["n"],
+        "n_entities": n_entities,
         "out_dir": out_dir,
     }
 
