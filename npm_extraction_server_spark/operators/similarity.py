@@ -20,58 +20,54 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _dot(a, b, dim: int | None = None):
+def _dot(a, b):
     """Dot product of two array columns via the higher-order
     aggregate/zip_with fold. Round-6 note: an unrolled 64-term
     element_at chain was A/B-measured ~3x SLOWER (cosine_topk 0.65 s
     -> 2.0 s; dedup_minhash est 2.9 s -> 8.9 s at sf1.0) — Spark 4.1
     walks the array once inside the HOF while per-term element_at
     re-does null/bounds handling per element — so the fold stays the
-    implementation; ``dim`` is accepted and ignored (callers document
-    fixed-width inputs with it)."""
-    del dim
+    implementation."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, v: acc + v,
     )
 
 
-def _norm(a, dim: int | None = None):
+def _norm(a):
     """L2 norm; same HOF-over-unrolled finding as ``_dot``."""
-    del dim
     return F.sqrt(F.aggregate(
         F.transform(a, lambda x: x.cast("double") * x.cast("double")),
         F.lit(0.0), lambda acc, v: acc + v,
     ))
 
 
-def with_norms(embeddings: DataFrame, vec_col: str = "embedding",
-               dim: int | None = None) -> DataFrame:
-    return embeddings.withColumn("norm", _norm(F.col(vec_col), dim))
+def with_norms(embeddings: DataFrame,
+               vec_col: str = "embedding") -> DataFrame:
+    return embeddings.withColumn("norm", _norm(F.col(vec_col)))
 
 
 def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                vec_col: str = "embedding", id_col: str = "vec_id",
-                dim: int | None = None) -> DataFrame:
+                vec_col: str = "embedding",
+                id_col: str = "vec_id") -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
     ``queries`` is small -> broadcast; the big side streams.
 
     Round 6: the corpus side is ``spread_partitions``-ed first — the
     driver-provided single-row-group parquet yields a 1-partition scan,
     which serialized the whole O(N*Q) scoring stage onto one core
-    (guide §2.5 input skew; measured 1.3 s -> 0.35 s at sf1.0).
-    ``dim`` (optional) documents the fixed vector width; the dot/norm
-    sums stay the HOF fold (see ``_dot`` for the unroll A/B)."""
+    (guide §2.5 input skew; measured 1.3 s -> 0.35 s at sf1.0). The
+    dot/norm sums are the HOF fold (see ``_dot`` for the unroll A/B)."""
     from .dedup import spread_partitions
 
     base = with_norms(
-        spread_partitions(embeddings, id_col), vec_col, dim).select(
+        spread_partitions(embeddings, id_col), vec_col).select(
         F.col(id_col).alias("item_id"), F.col(vec_col).alias("item_vec"), "norm")
-    q = with_norms(queries, vec_col, dim).select(
+    q = with_norms(queries, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec"),
         F.col("norm").alias("qnorm"))
     joined = base.crossJoin(F.broadcast(q)).filter(F.col("item_id") != F.col("query_id"))
-    sim = _dot(F.col("item_vec"), F.col("query_vec"), dim) / (F.col("norm") * F.col("qnorm"))
+    sim = _dot(F.col("item_vec"), F.col("query_vec")) / (F.col("norm") * F.col("qnorm"))
     scored = joined.select("query_id", "item_id", F.round(sim, 6).alias("cosine"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("item_id"))
     return (
@@ -83,7 +79,7 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
 
 def cosine_range(embeddings: DataFrame, queries: DataFrame,
                  threshold: float = 0.8, vec_col: str = "embedding",
-                 id_col: str = "vec_id", dim: int | None = None) -> DataFrame:
+                 id_col: str = "vec_id") -> DataFrame:
     """Exact cosine RANGE search — every corpus vector within
     ``threshold`` of each query — the second query shape of an ANN
     API next to top-k (radius queries: "all near-duplicates of X",
@@ -97,14 +93,14 @@ def cosine_range(embeddings: DataFrame, queries: DataFrame,
     from .dedup import spread_partitions
 
     base = with_norms(
-        spread_partitions(embeddings, id_col), vec_col, dim).select(
+        spread_partitions(embeddings, id_col), vec_col).select(
         F.col(id_col).alias("item_id"), F.col(vec_col).alias("item_vec"), "norm")
-    q = with_norms(queries, vec_col, dim).select(
+    q = with_norms(queries, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec"),
         F.col("norm").alias("qnorm"))
     joined = base.crossJoin(F.broadcast(q)).filter(
         F.col("item_id") != F.col("query_id"))
-    sim = _dot(F.col("item_vec"), F.col("query_vec"), dim) / (
+    sim = _dot(F.col("item_vec"), F.col("query_vec")) / (
         F.col("norm") * F.col("qnorm"))
     return (joined.select("query_id", "item_id",
                           F.round(sim, 6).alias("cosine"))
@@ -196,9 +192,7 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5, dim: int = 6
         df = spread_partitions(df, id_col)
         return df.select(
             F.col(id_col).alias(f"{label}_id"), F.col(vec_col).alias(f"{label}_vec"),
-            # dim is a required lsh_topk arg, so the norm/dot sums are
-            # unrolled for codegen (round 6; bit-identical — see _dot)
-            _norm(F.col(vec_col), dim).alias(f"{label}_norm"),
+            _norm(F.col(vec_col)).alias(f"{label}_norm"),
             F.posexplode(buckets_udf(F.col(vec_col))).alias("table_id", "bucket"),
         )
 
@@ -206,7 +200,7 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5, dim: int = 6
     q = bucketize(queries, "query")
     if broadcast_queries:
         q = F.broadcast(q)
-    sim = _dot(F.col("item_vec"), F.col("query_vec"), dim) / (
+    sim = _dot(F.col("item_vec"), F.col("query_vec")) / (
         F.col("item_norm") * F.col("query_norm"))
     scored = (
         base.join(q, ["table_id", "bucket"])
@@ -795,8 +789,9 @@ def sq8_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     Per-dim bounds come from ONE corpus aggregate (64 scalars,
     collected and folded back as literals — the centroid-collect
     pattern); codes are a JVM transform; preselection is a broadcast-
-    query scan with an integer aggregate, top-rerank per query a
-    window; only the survivors touch float vectors again.
+    query scan computing the float ADC inner product per pair (the
+    reconstructed item code dotted with the float query), top-rerank
+    per query a window; only the survivors get the exact cosine.
     """
     dim = len(queries.select(vec_col).first()[0])
     bounds = embeddings.agg(

@@ -972,7 +972,7 @@ def dsir_logweights(raw: DataFrame, target: DataFrame,
         # would force a doc-keyed Exchange over the full gram stream
         # (3x per scoring run); this keeps the whole gram derivation
         # inside one narrow projection — measured 4.3x end-to-end at
-        # the 5M-doc probe (234.6 s -> 54.0 s, tools/probe_round5e.py)
+        # the 5M-doc probe (234.6 s -> 54.0 s; numbers in ROUND5.md)
         arr = "regexp_extract_all(lower({t}), '[a-z0-9]+', 0)".format(
             t=text_col)
         terms = df.select(

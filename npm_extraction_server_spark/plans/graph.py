@@ -11,6 +11,27 @@ self-joins with eagerly ``localCheckpoint``-ed frontiers (truncating
 lineage so Catalyst never re-derives round N-1 inside round N), every
 per-round shuffle keyed on the node id.
 
+One round loop (``_persisted`` + ``_rounds``) is the lifecycle every
+loop over a persisted edge set uses:
+
+- ``with _persisted(edges, key) as e:`` hash-partitions the edge set on
+  its join key (``src``; ``dst`` for hyperball) and persists it, so
+  each round shuffles only the small side. There is no warm-up action:
+  the first round's job fills the cache. The edge set is unpersisted
+  when the block exits, also when a round raises, so one block can
+  span several loops (betweenness's forward and backward sweeps).
+- ``_rounds(step, seed, n)`` runs ``step(r, outs)`` for r = 1..n, where
+  ``outs`` is ``[seed, out_1, ..., out_{r-1}]``. Each round's output is
+  eagerly ``localCheckpoint``-ed, which truncates lineage so round r
+  never re-derives round r-1. Frontier loops stop at the first empty
+  output, which is not kept (``_empty``: ``DataFrame.isEmpty()``, no
+  job at all for a checkpoint without partitions); fixed-iteration
+  loops pass ``until_empty=False``. Callers that promise convergence
+  pass ``exhausted``, the ``RuntimeError`` message for n non-empty
+  rounds. Accumulated state (visited sets, walk corpora) is
+  ``_union_all(outs)``: every input is a checkpoint, so the balanced
+  union is pure metadata and no round rewrites earlier rounds' rows.
+
 Scale notes (100 TB / 10^9-node graphs):
 
 - ``bfs_distances`` shuffles only the FRONTIER each round (nodes first
@@ -52,7 +73,10 @@ vectors through every iteration.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = ["ab_core", "bfs_distances", "bipartite_project", "bowtie",
@@ -68,6 +92,50 @@ __all__ = ["ab_core", "bfs_distances", "bipartite_project", "bowtie",
            "weighted_random_walks", "wl_refinement"]
 
 
+@contextmanager
+def _persisted(edges: DataFrame, key: str = "src") -> Iterator[DataFrame]:
+    """``edges`` hash-partitioned on ``key`` and persisted for the life
+    of the ``with`` block. An ``InMemoryTableScan`` keeps its
+    outputPartitioning (an eager localCheckpoint does not), so every
+    round's join shuffles only the frontier/score side to meet the
+    edges — the edge set is shuffled once per call, not once per
+    round. Unpersisted on exit, also when a round raises."""
+    e = edges.repartition(F.col(key)).persist()
+    try:
+        yield e
+    finally:
+        e.unpersist()
+
+
+def _rounds(step: Callable[[int, list[DataFrame]], DataFrame],
+            seed: DataFrame, n: int, until_empty: bool = True,
+            exhausted: str | None = None) -> list[DataFrame]:
+    """``[seed, out_1, ..., out_k]`` with ``out_r = step(r, outs)``
+    eagerly checkpointed (see the module docstring). With
+    ``until_empty`` the loop stops at the first empty output, which is
+    dropped; ``exhausted`` is the RuntimeError message raised when all
+    ``n`` rounds produced rows."""
+    outs = [seed]
+    for r in range(1, n + 1):
+        nxt = step(r, outs).localCheckpoint(eager=True)
+        if until_empty and _empty(nxt):
+            return outs
+        outs.append(nxt)
+    if exhausted is not None:
+        raise RuntimeError(exhausted)
+    return outs
+
+
+def _empty(df: DataFrame) -> bool:
+    """Emptiness of a CHECKPOINTED frame: ``DataFrame.isEmpty()`` (one
+    limit-1 job), skipped when the checkpoint has no partitions at all
+    — an empty one often has none, and isEmpty's single-partition
+    limit exchange would still launch a job for it. (On a lazy plan
+    ``.rdd`` would run its shuffle stages; probe those with
+    ``isEmpty()`` directly.)"""
+    return df.rdd.getNumPartitions() == 0 or df.isEmpty()
+
+
 def bfs_distances(seeds: DataFrame, edges: DataFrame,
                   max_rounds: int = 30) -> DataFrame:
     """Directed BFS hop distance from a seed set.
@@ -78,47 +146,13 @@ def bfs_distances(seeds: DataFrame, edges: DataFrame,
     ``max_rounds`` hops; dist is the MINIMUM hop count (level-
     synchronous BFS visits each node first at its true distance).
 
-    Each round: frontier ⋈ edges -> candidate next level, anti-join
-    the visited set, distinct, checkpoint. Stops early on an empty
-    frontier, so total work is O(sum of frontier sizes), not
-    O(rounds * |V|).
-
-    The edge set is persisted HASH-PARTITIONED on ``src``: an
-    ``InMemoryTableScan`` preserves its outputPartitioning (an eager
-    localCheckpoint does not), so each round's join shuffles only the
-    FRONTIER to meet the edges — the edge set is shuffled once for the
-    whole traversal, not once per level. Unpersisted before return
-    (every frontier is independently checkpointed)."""
-    edges = (edges.select("src", "dst")
-             .repartition(F.col("src")).persist())
-    frontier = seeds.select("node_id").distinct() \
-        .withColumn("dist", F.lit(0)).localCheckpoint(eager=True)
-    visited = frontier
-    parts = [frontier]
-
-    try:
-        for r in range(1, max_rounds + 1):
-            nxt = (
-                frontier.join(edges, frontier.node_id == edges.src)
-                .select(F.col("dst").alias("node_id"))
-                .distinct()
-                .join(visited.select("node_id"), "node_id", "left_anti")
-                .withColumn("dist", F.lit(r))
-                .localCheckpoint(eager=True)
-            )
-            if nxt.rdd.isEmpty():
-                break
-            # every input of the union is already an eager checkpoint,
-            # so the union is pure metadata — re-checkpointing it would
-            # rewrite O(rounds * |V|) rows for nothing; the union tree
-            # is re-balanced each round (depth log r, not r) so a
-            # 500-diameter graph cannot overflow the analyzer stack
-            parts.append(nxt)
-            visited = _union_all(parts)
-            frontier = nxt
-    finally:
-        edges.unpersist()
-    return visited
+    This is the multi-source sweep with every seed under ONE shared
+    key: each round is frontier ⋈ edges -> candidate next level,
+    anti-join the visited set, distinct, checkpoint. Stops early on an
+    empty frontier, so total work is O(sum of frontier sizes), not
+    O(rounds * |V|)."""
+    return (_multi_source_sweep(seeds, edges, max_rounds, shared_seed=True)
+            .select(F.col("node").alias("node_id"), "dist"))
 
 
 # 12-decimal grid: fine enough that 5 damped iterations lose no
@@ -143,6 +177,13 @@ def _union_all(dfs: list[DataFrame]) -> DataFrame:
     return dfs[0]
 
 
+def _endpoints(edges: DataFrame) -> DataFrame:
+    """Distinct ``node_id`` over both endpoints of (src, dst) edges."""
+    return (edges.select(F.col("src").alias("node_id"))
+            .unionByName(edges.select(F.col("dst").alias("node_id")))
+            .distinct())
+
+
 def _und_simple(edges: DataFrame, eager: bool | None = True) -> DataFrame:
     """The undirected-simple-graph normalization every symmetric
     algorithm starts from: drop self-loops, canonicalize each edge to
@@ -153,14 +194,6 @@ def _und_simple(edges: DataFrame, eager: bool | None = True) -> DataFrame:
                    F.greatest("src", "dst").alias("b"))
            .distinct())
     return und if eager is None else und.localCheckpoint(eager=eager)
-
-
-def _dangling_nodes(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Nodes with no out-edge (sink entities). One anti-join, computed
-    once per pagerank call and checkpointed — loop-invariant."""
-    return (nodes.join(edges.select(F.col("src").alias("node_id"))
-                       .distinct(), "node_id", "left_anti")
-            .localCheckpoint(eager=True))
 
 
 def _dangling_mass(ranks: DataFrame, dang: DataFrame) -> DataFrame:
@@ -175,6 +208,99 @@ def _dangling_mass(ranks: DataFrame, dang: DataFrame) -> DataFrame:
                       .cast(f"decimal(28,{_GRID})")),
                 F.lit(0).cast(f"decimal(28,{_GRID})"))
                 .cast("double").alias("_dmass")))
+
+
+def _rank_graph(edges: DataFrame, dangling: str, who: str,
+                weight_col: str | None = None
+                ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """The setup pagerank and personalized_pagerank share: checkpointed
+    (src, dst[, w]) edges, the checkpointed node set, and the dangling
+    (no out-edge) node set — None when ``dangling="ignore"`` or when
+    there are no sinks. Round 6: emptiness is probed on the LAZY
+    anti-join first (one limit-1 job), and the dangling set is only
+    checkpointed when non-empty — sink-free graphs (the common suite
+    shape) skip a checkpoint job."""
+    if dangling not in ("redistribute", "assert_none", "ignore"):
+        raise ValueError(f"{who}: unknown dangling mode {dangling!r}")
+    cols = [F.col("src"), F.col("dst")]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("long").alias("w"))
+    edges = edges.select(*cols).localCheckpoint(eager=True)
+    nodes = _endpoints(edges).localCheckpoint(eager=True)
+    if dangling == "ignore":
+        return edges, nodes, None
+    dang = nodes.join(
+        edges.select(F.col("src").alias("node_id")).distinct(),
+        "node_id", "left_anti")
+    if dang.isEmpty():
+        return edges, nodes, None  # sink-free: redistribute is a no-op
+    if dangling == "assert_none":
+        raise ValueError(
+            f"{who}(dangling='assert_none'): graph has nodes with no "
+            "out-edges; pass dangling='redistribute' or augment")
+    return edges, nodes, dang.localCheckpoint(eager=True)
+
+
+def _power_rounds(edges: DataFrame, base: DataFrame, ranks: DataFrame,
+                  iterations: int, damping: float, teleport: Column,
+                  dangling_share: Column,
+                  dang: DataFrame | None) -> list[DataFrame]:
+    """The PageRank round body shared by pagerank and
+    personalized_pagerank; returns the per-iteration rank frames
+    (iteration 0 = ``ranks``). Each round is one join of the adjacency
+    with the rank vector, a decimal-grid inflow sum per dst, and the
+    damped update over ``base`` (node_id plus whatever columns
+    ``teleport``/``dangling_share`` read):
+    ``round(teleport + damping * (inflow + dangling_share), 12)``,
+    where the dangling share (read from the broadcast 1-row ``_dmass``)
+    only enters when ``dang`` is a non-empty sink set. A weighted edge
+    set (column ``w``) splits rank w/sum_w per source instead of
+    uniformly.
+
+    (src, dst, out_deg) is loop-invariant and persisted hash-partitioned
+    on src, so each iteration's rank join shuffles only the |V|-sized
+    rank vector, never the |E|-sized adjacency. No eager adj.count()
+    (round 6): the first round's job fills the cache."""
+    weighted = "w" in edges.columns
+    out_deg = edges.groupBy("src").agg(
+        (F.sum("w") if weighted else F.count("*")).alias("out_deg"))
+    share = (F.col("rank") * F.col("w") / F.col("out_deg") if weighted
+             else F.col("rank") / F.col("out_deg"))
+    with _persisted(edges.join(out_deg, "src")) as adj:
+        def step(_, hist):
+            ranks = hist[-1]
+            contrib = (adj.join(ranks, adj.src == ranks.node_id)
+                       .select(F.col("dst"),
+                               F.round(share, _GRID)
+                               .cast(f"decimal(28,{_GRID})")
+                               .alias("contrib")))
+            inflow = contrib.groupBy("dst").agg(
+                F.sum("contrib").cast("double").alias("inflow"))
+            upd = base.join(inflow, base.node_id == inflow.dst, "left")
+            gain = F.coalesce("inflow", F.lit(0.0))
+            if dang is not None:
+                # the 1-row aggregate broadcasts, so the whole update
+                # is still one job
+                upd = upd.crossJoin(F.broadcast(_dangling_mass(ranks, dang)))
+                gain = gain + dangling_share
+            return upd.select(
+                "node_id",
+                F.round(teleport + F.lit(damping) * gain,
+                        _GRID).alias("rank"))
+
+        return _rounds(step, ranks, iterations, until_empty=False)
+
+
+def _rank_result(hist: list[DataFrame], return_history: bool,
+                 out_scale: int) -> DataFrame:
+    """Final ranks rounded to ``out_scale``, or with ``return_history``
+    the per-iteration GRID ranks (node_id, iter, rank), iter 0..k — the
+    warm state pagerank_incremental consumes."""
+    if return_history:
+        return _union_all([h.withColumn("iter", F.lit(i))
+                           for i, h in enumerate(hist)])
+    return hist[-1].select("node_id",
+                           F.round("rank", out_scale).alias("rank"))
 
 
 def pagerank(edges: DataFrame, iterations: int = 5,
@@ -225,59 +351,9 @@ def pagerank(edges: DataFrame, iterations: int = 5,
     rounded vector — the warm state ``pagerank_incremental`` resumes
     from when the edge set changes.
     """
-    if dangling not in ("redistribute", "assert_none", "ignore"):
-        raise ValueError(f"pagerank: unknown dangling mode {dangling!r}")
-    if weight_col is not None:
-        # edge-weighted variant: a source's rank splits PROPORTIONALLY
-        # to integer edge weights (w / sum_w per src) instead of
-        # uniformly — "how strongly does a depend on b" KG edges. The
-        # unweighted path is the weight==1 special case; kept separate
-        # so its oracle SQL stays byte-stable.
-        edges = (edges.select("src", "dst",
-                              F.col(weight_col).cast("long").alias("w"))
-                 .localCheckpoint(eager=True))
-    else:
-        edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("node_id"))
-        .unionByName(edges.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges, nodes, dang = _rank_graph(edges, dangling, "pagerank",
+                                     weight_col)
     n = nodes.count()
-    dang = None
-    if dangling != "ignore":
-        # round 6: probe emptiness on the LAZY anti-join first (one
-        # limit-1 job) and only checkpoint the dangling set when it is
-        # non-empty — sink-free graphs (the common suite shape) used to
-        # pay a checkpoint job + an .rdd conversion here
-        dang_lazy = nodes.join(
-            edges.select(F.col("src").alias("node_id")).distinct(),
-            "node_id", "left_anti")
-        if dang_lazy.isEmpty():
-            dang = None          # sink-free: redistribute is a no-op
-        elif dangling == "assert_none":
-            raise ValueError(
-                "pagerank(dangling='assert_none'): graph has nodes with "
-                "no out-edges; pass dangling='redistribute' or augment")
-        else:
-            dang = dang_lazy.localCheckpoint(eager=True)
-    if weight_col is not None:
-        out_deg = edges.groupBy("src").agg(F.sum("w").alias("out_deg"))
-    else:
-        out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    # (src, dst, out_deg) is loop-invariant: persist it HASH-PARTITIONED
-    # on src — InMemoryTableScan keeps its outputPartitioning, so each
-    # iteration's rank join shuffles only the (|V|-sized) rank vector,
-    # never the (|E|-sized) adjacency. Unpersisted before return (the
-    # final ranks are checkpointed).
-    adj = (edges.join(out_deg, "src")
-           .repartition(F.col("src")).persist())
-    # no eager adj.count() (round 6): the rounds execute as sequential
-    # stages of the same job(s) below, so the cache fills during the
-    # first round's stage and rounds 2..k read it — the old count was
-    # one more blocking driver round-trip per query for nothing
-
     # normalized=False: the classic unnormalized formulation (init 1,
     # teleport 1-d; ranks sum to |V|, the ordering is identical). Its
     # constants don't involve |V|, so a cross-engine oracle needs no
@@ -298,54 +374,12 @@ def pagerank(edges: DataFrame, iterations: int = 5,
     # rounds lazily between checkpoints (one mega AQE query re-plans
     # per stage; per-round eager checkpoints measured 1.7-2.5 s vs
     # 2.9-3.8 s for the lazy chain). The cheap job cuts that DID
-    # survive: the lazy dangling probe above and no eager adj.count().
+    # survive: the lazy dangling probe and no eager adj.count().
     ranks = nodes.withColumn("rank", F.lit(init)).localCheckpoint(eager=True)
-    hist = [ranks.withColumn("iter", F.lit(0))]
-
-    try:
-        for _it in range(iterations):
-            share = (F.col("rank") * F.col("w") / F.col("out_deg")
-                     if weight_col is not None
-                     else F.col("rank") / F.col("out_deg"))
-            contrib = (
-                adj.join(ranks, adj.src == ranks.node_id)
-                .select(
-                    F.col("dst"),
-                    F.round(share, _GRID)
-                    .cast(f"decimal(28,{_GRID})").alias("contrib"),
-                )
-            )
-            inflow = contrib.groupBy("dst").agg(
-                F.sum("contrib").cast("double").alias("inflow"))
-            base = nodes.join(inflow, nodes.node_id == inflow.dst, "left")
-            if dang is not None:
-                # per-node share of this round's dangling mass; the
-                # 1-row aggregate broadcasts, so the whole update is
-                # still one job
-                base = base.crossJoin(F.broadcast(_dangling_mass(ranks, dang)))
-                gain = (F.coalesce("inflow", F.lit(0.0))
-                        + F.round(F.col("_dmass") / F.lit(float(n)), _GRID))
-            else:
-                gain = F.coalesce("inflow", F.lit(0.0))
-            ranks = (
-                base.select(
-                    "node_id",
-                    F.round(F.lit(teleport) + F.lit(damping) * gain,
-                            _GRID).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            hist.append(ranks.withColumn("iter", F.lit(len(hist))))
-    finally:
-        adj.unpersist()
-    if return_history:
-        # per-iteration GRID ranks (node_id, iter, rank), iter 0..k —
-        # the warm state pagerank_incremental consumes; every input is
-        # an eager checkpoint, so the union is pure metadata
-        import functools
-
-        return functools.reduce(lambda a, b: a.unionByName(b), hist)
-    return ranks.select("node_id", F.round("rank", out_scale).alias("rank"))
+    hist = _power_rounds(
+        edges, nodes, ranks, iterations, damping, F.lit(teleport),
+        F.round(F.col("_dmass") / F.lit(float(n)), _GRID), dang)
+    return _rank_result(hist, return_history, out_scale)
 
 
 def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
@@ -388,8 +422,8 @@ def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
       node births/deaths are checked only at delta endpoints, and the
       final result is the cached history's last iteration overlaid
       with the recomputed rows. This is the 100x-scale path; the
-      2M-node probe (tools/probe_round5.py) pins it beating cold
-      recompute.
+      2M-node probe archived in BENCH/BASELINE.md ("Round-5
+      new-operator probes") measured it beating cold recompute.
     - **diff path** (no changelog): the delta is derived by two
       exceptAll multiset comparisons and the node universe is rebuilt
       and fully cross-checked — correct anywhere, but pays fixed
@@ -416,200 +450,203 @@ def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
     assert on. Returns (node_id, rank) rounded to ``out_scale``,
     exactly as ``pagerank`` does.
     """
-    e_old = edges_old.select("src", "dst")
-    e_new = edges_new.select("src", "dst").persist()
-    e_new.count()
     if (added is None) != (removed is None):
         raise ValueError("pagerank_incremental: pass added AND removed "
                          "(the changelog), or neither (exceptAll diff)")
-    changelog = added is not None
-    if not changelog:
-        # no changelog available: derive the delta by multiset diff —
-        # two full-edge-set comparisons (the moderate-scale path)
-        added = e_new.exceptAll(e_old).localCheckpoint(eager=True)
-        removed = e_old.exceptAll(e_new).localCheckpoint(eager=True)
-    else:
-        added = added.select("src", "dst").localCheckpoint(eager=True)
-        removed = removed.select("src", "dst").localCheckpoint(eager=True)
-
+    e_old = edges_old.select("src", "dst")
+    e_new = edges_new.select("src", "dst").persist()
     hist = history.select("node_id", "iter", "rank").persist()
-    hist_depth = hist.agg(F.max("iter")).collect()[0][0]
-    if hist_depth is None or hist_depth < iterations:
-        raise ValueError(
-            f"pagerank_incremental: history covers iterations "
-            f"0..{hist_depth}, need {iterations} — rerun "
-            f"pagerank(edges_old, iterations={iterations}, "
-            f"return_history=True)")
-    hist_nodes = hist.filter(F.col("iter") == 0).select("node_id")
-
-    def _members(universe_col_pairs, probe: DataFrame) -> DataFrame:
-        """Which rows of small ``probe`` (node_id) appear in any of the
-        (df, col) universes — each test a broadcast-probe map-side
-        semi-scan of the cached big side, inverted so the BIG side
-        streams and the SMALL side builds."""
-        parts = [df.join(F.broadcast(probe),
-                         df[col] == probe["node_id"], "left_semi")
-                 .select(df[col].alias("node_id"))
-                 for df, col in universe_col_pairs]
-        return _union_all(parts).distinct()
-
-    dend = (added.select(F.col("src").alias("node_id"))
-            .unionByName(added.select(F.col("dst").alias("node_id")))
-            .unionByName(removed.select(F.col("src").alias("node_id")))
-            .unionByName(removed.select(F.col("dst").alias("node_id")))
-            .distinct().localCheckpoint(eager=True))
-    # node births/deaths happen only at delta endpoints
-    known = _members([(hist_nodes, "node_id")], dend) \
-        .localCheckpoint(eager=True)
-    new_nodes = dend.join(known, "node_id", "left_anti") \
-        .localCheckpoint(eager=True)
-    rem_end = (removed.select(F.col("src").alias("node_id"))
-               .unionByName(removed.select(F.col("dst").alias("node_id")))
-               .distinct())
-    still_there = _members([(e_new, "src"), (e_new, "dst")], rem_end) \
-        .localCheckpoint(eager=True)
-    dead = rem_end.join(still_there, "node_id", "left_anti") \
-        .localCheckpoint(eager=True)
-    n_new_nodes, n_dead = new_nodes.count(), dead.count()
-
-    if normalized:
-        if n_new_nodes or n_dead:
-            raise ValueError(
-                "pagerank_incremental(normalized=True): node set "
-                "changed — 1/n constants shift every rank; recompute, "
-                "or use normalized=False")
-        n = hist_nodes.count()
-        init = round(1.0 / n, _GRID)
-        teleport = round((1.0 - damping) / n, _GRID)
-    else:
-        n = None
-        init = 1.0
-        teleport = round(1.0 - damping, _GRID)
-
-    # sink check: on the changelog path only a removed edge's source
-    # can LOSE its last out-edge, so exactly those are probed (the old
-    # graph being sink-free is the documented caller contract); the
-    # diff path keeps the full whole-graph check, since it makes no
-    # assumption about how the inputs were produced
-    if changelog:
-        sink_cand = (removed.select(F.col("src").alias("node_id"))
-                     .distinct())
-        has_out = _members([(e_new, "src")], sink_cand)
-        sinky = sink_cand.join(has_out, "node_id", "left_anti") \
-            .limit(1).count()
-    else:
-        sinky = (e_new.select(F.col("dst").alias("node_id")).distinct()
-                 .join(e_new.select(F.col("src").alias("node_id"))
-                       .distinct(), "node_id", "left_anti")
-                 .limit(1).count())
-    if sinky:
-        raise ValueError(
-            "pagerank_incremental: the new graph has sink nodes — the "
-            "dangling-mass term is global, incremental maintenance "
-            "cannot stay local; pre-augment the graph")
-
-    # static affected set: delta-edge dsts + out-neighbors of
-    # degree-changed sources (== delta src endpoints) + new nodes
-    deg_changed = (added.select("src")
-                   .unionByName(removed.select("src")).distinct())
-    static_aff = (
-        added.select("dst").unionByName(removed.select("dst"))
-        .unionByName(e_new.join(F.broadcast(deg_changed), "src",
-                                "left_semi").select("dst"))
-        .select(F.col("dst").alias("node_id"))
-        .unionByName(new_nodes)
-        .distinct()
-        .join(dead, "node_id", "left_anti")
-        .localCheckpoint(eager=True))
-    if stats is not None:
-        stats["n_nodes"] = n
-        stats["affected"] = []
-
     # out-degrees once (one shuffle), probed per round by broadcast
     # semi-join — a 2M-row cached scan per round instead of re-counting
     # from the 6M-row edge list
-    out_deg_all = e_new.groupBy("src").agg(F.count("*").alias("out_deg"))
-    out_deg_all = out_deg_all.persist()
-
-    changed: DataFrame | None = None
-    for t in range(1, iterations + 1):
-        aff = static_aff
-        if changed is not None:
-            # one-hop forward propagation, map-side over the cached
-            # edge list (the changed set broadcasts by contract)
-            aff = (aff.unionByName(
-                e_new.join(F.broadcast(changed.select("node_id")
-                                       .withColumnRenamed("node_id",
-                                                          "src")),
-                           "src", "left_semi")
-                .select(F.col("dst").alias("node_id")))
-                .distinct())
-        # in-edges of the affected set + out-degrees of exactly the
-        # sources that appear — two map-side scans of the cached edges
-        in_edges = e_new.join(
-            F.broadcast(aff.withColumnRenamed("node_id", "dst")),
-            "dst", "left_semi").localCheckpoint(eager=True)
-        srcs = in_edges.select("src").distinct()
-        out_deg = out_deg_all.join(F.broadcast(srcs), "src", "left_semi")
-        gather = in_edges.join(F.broadcast(out_deg), "src")
-        # history lookup pruned to the gather's sources FIRST (a
-        # map-side scan of the cached history, never a full shuffle)
-        prev_h = (hist.filter(F.col("iter") == t - 1)
-                  .join(F.broadcast(srcs),
-                        hist.node_id == srcs.src, "left_semi")
-                  .select(F.col("node_id").alias("src"),
-                          F.col("rank").alias("h_rank")))
-        if changed is not None:
-            gather = gather.join(
-                F.broadcast(changed.select(F.col("node_id").alias("src"),
-                                           F.col("rank").alias("c_rank"))),
-                "src", "left")
+    out_deg_all = (e_new.groupBy("src").agg(F.count("*").alias("out_deg"))
+                   .persist())
+    try:
+        changelog = added is not None
+        if not changelog:
+            # no changelog available: derive the delta by multiset
+            # diff — two full-edge-set comparisons (the moderate-scale
+            # path)
+            added = e_new.exceptAll(e_old).localCheckpoint(eager=True)
+            removed = e_old.exceptAll(e_new).localCheckpoint(eager=True)
         else:
-            gather = gather.withColumn("c_rank",
-                                       F.lit(None).cast("double"))
-        gather = gather.join(F.broadcast(prev_h), "src", "left")
-        contrib = gather.select(
-            "dst",
-            F.round(F.coalesce("c_rank", "h_rank", F.lit(init))
-                    / F.col("out_deg"), _GRID)
-            .cast(f"decimal(28,{_GRID})").alias("contrib"))
-        inflow = contrib.groupBy("dst").agg(
-            F.sum("contrib").cast("double").alias("inflow"))
-        changed = (
-            aff.join(inflow, aff.node_id == inflow.dst, "left")
-            .select(
-                "node_id",
-                F.round(F.lit(teleport)
-                        + F.lit(damping)
-                        * F.coalesce("inflow", F.lit(0.0)),
-                        _GRID).alias("rank"))
+            added = added.select("src", "dst") \
+                .localCheckpoint(eager=True)
+            removed = removed.select("src", "dst") \
+                .localCheckpoint(eager=True)
+
+        hist_depth = hist.agg(F.max("iter")).collect()[0][0]
+        if hist_depth is None or hist_depth < iterations:
+            raise ValueError(
+                f"pagerank_incremental: history covers iterations "
+                f"0..{hist_depth}, need {iterations} — rerun "
+                f"pagerank(edges_old, iterations={iterations}, "
+                f"return_history=True)")
+        hist_nodes = hist.filter(F.col("iter") == 0).select("node_id")
+
+        def _members(universe_col_pairs, probe: DataFrame) -> DataFrame:
+            """Which rows of small ``probe`` (node_id) appear in any of
+            the (df, col) universes — each test a broadcast-probe
+            map-side semi-scan of the cached big side, inverted so the
+            BIG side streams and the SMALL side builds."""
+            parts = [df.join(F.broadcast(probe),
+                             df[col] == probe["node_id"], "left_semi")
+                     .select(df[col].alias("node_id"))
+                     for df, col in universe_col_pairs]
+            return _union_all(parts).distinct()
+
+        dend = (added.select(F.col("src").alias("node_id"))
+                .unionByName(added.select(F.col("dst").alias("node_id")))
+                .unionByName(removed.select(F.col("src").alias("node_id")))
+                .unionByName(removed.select(F.col("dst").alias("node_id")))
+                .distinct().localCheckpoint(eager=True))
+        # node births/deaths happen only at delta endpoints
+        known = _members([(hist_nodes, "node_id")], dend) \
+            .localCheckpoint(eager=True)
+        new_nodes = dend.join(known, "node_id", "left_anti") \
+            .localCheckpoint(eager=True)
+        rem_end = _endpoints(removed)
+        still_there = _members([(e_new, "src"), (e_new, "dst")],
+                               rem_end).localCheckpoint(eager=True)
+        dead = rem_end.join(still_there, "node_id", "left_anti") \
+            .localCheckpoint(eager=True)
+        n_new_nodes, n_dead = new_nodes.count(), dead.count()
+
+        if normalized:
+            if n_new_nodes or n_dead:
+                raise ValueError(
+                    "pagerank_incremental(normalized=True): node set "
+                    "changed — 1/n constants shift every rank; "
+                    "recompute, or use normalized=False")
+            n = hist_nodes.count()
+            init = round(1.0 / n, _GRID)
+            teleport = round((1.0 - damping) / n, _GRID)
+        else:
+            n = None
+            init = 1.0
+            teleport = round(1.0 - damping, _GRID)
+
+        # sink check: on the changelog path only a removed edge's
+        # source can LOSE its last out-edge, so exactly those are probed
+        # (the old graph being sink-free is the documented caller
+        # contract); the diff path keeps the full whole-graph check,
+        # since it makes no assumption about how the inputs were
+        # produced
+        if changelog:
+            sink_cand = (removed.select(F.col("src").alias("node_id"))
+                         .distinct())
+            has_out = _members([(e_new, "src")], sink_cand)
+            sinks = sink_cand.join(has_out, "node_id", "left_anti")
+        else:
+            sinks = (e_new.select(F.col("dst").alias("node_id")).distinct()
+                     .join(e_new.select(F.col("src").alias("node_id"))
+                           .distinct(), "node_id", "left_anti"))
+        if not sinks.isEmpty():
+            raise ValueError(
+                "pagerank_incremental: the new graph has sink nodes — "
+                "the dangling-mass term is global, incremental "
+                "maintenance cannot stay local; pre-augment the graph")
+
+        # static affected set: delta-edge dsts + out-neighbors of
+        # degree-changed sources (== delta src endpoints) + new nodes
+        deg_changed = (added.select("src")
+                       .unionByName(removed.select("src")).distinct())
+        static_aff = (
+            added.select("dst").unionByName(removed.select("dst"))
+            .unionByName(e_new.join(F.broadcast(deg_changed), "src",
+                                    "left_semi").select("dst"))
+            .select(F.col("dst").alias("node_id"))
+            .unionByName(new_nodes)
+            .distinct()
+            .join(dead, "node_id", "left_anti")
             .localCheckpoint(eager=True))
         if stats is not None:
-            stats["affected"].append(changed.count())
-    assert changed is not None
-    # final overlay: the cached history's last iteration, minus dead
-    # nodes, recomputed rows substituted, brand-new nodes appended —
-    # one map-side scan of the history, zero full-graph shuffles
-    hk = (hist.filter(F.col("iter") == iterations)
-          .select("node_id", F.col("rank").alias("h_rank")))
-    if n_dead:
-        hk = hk.join(F.broadcast(dead), "node_id", "left_anti")
-    out = (hk.join(F.broadcast(changed.withColumnRenamed("rank",
-                                                         "c_rank")),
-                   "node_id", "left")
-           .select("node_id",
-                   F.coalesce("c_rank", "h_rank").alias("rank")))
-    if n_new_nodes:
-        out = out.unionByName(
-            changed.join(F.broadcast(new_nodes), "node_id", "left_semi")
-            .select("node_id", "rank"))
-    out = out.select("node_id",
-                     F.round("rank", out_scale).alias("rank"))
-    e_new.unpersist()
-    out_deg_all.unpersist()
-    # hist stays cached: ``out`` reads its last iteration lazily — the
-    # caller's action consumes the cache; Spark evicts it LRU after
-    return out
+            stats["n_nodes"] = n
+            stats["affected"] = []
+
+        changed: DataFrame | None = None
+        for t in range(1, iterations + 1):
+            aff = static_aff
+            if changed is not None:
+                # one-hop forward propagation, map-side over the cached
+                # edge list (the changed set broadcasts by contract)
+                aff = (aff.unionByName(
+                    e_new.join(F.broadcast(changed.select("node_id")
+                                           .withColumnRenamed("node_id",
+                                                              "src")),
+                               "src", "left_semi")
+                    .select(F.col("dst").alias("node_id")))
+                    .distinct())
+            # in-edges of the affected set + out-degrees of exactly the
+            # sources that appear — two map-side scans of the cached
+            # edges
+            in_edges = e_new.join(
+                F.broadcast(aff.withColumnRenamed("node_id", "dst")),
+                "dst", "left_semi").localCheckpoint(eager=True)
+            srcs = in_edges.select("src").distinct()
+            out_deg = out_deg_all.join(F.broadcast(srcs), "src",
+                                       "left_semi")
+            gather = in_edges.join(F.broadcast(out_deg), "src")
+            # history lookup pruned to the gather's sources FIRST (a
+            # map-side scan of the cached history, never a full shuffle)
+            prev_h = (hist.filter(F.col("iter") == t - 1)
+                      .join(F.broadcast(srcs),
+                            hist.node_id == srcs.src, "left_semi")
+                      .select(F.col("node_id").alias("src"),
+                              F.col("rank").alias("h_rank")))
+            if changed is not None:
+                gather = gather.join(
+                    F.broadcast(changed.select(
+                        F.col("node_id").alias("src"),
+                        F.col("rank").alias("c_rank"))),
+                    "src", "left")
+            else:
+                gather = gather.withColumn("c_rank",
+                                           F.lit(None).cast("double"))
+            gather = gather.join(F.broadcast(prev_h), "src", "left")
+            contrib = gather.select(
+                "dst",
+                F.round(F.coalesce("c_rank", "h_rank", F.lit(init))
+                        / F.col("out_deg"), _GRID)
+                .cast(f"decimal(28,{_GRID})").alias("contrib"))
+            inflow = contrib.groupBy("dst").agg(
+                F.sum("contrib").cast("double").alias("inflow"))
+            changed = (
+                aff.join(inflow, aff.node_id == inflow.dst, "left")
+                .select(
+                    "node_id",
+                    F.round(F.lit(teleport)
+                            + F.lit(damping)
+                            * F.coalesce("inflow", F.lit(0.0)),
+                            _GRID).alias("rank"))
+                .localCheckpoint(eager=True))
+            if stats is not None:
+                stats["affected"].append(changed.count())
+        assert changed is not None
+        # final overlay: the history's last iteration, minus dead
+        # nodes, recomputed rows substituted, brand-new nodes appended
+        # — one map-side scan of the history, zero full-graph shuffles
+        hk = (hist.filter(F.col("iter") == iterations)
+              .select("node_id", F.col("rank").alias("h_rank")))
+        if n_dead:
+            hk = hk.join(F.broadcast(dead), "node_id", "left_anti")
+        out = (hk.join(F.broadcast(changed.withColumnRenamed("rank",
+                                                             "c_rank")),
+                       "node_id", "left")
+               .select("node_id",
+                       F.coalesce("c_rank", "h_rank").alias("rank")))
+        if n_new_nodes:
+            out = out.unionByName(
+                changed.join(F.broadcast(new_nodes), "node_id",
+                             "left_semi").select("node_id", "rank"))
+        out = out.select("node_id",
+                         F.round("rank", out_scale).alias("rank"))
+        return out
+    finally:
+        # ``out`` reads the history's last iteration lazily; released
+        # here, the caller's action re-reads it from ``history``
+        for df in (e_new, hist, out_deg_all):
+            df.unpersist()
 
 
 def _oriented_triangles(und: DataFrame) -> DataFrame:
@@ -684,37 +721,21 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     """Personalized PageRank: teleport mass goes to ``seeds`` (one
     column ``node_id``) instead of uniformly — importance RELATIVE TO
     a seed set, the query a KG consumer asks to rank entities around
-    a topic. Same execution and determinism contract as
-    :func:`pagerank` (persisted src-partitioned adjacency, decimal-
-    grid updates, bit-exact vs the unrolled DuckDB oracle).
+    a topic. It runs :func:`pagerank`'s round body with the teleport
+    vector t(v) (1/|seeds| on seeds, 0 elsewhere) and the dangling
+    share passed in as columns, so the execution and determinism
+    contract is pagerank's (persisted src-partitioned adjacency,
+    decimal-grid updates, bit-exact vs the unrolled DuckDB oracle).
 
     ``dangling`` follows :func:`pagerank`, except redistributed mass
     lands on the TELEPORT vector (the personalized analog of the
     uniform share): gain = inflow + round(dmass * t(v), 12) — mass
     flows back to the seed neighborhood instead of diluting the whole
     graph. Sink-free graphs skip the term after one upfront check."""
-    if dangling not in ("redistribute", "assert_none", "ignore"):
-        raise ValueError(
-            f"personalized_pagerank: unknown dangling mode {dangling!r}")
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("node_id"))
-        .unionByName(edges.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    dang = None
-    if dangling != "ignore":
-        dang = _dangling_nodes(nodes, edges)
-        if dang.rdd.isEmpty():
-            dang = None
-        elif dangling == "assert_none":
-            raise ValueError(
-                "personalized_pagerank(dangling='assert_none'): graph has "
-                "nodes with no out-edges")
+    edges, nodes, dang = _rank_graph(edges, dangling,
+                                     "personalized_pagerank")
     n_seeds = seeds.select("node_id").distinct().count()
     tv = round(1.0 / n_seeds, _GRID)
-    one_m_d = 1.0 - damping
     base = (
         nodes.join(seeds.select("node_id").distinct()
                    .withColumn("_s", F.lit(True)), "node_id", "left")
@@ -723,47 +744,20 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                 .alias("t"))
         .localCheckpoint(eager=True)
     )
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    adj = (edges.join(out_deg, "src")
-           .repartition(F.col("src")).persist())
-    adj.count()
-    ranks = base.select("node_id", F.col("t").alias("rank"))
-    hist = [ranks.withColumn("iter", F.lit(0))]
-    try:
-        for _ in range(iterations):
-            contrib = (
-                adj.join(ranks, adj.src == ranks.node_id)
-                .select(F.col("dst"),
-                        F.round(F.col("rank") / F.col("out_deg"), _GRID)
-                        .cast(f"decimal(28,{_GRID})").alias("contrib"))
-            )
-            inflow = contrib.groupBy("dst").agg(
-                F.sum("contrib").cast("double").alias("inflow"))
-            upd = base.join(inflow, base.node_id == inflow.dst, "left")
-            if dang is not None:
-                upd = upd.crossJoin(F.broadcast(_dangling_mass(ranks, dang)))
-                gain = (F.coalesce("inflow", F.lit(0.0))
-                        + F.round(F.col("_dmass") * F.col("t"), _GRID))
-            else:
-                gain = F.coalesce("inflow", F.lit(0.0))
-            ranks = (
-                upd.select("node_id",
-                           F.round(F.lit(one_m_d) * F.col("t")
-                                   + F.lit(damping) * gain,
-                                   _GRID).alias("rank"))
-                .localCheckpoint(eager=True)
-            )
-            hist.append(ranks.withColumn("iter", F.lit(len(hist))))
-    finally:
-        adj.unpersist()
-    if return_history:
-        # per-iteration GRID ranks (node_id, iter, rank), iter 0..k —
-        # the warm state pagerank_incremental consumes; every input is
-        # an eager checkpoint, so the union is pure metadata
-        import functools
+    hist = _power_rounds(
+        edges, base, base.select("node_id", F.col("t").alias("rank")),
+        iterations, damping, F.lit(1.0 - damping) * F.col("t"),
+        F.round(F.col("_dmass") * F.col("t"), _GRID), dang)
+    return _rank_result(hist, return_history, out_scale)
 
-        return functools.reduce(lambda a, b: a.unionByName(b), hist)
-    return ranks.select("node_id", F.round("rank", out_scale).alias("rank"))
+
+def _least(parts: list[DataFrame], col: str,
+           alias: str | None = None) -> DataFrame:
+    """Per-node minimum of ``col`` over a relaxation loop's rounds.
+    Each round emits only strict improvements, so the minimum is the
+    node's current label — no per-round merge is rewritten."""
+    return (_union_all(parts).groupBy("node_id")
+            .agg(F.min(col).alias(alias or col)))
 
 
 def sssp(seeds: DataFrame, edges: DataFrame,
@@ -781,8 +775,9 @@ def sssp(seeds: DataFrame, edges: DataFrame,
     relaxes ONLY the frontier — nodes whose distance improved last
     round — against the (persisted, src-hash-partitioned) edge set,
     takes the per-dst min offer, and keeps offers that beat the
-    current label (a join against the current distance table, both
-    sides keyed on node id). Work per round follows the improvement
+    current label (the per-node min over the rounds' improvements,
+    joined on node id — both sides hash-partitioned by their
+    aggregates). Work per round follows the improvement
     wavefront exactly as ``bfs_distances``; with non-negative weights
     the frontier empties after at most |V| rounds (in practice ~the
     weighted diameter). Raises if ``max_rounds`` is hit with a
@@ -791,43 +786,24 @@ def sssp(seeds: DataFrame, edges: DataFrame,
     Determinism: integer (or decimal) weights make every distance an
     exact value — both engines agree bit-for-bit; the DuckDB oracle
     unrolls the same relaxation (suite._sssp_sql)."""
-    edges = (edges.select("src", "dst", "w")
-             .repartition(F.col("src")).persist())
     dists = (seeds.select("node_id").distinct()
              .withColumn("dist", F.lit(0).cast("long"))
              .localCheckpoint(eager=True))
-    frontier = dists
+    with _persisted(edges.select("src", "dst", "w")) as e:
+        def step(_, parts):
+            frontier = parts[-1]
+            return (frontier.join(e, frontier.node_id == e.src)
+                    .groupBy(F.col("dst").alias("node_id"))
+                    .agg(F.min(F.col("dist") + F.col("w")).alias("offer"))
+                    .join(_least(parts, "dist"), "node_id", "left")
+                    .filter(F.col("dist").isNull()
+                            | (F.col("offer") < F.col("dist")))
+                    .select("node_id", F.col("offer").alias("dist")))
 
-    try:
-        for _ in range(max_rounds):
-            offers = (
-                frontier.join(edges, frontier.node_id == edges.src)
-                .groupBy(F.col("dst").alias("node_id"))
-                .agg(F.min(F.col("dist") + F.col("w")).alias("offer"))
-            )
-            improved = (
-                offers.join(dists, "node_id", "left")
-                .filter(F.col("dist").isNull()
-                        | (F.col("offer") < F.col("dist")))
-                .select("node_id", F.col("offer").alias("dist"))
-                .localCheckpoint(eager=True)
-            )
-            if improved.rdd.isEmpty():
-                return dists
-            # merge: improved labels replace old ones (anti-join keeps
-            # the untouched labels; both sides are checkpointed so the
-            # union is metadata + one shuffle)
-            dists = (
-                dists.join(improved.select("node_id"), "node_id",
-                           "left_anti")
-                .unionByName(improved)
-                .localCheckpoint(eager=True)
-            )
-            frontier = improved
-    finally:
-        edges.unpersist()
-    raise RuntimeError(f"sssp: frontier still active after {max_rounds} "
-                       "rounds (negative weights or pathological graph?)")
+        parts = _rounds(step, dists, max_rounds, exhausted=(
+            f"sssp: frontier still active after {max_rounds} rounds "
+            "(negative weights or pathological graph?)"))
+    return _least(parts, "dist")
 
 
 def temporal_reach(seeds: DataFrame, edges: DataFrame,
@@ -852,50 +828,31 @@ def temporal_reach(seeds: DataFrame, edges: DataFrame,
     Scale shape: identical to sssp — per round the IMPROVED frontier
     joins the (persisted, src-hash-partitioned) contact set with the
     admissibility predicate, one per-dst min, one improvement join;
-    work follows the wavefront. One count action per round.
+    work follows the wavefront. One emptiness probe per round.
 
     Oracle twin: the graph_temporal_reach entry (recursive CTE over
     (node, arrival) pairs — finite contact times make the closure
     small).
     """
-    edges = (edges.select("src", "dst", F.col("t").cast("long").alias("t"))
-             .repartition(F.col("src")).persist())
     dist = (seeds.select("node_id").distinct()
             .withColumn("arr", F.lit(0).cast("long"))
             .localCheckpoint(eager=True))
-    frontier = dist
-    try:
-        for _ in range(max_rounds):
-            offers = (frontier.join(
-                edges, (frontier.node_id == edges.src)
-                & (edges.t >= frontier.arr))
-                .groupBy(F.col("dst").alias("o_node"))
-                .agg(F.min("t").alias("cand")))
-            improved = (offers.join(
-                dist, offers.o_node == dist.node_id, "left")
-                .filter(F.col("arr").isNull()
-                        | (F.col("cand") < F.col("arr")))
-                .select(F.col("o_node").alias("node_id"),
-                        F.col("cand").alias("arr"))
-                .localCheckpoint(eager=True))
-            if not improved.count():
-                return dist.select("node_id",
-                                   F.col("arr").alias("arrival"))
-            dist = (dist.join(improved.select(F.col("node_id"), F.col("arr")
-                                              .alias("new_arr")),
-                              "node_id", "left")
-                    .select("node_id",
-                            F.least(F.col("arr"),
-                                    F.coalesce("new_arr", F.col("arr")))
-                            .alias("arr"))
-                    .unionByName(improved.join(dist, "node_id",
-                                               "left_anti"))
-                    .localCheckpoint(eager=True))
-            frontier = improved
-    finally:
-        edges.unpersist()
-    raise RuntimeError(
-        f"temporal_reach: no convergence in {max_rounds} rounds")
+    with _persisted(edges.select("src", "dst",
+                                 F.col("t").cast("long").alias("t"))) as e:
+        def step(_, parts):
+            frontier = parts[-1]
+            return (frontier.join(e, (frontier.node_id == e.src)
+                                  & (e.t >= frontier.arr))
+                    .groupBy(F.col("dst").alias("node_id"))
+                    .agg(F.min("t").alias("cand"))
+                    .join(_least(parts, "arr"), "node_id", "left")
+                    .filter(F.col("arr").isNull()
+                            | (F.col("cand") < F.col("arr")))
+                    .select("node_id", F.col("cand").alias("arr")))
+
+        parts = _rounds(step, dist, max_rounds, exhausted=(
+            f"temporal_reach: no convergence in {max_rounds} rounds"))
+    return _least(parts, "arr", "arrival")
 
 
 def propagate_labels(seeds: DataFrame, edges: DataFrame,
@@ -911,36 +868,21 @@ def propagate_labels(seeds: DataFrame, edges: DataFrame,
     edge set, a min-label aggregate over the round's offers, and an
     anti-join against the already-labeled set. Work follows the
     wavefront; the edge set is shuffled once."""
-    edges = (edges.select("src", "dst")
-             .repartition(F.col("src")).persist())
     labeled = (seeds.select("node_id", "label")
                .groupBy("node_id").agg(F.min("label").alias("label"))
                .withColumn("dist", F.lit(0))
                .localCheckpoint(eager=True))
-    frontier = labeled
-    lparts = [labeled]
+    with _persisted(edges.select("src", "dst")) as e:
+        def step(r, parts):
+            frontier = parts[-1]
+            return (frontier.join(e, frontier.node_id == e.src)
+                    .groupBy(F.col("dst").alias("node_id"))
+                    .agg(F.min("label").alias("label"))
+                    .join(_union_all(parts).select("node_id"), "node_id",
+                          "left_anti")
+                    .withColumn("dist", F.lit(r)))
 
-    try:
-        for r in range(1, max_rounds + 1):
-            offers = (
-                frontier.join(edges, frontier.node_id == edges.src)
-                .groupBy(F.col("dst").alias("node_id"))
-                .agg(F.min("label").alias("label"))
-            )
-            nxt = (
-                offers.join(labeled.select("node_id"), "node_id",
-                            "left_anti")
-                .withColumn("dist", F.lit(r))
-                .localCheckpoint(eager=True)
-            )
-            if nxt.rdd.isEmpty():
-                break
-            lparts.append(nxt)
-            labeled = _union_all(lparts)  # balanced: depth log r
-            frontier = nxt
-    finally:
-        edges.unpersist()
-    return labeled
+        return _union_all(_rounds(step, labeled, max_rounds))
 
 
 def kcore(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
@@ -1142,8 +1084,6 @@ def strongly_connected_components(edges: DataFrame,
     1000-node chorded cluster colors in ~30 rounds) but a bare
     N-cycle costs N rounds. Trim guarantees the acyclic portion never
     reaches coloring at all."""
-    import functools
-
     e_all = (edges.filter(F.col("src") != F.col("dst"))
              .select("src", "dst").distinct().localCheckpoint(eager=True))
     nodes = (e_all.select(F.col("src").alias("n"))
@@ -1156,7 +1096,7 @@ def strongly_connected_components(edges: DataFrame,
         nodes.limit(0).withColumn("scc_id", F.col("n"))]
     # isolated nodes never enter edges; callers pass edge-defined graphs
     for _ in range(max_rounds):
-        if not live_n.limit(1).count():
+        if _empty(live_n):
             out = _union_all(done)  # balanced: many trim rounds
             return out.select(F.col("n").alias("node_id"), "scc_id")
         # --- 1. trim singleton SCCs (in-deg 0 or out-deg 0) ---
@@ -1166,7 +1106,7 @@ def strongly_connected_components(edges: DataFrame,
             trivial = (live_n.join(srcs, "n", "left_anti")
                        .unionByName(live_n.join(dsts, "n", "left_anti"))
                        .distinct().localCheckpoint(eager=True))
-            if not trivial.limit(1).count():
+            if _empty(trivial):
                 break
             done.append(trivial.withColumn("scc_id", F.col("n")))
             live_n = live_n.join(trivial, "n", "left_anti") \
@@ -1177,7 +1117,7 @@ def strongly_connected_components(edges: DataFrame,
                       .join(trivial.withColumnRenamed("n", "dst"),
                             "dst", "left_anti")
                       .select("src", "dst").localCheckpoint(eager=True))
-        if not live_n.limit(1).count():
+        if _empty(live_n):
             continue
         # --- 2. forward min-id coloring to fixpoint ---
         color = live_n.select("n", F.col("n").alias("c")) \
@@ -1191,11 +1131,10 @@ def strongly_connected_components(edges: DataFrame,
                                         F.coalesce("pc", F.col("c")))
                            .alias("c"))
                    .localCheckpoint(eager=True))
-            changed = (nxt.alias("x").join(
-                color.alias("y"), "n")
-                .filter(F.col("x.c") != F.col("y.c")).limit(1).count())
+            settled = (nxt.alias("x").join(color.alias("y"), "n")
+                       .filter(F.col("x.c") != F.col("y.c")).isEmpty())
             color = nxt
-            if not changed:
+            if settled:
                 break
         # --- 3. backward mark within color classes ---
         mark = color.filter(F.col("n") == F.col("c")) \
@@ -1214,7 +1153,7 @@ def strongly_connected_components(edges: DataFrame,
                    .select(F.col("src").alias("n"), "c").distinct()
                    .join(mark, ["n", "c"], "left_anti")
                    .localCheckpoint(eager=True))
-            if not new.limit(1).count():
+            if _empty(new):
                 break
             mark = mark.unionByName(new).localCheckpoint(eager=True)
         done.append(mark.select("n", F.col("c").alias("scc_id")))
@@ -1248,31 +1187,36 @@ def hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
     on a bipartite page->url graph, pages get auth=0 and leaf urls
     hub=0.
     """
-    edges = edges.select("src", "dst").repartition(F.col("src")).persist()
-    edges.count()
-    nodes = (edges.select(F.col("src").alias("node_id"))
-             .unionByName(edges.select(F.col("dst").alias("node_id")))
-             .distinct())
-    hub = nodes.withColumn("hub", F.lit(1).cast("bigint")) \
-               .localCheckpoint(eager=True)
-    try:
-        for _ in range(iterations):
-            auth = (edges.join(hub, edges.src == hub.node_id)
-                    .groupBy("dst").agg(F.sum("hub").alias("auth"))
-                    .withColumnRenamed("dst", "node_id"))
-            hub = (edges.join(auth, edges.dst == auth.node_id)
-                   .groupBy("src").agg(F.sum("auth").alias("hub"))
-                   .withColumnRenamed("src", "node_id")
-                   .localCheckpoint(eager=True))
-        auth = auth.localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()
+    with _persisted(edges.select("src", "dst")) as e:
+        nodes = _endpoints(e)
+        hub, auth = _reinforce(
+            lambda hub: (e.join(hub, e.src == hub.node_id)
+                         .groupBy("dst").agg(F.sum("hub").alias("auth"))
+                         .withColumnRenamed("dst", "node_id")),
+            lambda auth: (e.join(auth, e.dst == auth.node_id)
+                          .groupBy("src").agg(F.sum("auth").alias("hub"))
+                          .withColumnRenamed("src", "node_id")),
+            nodes.withColumn("hub", F.lit(1).cast("bigint"))
+            .localCheckpoint(eager=True), iterations)
     return (nodes
             .join(hub, "node_id", "left")
             .join(auth, "node_id", "left")
             .select("node_id",
                     F.coalesce("hub", F.lit(0)).alias("hub"),
                     F.coalesce("auth", F.lit(0)).alias("auth")))
+
+
+def _reinforce(first: Callable[[DataFrame], DataFrame],
+               second: Callable[[DataFrame], DataFrame],
+               seed: DataFrame, iterations: int):
+    """Mutual-reinforcement rounds (HITS, SALSA): from y_0 = ``seed``,
+    round r computes x_r = first(y_{r-1}) and y_r = second(x_r).
+    Returns (y_n, x_n). Only x_r is a round output (checkpointed); y_r
+    rides lazily into the next round's x, and y_n is left lazy for the
+    caller's final join."""
+    xs = _rounds(lambda r, xs: first(seed if r == 1 else second(xs[-1])),
+                 seed, iterations, until_empty=False)
+    return second(xs[-1]), xs[-1]
 
 
 def link_predict(edges: DataFrame, min_common: int = 1,
@@ -1433,39 +1377,36 @@ def random_walks(edges: DataFrame, starts: DataFrame, length: int = 8,
     Oracle twin: _graph_walks_sql in operators/suite.py (steps
     unrolled, row_number argmin).
     """
-    spark = starts.sparkSession
-    edges = (edges.select("src", "dst").distinct()
-             .repartition(F.col("src")).persist())
-    edges.count()
-    reps = spark.range(walks_per_node).select(F.col("id").alias("r"))
-    cur = (starts.select("node_id").distinct().crossJoin(reps)
-           .select((F.col("node_id") * walks_per_node + F.col("r"))
-                   .alias("walk_id"),
-                   F.col("node_id").alias("node"))
-           .withColumn("step", F.lit(0))
-           .localCheckpoint(eager=True))
-    out = cur
-    try:
-        for t in range(1, length + 1):
+    with _persisted(edges.select("src", "dst").distinct()) as e:
+        def step(t, walks):
+            cur = walks[-1]
             h = (F.conv(F.substring(F.md5(F.concat_ws(
                 ":", F.col("walk_id").cast("string"), F.lit(str(t)),
                 F.col("node").cast("string"),
                 F.col("dst").cast("string"))), 1, 15), 16, 10)
                 .cast("bigint"))
-            nxt = (cur.join(edges, cur.node == edges.src)
-                   .select("walk_id", h.alias("h"), "dst")
-                   .groupBy("walk_id")
-                   .agg(F.min(F.struct("h", "dst")).alias("m"))
-                   .select("walk_id", F.col("m.dst").alias("node"))
-                   .withColumn("step", F.lit(t))
-                   .localCheckpoint(eager=True))
-            if nxt.rdd.isEmpty():
-                break
-            out = out.unionByName(nxt.select(*out.columns))
-            cur = nxt
-    finally:
-        edges.unpersist()
-    return out.select("walk_id", "step", "node")
+            return (cur.join(e, cur.node == e.src)
+                    .select("walk_id", h.alias("h"), "dst")
+                    .groupBy("walk_id")
+                    .agg(F.min(F.struct("h", "dst")).alias("m"))
+                    .select("walk_id", F.col("m.dst").alias("node"))
+                    .withColumn("step", F.lit(t)))
+
+        walks = _rounds(step, _walk_starts(starts, walks_per_node), length)
+    return _union_all(walks).select("walk_id", "step", "node")
+
+
+def _walk_starts(starts: DataFrame, walks_per_node: int) -> DataFrame:
+    """Step 0 of every walk: (walk_id, node, step) with walk_id =
+    node_id * walks_per_node + r for r < walks_per_node."""
+    reps = starts.sparkSession.range(walks_per_node) \
+        .select(F.col("id").alias("r"))
+    return (starts.select("node_id").distinct().crossJoin(reps)
+            .select((F.col("node_id") * walks_per_node + F.col("r"))
+                    .alias("walk_id"),
+                    F.col("node_id").alias("node"))
+            .withColumn("step", F.lit(0))
+            .localCheckpoint(eager=True))
 
 
 def walk_skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
@@ -1529,39 +1470,32 @@ def assortativity_moments(edges: DataFrame) -> DataFrame:
 
 
 def _multi_source_sweep(seeds: DataFrame, edges: DataFrame,
-                        max_rounds: int) -> DataFrame:
-    """The shared multi-source BFS sweep under closeness / harmonic /
-    eccentricity: one level-synchronous traversal carrying every
-    seed's wavefront at once; returns the visited set (seed, node,
-    dist) with exact hop distances. Edges are shuffled once
-    (persisted src-hash-partitioned); per-round shuffles carry only
-    the (seed, node) frontier."""
-    edges = (edges.select("src", "dst")
-             .repartition(F.col("src")).persist())
+                        max_rounds: int,
+                        shared_seed: bool = False) -> DataFrame:
+    """The shared multi-source BFS sweep under bfs_distances /
+    closeness / harmonic / eccentricity: one level-synchronous
+    traversal carrying every seed's wavefront at once; returns the
+    visited set (seed, node, dist) with exact hop distances. Edges are
+    shuffled once (persisted src-hash-partitioned); per-round shuffles
+    carry only the (seed, node) frontier. ``shared_seed`` puts every
+    seed under one shared key — the seed column is dropped, so the
+    visited set is (node, dist) with dist the hop distance from the
+    nearest seed: plain multi-seed BFS."""
+    key = ["node"] if shared_seed else ["seed", "node"]
     frontier = (seeds.select("node_id").distinct()
-                .select(F.col("node_id").alias("seed"),
-                        F.col("node_id").alias("node"))
-                .withColumn("dist", F.lit(0))
+                .select(*[F.col("node_id").alias(k) for k in key],
+                        F.lit(0).alias("dist"))
                 .localCheckpoint(eager=True))
-    visited = frontier
-    cparts = [frontier]
-    try:
-        for r in range(1, max_rounds + 1):
-            nxt = (frontier.join(edges, frontier.node == edges.src)
-                   .select("seed", F.col("dst").alias("node"))
-                   .distinct()
-                   .join(visited.select("seed", "node"),
-                         ["seed", "node"], "left_anti")
-                   .withColumn("dist", F.lit(r))
-                   .localCheckpoint(eager=True))
-            if nxt.rdd.isEmpty():
-                break
-            cparts.append(nxt)
-            visited = _union_all(cparts)  # balanced: depth log r
-            frontier = nxt
-    finally:
-        edges.unpersist()
-    return visited
+    with _persisted(edges.select("src", "dst")) as e:
+        def step(r, parts):
+            frontier = parts[-1]
+            return (frontier.join(e, frontier.node == e.src)
+                    .select(*key[:-1], F.col("dst").alias("node"))
+                    .distinct()
+                    .join(_union_all(parts).select(*key), key, "left_anti")
+                    .withColumn("dist", F.lit(r)))
+
+        return _union_all(_rounds(step, frontier, max_rounds))
 
 
 def eccentricity(seeds: DataFrame, edges: DataFrame,
@@ -1651,27 +1585,23 @@ def neighbor_agg(edges: DataFrame, features: DataFrame,
     table is the only state and it never grows beyond |V| x rounds
     columns.
     """
-    edges = (edges.select("src", "dst")
-             .repartition(F.col("src")).persist())
     cur = (features.select("node_id", F.col("h").cast("bigint")
                            .alias("h0"))
            .localCheckpoint(eager=True))
-    try:
-        for t in range(1, rounds + 1):
-            prev = f"h{t - 1}"
-            msg = (edges.join(cur.select(F.col("node_id").alias("src"),
-                                         F.col(prev).alias("_hm")), "src")
+    with _persisted(edges.select("src", "dst")) as e:
+        def step(t, layers):
+            cur, prev = layers[-1], f"h{t - 1}"
+            msg = (e.join(cur.select(F.col("node_id").alias("src"),
+                                     F.col(prev).alias("_hm")), "src")
                    .groupBy("dst").agg(F.sum("_hm").alias("_m")))
-            cur = (cur.join(msg.select(F.col("dst").alias("node_id"),
-                                       "_m"), "node_id", "left")
-                   .withColumn(f"h{t}",
-                               F.col(prev) + F.coalesce(F.col("_m"),
-                                                        F.lit(0)))
-                   .drop("_m")
-                   .localCheckpoint(eager=True))
-    finally:
-        edges.unpersist()
-    return cur
+            return (cur.join(msg.select(F.col("dst").alias("node_id"),
+                                        "_m"), "node_id", "left")
+                    .withColumn(f"h{t}",
+                                F.col(prev) + F.coalesce(F.col("_m"),
+                                                         F.lit(0)))
+                    .drop("_m"))
+
+        return _rounds(step, cur, rounds, until_empty=False)[-1]
 
 
 def ktruss(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
@@ -1769,7 +1699,7 @@ def maximal_independent_set(edges: DataFrame,
                  .localCheckpoint(eager=True))
     mis: DataFrame | None = None
     for r in range(1, max_rounds + 1):
-        if not undecided.limit(1).count():
+        if _empty(undecided):
             # empty-graph / all-self-loop input: the MIS is empty
             if mis is None:
                 return undecided.select(F.col("n").alias("node_id"))
@@ -1879,7 +1809,7 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
                                 F.col("comp").alias("cb")), "b")
             .filter(F.col("ca") != F.col("cb"))
             .localCheckpoint(eager=True))
-        if not live.count():
+        if _empty(live):
             return und.limit(0).select("a", "b", "w") \
                 if forest is None else forest
         cand = (live.select(F.col("ca").alias("c"), "w", "a", "b",
@@ -2090,51 +2020,13 @@ def weighted_random_walks(edges: DataFrame, starts: DataFrame,
 
     Scale shape: identical to random_walks plus a per-(walk, step)
     window over the candidate out-edges (partitioned on walk_id — the
-    frontier key, already co-located after the join).
+    frontier key, already co-located after the join). This is
+    :func:`node2vec_walks` with equal biases: a constant bias scales
+    cum and total alike and cancels out of the crossing test.
 
     Oracle twin: _weighted_walks_sql in operators/suite.py.
     """
-    spark = starts.sparkSession
-    edges = (edges.select("src", "dst", F.col("w").cast("long"))
-             .repartition(F.col("src")).persist())
-    edges.count()
-    reps = spark.range(walks_per_node).select(F.col("id").alias("r"))
-    cur = (starts.select("node_id").distinct().crossJoin(reps)
-           .select((F.col("node_id") * walks_per_node + F.col("r"))
-                   .alias("walk_id"),
-                   F.col("node_id").alias("node"))
-           .withColumn("step", F.lit(0))
-           .localCheckpoint(eager=True))
-    out = cur
-    two60 = F.lit(str(1 << 60)).cast("decimal(38,0)")
-    try:
-        for t in range(1, length + 1):
-            h = (F.conv(F.substring(F.md5(F.concat_ws(
-                ":", F.col("walk_id").cast("string"), F.lit(str(t)),
-                F.col("node").cast("string"))), 1, 15), 16, 10)
-                .cast("decimal(38,0)"))
-            cand = (cur.join(edges, cur.node == edges.src)
-                    .select("walk_id", h.alias("h"), "dst", "w"))
-            win = Window.partitionBy("walk_id").orderBy("dst")
-            tot = Window.partitionBy("walk_id")
-            crossed = (cand
-                       .withColumn("cum", F.sum("w").over(win)
-                                   .cast("decimal(38,0)"))
-                       .withColumn("total", F.sum("w").over(tot)
-                                   .cast("decimal(38,0)"))
-                       .filter(F.col("cum") * two60
-                               > F.col("h") * F.col("total")))
-            nxt = (crossed.groupBy("walk_id")
-                   .agg(F.min("dst").alias("node"))
-                   .withColumn("step", F.lit(t))
-                   .localCheckpoint(eager=True))
-            if nxt.rdd.isEmpty():
-                break
-            out = out.unionByName(nxt.select(*out.columns))
-            cur = nxt
-    finally:
-        edges.unpersist()
-    return out.select("walk_id", "step", "node")
+    return node2vec_walks(edges, starts, length, walks_per_node, 1, 1, 1)
 
 
 def node2vec_walks(edges: DataFrame, starts: DataFrame,
@@ -2159,71 +2051,64 @@ def node2vec_walks(edges: DataFrame, starts: DataFrame,
     the (prev, dst) adjacency membership probe against the undirected
     simple edge set (key-partitioned; the frontier side is
     |walks| x out-degree). State carries (walk_id, prev, node) only.
+    With three equal biases the bias is a constant that cancels out
+    of the crossing test, so the probe and the ``prev`` column are
+    skipped: that is :func:`weighted_random_walks`.
 
     Oracle twin: _node2vec_sql in operators/suite.py.
     """
-    spark = starts.sparkSession
-    edges = (edges.select("src", "dst", F.col("w").cast("long"))
-             .repartition(F.col("src")).persist())
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("ua"),
-                   F.greatest("src", "dst").alias("ub"))
-           .distinct()
-           .withColumn("adj_flag", F.lit(1))
-           .localCheckpoint(eager=True))
-    reps = spark.range(walks_per_node).select(F.col("id").alias("r"))
-    cur = (starts.select("node_id").distinct().crossJoin(reps)
-           .select((F.col("node_id") * walks_per_node + F.col("r"))
-                   .alias("walk_id"),
-                   F.lit(None).cast("long").alias("prev"),
-                   F.col("node_id").alias("node"))
-           .withColumn("step", F.lit(0))
-           .localCheckpoint(eager=True))
-    out = cur.select("walk_id", "step", "node")
+    biased = not bias_return == bias_adjacent == bias_far
     two60 = F.lit(str(1 << 60)).cast("decimal(38,0)")
-    try:
-        for t in range(1, length + 1):
+    win = Window.partitionBy("walk_id").orderBy("dst")
+    tot = Window.partitionBy("walk_id")
+    start = _walk_starts(starts, walks_per_node) \
+        .withColumn("prev", F.lit(None).cast("long"))
+    with _persisted(edges.select("src", "dst",
+                                 F.col("w").cast("long"))) as e:
+        if biased:
+            und = (e.filter(F.col("src") != F.col("dst"))
+                   .select(F.least("src", "dst").alias("ua"),
+                           F.greatest("src", "dst").alias("ub"))
+                   .distinct()
+                   .withColumn("adj_flag", F.lit(1))
+                   .localCheckpoint(eager=True))
+
+        def step(t, walks):
+            cur = walks[-1]
             h = (F.conv(F.substring(F.md5(F.concat_ws(
                 ":", F.col("walk_id").cast("string"), F.lit(str(t)),
                 F.col("node").cast("string"))), 1, 15), 16, 10)
                 .cast("decimal(38,0)"))
-            cand = (cur.join(edges, cur.node == edges.src)
-                    .select("walk_id", "prev", h.alias("h"), "dst", "w"))
-            cand = (cand.join(
-                und,
-                (F.least(F.col("prev"), F.col("dst")) == F.col("ua"))
-                & (F.greatest(F.col("prev"), F.col("dst")) == F.col("ub")),
-                "left"))
-            bias = (F.when(F.col("dst") == F.col("prev"),
-                           F.lit(bias_return))
-                    .when(F.col("adj_flag").isNotNull(),
-                          F.lit(bias_adjacent))
-                    .otherwise(F.lit(bias_far)))
-            cand = cand.select("walk_id", "h", "dst",
+            cand = cur.join(e, cur.node == e.src).withColumn("h", h)
+            bias = F.lit(bias_far)
+            if biased:
+                cand = cand.join(
+                    und,
+                    (F.least(F.col("prev"), F.col("dst")) == F.col("ua"))
+                    & (F.greatest(F.col("prev"), F.col("dst"))
+                       == F.col("ub")),
+                    "left")
+                bias = (F.when(F.col("dst") == F.col("prev"),
+                               F.lit(bias_return))
+                        .when(F.col("adj_flag").isNotNull(),
+                              F.lit(bias_adjacent))
+                        .otherwise(bias))
+            nxt = (cand.select("walk_id", "h", "dst",
                                (F.col("w") * bias).alias("mass"))
-            win = Window.partitionBy("walk_id").orderBy("dst")
-            tot = Window.partitionBy("walk_id")
-            crossed = (cand
-                       .withColumn("cum", F.sum("mass").over(win)
-                                   .cast("decimal(38,0)"))
-                       .withColumn("total", F.sum("mass").over(tot)
-                                   .cast("decimal(38,0)"))
-                       .filter(F.col("cum") * two60
-                               > F.col("h") * F.col("total")))
-            nxt_core = (crossed.groupBy("walk_id")
-                        .agg(F.min("dst").alias("node")))
-            nxt = (cur.select("walk_id", F.col("node").alias("prev"))
-                   .join(nxt_core, "walk_id")
-                   .withColumn("step", F.lit(t))
-                   .select("walk_id", "prev", "node", "step")
-                   .localCheckpoint(eager=True))
-            if nxt.rdd.isEmpty():
-                break
-            out = out.unionByName(nxt.select("walk_id", "step", "node"))
-            cur = nxt
-    finally:
-        edges.unpersist()
-    return out.select("walk_id", "step", "node")
+                   .withColumn("cum", F.sum("mass").over(win)
+                               .cast("decimal(38,0)"))
+                   .withColumn("total", F.sum("mass").over(tot)
+                               .cast("decimal(38,0)"))
+                   .filter(F.col("cum") * two60
+                           > F.col("h") * F.col("total"))
+                   .groupBy("walk_id").agg(F.min("dst").alias("node")))
+            if biased:
+                nxt = (cur.select("walk_id", F.col("node").alias("prev"))
+                       .join(nxt, "walk_id"))
+            return nxt.withColumn("step", F.lit(t))
+
+        walks = _rounds(step, start, length)
+    return _union_all([w.select("walk_id", "step", "node") for w in walks])
 
 
 def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -2346,48 +2231,8 @@ def betweenness(edges: DataFrame, sources: DataFrame | None = None,
     pins textbook agreement to 1e-6 (the grid error is <= levels *
     1e-8). Directed semantics (pass both edge directions for the
     undirected variant)."""
-    e = (edges.filter(F.col("src") != F.col("dst"))
-         .select("src", "dst").distinct()
-         .repartition(F.col("src")).persist())
-    e.count()
-    nodes = (e.select(F.col("src").alias("node_id"))
-             .unionByName(e.select(F.col("dst").alias("node_id")))
-             .distinct().localCheckpoint(eager=True))
-    n = nodes.count()
-    src_nodes = (nodes if sources is None
-                 else sources.select("node_id").distinct()
-                 .join(nodes, "node_id", "left_semi"))
-    n_sources = src_nodes.count()
-    if not n_sources:
-        raise ValueError("betweenness: empty source set")
-
-    frontier = (src_nodes
-                .select(F.col("node_id").alias("s"),
-                        F.col("node_id").alias("v"),
-                        F.lit(1).cast("long").alias("sigma"))
-                .localCheckpoint(eager=True))
-    # visited BFS-DAG state per level; each level is its own
-    # checkpointed frame (the backward sweep walks them in reverse)
-    levels: list[DataFrame] = [frontier]
-    visited = frontier.select("s", "v").localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        nxt = (frontier.join(e, frontier.v == e.src)
-               .select("s", F.col("dst").alias("v"), "sigma")
-               .join(visited, ["s", "v"], "left_anti")
-               .groupBy("s", "v").agg(F.sum("sigma").alias("sigma"))
-               .localCheckpoint(eager=True))
-        if not nxt.limit(1).count():
-            break
-        levels.append(nxt)
-        visited = (visited.unionByName(nxt.select("s", "v"))
-                   .localCheckpoint(eager=True))
-        frontier = nxt
-    else:
-        raise RuntimeError(f"betweenness: diameter exceeds {max_rounds} "
-                           "rounds (raise max_rounds)")
-
-    # backward sweep: delta at the deepest level is 0. Delta state is
-    # an INTEGER on the 1e-8 grid (delta8 = delta * 10^8): each
+    # the backward sweep: delta at the deepest level is 0. Delta state
+    # is an INTEGER on the 1e-8 grid (delta8 = delta * 10^8): each
     # contribution sigma_v * (1 + delta_w) / sigma_w is computed as
     # the exact HALF_UP integer (2*num + den) div (2*den) — rounding
     # the DOUBLE product to 8 dp here ties SYSTEMATICALLY (sigma
@@ -2397,39 +2242,65 @@ def betweenness(edges: DataFrame, sources: DataFrame | None = None,
     # discipline). int64 bound, stated: sigma_max * (10^8 +
     # delta8_max) < 2^63 — i.e. per-source delta < ~9e10/sigma_max,
     # far past any sampled-betweenness use.
-    acc_parts: list[DataFrame] = []
-    delta = None  # (s, v, delta8) for level d+1
     grid = 10 ** 8
-    for d in range(len(levels) - 2, -1, -1):
-        succ = levels[d + 1].select(
-            "s", F.col("v").alias("w"), F.col("sigma").alias("sigma_w"))
-        if delta is not None:
-            succ = (succ.join(delta.select("s",
-                                           F.col("v").alias("w"),
-                                           F.col("delta8").alias("dw8")),
-                              ["s", "w"], "left")
+    with _persisted(edges.filter(F.col("src") != F.col("dst"))
+                    .select("src", "dst").distinct()) as e:
+        nodes = _endpoints(e).localCheckpoint(eager=True)
+        n = nodes.count()
+        src_nodes = (nodes if sources is None
+                     else sources.select("node_id").distinct()
+                     .join(nodes, "node_id", "left_semi"))
+        n_sources = src_nodes.count()
+        if not n_sources:
+            raise ValueError("betweenness: empty source set")
+
+        def forward(_, levels):
+            # the visited BFS-DAG state per level; each level is its
+            # own checkpoint (the backward sweep walks them in reverse)
+            f = levels[-1]
+            return (f.join(e, f.v == e.src)
+                    .select("s", F.col("dst").alias("v"), "sigma")
+                    .join(_union_all(levels).select("s", "v"), ["s", "v"],
+                          "left_anti")
+                    .groupBy("s", "v").agg(F.sum("sigma").alias("sigma")))
+
+        def backward(r, deltas):
+            # round r walks level d = L-1-r; deltas[-1] is level d+1's
+            # (the seed stands for the all-zero deepest level)
+            d = len(levels) - 1 - r
+            succ = levels[d + 1].select(
+                "s", F.col("v").alias("w"), F.col("sigma").alias("sigma_w"))
+            if r > 1:
+                succ = (succ.join(deltas[-1].select(
+                    "s", F.col("v").alias("w"), F.col("delta8").alias("dw8")),
+                    ["s", "w"], "left")
                     .withColumn("dw8", F.coalesce("dw8",
                                                   F.lit(0).cast("long"))))
-        else:
-            succ = succ.withColumn("dw8", F.lit(0).cast("long"))
-        cur = levels[d]
-        contrib = (cur.join(e, cur.v == e.src)
-                   .select("s", "v", "sigma", F.col("dst").alias("w"))
-                   .join(succ, ["s", "w"])
-                   .select("s", "v",
-                           (F.lit(2) * F.col("sigma")
-                            * (F.lit(grid) + F.col("dw8"))
-                            + F.col("sigma_w")).alias("cnum"),
-                           (F.lit(2) * F.col("sigma_w")).alias("cden"))
-                   .select("s", "v",
-                           F.expr("cnum div cden").alias("part8")))
-        delta = (contrib.groupBy("s", "v")
-                 .agg(F.sum("part8").alias("delta8"))
-                 .localCheckpoint(eager=True))
-        dep = delta.filter(F.col("s") != F.col("v")) \
-            .select("v", "delta8")
-        acc_parts.append(dep)
-    e.unpersist()
+            else:
+                succ = succ.withColumn("dw8", F.lit(0).cast("long"))
+            cur = levels[d]
+            return (cur.join(e, cur.v == e.src)
+                    .select("s", "v", "sigma", F.col("dst").alias("w"))
+                    .join(succ, ["s", "w"])
+                    .select("s", "v",
+                            (F.lit(2) * F.col("sigma")
+                             * (F.lit(grid) + F.col("dw8"))
+                             + F.col("sigma_w")).alias("cnum"),
+                            (F.lit(2) * F.col("sigma_w")).alias("cden"))
+                    .select("s", "v",
+                            F.expr("cnum div cden").alias("part8"))
+                    .groupBy("s", "v").agg(F.sum("part8").alias("delta8")))
+
+        levels = _rounds(forward, src_nodes.select(
+            F.col("node_id").alias("s"), F.col("node_id").alias("v"),
+            F.lit(1).cast("long").alias("sigma"))
+            .localCheckpoint(eager=True), max_rounds, exhausted=(
+                f"betweenness: diameter exceeds {max_rounds} rounds "
+                "(raise max_rounds)"))
+        deltas = _rounds(backward, levels[-1], len(levels) - 1,
+                         until_empty=False)[1:]
+    acc_parts = [d.filter(F.col("s") != F.col("v")).select("v", "delta8")
+                 for d in deltas]
     if not acc_parts:  # no edges from any source: all-zero centrality
         return nodes.select("node_id", F.lit(0.0).alias("betweenness"))
     acc = _union_all(acc_parts)  # balanced: depth ∝ log(diameter)
@@ -2498,40 +2369,32 @@ def hyperball(edges: DataFrame, radius: int = 3, p: int = 4) -> DataFrame:
     from ..operators.sketch import hll_estimate, kmv_hash
 
     sb = 48 - p
-    # one dst-hash shuffle up front: every round's join probes the
-    # SAME edge partitioning (the closeness pattern), so per round
-    # only the register state moves
-    e = (edges.select("src", "dst").distinct()
-         .repartition(F.col("dst")).persist())
-    nodes = (e.select(F.col("src").alias("node_id"))
-             .unionByName(e.select(F.col("dst").alias("node_id")))
-             .distinct())
     h = kmv_hash(F.col("node_id"))
     rest = h.bitwiseAND(F.lit((1 << sb) - 1))
     rank = (F.when(rest == 0, F.lit(sb + 1))
             .otherwise(F.lit(sb + 1) - F.length(F.bin(rest))))
-    state = (nodes.select("node_id",
-                          F.shiftrightunsigned(h, sb).alias("reg"),
-                          rank.alias("mj"))
-             .localCheckpoint(eager=True))
+    # one dst-hash shuffle up front: every round's join probes the
+    # SAME edge partitioning (the closeness pattern), so per round
+    # only the register state moves
+    with _persisted(edges.select("src", "dst").distinct(), "dst") as e:
+        def step(_, states):
+            st = states[-1]
+            contrib = (e.join(st.withColumnRenamed("node_id", "_n"),
+                              F.col("dst") == F.col("_n"))
+                       .select(F.col("src").alias("node_id"), "reg", "mj"))
+            return (st.unionByName(contrib)
+                    .groupBy("node_id", "reg")
+                    .agg(F.max("mj").alias("mj")))
 
-    def est(st: DataFrame, t: int) -> DataFrame:
-        out = hll_estimate(st.withColumnRenamed("node_id", "grp"),
-                           "node_id", p)
-        return out.select("node_id", F.lit(t).cast("int").alias("t"),
-                          F.col("distinct_est").alias("ball_est"))
-
-    outs = [est(state, 0)]
-    for t in range(1, radius + 1):
-        contrib = (e.join(state.withColumnRenamed("node_id", "_n"),
-                          F.col("dst") == F.col("_n"))
-                   .select(F.col("src").alias("node_id"), "reg", "mj"))
-        state = (state.unionByName(contrib)
-                 .groupBy("node_id", "reg").agg(F.max("mj").alias("mj"))
-                 .localCheckpoint(eager=True))
-        outs.append(est(state, t))
-    e.unpersist()  # states are eagerly checkpointed; nothing lazy left
-    return _union_all(outs)
+        states = _rounds(step, _endpoints(e).select(
+            "node_id", F.shiftrightunsigned(h, sb).alias("reg"),
+            rank.alias("mj")).localCheckpoint(eager=True),
+            radius, until_empty=False)
+    return _union_all([
+        hll_estimate(st.withColumnRenamed("node_id", "grp"), "node_id", p)
+        .select("node_id", F.lit(t).cast("int").alias("t"),
+                F.col("distinct_est").alias("ball_est"))
+        for t, st in enumerate(states)])
 
 
 def hyperball_stats(ball_series: DataFrame,
@@ -3258,43 +3121,34 @@ def salsa(edges: DataFrame, iterations: int = 2,
     (node_id, hub, auth) with 0 for absent roles.
     """
     g = str(_GRID)
-    e = (edges.select("src", "dst").distinct()
-         .repartition(F.col("src")).persist())
-    e.count()
-    outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
-    indeg = e.groupBy("dst").agg(F.count("*").alias("idg"))
-    ed = (e.join(outdeg, "src").join(indeg, "dst")
-          .localCheckpoint(eager=True))
+    with _persisted(edges.select("src", "dst").distinct()) as e:
+        outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
+        indeg = e.groupBy("dst").agg(F.count("*").alias("idg"))
+        ed = (e.join(outdeg, "src").join(indeg, "dst")
+              .localCheckpoint(eager=True))
 
-    def half(scores, score_col, key, deg_col, out_key, out_col):
-        return (ed.join(scores, ed[key] == scores["node_id"])
-                .groupBy(out_key)
-                .agg(F.round(
-                    F.sum(F.round(F.col(score_col) / F.col(deg_col),
-                                  _GRID).cast(f"decimal(28,{g})"))
-                    .cast("double"), _GRID).alias(out_col))
-                .withColumnRenamed(out_key, "node_id"))
+        def half(scores, score_col, key, deg_col, out_key, out_col):
+            return (ed.join(scores, ed[key] == scores["node_id"])
+                    .groupBy(out_key)
+                    .agg(F.round(
+                        F.sum(F.round(F.col(score_col) / F.col(deg_col),
+                                      _GRID).cast(f"decimal(28,{g})"))
+                        .cast("double"), _GRID).alias(out_col))
+                    .withColumnRenamed(out_key, "node_id"))
 
-    auth = indeg.select(F.col("dst").alias("node_id"),
-                        F.lit(1.0).alias("auth"))
-    hub = None
-    for _ in range(iterations):
-        hub = half(auth, "auth", "dst", "idg", "src", "hub") \
-            .localCheckpoint(eager=False)
-        auth = half(hub, "hub", "src", "od", "dst", "auth") \
-            .localCheckpoint(eager=False)
-    nodes = (e.select(F.col("src").alias("node_id"))
-             .unionByName(e.select(F.col("dst").alias("node_id")))
-             .distinct())
-    out = (nodes.join(hub, "node_id", "left")
-           .join(auth, "node_id", "left")
-           .select("node_id",
-                   F.round(F.coalesce("hub", F.lit(0.0)), out_scale)
-                   .alias("hub"),
-                   F.round(F.coalesce("auth", F.lit(0.0)), out_scale)
-                   .alias("auth")))
-    e.unpersist()
-    return out
+        auth, hub = _reinforce(
+            lambda auth: half(auth, "auth", "dst", "idg", "src", "hub"),
+            lambda hub: half(hub, "hub", "src", "od", "dst", "auth"),
+            indeg.select(F.col("dst").alias("node_id"),
+                         F.lit(1.0).alias("auth")), iterations)
+    return (_endpoints(ed)
+            .join(hub, "node_id", "left")
+            .join(auth, "node_id", "left")
+            .select("node_id",
+                    F.round(F.coalesce("hub", F.lit(0.0)), out_scale)
+                    .alias("hub"),
+                    F.round(F.coalesce("auth", F.lit(0.0)), out_scale)
+                    .alias("auth")))
 
 
 def ab_core(edges: DataFrame, alpha: int, beta: int,
@@ -3360,32 +3214,23 @@ def ic_cascade(edges: DataFrame, seeds: DataFrame, rounds: int = 4,
     one anti-join against the activated set; stops early when a round
     activates nothing.
     """
-    e = (edges.select("src", "dst").distinct()
-         .repartition(F.col("src")).persist())
-    e.count()
     active = (seeds.select("node_id").distinct()
               .withColumn("round", F.lit(0).cast("int"))
               .localCheckpoint(eager=True))
-    frontier = active.select("node_id")
-    try:
-        for r in range(1, rounds + 1):
+    with _persisted(edges.select("src", "dst").distinct()) as e:
+        def step(r, parts):
+            frontier = parts[-1]
             coin = (F.conv(F.substring(F.md5(F.concat_ws(
                 ":", F.lit("ic"), F.lit(r), F.col("src"),
                 F.col("dst"))), 1, 12), 16, 10).cast("bigint")
                 % F.lit(p_den) < F.lit(p_num))
-            cand = (frontier.join(e, frontier["node_id"] == e["src"])
+            return (frontier.join(e, frontier["node_id"] == e["src"])
                     .filter(coin)
-                    .select(F.col("dst").alias("node_id")).distinct())
-            new = (cand.join(active, "node_id", "left_anti")
-                   .withColumn("round", F.lit(r).cast("int"))
-                   .localCheckpoint(eager=True))
-            if not new.count():
-                break
-            active = active.unionByName(new).localCheckpoint(eager=True)
-            frontier = new.select("node_id")
-    finally:
-        e.unpersist()
-    return active
+                    .select(F.col("dst").alias("node_id")).distinct()
+                    .join(_union_all(parts), "node_id", "left_anti")
+                    .withColumn("round", F.lit(r).cast("int")))
+
+        return _union_all(_rounds(step, active, rounds))
 
 
 def katz(edges: DataFrame, iterations: int = 4, decay_pow: int = 1,
@@ -3418,45 +3263,36 @@ def katz(edges: DataFrame, iterations: int = 4, decay_pow: int = 1,
 
     Scale shape: the edge set is persisted hash-partitioned on src
     once; each round shuffles only the |V|-row walk-count vector (one
-    join + one dst-keyed sum) plus one node-keyed outer join folding
-    the Horner state. Truncation depth is the adversarial knob, not
-    |V|: walk counts grow like degree^k and decimal(38) holds
+    join + one dst-keyed sum), checkpointed per round; the Horner sum
+    is then unrolled into ONE node-keyed sum over the rounds' counts
+    (w_k scaled by S^(K-k)). Truncation depth is the adversarial knob,
+    not |V|: walk counts grow like degree^k and decimal(38) holds
     hub-degree 10^4 graphs to k ~ 8 — beyond that the attenuated
     terms are below any practical output grid anyway.
     """
     assert iterations * decay_pow <= 15, "S^K must stay an exact double"
     s = 10 ** decay_pow
-    e = edges.select("src", "dst").repartition(F.col("src")).persist()
-    e.count()
-    nodes = (e.select(F.col("src").alias("node_id"))
-             .unionByName(e.select(F.col("dst").alias("node_id")))
-             .distinct().localCheckpoint(eager=True))
-    walks = nodes.withColumn("w", F.lit(1).cast("decimal(38,0)"))
-    acc = None
-    for _ in range(iterations):
-        walks = (e.join(walks.withColumnRenamed("node_id", "src"), "src")
-                 .groupBy("dst")
-                 .agg(F.sum("w").cast("decimal(38,0)").alias("w"))
-                 .withColumnRenamed("dst", "node_id")
-                 .localCheckpoint(eager=False))
-        if acc is None:
-            acc = walks.select("node_id", F.col("w").alias("acc"))
-        else:
-            a = acc.select("node_id", "acc")
-            acc = (a.join(walks, "node_id", "full")
-                   .select("node_id",
-                           (F.coalesce(F.col("acc"),
-                                       F.lit(0).cast("decimal(38,0)"))
-                            * F.lit(s)
-                            + F.coalesce(F.col("w"),
-                                         F.lit(0).cast("decimal(38,0)")))
-                           .cast("decimal(38,0)").alias("acc"))
-                   .localCheckpoint(eager=False))
+    dec = "decimal(38,0)"
+    with _persisted(edges.select("src", "dst")) as e:
+        nodes = _endpoints(e).localCheckpoint(eager=True)
+        walks = _rounds(
+            lambda _, walks: (
+                e.join(walks[-1].withColumnRenamed("node_id", "src"), "src")
+                .groupBy("dst").agg(F.sum("w").cast(dec).alias("w"))
+                .withColumnRenamed("dst", "node_id")),
+            nodes.withColumn("w", F.lit(1).cast(dec)), iterations,
+            until_empty=False)
+    # the Horner fold unrolled: acc_K = sum over k of w_k * S^(K-k),
+    # one exact integer sum over the rounds' walk counts
+    acc = (_union_all([
+        w.select("node_id", (F.col("w") * F.lit(s ** (iterations - k)))
+                 .cast(dec).alias("acc"))
+        for k, w in enumerate(walks) if k])
+        .groupBy("node_id").agg(F.sum("acc").cast(dec).alias("acc")))
     denom = float(s ** iterations)
     return (nodes.join(acc, "node_id", "left")
             .select("node_id",
-                    F.round(F.coalesce(F.col("acc"),
-                                       F.lit(0).cast("decimal(38,0)"))
+                    F.round(F.coalesce(F.col("acc"), F.lit(0).cast(dec))
                             .cast("double") / F.lit(denom),
                             out_scale).alias("katz")))
 

@@ -4,6 +4,7 @@ driver suite (graph_bfs / graph_pagerank / graph_triangles)."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from npm_extraction_server_spark.plans.graph import (
@@ -2114,3 +2115,58 @@ def test_fastrp_pure_python_twin(spark):
     assert set(got) == set(expect)
     for n in expect:
         assert got[n] == expect[n], (n, got[n], expect[n])
+
+
+def _cycle_with_chord(spark):
+    """Sink-free 4-node graph with integer weights and contact times."""
+    return spark.createDataFrame(
+        [(0, 1, 1, 1), (1, 2, 2, 2), (2, 3, 1, 3), (3, 0, 1, 4), (0, 2, 3, 2)],
+        "src long, dst long, w long, t long")
+
+
+_CACHE_CASES = {
+    "bfs_distances": lambda G, e, s: G.bfs_distances(s, e),
+    "closeness": lambda G, e, s: G.closeness(s, e),
+    "propagate_labels": lambda G, e, s: G.propagate_labels(
+        s.withColumn("label", F.lit(7)), e),
+    "sssp": lambda G, e, s: G.sssp(s, e),
+    "temporal_reach": lambda G, e, s: G.temporal_reach(s, e),
+    "ic_cascade": lambda G, e, s: G.ic_cascade(e, s),
+    "random_walks": lambda G, e, s: G.random_walks(e, s),
+    "weighted_random_walks": lambda G, e, s: G.weighted_random_walks(e, s),
+    "node2vec_walks": lambda G, e, s: G.node2vec_walks(e, s),
+    "betweenness": lambda G, e, s: G.betweenness(e),
+    "hyperball": lambda G, e, s: G.hyperball(e),
+    "neighbor_agg": lambda G, e, s: G.neighbor_agg(
+        e, e.select(F.col("src").alias("node_id"), F.col("w").alias("h"))),
+    "hits": lambda G, e, s: G.hits(e),
+    "salsa": lambda G, e, s: G.salsa(e),
+    "katz": lambda G, e, s: G.katz(e),
+    "pagerank": lambda G, e, s: G.pagerank(e),
+    "personalized_pagerank": lambda G, e, s: G.personalized_pagerank(e, s),
+    "pagerank_incremental": lambda G, e, s: G.pagerank_incremental(
+        e, e, G.pagerank(e, return_history=True)),
+    # raising paths: the 3-hop chain 0 -> 1 -> 2 -> 3 needs more rounds
+    "betweenness_exhausted": lambda G, e, s: G.betweenness(
+        e.filter(F.col("dst") - F.col("src") == 1), max_rounds=1),
+    "sssp_exhausted": lambda G, e, s: G.sssp(
+        s, e.filter(F.col("dst") - F.col("src") == 1), max_rounds=1),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CACHE_CASES))
+def test_persisted_edge_loops_leave_no_cached_data(spark, case):
+    """Every loop over a persisted edge set releases it: after the
+    result is collected — or after the loop raises on an exhausted
+    ``max_rounds`` — the session's cache manager holds nothing."""
+    from npm_extraction_server_spark.plans import graph as G
+
+    spark.catalog.clearCache()
+    e = _cycle_with_chord(spark)
+    seeds = spark.createDataFrame([(0,)], "node_id long")
+    if case.endswith("_exhausted"):
+        with pytest.raises(RuntimeError):
+            _CACHE_CASES[case](G, e, seeds).collect()
+    else:
+        assert _CACHE_CASES[case](G, e, seeds).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

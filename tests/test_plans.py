@@ -2,6 +2,8 @@
 must survive refactors — pushdown reaching the scan, zero-shuffle hot
 path, broadcast sides on the bounded sets."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -136,10 +138,17 @@ def test_minhash_band_rows_do_not_carry_signatures(spark):
     joins = [seg for seg in plan.split("\n")
              if "band_hash" in seg and "Join" in seg]
     assert not joins, "band self-join should be gone (round-6 groupBy plan)"
-    exchanges = [seg for seg in plan.split("\n")
-                 if "band_hash" in seg and "Exchange" in seg]
-    assert exchanges, "expected the bucket groupBy exchange on band_hash"
-    assert all("sig" not in seg for seg in exchanges)
+    # an Exchange line prints only its partition keys, so check the
+    # exchange's INPUT (the next line of the tree string): the map-side
+    # partial aggregate, whose functions and output list every column
+    # that rides the shuffle
+    lines = plan.split("\n")
+    inputs = [lines[i + 1] for i, seg in enumerate(lines)
+              if "Exchange hashpartitioning(band_id" in seg]
+    assert inputs, "expected the bucket groupBy exchange on band_hash"
+    for seg in inputs:
+        assert "partial_collect_list" in seg, seg
+        assert not re.search(r"\bsig#", seg), seg
 
 
 def test_read_where_pushes_residual_to_scan(spark, tmp_path):

@@ -11,10 +11,8 @@ pre-rewrite semantics:
   produce exactly the candidate-derived pair set the old self-join
   formulation produced (cross-checked here against a brute-force
   reconstruction from the signatures).
-- similarity unrolled dot/norm: the ``dim``-unrolled expression chain
-  must be bit-identical to the higher-order aggregate form.
-- pagerank checkpoint interval: the sink-free lazy-round path must
-  equal a per-iteration materialization (oracle-grid values).
+- pagerank / personalized_pagerank (one shared round body): the
+  final ranks must equal the last iteration of the returned history.
 """
 
 from __future__ import annotations
@@ -144,39 +142,27 @@ def test_minhash_lsh_pairs_equal_bruteforce_bucket_pairs(spark, docs):
     assert (0, 3) in got  # the exact duplicate pair must be found
 
 
-def test_unrolled_dot_norm_bitwise_equal_hof(spark):
-    from npm_extraction_server_spark.operators.similarity import _dot, _norm
-
-    rows = [(i, [((i * 31 + j * 7) % 97) / 97.0 - 0.5 for j in range(16)])
-            for i in range(50)]
-    df = spark.createDataFrame(rows, ["id", "v"]) \
-        .select("id", F.col("v").cast("array<float>").alias("v"))
-    out = df.select(
-        _dot(F.col("v"), F.col("v")).alias("hof_dot"),
-        _dot(F.col("v"), F.col("v"), dim=16).alias("unr_dot"),
-        _norm(F.col("v")).alias("hof_norm"),
-        _norm(F.col("v"), dim=16).alias("unr_norm"),
-    ).collect()
-    import struct
-    for r in out:
-        assert struct.pack("d", r["hof_dot"]) == struct.pack("d", r["unr_dot"])
-        assert struct.pack("d", r["hof_norm"]) == struct.pack("d", r["unr_norm"])
-
-
-def test_pagerank_interval_checkpoint_equals_history_path(spark):
-    """Sink-free pagerank (lazy rounds, interval checkpoints) must equal
-    the per-round-materialized history path's final iteration."""
-    from npm_extraction_server_spark.plans.graph import pagerank
+@pytest.mark.parametrize("rank_fn", ["pagerank", "personalized_pagerank"])
+def test_final_ranks_equal_history_last_iteration(spark, rank_fn):
+    """The final ranks equal the returned history's last iteration,
+    rounded to the output scale — for both callers of the shared
+    PageRank round body."""
+    from npm_extraction_server_spark.plans import graph
 
     edges = spark.createDataFrame(
         [(i, (i * 3 + 1) % 7) for i in range(7)] +
         [(i, (i + 1) % 7) for i in range(7)], ["src", "dst"])
-    fast = {r["node_id"]: r["rank"]
-            for r in pagerank(edges, iterations=5).collect()}
-    hist = pagerank(edges, iterations=5, return_history=True)
-    slow = {r["node_id"]: round(r["rank"], 8)
+    args = (edges,)
+    if rank_fn == "personalized_pagerank":
+        args += (spark.createDataFrame([(0,), (3,)], ["node_id"]),)
+    fn = getattr(graph, rank_fn)
+    final = {r["node_id"]: r["rank"]
+             for r in fn(*args, iterations=5).collect()}
+    hist = fn(*args, iterations=5, return_history=True)
+    last = {r["node_id"]: round(r["rank"], 8)
             for r in hist.filter(F.col("iter") == 5).collect()}
-    assert fast == slow
+    assert len(final) == 7
+    assert final == last
 
 
 def test_spread_partitions_memo_consistent(spark):
