@@ -32,6 +32,25 @@ loop over a persisted edge set uses:
   ``_union_all(outs)``: every input is a checkpoint, so the balanced
   union is pure metadata and no round rewrites earlier rounds' rows.
 
+One peel loop (``_peel``) is the fixpoint every decomposition uses
+(kcore, coreness, ktruss, trussness, ab_core):
+
+- ``_peel(step, live, n_live, rounds, exhausted)`` replaces the live
+  set by ``step(live)``, eagerly ``localCheckpoint``-ed, until its row
+  count stops changing, and returns ``(live, n_live, rounds left)``.
+  Each round runs ONE count action; the previous checkpoint's count is
+  carried in ``n_live`` — also from one ``_peel`` call into the next —
+  and never recounted. The no-change round counts toward ``rounds``.
+  A round that empties the live set also charges that round without
+  running it: an empty set is a fixpoint. ``exhausted`` is the
+  RuntimeError message raised when the rounds run out.
+- ``kcore``/``coreness`` share the degree step ``_core_step(k)``,
+  ``ktruss``/``trussness`` the triangle-support step
+  ``_truss_step(k)``. ``coreness`` and ``trussness`` call ``_peel``
+  once per ascending threshold with the rounds left over, so
+  ``max_rounds`` bounds the peel rounds over all thresholds, and label
+  what each threshold removed once, after its fixpoint.
+
 Scale notes (100 TB / 10^9-node graphs):
 
 - ``bfs_distances`` shuffles only the FRONTIER each round (nodes first
@@ -134,6 +153,78 @@ def _empty(df: DataFrame) -> bool:
     ``.rdd`` would run its shuffle stages; probe those with
     ``isEmpty()`` directly.)"""
     return df.rdd.getNumPartitions() == 0 or df.isEmpty()
+
+
+def _peel(step: Callable[[DataFrame], DataFrame], live: DataFrame,
+          n_live: int, rounds: int,
+          exhausted: str) -> tuple[DataFrame, int, int]:
+    """``(fixpoint, its row count, rounds left)`` of ``step`` from
+    ``live`` (``n_live`` rows) within ``rounds`` rounds (see the
+    module docstring)."""
+    while rounds > 0:
+        rounds -= 1
+        nxt = step(live).localCheckpoint(eager=True)
+        n_nxt = nxt.count()
+        if n_nxt == n_live:
+            return nxt, n_nxt, rounds
+        live, n_live = nxt, n_nxt
+        if not n_live and rounds:
+            # empty is a fixpoint: charge its no-change round, skip its jobs
+            return live, 0, rounds - 1
+    raise RuntimeError(exhausted)
+
+
+def _und_nodes(und: DataFrame, name: str = "n") -> DataFrame:
+    """Both endpoints of each (a, b) edge as one column ``name``
+    (duplicates kept: grouped, it gives the degrees)."""
+    return (und.select(F.col("a").alias(name))
+            .unionByName(und.select(F.col("b").alias(name))))
+
+
+def _core_step(k: int) -> Callable[[DataFrame], DataFrame]:
+    """kcore/coreness round: the (a, b) edges of ``live`` whose both
+    endpoints have degree >= k in ``live``."""
+    def step(live: DataFrame) -> DataFrame:
+        keep = (_und_nodes(live).groupBy("n").agg(F.count("*").alias("d"))
+                .filter(F.col("d") >= k).select("n"))
+        return (live.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
+                .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
+                .select("a", "b"))
+    return step
+
+
+def _truss_step(k: int) -> Callable[[DataFrame], DataFrame]:
+    """ktruss/trussness round: the (a, b, support) edges of ``live``
+    closing >= k-2 triangles in ``live``, with that support."""
+    def step(live: DataFrame) -> DataFrame:
+        live = live.select("a", "b")
+        tri = _oriented_triangles(live)
+        # (u,v,w) is degree-oriented, not sorted — normalize each of
+        # the triangle's three edges back to (a < b)
+        sup = (
+            tri.select(F.least("u", "v").alias("a"),
+                       F.greatest("u", "v").alias("b"))
+            .unionByName(tri.select(F.least("u", "w").alias("a"),
+                                    F.greatest("u", "w").alias("b")))
+            .unionByName(tri.select(F.least("v", "w").alias("a"),
+                                    F.greatest("v", "w").alias("b")))
+            .groupBy("a", "b").agg(F.count("*").alias("support"))
+        )
+        return (live.join(sup, ["a", "b"], "left")
+                .select("a", "b",
+                        F.coalesce("support", F.lit(0)).alias("support"))
+                .filter(F.col("support") >= k - 2))
+    return step
+
+
+def _luby_priority(r: int, *cols: str) -> Column:
+    """Round ``r``'s Luby priority of the row keyed by ``cols``: the
+    first 15 hex digits of md5("r:col:...") as a bigint — a pure
+    function of (round, key), so every run, partitioning and engine
+    draws the same (the DuckDB twins hash the same string)."""
+    return F.conv(F.substring(F.md5(F.concat_ws(
+        ":", F.lit(str(r)), *[F.col(c).cast("string") for c in cols])),
+        1, 15), 16, 10).cast("bigint")
 
 
 def bfs_distances(seeds: DataFrame, edges: DataFrame,
@@ -656,11 +747,7 @@ def _oriented_triangles(und: DataFrame) -> DataFrame:
     enumeration: wedges form only at each edge's cheap end, O(d) rows
     per degree-d hub. The triangle SET equals naive a<b<c
     enumeration; only the plan is skew-safe."""
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionByName(und.select(F.col("b").alias("n")))
-        .groupBy("n").agg(F.count("*").alias("d"))
-    )
+    deg = _und_nodes(und).groupBy("n").agg(F.count("*").alias("d"))
     da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
     a_first = (F.col("da") < F.col("db")) | (
@@ -695,13 +782,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     DuckDB oracle runs — same triangle set, skew-safe plan here).
     Returns (node_id, n_triangles) for nodes in >=1 triangle.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _und_simple(edges)
     tri = _oriented_triangles(und)
     per_node = (
         tri.select(F.col("u").alias("node_id"))
@@ -893,47 +974,15 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
     WITHIN the k-core.
 
     Each round is one degree aggregation over the surviving edge set +
-    a semi-join filter; the surviving edge set shrinks monotonically
-    and is checkpointed per round (peeling converges in <= |V| rounds,
-    in practice a handful). Raises if not converged by ``max_rounds``
-    (the driver-oracle contract needs the true fixpoint, not a
-    truncation)."""
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    live = und
-    # one count action per round: carry the previous round's edge count
-    # in a driver variable instead of re-counting the (already
-    # materialized) previous checkpoint — halves the scheduler round
-    # trips, which dominate when rounds are many at 10^9 edges
-    n_live = und.count()
-    for _ in range(max_rounds):
-        deg = (
-            live.select(F.col("a").alias("n"))
-            .unionByName(live.select(F.col("b").alias("n")))
-            .groupBy("n").agg(F.count("*").alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("n")
-        nxt = (
-            live.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-        n_nxt = nxt.count()
-        if n_nxt == n_live:
-            core_deg = (
-                nxt.select(F.col("a").alias("node_id"))
-                .unionByName(nxt.select(F.col("b").alias("node_id")))
-                .groupBy("node_id").agg(F.count("*").alias("core_degree"))
-            )
-            return core_deg
-        live, n_live = nxt, n_nxt
-    raise RuntimeError(f"kcore: no convergence in {max_rounds} rounds")
+    a semi-join filter (``_core_step``), run to fixpoint by ``_peel``
+    (peeling converges in <= |V| rounds, in practice a handful).
+    Raises if not converged by ``max_rounds`` (the driver-oracle
+    contract needs the true fixpoint, not a truncation)."""
+    live = _und_simple(edges)
+    core, _, _ = _peel(_core_step(k), live, live.count(), max_rounds,
+                       f"kcore: no convergence in {max_rounds} rounds")
+    return (_und_nodes(core, "node_id").groupBy("node_id")
+            .agg(F.count("*").alias("core_degree")))
 
 
 def coreness(edges: DataFrame, max_rounds: int = 200) -> DataFrame:
@@ -944,16 +993,16 @@ def coreness(edges: DataFrame, max_rounds: int = 200) -> DataFrame:
     k=1 to fixpoint, raise k, re-peel the SURVIVORS, repeat until the
     graph is gone; a node removed while the threshold is k has
     coreness k-1. Nodes recorded as removed are the endpoint-set
-    difference nodes(live) - nodes(next), NOT just the degree<k set —
-    a node can lose its last edge because its neighbors dropped,
+    difference nodes(before k) - nodes(after k), NOT just the degree<k
+    set — a node can lose its last edge because its neighbors dropped,
     without ever itself showing degree < k in a surviving edge.
 
     Returns (node_id, coreness) for every non-isolated node.
 
-    Scale shape: identical per-round cost to kcore (one degree
-    aggregate + two semi-joins over a monotonically shrinking edge
-    set); total rounds = peel rounds + kmax threshold bumps. One
-    count action per round off eager checkpoints.
+    Scale shape: identical per-round cost to kcore (``_core_step``);
+    ``max_rounds`` bounds the peel rounds over all thresholds (see
+    ``_peel``), plus one labeling anti-join per threshold that removed
+    nodes.
 
     Oracle twin: _coreness_sql in operators/suite.py (max-k
     membership over per-k unrolled peels — provably the same
@@ -962,35 +1011,24 @@ def coreness(edges: DataFrame, max_rounds: int = 200) -> DataFrame:
     live = _und_simple(edges)
     n_live = live.count()
     parts: list[DataFrame] = []
-    k = 1
-    for _ in range(max_rounds):
-        if not n_live:
-            if not parts:
-                return live.select(F.col("a").alias("node_id"),
-                                   F.lit(0).cast("int").alias("coreness"))
-            return _union_all(parts)
-        deg = (live.select(F.col("a").alias("n"))
-               .unionByName(live.select(F.col("b").alias("n")))
-               .groupBy("n").agg(F.count(F.lit(1)).alias("d")))
-        keep = deg.filter(F.col("d") >= k).select("n")
-        nxt = (live.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
-               .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
-               .select("a", "b")
-               .localCheckpoint(eager=True))
-        n_nxt = nxt.count()
-        if n_nxt == n_live:
-            k += 1
-            continue
-        nxt_nodes = (nxt.select(F.col("a").alias("n"))
-                     .unionByName(nxt.select(F.col("b").alias("n")))
-                     .distinct())
-        dropped = (deg.select("n").join(nxt_nodes, "n", "left_anti")
-                   .select(F.col("n").alias("node_id"),
-                           F.lit(k - 1).cast("int").alias("coreness"))
-                   .localCheckpoint(eager=True))
-        parts.append(dropped)
-        live, n_live = nxt, n_nxt
-    raise RuntimeError(f"coreness: no convergence in {max_rounds} rounds")
+    k, left = 1, max_rounds
+    while n_live:
+        before, n_before = live, n_live
+        live, n_live, left = _peel(
+            _core_step(k), live, n_live, left,
+            f"coreness: no convergence in {max_rounds} rounds")
+        if n_live != n_before:
+            parts.append(
+                _und_nodes(before).distinct()
+                .join(_und_nodes(live).distinct(), "n", "left_anti")
+                .select(F.col("n").alias("node_id"),
+                        F.lit(k - 1).cast("int").alias("coreness"))
+                .localCheckpoint(eager=True))
+        k += 1
+    if not parts:
+        return live.select(F.col("a").alias("node_id"),
+                           F.lit(0).cast("int").alias("coreness"))
+    return _union_all(parts)
 
 
 def topo_layers(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
@@ -1261,13 +1299,7 @@ def link_predict(edges: DataFrame, min_common: int = 1,
 
     Oracle twin: _GRAPH_LINK_PREDICT_SQL in operators/suite.py.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _und_simple(edges)
     # adjacency in both directions: (n, m) = n has neighbor m
     adj = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
            .unionByName(und.select(F.col("b").alias("n"),
@@ -1614,50 +1646,14 @@ def ktruss(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
     k-2, repeat to fixpoint. Returns the surviving edges
     (a, b, support) with their support in the final truss.
 
-    Each round is one skew-safe oriented triangle enumeration
-    (_oriented_triangles — O(d) wedge rows per degree-d hub) + one
-    per-edge support aggregate + one filter; the live edge set
-    shrinks monotonically and is checkpointed per round, and the
-    convergence check rides the same count that carries the loop (one
-    action per round, the kcore discipline). Raises if not converged
-    by ``max_rounds``.
+    Each round (``_truss_step``) is one skew-safe oriented triangle
+    enumeration (_oriented_triangles — O(d) wedge rows per degree-d
+    hub) + one per-edge support aggregate + one filter, run to
+    fixpoint by ``_peel``. Raises if not converged by ``max_rounds``.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    live = und
-    n_live = live.count()
-    for _ in range(max_rounds):
-        tri = _oriented_triangles(live)
-        # (u,v,w) is degree-oriented, not sorted — normalize each of
-        # the triangle's three edges back to (a < b)
-        sup = (
-            tri.select(F.least("u", "v").alias("a"),
-                       F.greatest("u", "v").alias("b"))
-            .unionByName(tri.select(F.least("u", "w").alias("a"),
-                                    F.greatest("u", "w").alias("b")))
-            .unionByName(tri.select(F.least("v", "w").alias("a"),
-                                    F.greatest("v", "w").alias("b")))
-            .groupBy("a", "b").agg(F.count("*").alias("support"))
-        )
-        scored = (live.join(sup, ["a", "b"], "left")
-                  .select("a", "b",
-                          F.coalesce("support", F.lit(0)).alias("support")))
-        nxt = (scored.filter(F.col("support") >= k - 2)
-               .localCheckpoint(eager=True))
-        n_nxt = nxt.count()
-        if n_nxt == n_live:
-            return nxt
-        # nxt is already an eager checkpoint; the projection is pure
-        # metadata — re-checkpointing it would materialize every
-        # round's survivor set twice
-        live = nxt.select("a", "b")
-        n_live = n_nxt
-    raise RuntimeError(f"ktruss: no convergence in {max_rounds} rounds")
+    live = _und_simple(edges)
+    return _peel(_truss_step(k), live, live.count(), max_rounds,
+                 f"ktruss: no convergence in {max_rounds} rounds")[0]
 
 
 def maximal_independent_set(edges: DataFrame,
@@ -1684,13 +1680,7 @@ def maximal_independent_set(edges: DataFrame,
 
     Oracle twin: _mis_sql in operators/suite.py (rounds unrolled).
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _und_simple(edges)
     adj = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
            .unionByName(und.select(F.col("b").alias("n"),
                                    F.col("a").alias("m")))
@@ -1704,11 +1694,7 @@ def maximal_independent_set(edges: DataFrame,
             if mis is None:
                 return undecided.select(F.col("n").alias("node_id"))
             return mis.select(F.col("n").alias("node_id"))
-        pr = undecided.select(
-            "n",
-            F.conv(F.substring(F.md5(F.concat_ws(
-                ":", F.lit(str(r)), F.col("n").cast("string"))), 1, 15),
-                16, 10).cast("bigint").alias("p"))
+        pr = undecided.select("n", _luby_priority(r, "n").alias("p"))
         nbr_max = (adj.join(pr.select(F.col("n").alias("m"),
                                       F.col("p").alias("p_m")), "m")
                    .join(undecided, "n", "left_semi")
@@ -1794,9 +1780,7 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
         .groupBy("a", "b").agg(F.min("w").alias("w"))
         .localCheckpoint(eager=True)
     )
-    labels = (und.select(F.col("a").alias("node"))
-              .unionByName(und.select(F.col("b").alias("node")))
-              .distinct()
+    labels = (_und_nodes(und, "node").distinct()
               .withColumn("comp", F.col("node"))
               .localCheckpoint(eager=True))
     forest: DataFrame | None = None
@@ -1868,12 +1852,7 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     for r in range(1, max_rounds + 1):
         if not live.count():
             return und.limit(0) if matched is None else matched
-        pr = live.select(
-            "a", "b",
-            F.conv(F.substring(F.md5(F.concat_ws(
-                ":", F.lit(str(r)), F.col("a").cast("string"),
-                F.col("b").cast("string"))), 1, 15),
-                16, 10).cast("bigint").alias("p"))
+        pr = live.select("a", "b", _luby_priority(r, "a", "b").alias("p"))
         nm = (pr.select(F.col("a").alias("node"), "p")
               .unionByName(pr.select(F.col("b").alias("node"), "p"))
               .groupBy("node").agg(F.max("p").alias("mx")))
@@ -1888,9 +1867,7 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
         matched = (winners if matched is None
                    else matched.unionByName(winners)
                    ).localCheckpoint(eager=False)
-        mnodes = (winners.select(F.col("a").alias("n"))
-                  .unionByName(winners.select(F.col("b").alias("n")))
-                  .distinct())
+        mnodes = _und_nodes(winners).distinct()
         live = (live
                 .join(mnodes.select(F.col("n").alias("a")), "a", "left_anti")
                 .join(mnodes.select(F.col("n").alias("b")), "b", "left_anti")
@@ -1948,11 +1925,7 @@ def greedy_coloring(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
                 return uncolored.select(F.col("n").alias("node_id"),
                                         F.lit(0).cast("int").alias("color"))
             return colors
-        pr = uncolored.select(
-            "n",
-            F.conv(F.substring(F.md5(F.concat_ws(
-                ":", F.lit(str(r)), F.col("n").cast("string"))), 1, 15),
-                16, 10).cast("bigint").alias("p"))
+        pr = uncolored.select("n", _luby_priority(r, "n").alias("p"))
         # adj_unc holds only uncolored-uncolored edges, so the max
         # test needs no semi-join against the uncolored set
         nbr_max = (adj_unc.join(pr.select(F.col("n").alias("m"),
@@ -2130,13 +2103,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     iteration; composes directly with propagate_labels /
     connected_components output.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _und_simple(edges)
     m = und.count()
     lab = labels.select(F.col("node_id"), F.col("community"))
     la = lab.select(F.col("node_id").alias("a"),
@@ -2147,8 +2114,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
              .filter(F.col("ca") == F.col("cb"))
              .groupBy(F.col("ca").alias("community"))
              .agg(F.count("*").alias("e_in")))
-    deg = (und.select(F.col("a").alias("node_id"))
-           .unionByName(und.select(F.col("b").alias("node_id")))
+    deg = (_und_nodes(und, "node_id")
            .groupBy("node_id").agg(F.count("*").alias("d")))
     per_comm = (lab.join(deg, "node_id", "left")
                 .groupBy("community")
@@ -2171,17 +2137,10 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     < 2 — keep two_t = 0). Composes triangle_counts with the degree
     aggregate; one extra join, no float anywhere (the caller divides,
     or compares nodes by cross-multiplication)."""
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _und_simple(edges)
     per_node = triangle_counts(edges).withColumnRenamed(
         "n_triangles", "t")
-    deg = (und.select(F.col("a").alias("node_id"))
-           .unionByName(und.select(F.col("b").alias("node_id")))
+    deg = (_und_nodes(und, "node_id")
            .groupBy("node_id").agg(F.count("*").alias("d")))
     return (deg.join(per_node, "node_id", "left")
             .select("node_id", "d",
@@ -2901,9 +2860,7 @@ def rich_club(edges: DataFrame) -> DataFrame:
     so the curve costs two |E|-sized aggregations and a toy window,
     never a per-k pass."""
     und = _und_simple(edges)
-    deg = (und.select(F.col("a").alias("n"))
-           .unionByName(und.select(F.col("b").alias("n")))
-           .groupBy("n").agg(F.count("*").alias("d")))
+    deg = _und_nodes(und).groupBy("n").agg(F.count("*").alias("d"))
     da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
     emin = (und.join(da, "a").join(db, "b")
@@ -2945,9 +2902,7 @@ def degree_powerlaw(edges: DataFrame, d_min: int = 2) -> DataFrame:
     Scale shape: one degree aggregation + one 1-row aggregate; the ln
     join never happens (it's a projection on the degree table)."""
     und = _und_simple(edges)
-    deg = (und.select(F.col("a").alias("n"))
-           .unionByName(und.select(F.col("b").alias("n")))
-           .groupBy("n").agg(F.count("*").alias("d")))
+    deg = _und_nodes(und).groupBy("n").agg(F.count("*").alias("d"))
     tail = deg.filter(F.col("d") >= d_min).select(
         "d", F.round(F.log(F.col("d").cast("double")
                            / F.lit(d_min - 0.5)), 8).alias("lt"))
@@ -2975,12 +2930,11 @@ def trussness(edges: DataFrame, max_rounds: int = 200) -> DataFrame:
     Returns (a, b, trussness) for every edge of the undirected simple
     graph, a < b.
 
-    Scale shape: identical per-round cost to ktruss — one skew-safe
-    oriented triangle enumeration + one per-edge support aggregate +
-    two joins over a monotonically shrinking checkpointed edge set;
-    total rounds = peel rounds + kmax threshold bumps, ONE count
-    action per round (the coreness discipline). The labeled output
-    accumulates ∝ edges dropped, unioned as a balanced tree.
+    Scale shape: identical per-round cost to ktruss
+    (``_truss_step``); ``max_rounds`` bounds the peel rounds over all
+    thresholds (see ``_peel``), plus one labeling anti-join per
+    threshold that removed edges. The labeled output accumulates ∝
+    edges dropped, unioned as a balanced tree.
 
     Oracle twin: _trussness_sql in operators/suite.py (max-k
     membership over per-k unrolled ktruss peels, default 2 —
@@ -2989,40 +2943,21 @@ def trussness(edges: DataFrame, max_rounds: int = 200) -> DataFrame:
     live = _und_simple(edges)
     n_live = live.count()
     parts: list[DataFrame] = []
-    k = 3
-    for _ in range(max_rounds):
-        if not n_live:
-            if not parts:
-                return live.select(
-                    "a", "b", F.lit(2).cast("int").alias("trussness"))
-            return _union_all(parts)
-        tri = _oriented_triangles(live)
-        sup = (
-            tri.select(F.least("u", "v").alias("a"),
-                       F.greatest("u", "v").alias("b"))
-            .unionByName(tri.select(F.least("u", "w").alias("a"),
-                                    F.greatest("u", "w").alias("b")))
-            .unionByName(tri.select(F.least("v", "w").alias("a"),
-                                    F.greatest("v", "w").alias("b")))
-            .groupBy("a", "b").agg(F.count("*").alias("support"))
-        )
-        scored = (live.join(sup, ["a", "b"], "left")
-                  .select("a", "b",
-                          F.coalesce("support", F.lit(0)).alias("support")))
-        nxt = (scored.filter(F.col("support") >= k - 2)
-               .select("a", "b")
-               .localCheckpoint(eager=True))
-        n_nxt = nxt.count()
-        if n_nxt == n_live:
-            k += 1
-            continue
-        dropped = (live.join(nxt, ["a", "b"], "left_anti")
-                   .select("a", "b",
-                           F.lit(k - 1).cast("int").alias("trussness"))
-                   .localCheckpoint(eager=True))
-        parts.append(dropped)
-        live, n_live = nxt, n_nxt
-    raise RuntimeError(f"trussness: no convergence in {max_rounds} rounds")
+    k, left = 3, max_rounds
+    while n_live:
+        before, n_before = live, n_live
+        live, n_live, left = _peel(
+            _truss_step(k), live, n_live, left,
+            f"trussness: no convergence in {max_rounds} rounds")
+        if n_live != n_before:
+            parts.append(
+                before.join(live, ["a", "b"], "left_anti")
+                .select("a", "b", F.lit(k - 1).cast("int").alias("trussness"))
+                .localCheckpoint(eager=True))
+        k += 1
+    if not parts:
+        return live.select("a", "b", F.lit(2).cast("int").alias("trussness"))
+    return _union_all(parts)
 
 
 def bowtie(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
@@ -3163,31 +3098,24 @@ def ab_core(edges: DataFrame, alpha: int, beta: int,
     (u, v) of the simple support graph.
 
     Scale shape: per round one degree aggregate per side + two
-    semi-joins over a monotonically shrinking checkpointed edge set —
-    the kcore discipline with two thresholds; ONE count action per
-    round.
+    semi-joins over a monotonically shrinking edge set — the kcore
+    step with two thresholds, run to fixpoint by ``_peel``.
 
     Oracle twin: _ab_core_sql in operators/suite.py (rounds
     unrolled; fixpoint rounds are no-ops so over-unrolling is safe).
     """
-    live = (edges.select("u", "v").distinct()
-            .localCheckpoint(eager=True))
-    n_live = live.count()
-    for _ in range(max_rounds):
-        if not n_live:
-            return live
+    def step(live: DataFrame) -> DataFrame:
         du = (live.groupBy("u").agg(F.count("*").alias("d"))
               .filter(F.col("d") >= alpha).select("u"))
         dv = (live.groupBy("v").agg(F.count("*").alias("d"))
               .filter(F.col("d") >= beta).select("v"))
-        nxt = (live.join(du, "u", "left_semi")
-               .join(dv, "v", "left_semi")
-               .localCheckpoint(eager=True))
-        n_nxt = nxt.count()
-        if n_nxt == n_live:
-            return nxt
-        live, n_live = nxt, n_nxt
-    raise RuntimeError(f"ab_core: no convergence in {max_rounds} rounds")
+        return (live.join(du, "u", "left_semi")
+                .join(dv, "v", "left_semi"))
+
+    live = (edges.select("u", "v").distinct()
+            .localCheckpoint(eager=True))
+    return _peel(step, live, live.count(), max_rounds,
+                 f"ab_core: no convergence in {max_rounds} rounds")[0]
 
 
 def ic_cascade(edges: DataFrame, seeds: DataFrame, rounds: int = 4,

@@ -290,21 +290,17 @@ def write_triples(triples: DataFrame, path: str, n_buckets: int = 64,
 
 def run_pipeline(pages: DataFrame, root: str = DEFAULT_ROOT,
                  num_partitions: int | None = None,
-                 include_engines: bool = True,
-                 fused: bool = True) -> dict:
+                 include_engines: bool = True) -> dict:
     """Full extract->triples pass; returns the interesting DataFrames.
 
-    ``fused=True`` (default) runs extract+kernel in one python stage —
-    the throughput path. The returned ``docs`` DataFrame is the
-    separate extract stage either way (lazy; only computed if the
-    caller uses it, e.g. for the text-pass-through check)."""
+    The triples come from one fused extract+kernel python stage (the
+    throughput path). The returned ``docs`` DataFrame is the separate
+    extract stage (lazy; only computed if the caller uses it, e.g. for
+    the text-pass-through check)."""
     spark = pages.sparkSession
     pages_p = maybe_repartition_pages(pages, num_partitions)
     docs = extract_docs(pages_p)
-    if fused:
-        raw = pages_to_triples(pages_p, root)
-    else:
-        raw = docs_to_triples(docs, root)
+    raw = pages_to_triples(pages_p, root)
     triples, errors = split_errors(raw)
     if include_engines:
         triples = triples.unionByName(engine_triples(spark, root).drop("error"))

@@ -2170,3 +2170,43 @@ def test_persisted_edge_loops_leave_no_cached_data(spark, case):
     else:
         assert _CACHE_CASES[case](G, e, seeds).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# Each peel function on a graph whose first round removes something, so
+# convergence needs a second (no-change) round: a triangle 0-1-2 with a
+# pendant edge 2-3 (for coreness the k=1 round changes nothing and k=2
+# needs another), and for ab_core a 2x2 block plus a left node of
+# degree 1. ``cols`` are the documented output columns.
+_PEEL_CASES = {
+    "kcore": (lambda G, e, b, **kw: G.kcore(e, k=2, **kw),
+              ["node_id", "core_degree"]),
+    "coreness": (lambda G, e, b, **kw: G.coreness(e, **kw),
+                 ["node_id", "coreness"]),
+    "ktruss": (lambda G, e, b, **kw: G.ktruss(e, k=3, **kw),
+               ["a", "b", "support"]),
+    "trussness": (lambda G, e, b, **kw: G.trussness(e, **kw),
+                  ["a", "b", "trussness"]),
+    "ab_core": (lambda G, e, b, **kw: G.ab_core(b, alpha=2, beta=2, **kw),
+                ["u", "v"]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PEEL_CASES))
+def test_peel_max_rounds_and_empty_input(spark, name):
+    """The ``_peel`` contract per caller: an exhausted ``max_rounds``
+    raises the function's own RuntimeError, and an input with no
+    simple edges (all self-loops; no (u, v) rows for ab_core) returns
+    zero rows with the documented columns."""
+    from npm_extraction_server_spark.plans import graph as G
+
+    run, cols = _PEEL_CASES[name]
+    e = _edges(spark, [(0, 1), (1, 2), (2, 0), (2, 3)])
+    b = spark.createDataFrame([(0, 10), (0, 11), (1, 10), (1, 11), (2, 10)],
+                              "u long, v long")
+    assert run(G, e, b).count() > 0
+    with pytest.raises(RuntimeError, match=f"^{name}: "):
+        run(G, e, b, max_rounds=1)
+    loops = _edges(spark, [(1, 1), (2, 2)])
+    out = run(G, loops, b.limit(0))
+    assert sorted(out.columns) == sorted(cols)
+    assert out.count() == 0

@@ -12,7 +12,8 @@ aggregate of best moments from different time windows.
 
 Drift control: host capacity on the shared sandbox wanders ±10-30%
 over minutes, so the N fleet (1 executor) and the 4N fleet (n_execs
-executors) are CO-RESIDENT on disjoint core pins and their measured
+executors) are CO-RESIDENT on core pins (disjoint when the host has
+the CPUs; see measure_scaling) and their measured
 passes are INTERLEAVED pass-by-pass (N-pass, 4N-pass, N-pass, ...);
 only one wave's pass runs at a time (the other fleet idles on a file
 poll). Each adjacent (N, 4N) pass pair yields one efficiency sample
@@ -27,6 +28,7 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import statistics
 import subprocess
 import sys
@@ -54,33 +56,50 @@ def measure_scaling(pages_dir: str, exec_cores: int = 2, n_execs: int = 4,
                     n_pairs: int = 4, warm_sec: float = 30.0,
                     cpu_base: int = 2) -> dict:
     """Interleaved co-resident N / 4N fleets; median per-pass-pair
-    efficiency. Core layout: cores [0, cpu_base) are left to the OS
-    (cores 0-1 take timer/IRQ/kworker housekeeping on this host, and a
-    2-core executor pinned there showed ±25% pass noise); the N
-    executor owns the next exec_cores, the 4N fleet the block after —
-    all disjoint, so an idle fleet cannot slow the measured one."""
+    efficiency. Pins come from this process's CPU affinity set, in id
+    order. ``pin_layout`` in the result says which layout applied:
+
+    - ``"disjoint"``: the first cpu_base CPUs are left to the OS (they
+      take timer/IRQ/kworker housekeeping, and a 2-core executor
+      pinned there showed ±25% pass noise); the N executor owns the
+      next exec_cores, the 4N fleet the block after — all disjoint,
+      so an idle fleet cannot slow the measured one.
+    - ``"shared"``: when those do not fit, there is no OS reserve and
+      the N executor shares the first 4N executor's cores. The two
+      fleets' passes never overlap, so neither slows the other's
+      measured pass.
+
+    Raises ValueError when the 4N fleet alone does not fit."""
     all_files = sorted(glob.glob(f"{pages_dir}/part-*.parquet"))
     slices = _slices(pages_dir, n_execs)
+    cpus = sorted(os.sched_getaffinity(0))
+    fleet = n_execs * exec_cores
+    if cpu_base + exec_cores + fleet <= len(cpus):
+        layout, n_lo, x_lo = "disjoint", cpu_base, cpu_base + exec_cores
+    elif fleet <= len(cpus):
+        layout, n_lo, x_lo = "shared", 0, 0
+    else:
+        raise ValueError(f"measure_scaling: {n_execs} executors x "
+                         f"{exec_cores} cores need {fleet} CPUs, "
+                         f"affinity set has {len(cpus)}")
     # SPREAD the fleet's pins across the core space instead of packing
     # them onto adjacent ids: adjacent cores share cache resources on
     # this host (packed 4x2 fleet measured ~12% slower than spread),
     # and real cluster executors live on separate machines with zero
     # cache sharing — spread placement is the faithful simulation.
-    import os
-    n_cpus = os.cpu_count() or 32
-    stride = max(exec_cores,
-                 (n_cpus - cpu_base - exec_cores) // max(n_execs, 1))
+    stride = max(exec_cores, (len(cpus) - x_lo) // max(n_execs, 1))
+
+    def pins(lo: int) -> str:
+        return ",".join(map(str, cpus[lo:lo + exec_cores]))
+
     with tempfile.TemporaryDirectory() as td:
         sync = Path(td)
-        lo = cpu_base
         n_passes = n_pairs + 1  # + the discarded burn-in pair
-        procs = [_spawn(sync, "n", 0, exec_cores,
-                        f"{lo}-{lo + exec_cores - 1}", n_passes, warm_sec,
-                        all_files)]
+        procs = [_spawn(sync, "n", 0, exec_cores, pins(n_lo), n_passes,
+                        warm_sec, all_files)]
         for i, sl in enumerate(slices):
-            lo = cpu_base + exec_cores + i * stride
-            cpuset = f"{lo}-{lo + exec_cores - 1}"
-            procs.append(_spawn(sync, "x", i, exec_cores, cpuset, n_passes,
+            procs.append(_spawn(sync, "x", i, exec_cores,
+                                pins(x_lo + i * stride), n_passes,
                                 warm_sec, sl))
 
         def wait(names: list[str]) -> None:
@@ -94,26 +113,33 @@ def measure_scaling(pages_dir: str, exec_cores: int = 2, n_execs: int = 4,
                             f"while waiting for {names}")
                 time.sleep(0.02)
 
-        wait([f"ready_n_0"] + [f"ready_x_{i}" for i in range(n_execs)])
-        # Pair 0 is a BURN-IN and is discarded: each executor's private
-        # warmup ran back-to-back, but the first INTERLEAVED pair still
-        # reads systematically cold (page-cache/JIT migration after the
-        # other fleet's pass — measured ~15-20% slow on both waves,
-        # always in the same direction). Dropping a deterministic,
-        # always-cold first pair is warmup accounting, not selective
-        # scoring: every measured pair thereafter enters identically.
-        n_walls, x_walls = [], []
-        for p in range(n_pairs + 1):
-            t0 = time.monotonic()
-            (sync / f"go_n_{p}").touch()
-            wait([f"done_n_{p}_0"])
-            n_walls.append(round(time.monotonic() - t0, 3))
-            t0 = time.monotonic()
-            (sync / f"go_x_{p}").touch()
-            wait([f"done_x_{p}_{i}" for i in range(n_execs)])
-            x_walls.append(round(time.monotonic() - t0, 3))
-        results = [json.loads(p.communicate()[0].strip().splitlines()[-1])
-                   for p in procs]
+        # an executor left alive would poll its go files forever
+        try:
+            wait([f"ready_n_0"] + [f"ready_x_{i}" for i in range(n_execs)])
+            # Pair 0 is a BURN-IN and is discarded: each executor's private
+            # warmup ran back-to-back, but the first INTERLEAVED pair still
+            # reads systematically cold (page-cache/JIT migration after the
+            # other fleet's pass — measured ~15-20% slow on both waves,
+            # always in the same direction). Dropping a deterministic,
+            # always-cold first pair is warmup accounting, not selective
+            # scoring: every measured pair thereafter enters identically.
+            n_walls, x_walls = [], []
+            for p in range(n_pairs + 1):
+                t0 = time.monotonic()
+                (sync / f"go_n_{p}").touch()
+                wait([f"done_n_{p}_0"])
+                n_walls.append(round(time.monotonic() - t0, 3))
+                t0 = time.monotonic()
+                (sync / f"go_x_{p}").touch()
+                wait([f"done_x_{p}_{i}" for i in range(n_execs)])
+                x_walls.append(round(time.monotonic() - t0, 3))
+            results = [
+                json.loads(p.communicate()[0].strip().splitlines()[-1])
+                for p in procs]
+        finally:
+            for pr in procs:
+                if pr.poll() is None:
+                    pr.kill()
     burn_in = {"n_wall": n_walls[0], "x_wall": x_walls[0]}
     n_walls, x_walls = n_walls[1:], x_walls[1:]
 
@@ -136,6 +162,7 @@ def measure_scaling(pages_dir: str, exec_cores: int = 2, n_execs: int = 4,
             "per_exec_walls": [r["walls"] for r in results[1:]],
         },
         "efficiency_n_to_4n": median_eff,
+        "pin_layout": layout,
         "efficiency_samples": effs,
         "protocol": (
             "co-resident pinned fleets, interleaved barrier passes; "
