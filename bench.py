@@ -27,7 +27,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 SCALE_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "24000"))
 
 HEADLINE = [

@@ -22,13 +22,19 @@ loop over a persisted edge set uses:
   span several loops (betweenness's forward and backward sweeps).
 - ``_rounds(step, seed, n)`` runs ``step(r, outs)`` for r = 1..n, where
   ``outs`` is ``[seed, out_1, ..., out_{r-1}]``. Each round's output is
-  eagerly ``localCheckpoint``-ed, which truncates lineage so round r
-  never re-derives round r-1. Frontier loops stop at the first empty
-  output, which is not kept (``_empty``: ``DataFrame.isEmpty()``, no
-  job at all for a checkpoint without partitions); fixed-iteration
-  loops pass ``until_empty=False``. Callers that promise convergence
-  pass ``exhausted``, the ``RuntimeError`` message for n non-empty
-  rounds. Accumulated state (visited sets, walk corpora) is
+  ``localCheckpoint``-ed, which truncates lineage so round r never
+  re-derives round r-1. Frontier loops stop at the first empty output,
+  which is not kept (``_empty``: ``DataFrame.isEmpty()``, no job at
+  all for a checkpoint without partitions); fixed-iteration loops pass
+  ``until_empty=False``. The stop rule also sets the checkpoint rule:
+  a loop that probes its rounds checkpoints them EAGERLY (the probe
+  reads the materialised frame); a fixed-iteration loop checkpoints
+  them LAZILY. Under AQE the lazy call still runs the round's shuffle
+  stages, and its last stage runs inside the next round's first job —
+  one job per round fewer, and the persisted edges of a ``_persisted``
+  block are read while the block is open. Callers that promise
+  convergence pass ``exhausted``, the ``RuntimeError`` message for n
+  non-empty rounds. Accumulated state (visited sets, walk corpora) is
   ``_union_all(outs)``: every input is a checkpoint, so the balanced
   union is pure metadata and no round rewrites earlier rounds' rows.
 
@@ -98,15 +104,19 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["ab_core", "bfs_distances", "bipartite_project", "bowtie",
-           "butterfly_counts",
-           "closeness", "clustering_coefficients", "degree_powerlaw",
-           "dyad_census", "hits",
-           "hyperball", "hyperball_stats", "ic_cascade", "katz", "kcore", "ktruss", "link_predict",
-           "maximal_independent_set", "modularity", "node2vec_walks",
-           "neighbor_agg", "pagerank", "random_walks", "topo_layers",
-           "personalized_pagerank", "propagate_labels", "rich_club",
-           "salsa", "sssp",
+__all__ = ["ab_core", "assortativity_moments", "betweenness", "bfs_distances",
+           "bipartite_project", "boruvka_msf", "bowtie", "butterfly_counts",
+           "closeness", "clustering_coefficients", "conductance", "coreness",
+           "degree_powerlaw", "dyad_census", "eccentricity",
+           "fastrp_embeddings", "greedy_coloring", "hits", "hyperball",
+           "hyperball_stats", "ic_cascade", "katz", "kcore", "ktruss",
+           "link_predict", "louvain_levels", "louvain_moves",
+           "lpa_communities", "maximal_independent_set", "maximal_matching",
+           "modularity", "neighbor_agg", "node2vec_walks", "pagerank",
+           "pagerank_incremental", "personalized_pagerank", "ppr_push",
+           "propagate_labels", "random_walks", "rich_club", "salsa", "simrank",
+           "spam_mass", "sssp", "strongly_connected_components",
+           "temporal_reach", "topo_layers", "triad_census", "triad_code_table",
            "triangle_counts", "trussness", "walk_skipgram_pairs",
            "weighted_random_walks", "wl_refinement"]
 
@@ -130,13 +140,13 @@ def _rounds(step: Callable[[int, list[DataFrame]], DataFrame],
             seed: DataFrame, n: int, until_empty: bool = True,
             exhausted: str | None = None) -> list[DataFrame]:
     """``[seed, out_1, ..., out_k]`` with ``out_r = step(r, outs)``
-    eagerly checkpointed (see the module docstring). With
-    ``until_empty`` the loop stops at the first empty output, which is
-    dropped; ``exhausted`` is the RuntimeError message raised when all
-    ``n`` rounds produced rows."""
+    checkpointed, eagerly iff ``until_empty`` (see the module
+    docstring). With ``until_empty`` the loop stops at the first empty
+    output, which is dropped; ``exhausted`` is the RuntimeError message
+    raised when all ``n`` rounds produced rows."""
     outs = [seed]
     for r in range(1, n + 1):
-        nxt = step(r, outs).localCheckpoint(eager=True)
+        nxt = step(r, outs).localCheckpoint(eager=until_empty)
         if until_empty and _empty(nxt):
             return outs
         outs.append(nxt)
@@ -179,6 +189,14 @@ def _und_nodes(und: DataFrame, name: str = "n") -> DataFrame:
     (duplicates kept: grouped, it gives the degrees)."""
     return (und.select(F.col("a").alias(name))
             .unionByName(und.select(F.col("b").alias(name))))
+
+
+def _und_adj(und: DataFrame) -> DataFrame:
+    """The symmetric adjacency of (a, b) edges: (n, m) for both
+    directions, i.e. n has neighbor m."""
+    return (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
+            .unionByName(und.select(F.col("b").alias("n"),
+                                    F.col("a").alias("m"))))
 
 
 def _core_step(k: int) -> Callable[[DataFrame], DataFrame]:
@@ -1301,9 +1319,7 @@ def link_predict(edges: DataFrame, min_common: int = 1,
     """
     und = _und_simple(edges)
     # adjacency in both directions: (n, m) = n has neighbor m
-    adj = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
-           .unionByName(und.select(F.col("b").alias("n"),
-                                   F.col("a").alias("m"))))
+    adj = _und_adj(und)
     deg = adj.groupBy("n").agg(F.count("*").alias("d"))
     if max_degree is not None:
         adj = (adj.join(deg.filter(F.col("d") <= max_degree)
@@ -1361,28 +1377,26 @@ def lpa_communities(edges: DataFrame, rounds: int = 3) -> DataFrame:
     the neighbor-keyed adjacency, a map-side-combinable (node, label)
     count, and a node-keyed window pick — all keyed on node ids, cost
     ∝ |E| per round regardless of community count. The adjacency is
-    built once and cached; the label frame is lazily checkpointed
-    each round so the plan stays round-deep, not round-exponential.
+    built once and cached; the label rounds run on ``_rounds`` (see
+    the module docstring), so the plan stays round-deep, not
+    round-exponential.
 
     Oracle twin: _lpa_sql in operators/suite.py.
     """
-    und = _und_simple(edges, eager=None)
-    adj = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
-           .unionByName(und.select(F.col("b").alias("n"),
-                                   F.col("a").alias("m")))
-           .localCheckpoint(eager=True))
-    labels = adj.select(F.col("n").alias("node")).distinct() \
-                .withColumn("label", F.col("node"))
+    adj = _und_adj(_und_simple(edges, eager=None)).localCheckpoint(eager=True)
     w = Window.partitionBy("n").orderBy(F.col("c").desc(),
                                         F.col("label").asc())
-    for _ in range(rounds):
-        cnt = (adj.join(labels.withColumnRenamed("node", "m"), "m")
+
+    def step(_, outs):
+        cnt = (adj.join(outs[-1].withColumnRenamed("node", "m"), "m")
                .groupBy("n", "label").agg(F.count("*").alias("c")))
-        labels = (cnt.withColumn("rn", F.row_number().over(w))
-                  .filter(F.col("rn") == 1)
-                  .select(F.col("n").alias("node"), "label")
-                  .localCheckpoint(eager=False))
-    return labels
+        return (cnt.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .select(F.col("n").alias("node"), "label"))
+
+    return _rounds(step, adj.select(F.col("n").alias("node")).distinct()
+                   .withColumn("label", F.col("node")),
+                   rounds, until_empty=False)[-1]
 
 
 def random_walks(edges: DataFrame, starts: DataFrame, length: int = 8,
@@ -1485,10 +1499,7 @@ def assortativity_moments(edges: DataFrame) -> DataFrame:
     attach endpoint degrees + a single global sum — no quadratic
     anything; cost ∝ |E|.
     """
-    und = _und_simple(edges, eager=None)
-    adj = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
-           .unionByName(und.select(F.col("b").alias("n"),
-                                   F.col("a").alias("m"))))
+    adj = _und_adj(_und_simple(edges, eager=None))
     deg = adj.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
     dj = deg.select(F.col("n"), F.col("d").alias("dj"))
     dk = deg.select(F.col("n").alias("m"), F.col("d").alias("dk"))
@@ -1681,10 +1692,7 @@ def maximal_independent_set(edges: DataFrame,
     Oracle twin: _mis_sql in operators/suite.py (rounds unrolled).
     """
     und = _und_simple(edges)
-    adj = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
-           .unionByName(und.select(F.col("b").alias("n"),
-                                   F.col("a").alias("m")))
-           .localCheckpoint(eager=True))
+    adj = _und_adj(und).localCheckpoint(eager=True)
     undecided = (adj.select("n").distinct()
                  .localCheckpoint(eager=True))
     mis: DataFrame | None = None
@@ -1908,10 +1916,7 @@ def greedy_coloring(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     unrolled; fixpoint rounds are no-ops).
     """
     und = _und_simple(edges)
-    adj_unc = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
-               .unionByName(und.select(F.col("b").alias("n"),
-                                       F.col("a").alias("m")))
-               .localCheckpoint(eager=True))
+    adj_unc = _und_adj(und).localCheckpoint(eager=True)
     uncolored = (adj_unc.select("n").distinct()
                  .localCheckpoint(eager=False))
     cadj: DataFrame | None = None     # (n uncolored, color of a neighbor)
@@ -2481,32 +2486,32 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
     checkpointed; each round is ONE node-keyed
     join-collect_list-aggregate (sort_array over each node's
     neighbor-color list — memory ∝ max degree, the same bound
-    neighbor_agg carries) and a hash projection; the color frame is
-    lazily checkpointed so the plan stays round-deep. Per-round
-    shuffle is O(|E|) on the node key, never quadratic; rounds
-    needed in practice = graph diameter's log (refinement stabilizes
-    in <= |V| rounds, typically a handful).
+    neighbor_agg carries) and a hash projection; the color rounds run
+    on ``_rounds`` (see the module docstring), so the plan stays
+    round-deep. Per-round shuffle is O(|E|) on the node key, never
+    quadratic; rounds needed in practice = graph diameter's log
+    (refinement stabilizes in <= |V| rounds, typically a handful).
     """
-    und = _und_simple(edges, eager=None)
-    adj = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
-           .unionByName(und.select(F.col("b").alias("n"),
-                                   F.col("a").alias("m")))
-           .localCheckpoint(eager=True))
-    colors = (adj.groupBy("n").agg(F.count("*").alias("d"))
-              .select(F.col("n").alias("node"),
-                      F.md5(F.col("d").cast("string")).alias("wl_color")))
-    for _ in range(rounds):
+    adj = _und_adj(_und_simple(edges, eager=None)).localCheckpoint(eager=True)
+
+    def step(_, outs):
+        colors = outs[-1]
         nb = (adj.join(colors.select(F.col("node").alias("m"),
                                      F.col("wl_color").alias("mc")), "m")
               .groupBy("n")
               .agg(F.array_join(F.array_sort(F.collect_list("mc")), ",")
                    .alias("ms")))
-        colors = (colors.join(nb, colors["node"] == nb["n"])
-                  .select("node",
-                          F.md5(F.concat_ws("|", "wl_color", "ms"))
-                          .alias("wl_color"))
-                  .localCheckpoint(eager=False))
-    return colors
+        return (colors.join(nb, colors["node"] == nb["n"])
+                .select("node",
+                        F.md5(F.concat_ws("|", "wl_color", "ms"))
+                        .alias("wl_color")))
+
+    return _rounds(step,
+                   adj.groupBy("n").agg(F.count("*").alias("d"))
+                   .select(F.col("n").alias("node"),
+                           F.md5(F.col("d").cast("string"))
+                           .alias("wl_color")),
+                   rounds, until_empty=False)[-1]
 
 
 def louvain_moves(edges: DataFrame, rounds: int = 3) -> DataFrame:
@@ -2547,73 +2552,33 @@ def louvain_moves(edges: DataFrame, rounds: int = 3) -> DataFrame:
     Everything is keyed on node/community ids — cost ∝ |E| per round.
     Scores are 64-bit products (2m * k): exact up to ~10^18, i.e.
     2m * max-degree < 2^63 — beyond that lift the two products to
-    decimal(38,0). Labels are lazily checkpointed per round so the
-    plan stays round-deep.
+    decimal(38,0). The label rounds run on ``_rounds`` (see the module
+    docstring), so the plan stays round-deep.
 
     Oracle twin: _louvain_sql in operators/suite.py.
     """
-    und = _und_simple(edges, eager=None)
-    adj = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
-           .unionByName(und.select(F.col("b").alias("n"),
-                                   F.col("a").alias("m")))
-           .localCheckpoint(eager=True))
-    deg = adj.groupBy("n").agg(F.count("*").alias("deg"))
-    two_m = deg.agg(F.sum("deg").alias("two_m"))
-    labels = deg.select(F.col("n").alias("node"),
-                        F.col("n").alias("comm"), "deg")
-    w = Window.partitionBy("n").orderBy(F.desc("score"), F.asc("comm"))
-    for r in range(rounds):
-        kic = (adj.join(labels.select(F.col("node").alias("m"), "comm"),
-                        "m")
-               .groupBy("n", "comm").agg(F.count("*").alias("k")))
-        own = labels.select(F.col("node").alias("n"), "comm",
-                            F.lit(0).cast("long").alias("k"))
-        cand = (kic.unionByName(own)
-                .groupBy("n", "comm").agg(F.max("k").alias("k")))
-        sig = labels.groupBy("comm").agg(F.sum("deg").alias("tot"))
-        cur = labels.select(F.col("node").alias("n"),
-                            F.col("comm").alias("own_comm"), "deg")
-        scored = (cand.join(sig, "comm").join(cur, "n")
-                  .crossJoin(F.broadcast(two_m))
-                  .withColumn(
-                      "score",
-                      F.col("two_m") * F.col("k")
-                      - F.col("deg")
-                      * (F.col("tot")
-                         - F.when(F.col("comm") == F.col("own_comm"),
-                                  F.col("deg")).otherwise(F.lit(0)))))
-        moved = (scored.withColumn("rn", F.row_number().over(w))
-                 .filter(F.col("rn") == 1)
-                 .select(F.col("n").alias("node"),
-                         F.col("comm").alias("new_comm")))
-        labels = (labels.join(moved, "node")
-                  .select("node",
-                          F.when(F.col("node") % 2 == F.lit(r % 2),
-                                 F.col("new_comm"))
-                          .otherwise(F.col("comm")).alias("comm"),
-                          "deg")
-                  .localCheckpoint(eager=False))
-    return labels.select("node", F.col("comm").alias("community"))
+    return louvain_levels(edges, rounds, levels=1)
 
 
-def _louvain_pass(adj: DataFrame, sloop: DataFrame, rounds: int,
-                  phase_offset: int = 0) -> DataFrame:
+def _louvain_pass(adj: DataFrame, sloop: DataFrame | None,
+                  rounds: int) -> DataFrame:
     """One Louvain move level over a WEIGHTED adjacency: ``adj`` is
     the direction-expanded simple adjacency (n, m, w), ``sloop`` the
-    per-node self-loop weight (n, sl; empty at level 1 — contraction
+    per-node self-loop weight (n, sl; None at level 1 — contraction
     creates them). Node strength s = sum(w) + 2*sl (self-loops count
     twice, the igraph/python-louvain convention, which preserves 2m
     across contraction levels); gains and phases exactly as
     louvain_moves. Returns (node, comm, s)."""
-    deg = (adj.groupBy("n").agg(F.sum("w").alias("ws"))
-           .join(sloop, "n", "left")
-           .select("n", (F.col("ws")
-                         + 2 * F.coalesce("sl", F.lit(0))).alias("s")))
+    deg = adj.groupBy("n").agg(F.sum("w").alias("s"))
+    if sloop is not None:
+        deg = (deg.join(sloop, "n", "left")
+               .select("n", (F.col("s")
+                             + 2 * F.coalesce("sl", F.lit(0))).alias("s")))
     two_m = deg.agg(F.sum("s").alias("two_m"))
-    labels = deg.select(F.col("n").alias("node"),
-                        F.col("n").alias("comm"), "s")
     w = Window.partitionBy("n").orderBy(F.desc("score"), F.asc("comm"))
-    for r in range(rounds):
+
+    def step(r, outs):
+        labels = outs[-1]
         kic = (adj.join(labels.select(F.col("node").alias("m"), "comm"),
                         "m")
                .groupBy("n", "comm").agg(F.sum("w").alias("k")))
@@ -2637,15 +2602,17 @@ def _louvain_pass(adj: DataFrame, sloop: DataFrame, rounds: int,
                  .filter(F.col("rn") == 1)
                  .select(F.col("n").alias("node"),
                          F.col("comm").alias("new_comm")))
-        labels = (labels.join(moved, "node")
-                  .select("node",
-                          F.when(F.col("node") % 2
-                                 == F.lit((r + phase_offset) % 2),
-                                 F.col("new_comm"))
-                          .otherwise(F.col("comm")).alias("comm"),
-                          "s")
-                  .localCheckpoint(eager=False))
-    return labels
+        # rounds count from 1 and the first moves the even nodes
+        return (labels.join(moved, "node")
+                .select("node",
+                        F.when(F.col("node") % 2 == F.lit((r - 1) % 2),
+                               F.col("new_comm"))
+                        .otherwise(F.col("comm")).alias("comm"),
+                        "s"))
+
+    return _rounds(step, deg.select(F.col("n").alias("node"),
+                                    F.col("n").alias("comm"), "s"),
+                   rounds, until_empty=False)[-1]
 
 
 def fastrp_embeddings(edges: DataFrame, dims: int = 8,
@@ -2669,15 +2636,12 @@ def fastrp_embeddings(edges: DataFrame, dims: int = 8,
 
     Scale shape: per round ONE |E| join + a (node)-keyed sum of
     ``dims`` columns (map-side combined) + a |V| mean projection —
-    the pagerank cost times dims; state checkpointed per round.
-    Oracle twin: _fastrp_sql in operators/suite.py.
+    the pagerank cost times dims; the rounds run on ``_rounds`` (see
+    the module docstring). Oracle twin: _fastrp_sql in operators/suite.py.
     """
-    und = _und_simple(edges, eager=None)
-    adj = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
-           .unionByName(und.select(F.col("b").alias("n"),
-                                   F.col("a").alias("m")))
-           .localCheckpoint(eager=True))
+    adj = _und_adj(_und_simple(edges, eager=None)).localCheckpoint(eager=True)
     deg = adj.groupBy("n").agg(F.count("*").alias("deg"))
+    xs = [f"x{d}" for d in range(dims)]
 
     def init(d):
         h = F.conv(F.substring(
@@ -2685,36 +2649,26 @@ def fastrp_embeddings(edges: DataFrame, dims: int = 8,
                            F.lit(f"#f{d}"))), 1, 8), 16, 10).cast("long")
         return ((h % 3) - 1) * F.lit(100000000).cast("long")
 
-    x = deg.select(F.col("n").alias("node"), "deg",
-                   *[init(d).alias(f"x{d}") for d in range(dims)])
-    x = x.localCheckpoint(eager=False)
-    acc = None
-    for _ in range(rounds):
-        nb = (adj.join(x.select(F.col("node").alias("m"),
-                                *[f"x{d}" for d in range(dims)]), "m")
+    def step(_, outs):
+        nb = (adj.join(outs[-1].select(F.col("node").alias("m"), *xs), "m")
               .groupBy("n")
               .agg(*[F.sum(f"x{d}").alias(f"s{d}") for d in range(dims)]))
         mean = [F.expr(
             f"CASE WHEN s{d} < 0 THEN -1 ELSE 1 END"
             f" * ((2 * abs(s{d}) + deg) div (2 * deg))").alias(f"x{d}")
             for d in range(dims)]
-        x = (nb.join(deg, "n")
-             .select(F.col("n").alias("node"), "deg", *mean)
-             .localCheckpoint(eager=False))
-        if acc is None:
-            acc = x.select("node", *[F.col(f"x{d}").alias(f"a{d}")
-                                     for d in range(dims)])
-        else:
-            acc = (acc.join(x.select("node",
-                                     *[f"x{d}" for d in range(dims)]),
-                            "node")
-                   .select("node",
-                           *[(F.col(f"a{d}") + F.col(f"x{d}"))
-                             .alias(f"a{d}") for d in range(dims)])
-                   .localCheckpoint(eager=False))
-    return acc.select(
-        "node", *[(F.col(f"a{d}").cast("double") / 1e8).alias(f"f{d}")
-                  for d in range(dims)])
+        return (nb.join(deg, "n")
+                .select(F.col("n").alias("node"), "deg", *mean))
+
+    x0 = deg.select(F.col("n").alias("node"), "deg",
+                    *[init(d).alias(f"x{d}") for d in range(dims)])
+    outs = _rounds(step, x0.localCheckpoint(eager=False), rounds,
+                   until_empty=False)[1:]
+    # the embedding: one exact node-keyed sum over the rounds' outputs
+    return (_union_all([x.select("node", *xs) for x in outs])
+            .groupBy("node")
+            .agg(*[(F.sum(f"x{d}").cast("double") / 1e8).alias(f"f{d}")
+                   for d in range(dims)]))
 
 
 def conductance(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -2735,10 +2689,7 @@ def conductance(edges: DataFrame, labels: DataFrame) -> DataFrame:
     aggregate joined to labels (volume), a |communities|-sized rollup;
     2m is a 1-row broadcast. Nothing exceeds the Louvain pass cost.
     """
-    und = _und_simple(edges, eager=None)
-    adj = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
-           .unionByName(und.select(F.col("b").alias("n"),
-                                   F.col("a").alias("m"))))
+    adj = _und_adj(_und_simple(edges, eager=None))
     lab = labels.select(F.col("node").alias("n"),
                         F.col("community").alias("c"))
     deg = adj.groupBy("n").agg(F.count("*").alias("deg"))
@@ -2790,19 +2741,16 @@ def louvain_levels(edges: DataFrame, rounds: int = 3,
 
     Oracle twin: _louvain_levels_sql in operators/suite.py.
     """
-    und = _und_simple(edges, eager=None)
-    adj = (und.select(F.col("a").alias("n"), F.col("b").alias("m"))
-           .unionByName(und.select(F.col("b").alias("n"),
-                                   F.col("a").alias("m")))
+    adj = (_und_adj(_und_simple(edges, eager=None))
            .select("n", "m", F.lit(1).cast("long").alias("w"))
            .localCheckpoint(eager=True))
-    spark = edges.sparkSession
-    sloop = spark.createDataFrame([], "n long, sl long")
-
+    sloop = None  # (n, sl): contraction creates self-loops
     mapping = None  # node -> current top community
     for lvl in range(levels):
-        labels = _louvain_pass(adj, sloop, rounds)
-        lab = labels.select("node", "comm").localCheckpoint(eager=True)
+        last = lvl == levels - 1
+        lab = _louvain_pass(adj, sloop, rounds).select("node", "comm")
+        if not last:
+            lab = lab.localCheckpoint(eager=True)
         # LEFT join: a community that contracted into an isolated
         # supernode (no inter-community edges) is absent from the next
         # level's adjacency and keeps its id
@@ -2810,9 +2758,8 @@ def louvain_levels(edges: DataFrame, rounds: int = 3,
             mapping.join(lab.select(F.col("node").alias("comm"),
                                     F.col("comm").alias("next_comm")),
                          "comm", "left")
-            .select("node", F.coalesce("next_comm", "comm").alias("comm"))
-            .localCheckpoint(eager=True))
-        if lvl == levels - 1:
+            .select("node", F.coalesce("next_comm", "comm").alias("comm")))
+        if last:
             break
         # contract: relabel both endpoints, aggregate weights
         la = lab.withColumnsRenamed({"node": "n", "comm": "ca"})
@@ -2826,14 +2773,13 @@ def louvain_levels(edges: DataFrame, rounds: int = 3,
         # inherited self-loops mapped up
         intra = (rel.filter(F.col("ca") == F.col("cb"))
                  .groupBy(F.col("ca").alias("n"))
-                 .agg(F.expr("sum(w) div 2").alias("sl0")))
-        inh = (sloop.join(lab.withColumnsRenamed({"node": "n"}), "n")
-               .groupBy(F.col("comm").alias("n"))
-               .agg(F.sum("sl").alias("sl1")))
-        sloop = (intra.join(inh, "n", "full")
-                 .select("n", (F.coalesce("sl0", F.lit(0))
-                               + F.coalesce("sl1", F.lit(0))).alias("sl"))
-                 .localCheckpoint(eager=True))
+                 .agg(F.expr("sum(w) div 2").alias("sl")))
+        if sloop is not None:
+            inh = (sloop.join(lab.withColumnsRenamed({"node": "n"}), "n")
+                   .select(F.col("comm").alias("n"), "sl"))
+            intra = (intra.unionByName(inh)
+                     .groupBy("n").agg(F.sum("sl").alias("sl")))
+        sloop = intra.localCheckpoint(eager=True)
         adj = inter.localCheckpoint(eager=True)
     return mapping.select("node", F.col("comm").alias("community"))
 
@@ -3334,7 +3280,7 @@ def simrank(edges: DataFrame, iterations: int = 3, decay_num: int = 4,
     SimRank cost — it grows toward the co-citation closure, and each
     iteration is |pairs| x (out-deg)^2 join work. The sparse
     formulation only materializes pairs with s > 0 (zero rows are
-    dropped every round) and checkpoints per round, but SimRank at
+    dropped every round) and runs on ``_rounds``, but SimRank at
     web scale is a per-ER-BLOCK operator (bounded candidate sets
     from blocking, like the linking pipeline's), not a whole-graph
     one; for whole-graph similarity use the random-walk samplers.
@@ -3349,15 +3295,15 @@ def simrank(edges: DataFrame, iterations: int = 3, decay_num: int = 4,
                         F.lit(grid).cast("long").alias("s_e8"))
     ea = E.select(F.col("src").alias("u"), F.col("dst").alias("a"))
     eb = E.select(F.col("src").alias("v"), F.col("dst").alias("b"))
-    pairs = diag
     s_expr = F.expr(
         f"(2 * {decay_num} * CAST(num AS DECIMAL(38,0))"
         f" + {decay_den} * CAST(ia AS DECIMAL(38,0))"
         f"   * CAST(ib AS DECIMAL(38,0)))"
         f" div (2 * {decay_den} * CAST(ia AS DECIMAL(38,0))"
         f"      * CAST(ib AS DECIMAL(38,0)))")
-    for _ in range(iterations):
-        num = (pairs.join(ea, "u").join(eb, "v")
+
+    def step(_, outs):
+        num = (outs[-1].join(ea, "u").join(eb, "v")
                .groupBy("a", "b").agg(F.sum("s_e8").alias("num")))
         nxt = (num
                .join(ind.select(F.col("dst").alias("a"),
@@ -3368,7 +3314,9 @@ def simrank(edges: DataFrame, iterations: int = 3, decay_num: int = 4,
                .select(F.col("a").alias("u"), F.col("b").alias("v"),
                        s_expr.cast("long").alias("s_e8"))
                .filter(F.col("s_e8") > 0))
-        pairs = off.unionByName(diag).localCheckpoint(eager=True)
+        return off.unionByName(diag)
+
+    pairs = _rounds(step, diag, iterations, until_empty=False)[-1]
     return (pairs.filter(F.col("u") < F.col("v"))
             .select("u", "v", "s_e8",
                     (F.col("s_e8").cast("double") / F.lit(float(grid)))
@@ -3572,10 +3520,11 @@ def ppr_push(edges: DataFrame, seeds: DataFrame, rounds: int = 8,
     with zero float protocol. Sinks and sub-threshold nodes hold
     their residual (documented contract).
 
-    Returns (node_id, p_e12, r_e12) for nodes with any mass. Rounds
-    are FIXED (not convergence-tested) so the unrolled oracle has the
-    same shape; each round lazily checkpoints the state frame — no
-    driver action until the caller's.
+    Returns (node_id, p_e12, r_e12) for nodes with any mass — no rows
+    when ``seeds`` is empty. Rounds are FIXED (not convergence-tested)
+    so the unrolled oracle has the same shape; they run on ``_rounds``
+    (see the module docstring), so the seed count is the only driver
+    action before the caller's.
     """
     grid = 10 ** scale
     E = edges.select("src", "dst").localCheckpoint(eager=True)
@@ -3583,26 +3532,29 @@ def ppr_push(edges: DataFrame, seeds: DataFrame, rounds: int = 8,
     nodes = (E.select(F.col("src").alias("node_id"))
              .unionByName(E.select(F.col("dst").alias("node_id")))
              .distinct())
-    n_seeds = seeds.select("node_id").distinct().count()
-    init_r = grid // n_seeds
+    seeds = seeds.select("node_id").distinct()
+    n_seeds = seeds.count()
+    if not n_seeds:  # no seeds, no mass
+        return E.select(F.col("src").alias("node_id"),
+                        F.lit(0).cast("long").alias("p_e12"),
+                        F.lit(0).cast("long").alias("r_e12")).limit(0)
     cur = (nodes
            .join(deg.withColumnRenamed("src", "node_id"), "node_id",
                  "left")
-           .join(seeds.select("node_id").distinct()
-                 .withColumn("_s", F.lit(True)), "node_id", "left")
+           .join(seeds.withColumn("_s", F.lit(True)), "node_id", "left")
            .select("node_id",
                    F.coalesce("deg", F.lit(0)).cast("long").alias("deg"),
                    F.lit(0).cast("long").alias("p"),
-                   F.when(F.col("_s"), F.lit(init_r)).otherwise(F.lit(0))
-                   .cast("long").alias("r")))
-    for _ in range(rounds):
-        cur = cur.localCheckpoint(eager=False)
-        push = (F.col("deg") > 0) & \
-               (F.col("r") > F.lit(eps_thresh) * F.col("deg"))
-        pushed = F.expr(f"(r * {alpha_num}) div {alpha_den}")
-        rem = F.col("r") - pushed
-        q = F.expr(f"(r - (r * {alpha_num}) div {alpha_den}) div deg")
-        st = cur.select(
+                   F.when(F.col("_s"), F.lit(grid // n_seeds))
+                   .otherwise(F.lit(0)).cast("long").alias("r")))
+    push = (F.col("deg") > 0) & \
+        (F.col("r") > F.lit(eps_thresh) * F.col("deg"))
+    pushed = F.expr(f"(r * {alpha_num}) div {alpha_den}")
+    rem = F.col("r") - pushed
+    q = F.expr(f"(r - (r * {alpha_num}) div {alpha_den}) div deg")
+
+    def step(_, outs):
+        st = outs[-1].select(
             "node_id", "deg",
             F.when(push, F.col("p") + pushed).otherwise(F.col("p"))
             .alias("p"),
@@ -3612,10 +3564,13 @@ def ppr_push(edges: DataFrame, seeds: DataFrame, rounds: int = 8,
         gains = (st.filter(F.col("q") > 0)
                  .join(E, st.node_id == E.src)
                  .groupBy("dst").agg(F.sum("q").alias("gain")))
-        cur = (st.join(gains, st.node_id == gains.dst, "left")
-               .select("node_id", "deg", "p",
-                       (F.col("keep") + F.coalesce("gain", F.lit(0)))
-                       .alias("r")))
+        return (st.join(gains, st.node_id == gains.dst, "left")
+                .select("node_id", "deg", "p",
+                        (F.col("keep") + F.coalesce("gain", F.lit(0)))
+                        .alias("r")))
+
+    cur = _rounds(step, cur.localCheckpoint(eager=False), rounds,
+                  until_empty=False)[-1]
     return (cur.filter((F.col("p") > 0) | (F.col("r") > 0))
             .select("node_id", F.col("p").alias("p_e12"),
                     F.col("r").alias("r_e12")))

@@ -41,14 +41,17 @@ def get_spark(app: str = "npm_extraction_server_spark",
               shuffle_partitions: int | None = None,
               java_opts: str = "",
               driver_mem: str | None = None) -> SparkSession:
-    """``java_opts``: extra -XX flags appended after the ParallelGC
-    default (the simulated-executor benchmark right-sizes GC/JIT thread
-    counts to its CPU pin). ``driver_mem``: override the default heap —
+    """``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, else one
+    thread per CPU this process may run on. ``java_opts``: extra -XX
+    flags appended after the ParallelGC default (the simulated-executor
+    benchmark right-sizes GC/JIT thread counts to its CPU pin).
+    ``driver_mem``: override the default heap —
     a 2-core pinned simulated executor should not claim 48g. Without
     it, ``SPARK_GRAFT_DRIVER_MEM`` sets the heap, else
     ``_default_driver_mem()`` sizes it to the host."""
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1: master.find("]")]

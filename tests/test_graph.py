@@ -1223,6 +1223,40 @@ def test_topo_layers_one_job_per_round_deep_dag(spark):
     assert len(jobs) <= 4 * depth + 8, len(jobs)
 
 
+# Fixed-iteration loops on ``_rounds`` checkpoint lazily; per extra
+# round on a 42-node cycle that measured 4 jobs for pagerank (5 with
+# an eager checkpoint per round) and 3 for lpa_communities.
+_ROUND_BUDGETS = {
+    "pagerank": (lambda G, e, k: G.pagerank(e, iterations=k), 4),
+    "lpa_communities": (lambda G, e, k: G.lpa_communities(e, rounds=k), 3),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ROUND_BUDGETS))
+def test_fixed_iteration_rounds_job_budget(spark, name):
+    """Eight more rounds of a fixed-iteration loop cost at most its
+    per-round job budget each, plus 4 jobs for the +-1 job jitter of
+    each of the two runs (AQE on, the session default)."""
+    from npm_extraction_server_spark.plans import graph as G
+
+    run, budget = _ROUND_BUDGETS[name]
+    n = 42
+    e = spark.range(n).select(F.col("id").alias("src"),
+                              ((F.col("id") + 1) % n).alias("dst"))
+    sc = spark.sparkContext
+    jobs = []
+    for k in (2, 10):
+        group = f"{name}_budget_{k}"
+        spark.catalog.clearCache()
+        sc.setJobGroup(group, group)
+        try:
+            assert len(run(G, e, k).collect()) == n
+        finally:
+            sc.setJobGroup(None, None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[1] - jobs[0] <= 8 * budget + 4, jobs
+
+
 def test_pagerank_incremental_bit_exact_and_local(spark):
     """pagerank_incremental == full recompute on the changed graph,
     bit-for-bit, while recomputing only the delta's forward cone:
@@ -1938,6 +1972,11 @@ def test_ppr_push_exact_mass_conservation_and_locality(spark):
     want = {v: (p[v], r[v]) for v in nodes if p[v] > 0 or r[v] > 0}
     assert got == want
 
+    # no seeds, no mass: an empty result, not a ZeroDivisionError
+    none = ppr_push(df, seeds.limit(0), rounds=4)
+    assert none.columns == ["node_id", "p_e12", "r_e12"]
+    assert none.count() == 0
+
 
 def test_louvain_moves_pure_python_twin(spark):
     from npm_extraction_server_spark.plans.graph import louvain_moves
@@ -1989,17 +2028,10 @@ def test_louvain_moves_pure_python_twin(spark):
 
 
 def test_louvain_levels_pure_python_twin(spark):
+    """Rings of triangles bridged by single edges: 4 triangles at 2
+    levels, and 8 at 3 levels, where the second contraction also
+    carries the first one's self-loops up and merges them."""
     from npm_extraction_server_spark.plans.graph import louvain_levels
-
-    # 4 triangles in a ring, bridged by single edges
-    tri = lambda b: [(b, b + 1), (b + 1, b + 2), (b + 2, b)]
-    edges = tri(0) + tri(3) + tri(6) + tri(9) + \
-        [(2, 3), (5, 6), (8, 9), (11, 0)]
-    rounds, levels = 3, 2
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.community
-           for r in louvain_levels(df, rounds=rounds,
-                                   levels=levels).collect()}
 
     # pure-python replay: weighted semi-synchronous pass + contraction
     def lpass(adj, sl, rounds):
@@ -2030,27 +2062,43 @@ def test_louvain_levels_pure_python_twin(spark):
             lab = new
         return lab
 
-    und = {tuple(sorted(e)) for e in edges}
-    adj = {}
-    for a, b in und:
-        adj.setdefault(a, {})[b] = 1
-        adj.setdefault(b, {})[a] = 1
-    lab1 = lpass(adj, {}, rounds)
-    # contraction
-    adj2, sl2 = {}, {}
-    for a, b in und:
-        ca, cb = lab1[a], lab1[b]
-        if ca == cb:
-            sl2[ca] = sl2.get(ca, 0) + 1
-        else:
-            adj2.setdefault(ca, {})[cb] = adj2.get(ca, {}).get(cb, 0) + 1
-            adj2.setdefault(cb, {})[ca] = adj2.get(cb, {}).get(ca, 0) + 1
-    lab2 = lpass(adj2, sl2, rounds) if adj2 else {}
-    expect = {n: lab2.get(lab1[n], lab1[n]) for n in adj}
-    assert got == expect
-    # triangles never split across the hierarchy
-    for b in (0, 3, 6, 9):
-        assert len({got[b], got[b + 1], got[b + 2]}) == 1
+    tri = lambda b: [(b, b + 1), (b + 1, b + 2), (b + 2, b)]
+    rounds = 3
+    for n_tri, levels in ((4, 2), (8, 3)):
+        edges = [e for k in range(n_tri) for e in tri(3 * k)] + \
+            [(3 * k + 2, (3 * k + 3) % (3 * n_tri)) for k in range(n_tri)]
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = {r.node: r.community
+               for r in louvain_levels(df, rounds=rounds,
+                                       levels=levels).collect()}
+
+        adj = {}
+        for a, b in {tuple(sorted(e)) for e in edges}:
+            adj.setdefault(a, {})[b] = 1
+            adj.setdefault(b, {})[a] = 1
+        sl, expect = {}, {n: n for n in adj}
+        for _ in range(levels):
+            lab = lpass(adj, sl, rounds)
+            expect = {n: lab.get(c, c) for n, c in expect.items()}
+            # contraction: inter-community weights sum; intra weight
+            # and the members' self-loops become the community's
+            nxt, nsl = {}, {}
+            for n, w in sl.items():
+                if n in lab:
+                    nsl[lab[n]] = nsl.get(lab[n], 0) + w
+            for a, ms in adj.items():
+                for b, w in ms.items():
+                    ca, cb = lab[a], lab[b]
+                    if ca != cb:
+                        nxt.setdefault(ca, {})[cb] = \
+                            nxt.get(ca, {}).get(cb, 0) + w
+                    elif a < b:
+                        nsl[ca] = nsl.get(ca, 0) + w
+            adj, sl = nxt, nsl
+        assert got == expect, (n_tri, levels)
+        # triangles never split across the hierarchy
+        for b in range(0, 3 * n_tri, 3):
+            assert len({got[b], got[b + 1], got[b + 2]}) == 1
 
 
 def test_conductance_hand_computed(spark):
@@ -2210,3 +2258,13 @@ def test_peel_max_rounds_and_empty_input(spark, name):
     out = run(G, loops, b.limit(0))
     assert sorted(out.columns) == sorted(cols)
     assert out.count() == 0
+
+
+def test_all_lists_every_public_function():
+    import inspect
+
+    from npm_extraction_server_spark.plans import graph as G
+
+    public = {name for name, f in inspect.getmembers(G, inspect.isfunction)
+              if not name.startswith("_") and f.__module__ == G.__name__}
+    assert sorted(G.__all__) == sorted(public)
