@@ -13,12 +13,13 @@ from __future__ import annotations
 
 import weakref
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-__all__ = ["TABLES", "register_corpus", "sql"]
+__all__ = ["TABLES", "register_corpus", "register_warehouse", "sql"]
 
 # temp views are SESSION-scoped (not application-scoped), so the
 # registration cache must be keyed by the live session object — a
@@ -48,3 +49,18 @@ def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     """Run ``query`` against the registered corpus views."""
     register_corpus(spark, sf_dir)
     return spark.sql(query)
+
+
+def register_warehouse(spark: SparkSession, out_dir: str) -> list[str]:
+    """Register a materialized warehouse (plans/warehouse.py layout) as
+    temp views; returns the registered names. Tables the build did not
+    write (e.g. ``entities`` without linking) are skipped."""
+    out = []
+    for name in ("triples", "entities", "lineage", "errors"):
+        try:
+            spark.read.parquet(f"{out_dir}/{name}") \
+                .createOrReplaceTempView(name)
+        except AnalysisException:
+            continue
+        out.append(name)
+    return out

@@ -57,6 +57,14 @@ One peel loop (``_peel``) is the fixpoint every decomposition uses
   ``max_rounds`` bounds the peel rounds over all thresholds, and label
   what each threshold removed once, after its fixpoint.
 
+One min-label loop (``_min_label``) is the fixpoint connected
+components and SCC coloring share: each round lowers every (node,
+label) row to the min label over its (src, dst) in-edges, pointer-
+doubles (l(v) <- min(l(v), l(l(v))), so chains settle in O(log n)
+rounds), checkpoints through ``_stats_fresh`` and runs ONE count of
+the changed labels. Doubling is valid on directed edges too: l(l(v))
+reaches l(v), which reaches v.
+
 Scale notes (100 TB / 10^9-node graphs):
 
 - ``bfs_distances`` shuffles only the FRONTIER each round (nodes first
@@ -182,6 +190,65 @@ def _peel(step: Callable[[DataFrame], DataFrame], live: DataFrame,
             # empty is a fixpoint: charge its no-change round, skip its jobs
             return live, 0, rounds - 1
     raise RuntimeError(exhausted)
+
+
+def _min_label(labels: DataFrame, edges: DataFrame, n: int,
+               exhausted: str) -> DataFrame:
+    """The (node, label) fixpoint of label(dst) <- min label(src) over
+    (src, dst) ``edges``, from ``labels`` (node, label), within ``n``
+    rounds (see the module docstring)."""
+    for _ in range(n):
+        # (1) neighbor min; the round's input label rides along as
+        # p_label so convergence is counted on the checkpoint, no join
+        nbr_min = (edges.join(labels, edges.src == labels.node)
+                   .groupBy("dst").agg(F.min("label").alias("nbr_min")))
+        stepped = (
+            labels.join(nbr_min, labels.node == nbr_min.dst, "left")
+            .select("node",
+                    F.least("label", F.coalesce("nbr_min", "label"))
+                    .alias("label"),
+                    F.col("label").alias("p_label")))
+        # (2) pointer doubling: l(v) <- l(l(v)); halves path lengths
+        # each round so chains converge in O(log n) rounds, not O(n)
+        rep = stepped.select(F.col("node").alias("rep"),
+                             F.col("label").alias("rep_label"))
+        updated = _stats_fresh(
+            stepped.join(rep, stepped.label == rep.rep, "left")
+            .select("node",
+                    F.least("label", F.coalesce("rep_label", "label"))
+                    .alias("label"),
+                    "p_label"))
+        n_changed = updated.filter(
+            F.col("label") != F.col("p_label")).count()
+        labels = updated.select("node", "label")
+        if n_changed == 0:
+            return labels
+    raise RuntimeError(exhausted)
+
+
+def _stats_fresh(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint that also DROPS the plan's carried size
+    statistics. ``Dataset.localCheckpoint`` preserves the origin
+    plan's estimated sizeInBytes into the checkpoint's LogicalRDD,
+    and the size-only estimator MULTIPLIES child sizes through every
+    join — so an iterative algorithm that feeds checkpoints back into
+    self-joins (pointer doubling) squares the carried number each
+    round. Composed across an outer loop this grows
+    double-exponentially: boruvka_msf round 4 stalled the driver for
+    minutes multiplying ~10^6-digit BigIntegers inside
+    SizeInBytesOnlyStatsPlanVisitor (jstack: BigInteger.multiplyToomCook3
+    under LogicalPlanStats). Rebuilding the frame from the
+    checkpointed InternalRow RDD resets stats to the bounded default
+    (one scan, same data, no extra job). Falls back to the plain
+    checkpoint if the JVM constructor ever disappears."""
+    ck = df.localCheckpoint(eager=True)
+    try:
+        jdf = ck._jdf
+        fresh = df.sparkSession._jsparkSession.internalCreateDataFrame(
+            jdf.queryExecution().toRdd(), jdf.schema(), False)
+        return DataFrame(fresh, df.sparkSession)
+    except Exception:   # pragma: no cover - Spark-internal dependency
+        return ck
 
 
 def _und_nodes(und: DataFrame, name: str = "n") -> DataFrame:
@@ -1112,115 +1179,77 @@ def topo_layers(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     return out
 
 
+def _scc_trim(live: DataFrame) -> DataFrame:
+    """SCC trim round: the (src, dst) edges of ``live`` whose src has
+    an in-edge and whose dst has an out-edge in ``live``."""
+    return (live.join(live.select(F.col("dst").alias("src")), "src",
+                      "left_semi")
+            .join(live.select(F.col("src").alias("dst")), "dst",
+                  "left_semi"))
+
+
 def strongly_connected_components(edges: DataFrame,
                                   max_rounds: int = 30) -> DataFrame:
     """SCC partition of a directed graph — the coloring algorithm from
-    the public FW-BW/coloring literature (Orzan; Slota et al.), built
-    from three DataFrame fixpoints:
+    the public FW-BW/coloring literature (Orzan; Slota et al.). Each
+    outer round calls three drivers over the live edges, each bounded
+    by the node count, which it cannot exhaust:
 
-    1. TRIM: iteratively peel nodes with in-degree 0 or out-degree 0
-       in the live subgraph — each is a singleton SCC (this disposes
-       of the DAG portion in O(longest chain) cheap rounds, the known
-       fix for naive coloring's chain worst case).
-    2. COLOR: forward min-id propagation to fixpoint over what's left
-       (color(n) = min id that reaches n, within the live subgraph).
-    3. MARK: within each color class, backward-propagate from the
-       root (color c marks nodes that REACH c through same-colored
-       nodes) — marked nodes form exactly SCC(c); assign, remove,
-       repeat from 1.
+    1. TRIM (``_peel`` of ``_scc_trim``): drop edges whose src has no
+       in-edge or whose dst has no out-edge, to fixpoint — this
+       disposes of the DAG portion in O(longest chain) cheap rounds.
+    2. COLOR (``_min_label``): color(n) = the min id that reaches n
+       within the live subgraph, in O(log n) rounds.
+    3. MARK (``_multi_source_sweep``): within each color class, sweep
+       backward from the root c — the nodes that REACH c through
+       same-colored nodes form exactly SCC(c); assign them, remove
+       their edges, repeat from 1.
 
     Returns (node_id, scc_id) with scc_id = the component's minimum
-    node id. Every fixpoint is join+aggregate rounds over checkpointed
-    shrinking state; per-round shuffles carry (node, label) pairs.
-
-    Known cost bound (inherent to coloring): the COLOR fixpoint runs
-    one round per hop the min id must travel, i.e. rounds ∝ the
-    diameter of the largest remaining SCC — fine for real web/
-    dependency graphs (SCCs are dense and shallow; the probe's
-    1000-node chorded cluster colors in ~30 rounds) but a bare
-    N-cycle costs N rounds. Trim guarantees the acyclic portion never
-    reaches coloring at all."""
-    e_all = (edges.filter(F.col("src") != F.col("dst"))
-             .select("src", "dst").distinct().localCheckpoint(eager=True))
-    nodes = (e_all.select(F.col("src").alias("n"))
-             .unionByName(e_all.select(F.col("dst").alias("n")))
-             .distinct().localCheckpoint(eager=True))
-    live_n, live_e = nodes, e_all
-    # seed with an empty typed frame so a graph with no (non-self-loop)
-    # edges returns an empty result instead of crashing the reduce
-    done: list[DataFrame] = [
-        nodes.limit(0).withColumn("scc_id", F.col("n"))]
-    # isolated nodes never enter edges; callers pass edge-defined graphs
+    node id; nodes no MARK reaches are singletons. ``max_rounds``
+    bounds the outer rounds. Only MARK is diameter-bound: one round
+    per hop of the largest remaining SCC — fine for real web/
+    dependency graphs (SCCs are dense and shallow), N rounds for a
+    bare N-cycle."""
+    e = (edges.filter(F.col("src") != F.col("dst"))
+         .select("src", "dst").distinct().localCheckpoint(eager=True))
+    nodes = _endpoints(e)
+    n, live, m = nodes.count(), e, e.count()
+    marks = [nodes.limit(0).withColumn("scc_id", F.col("node_id"))]
     for _ in range(max_rounds):
-        if _empty(live_n):
-            out = _union_all(done)  # balanced: many trim rounds
-            return out.select(F.col("n").alias("node_id"), "scc_id")
-        # --- 1. trim singleton SCCs (in-deg 0 or out-deg 0) ---
-        while True:
-            srcs = live_e.select(F.col("src").alias("n")).distinct()
-            dsts = live_e.select(F.col("dst").alias("n")).distinct()
-            trivial = (live_n.join(srcs, "n", "left_anti")
-                       .unionByName(live_n.join(dsts, "n", "left_anti"))
-                       .distinct().localCheckpoint(eager=True))
-            if _empty(trivial):
-                break
-            done.append(trivial.withColumn("scc_id", F.col("n")))
-            live_n = live_n.join(trivial, "n", "left_anti") \
-                .localCheckpoint(eager=True)
-            live_e = (live_e
-                      .join(trivial.withColumnRenamed("n", "src"),
-                            "src", "left_anti")
-                      .join(trivial.withColumnRenamed("n", "dst"),
-                            "dst", "left_anti")
-                      .select("src", "dst").localCheckpoint(eager=True))
-        if _empty(live_n):
-            continue
-        # --- 2. forward min-id coloring to fixpoint ---
-        color = live_n.select("n", F.col("n").alias("c")) \
-            .localCheckpoint(eager=True)
-        while True:
-            inc = (live_e.join(color.withColumnRenamed("n", "src"), "src")
-                   .groupBy(F.col("dst").alias("n"))
-                   .agg(F.min("c").alias("pc")))
-            nxt = (color.join(inc, "n", "left")
-                   .select("n", F.least(F.col("c"),
-                                        F.coalesce("pc", F.col("c")))
-                           .alias("c"))
-                   .localCheckpoint(eager=True))
-            settled = (nxt.alias("x").join(color.alias("y"), "n")
-                       .filter(F.col("x.c") != F.col("y.c")).isEmpty())
-            color = nxt
-            if settled:
-                break
-        # --- 3. backward mark within color classes ---
-        mark = color.filter(F.col("n") == F.col("c")) \
-            .localCheckpoint(eager=True)     # roots reach themselves
-        ec = (live_e
-              .join(color.withColumnRenamed("n", "src")
-                    .withColumnRenamed("c", "sc"), "src")
-              .join(color.withColumnRenamed("n", "dst")
-                    .withColumnRenamed("c", "dc"), "dst")
-              .filter(F.col("sc") == F.col("dc"))
-              .select("src", "dst", F.col("sc").alias("c"))
-              .localCheckpoint(eager=True))  # same-color edges only
-        while True:
-            new = (ec.join(mark.withColumnRenamed("n", "dst"),
-                           ["dst", "c"], "left_semi")
-                   .select(F.col("src").alias("n"), "c").distinct()
-                   .join(mark, ["n", "c"], "left_anti")
-                   .localCheckpoint(eager=True))
-            if _empty(new):
-                break
-            mark = mark.unionByName(new).localCheckpoint(eager=True)
-        done.append(mark.select("n", F.col("c").alias("scc_id")))
-        live_n = live_n.join(mark.select("n"), "n", "left_anti") \
-            .localCheckpoint(eager=True)
-        live_e = (live_e
-                  .join(mark.select(F.col("n").alias("src")),
-                        "src", "left_anti")
-                  .join(mark.select(F.col("n").alias("dst")),
-                        "dst", "left_anti")
-                  .select("src", "dst").localCheckpoint(eager=True))
+        if m:
+            live, m, _ = _peel(_scc_trim, live, m, n,
+                               f"scc: trim not converged in {n} rounds")
+        if not m:
+            return (nodes.join(_union_all(marks), "node_id", "left")
+                    .select("node_id",
+                            F.coalesce("scc_id", "node_id").alias("scc_id")))
+        color = _min_label(
+            _endpoints(live).select(F.col("node_id").alias("node"),
+                                    F.col("node_id").alias("label")),
+            live, n, f"scc: coloring not converged in {n} rounds")
+        same = (live
+                .join(color.withColumnsRenamed({"node": "src",
+                                                "label": "sc"}), "src")
+                .join(color.withColumnsRenamed({"node": "dst",
+                                                "label": "dc"}), "dst")
+                .filter(F.col("sc") == F.col("dc"))
+                .select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        roots = color.filter(F.col("node") == F.col("label")) \
+            .select(F.col("node").alias("node_id"))
+        mark = (_multi_source_sweep(roots, same, n, shared_seed=True)
+                .join(color, "node")
+                .select(F.col("node").alias("node_id"),
+                        F.col("label").alias("scc_id"))
+                .localCheckpoint(eager=True))
+        marks.append(mark)
+        live = (live
+                .join(mark.select(F.col("node_id").alias("src")), "src",
+                      "left_anti")
+                .join(mark.select(F.col("node_id").alias("dst")), "dst",
+                      "left_anti")
+                .localCheckpoint(eager=True))
+        m = live.count()
     raise RuntimeError(f"scc: not converged in {max_rounds} rounds")
 
 
@@ -1691,61 +1720,27 @@ def maximal_independent_set(edges: DataFrame,
 
     Oracle twin: _mis_sql in operators/suite.py (rounds unrolled).
     """
-    und = _und_simple(edges)
-    adj = _und_adj(und).localCheckpoint(eager=True)
-    undecided = (adj.select("n").distinct()
-                 .localCheckpoint(eager=True))
-    mis: DataFrame | None = None
-    for r in range(1, max_rounds + 1):
-        if _empty(undecided):
-            # empty-graph / all-self-loop input: the MIS is empty
-            if mis is None:
-                return undecided.select(F.col("n").alias("node_id"))
-            return mis.select(F.col("n").alias("node_id"))
-        pr = undecided.select("n", _luby_priority(r, "n").alias("p"))
+    adj = _und_adj(_und_simple(edges, eager=None)).localCheckpoint(eager=True)
+
+    def step(r, outs):
+        # round r-1's winners and their neighbors leave the game
+        won = outs[-1].filter("won").select("n")
+        live = (outs[-1].filter(~F.col("won")).select("n")
+                .join(adj.join(won, "n", "left_semi")
+                      .select(F.col("m").alias("n")), "n", "left_anti"))
+        pr = live.select("n", _luby_priority(r, "n").alias("p"))
         nbr_max = (adj.join(pr.select(F.col("n").alias("m"),
                                       F.col("p").alias("p_m")), "m")
-                   .join(undecided, "n", "left_semi")
+                   .join(live, "n", "left_semi")
                    .groupBy("n").agg(F.max("p_m").alias("mp")))
-        winners = (pr.join(nbr_max, "n", "left")
-                   .filter(F.col("mp").isNull()
-                           | (F.col("p") > F.col("mp")))
-                   .select("n")
-                   .localCheckpoint(eager=True))
-        mis = winners if mis is None else mis.unionByName(winners)
-        removed = (winners
-                   .unionByName(adj.join(winners, "n", "left_semi")
-                                .select(F.col("m").alias("n")))
-                   .distinct())
-        undecided = (undecided.join(removed, "n", "left_anti")
-                     .localCheckpoint(eager=True))
-    raise RuntimeError(
-        f"maximal_independent_set: no convergence in {max_rounds} rounds")
+        return pr.join(nbr_max, "n", "left").select(
+            "n", (F.col("mp").isNull() | (F.col("p") > F.col("mp")))
+            .alias("won"))
 
-
-def _stats_fresh(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint that also DROPS the plan's carried size
-    statistics. ``Dataset.localCheckpoint`` preserves the origin
-    plan's estimated sizeInBytes into the checkpoint's LogicalRDD,
-    and the size-only estimator MULTIPLIES child sizes through every
-    join — so an iterative algorithm that feeds checkpoints back into
-    self-joins (pointer doubling) squares the carried number each
-    round. Composed across an outer loop this grows
-    double-exponentially: boruvka_msf round 4 stalled the driver for
-    minutes multiplying ~10^6-digit BigIntegers inside
-    SizeInBytesOnlyStatsPlanVisitor (jstack: BigInteger.multiplyToomCook3
-    under LogicalPlanStats). Rebuilding the frame from the
-    checkpointed InternalRow RDD resets stats to the bounded default
-    (one scan, same data, no extra job). Falls back to the plain
-    checkpoint if the JVM constructor ever disappears."""
-    ck = df.localCheckpoint(eager=True)
-    try:
-        jdf = ck._jdf
-        fresh = df.sparkSession._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False)
-        return DataFrame(fresh, df.sparkSession)
-    except Exception:   # pragma: no cover - Spark-internal dependency
-        return ck
+    seed = adj.select("n").distinct().withColumn("won", F.lit(False))
+    outs = _rounds(step, seed, max_rounds, exhausted=(
+        f"maximal_independent_set: no convergence in {max_rounds} rounds"))
+    return _union_all(outs).filter("won").select(F.col("n").alias("node_id"))
 
 
 def boruvka_msf(edges: DataFrame, weight_col: str = "w",
@@ -1791,7 +1786,7 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
     labels = (_und_nodes(und, "node").distinct()
               .withColumn("comp", F.col("node"))
               .localCheckpoint(eager=True))
-    forest: DataFrame | None = None
+    forest = [und.limit(0).select("a", "b", "w")]
     wpick = Window.partitionBy("c").orderBy("w", "a", "b")
     for _ in range(max_rounds):
         live = (
@@ -1802,8 +1797,7 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
             .filter(F.col("ca") != F.col("cb"))
             .localCheckpoint(eager=True))
         if _empty(live):
-            return und.limit(0).select("a", "b", "w") \
-                if forest is None else forest
+            return _union_all(forest)
         cand = (live.select(F.col("ca").alias("c"), "w", "a", "b",
                             "ca", "cb")
                 .unionByName(live.select(F.col("cb").alias("c"), "w",
@@ -1813,10 +1807,7 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
                  .select("a", "b", "w", "ca", "cb")
                  .distinct()
                  .localCheckpoint(eager=True))
-        new_edges = picks.select("a", "b", "w")
-        forest = (new_edges if forest is None
-                  else forest.unionByName(new_edges)
-                  ).localCheckpoint(eager=True)
+        forest.append(picks.select("a", "b", "w"))
         # _stats_fresh at both accumulation points: connected_components'
         # pointer doubling inflates carried size stats ~2x in DIGITS per
         # inner round, and feeding that back into next round's joins is
@@ -1849,40 +1840,34 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     Scale shape: per round one explode of live edges to (endpoint,
     priority) + a node-keyed max + two node-keyed joins for the
     local-max test + two anti-joins to drop covered edges — cost
-    ∝ live |E|, which shrinks geometrically. One driver action per
-    round (the live count off a lazy checkpoint).
+    ∝ live |E|, which shrinks geometrically. Each round's live edges
+    and their ``won`` flags are one ``_rounds`` output, so a round is
+    one checkpoint and one emptiness probe.
 
     Oracle twin: _matching_sql in operators/suite.py.
     """
-    und = _und_simple(edges)
-    live = und
-    matched: DataFrame | None = None
-    for r in range(1, max_rounds + 1):
-        if not live.count():
-            return und.limit(0) if matched is None else matched
+    def step(r, outs):
+        # round r-1's matched endpoints kill their incident edges
+        mnodes = _und_nodes(outs[-1].filter("won")).distinct()
+        live = (outs[-1].filter(~F.col("won"))
+                .join(mnodes.select(F.col("n").alias("a")), "a", "left_anti")
+                .join(mnodes.select(F.col("n").alias("b")), "b", "left_anti"))
         pr = live.select("a", "b", _luby_priority(r, "a", "b").alias("p"))
         nm = (pr.select(F.col("a").alias("node"), "p")
               .unionByName(pr.select(F.col("b").alias("node"), "p"))
               .groupBy("node").agg(F.max("p").alias("mx")))
-        winners = (
+        return (
             pr.join(nm.select(F.col("node").alias("a"),
                               F.col("mx").alias("mx_a")), "a")
             .join(nm.select(F.col("node").alias("b"),
                             F.col("mx").alias("mx_b")), "b")
-            .filter((F.col("p") >= F.col("mx_a"))
-                    & (F.col("p") >= F.col("mx_b")))
-            .select("a", "b"))
-        matched = (winners if matched is None
-                   else matched.unionByName(winners)
-                   ).localCheckpoint(eager=False)
-        mnodes = _und_nodes(winners).distinct()
-        live = (live
-                .join(mnodes.select(F.col("n").alias("a")), "a", "left_anti")
-                .join(mnodes.select(F.col("n").alias("b")), "b", "left_anti")
-                .select("a", "b")
-                .localCheckpoint(eager=False))
-    raise RuntimeError(
-        f"maximal_matching: no convergence in {max_rounds} rounds")
+            .select("a", "b", ((F.col("p") >= F.col("mx_a"))
+                               & (F.col("p") >= F.col("mx_b"))).alias("won")))
+
+    seed = _und_simple(edges).withColumn("won", F.lit(False))
+    outs = _rounds(step, seed, max_rounds, exhausted=(
+        f"maximal_matching: no convergence in {max_rounds} rounds"))
+    return _union_all(outs).filter("won").select("a", "b")
 
 
 def greedy_coloring(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
@@ -2737,7 +2722,10 @@ def louvain_levels(edges: DataFrame, rounds: int = 3,
     label join + (node, comm) sum + window pick per round); the
     contraction is ONE |E|-sized double label join + a (comm, comm)
     sum — and every level's graph is no larger than the last. Labels
-    and contracted edges are checkpointed between levels.
+    and contracted edges are checkpointed between levels through
+    ``_stats_fresh``: plain checkpoints carry the size estimates that
+    every level's self-joins multiply, which stalled the driver at
+    four levels.
 
     Oracle twin: _louvain_levels_sql in operators/suite.py.
     """
@@ -2750,7 +2738,7 @@ def louvain_levels(edges: DataFrame, rounds: int = 3,
         last = lvl == levels - 1
         lab = _louvain_pass(adj, sloop, rounds).select("node", "comm")
         if not last:
-            lab = lab.localCheckpoint(eager=True)
+            lab = _stats_fresh(lab)
         # LEFT join: a community that contracted into an isolated
         # supernode (no inter-community edges) is absent from the next
         # level's adjacency and keeps its id
@@ -2779,8 +2767,7 @@ def louvain_levels(edges: DataFrame, rounds: int = 3,
                    .select(F.col("comm").alias("n"), "sl"))
             intra = (intra.unionByName(inh)
                      .groupBy("n").agg(F.sum("sl").alias("sl")))
-        sloop = intra.localCheckpoint(eager=True)
-        adj = inter.localCheckpoint(eager=True)
+        sloop, adj = _stats_fresh(intra), _stats_fresh(inter)
     return mapping.select("node", F.col("comm").alias("community"))
 
 

@@ -14,10 +14,10 @@ Stages:
        IRIs): mentions matching a head entity short-circuit the LSH
        path entirely, so the hot keys never enter the shuffle (skew
        defense mandated by the north star).
-3. ``connected_components``: iterative min-label propagation
-   (DataFrame self-joins) with ``localCheckpoint`` per frontier to
+3. ``connected_components``: min-label propagation with pointer
+   doubling (``plans/graph._min_label``), checkpointed per round to
    truncate lineage; converges in O(log n) rounds; the convergence
-   test is a count of changed labels (left-anti semantics).
+   test is a count of changed labels.
 4. ``canonicalize_triples``: rewrite subj/obj to canonical ids via two
    hash-joins against the assignment table.
 """
@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .graph import _min_label, _stats_fresh
 
 FOAF = "http://xmlns.com/foaf/0.1/"
 DOAP = "http://usefulinc.com/ns/doap#"
@@ -197,74 +199,27 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                          max_rounds: int = 25) -> DataFrame:
     """Min-label propagation union-find: (entity_iri, canonical_id).
 
-    Each round joins labels across edges both ways, takes the min
-    neighbor label, and localCheckpoints the frontier (truncates the
-    lineage Catalyst would otherwise re-derive). Converges in O(log n)
-    rounds; raises if not converged by ``max_rounds``."""
-    # _stats_fresh, not a plain checkpoint: localCheckpoint preserves
-    # the ORIGIN plan's estimated sizeInBytes, and _cc_iterate feeds
-    # checkpoints back into two joins per round — an edge frame whose
-    # upstream estimate is huge (an LSH bucket join's Cartesian-ish
-    # guess) squares through the rounds until the size-only estimator
-    # overflows BigInteger (observed: 200k mutual-kNN edges from
-    # lsh_topk killed round ~20 with "BigInteger would overflow
-    # supported range" — the boruvka_msf pathology, same fix)
-    from .graph import _stats_fresh
-
+    ``plans/graph._min_label`` over the symmetric edge set: each round
+    takes the min neighbor label, pointer-doubles, and checkpoints the
+    labels (truncates the lineage Catalyst would otherwise re-derive).
+    Converges in O(log n) rounds; raises if not converged by
+    ``max_rounds``."""
+    # _stats_fresh, not a plain checkpoint: the carried size estimate
+    # of an LSH bucket join squares through the rounds until it
+    # overflows BigInteger (observed on 200k mutual-kNN edges from
+    # lsh_topk at round ~20; the boruvka_msf pathology, same fix)
     sym = _stats_fresh(
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
     )
-    labels = vertices.select(
-        F.col("entity_iri"), F.col("entity_iri").alias("canonical_id"))
-    labels = _stats_fresh(labels)
-
-    return _cc_iterate(labels, sym, max_rounds)
-
-
-def _cc_iterate(labels: DataFrame, sym: DataFrame,
-                max_rounds: int) -> DataFrame:
-    from .graph import _stats_fresh
-
-    for _ in range(max_rounds):
-        # (1) neighbor min; the round's input label rides along as
-        # p_label so convergence is counted on the checkpoint, no join
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.entity_iri)
-            .groupBy("src")
-            .agg(F.min("canonical_id").alias("nbr_min"))
-        )
-        stepped = (
-            labels.join(neighbor_min, labels.entity_iri == neighbor_min.src, "left")
-            .select(
-                "entity_iri",
-                F.least(F.col("canonical_id"),
-                        F.coalesce(F.col("nbr_min"), F.col("canonical_id")))
-                .alias("canonical_id"),
-                F.col("canonical_id").alias("p_label"),
-            )
-        )
-        # (2) pointer doubling: l(v) <- l(l(v)); halves path lengths each
-        # round so chains converge in O(log n) rounds, not O(n)
-        rep = stepped.select(F.col("entity_iri").alias("rep_iri"),
-                             F.col("canonical_id").alias("rep_label"))
-        updated = (
-            stepped.join(rep, stepped.canonical_id == rep.rep_iri, "left")
-            .select(
-                "entity_iri",
-                F.least(F.col("canonical_id"),
-                        F.coalesce(F.col("rep_label"), F.col("canonical_id")))
-                .alias("new_label"),
-                "p_label",
-            )
-        )
-        updated = _stats_fresh(updated)
-        n_changed = updated.filter(F.col("new_label") != F.col("p_label")).count()
-        labels = updated.select("entity_iri", F.col("new_label").alias("canonical_id"))
-        if n_changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components: no convergence in {max_rounds} rounds")
+    labels = _stats_fresh(vertices.select(
+        F.col("entity_iri").alias("node"), F.col("entity_iri").alias("label")))
+    return _min_label(
+        labels, sym, max_rounds,
+        f"connected_components: no convergence in {max_rounds} rounds",
+    ).select(F.col("node").alias("entity_iri"),
+             F.col("label").alias("canonical_id"))
 
 
 def incremental_components(old_labels: DataFrame, new_edges: DataFrame,

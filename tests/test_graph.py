@@ -1257,6 +1257,33 @@ def test_fixed_iteration_rounds_job_budget(spark, name):
     assert jobs[1] - jobs[0] <= 8 * budget + 4, jobs
 
 
+def test_scc_cycle_job_budget(spark):
+    """SCC on a directed cycle: coloring pointer-doubles, so only the
+    mark sweep runs one round per hop. Going from a 16- to a 32-node
+    cycle measured 105 more jobs (292 when coloring also ran one
+    round per hop)."""
+    from npm_extraction_server_spark.plans.graph import (
+        strongly_connected_components,
+    )
+
+    sc = spark.sparkContext
+    jobs = []
+    for n in (16, 32):
+        e = spark.range(n).select(F.col("id").alias("src"),
+                                  ((F.col("id") + 1) % n).alias("dst"))
+        group = f"scc_budget_{n}"
+        spark.catalog.clearCache()
+        sc.setJobGroup(group, group)
+        try:
+            got = strongly_connected_components(e).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        assert sorted((r.node_id, r.scc_id) for r in got) == \
+            [(i, 0) for i in range(n)]
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[1] - jobs[0] <= 150, jobs
+
+
 def test_pagerank_incremental_bit_exact_and_local(spark):
     """pagerank_incremental == full recompute on the changed graph,
     bit-for-bit, while recomputing only the delta's forward cone:
@@ -2029,8 +2056,10 @@ def test_louvain_moves_pure_python_twin(spark):
 
 def test_louvain_levels_pure_python_twin(spark):
     """Rings of triangles bridged by single edges: 4 triangles at 2
-    levels, and 8 at 3 levels, where the second contraction also
-    carries the first one's self-loops up and merges them."""
+    levels, and 8 at 3 and 4 levels, where the second contraction also
+    carries the first one's self-loops up and merges them (4 levels
+    stalled the driver on carried size estimates before the level
+    checkpoints dropped them)."""
     from npm_extraction_server_spark.plans.graph import louvain_levels
 
     # pure-python replay: weighted semi-synchronous pass + contraction
@@ -2064,7 +2093,7 @@ def test_louvain_levels_pure_python_twin(spark):
 
     tri = lambda b: [(b, b + 1), (b + 1, b + 2), (b + 2, b)]
     rounds = 3
-    for n_tri, levels in ((4, 2), (8, 3)):
+    for n_tri, levels in ((4, 2), (8, 3), (8, 4)):
         edges = [e for k in range(n_tri) for e in tri(3 * k)] + \
             [(3 * k + 2, (3 * k + 3) % (3 * n_tri)) for k in range(n_tri)]
         df = spark.createDataFrame(edges, "src long, dst long")
@@ -2194,6 +2223,10 @@ _CACHE_CASES = {
     "personalized_pagerank": lambda G, e, s: G.personalized_pagerank(e, s),
     "pagerank_incremental": lambda G, e, s: G.pagerank_incremental(
         e, e, G.pagerank(e, return_history=True)),
+    "strongly_connected_components":
+        lambda G, e, s: G.strongly_connected_components(e),
+    "maximal_independent_set": lambda G, e, s: G.maximal_independent_set(e),
+    "maximal_matching": lambda G, e, s: G.maximal_matching(e),
     # raising paths: the 3-hop chain 0 -> 1 -> 2 -> 3 needs more rounds
     "betweenness_exhausted": lambda G, e, s: G.betweenness(
         e.filter(F.col("dst") - F.col("src") == 1), max_rounds=1),
@@ -2258,6 +2291,19 @@ def test_peel_max_rounds_and_empty_input(spark, name):
     out = run(G, loops, b.limit(0))
     assert sorted(out.columns) == sorted(cols)
     assert out.count() == 0
+
+
+@pytest.mark.parametrize("name", ["maximal_independent_set",
+                                  "maximal_matching"])
+def test_luby_max_rounds(spark, name):
+    """One edge takes one Luby round and a second that finds nothing
+    live: ``max_rounds=2`` returns, 1 raises the function's own error."""
+    from npm_extraction_server_spark.plans import graph as G
+
+    e = _edges(spark, [(0, 1)])
+    assert getattr(G, name)(e, max_rounds=2).count() == 1
+    with pytest.raises(RuntimeError, match=f"^{name}: "):
+        getattr(G, name)(e, max_rounds=1)
 
 
 def test_all_lists_every_public_function():

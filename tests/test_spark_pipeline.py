@@ -33,22 +33,34 @@ def pipeline(spark):
     return {"pages": pages, **result}
 
 
+def _corpus(spark, root, rows):
+    """A corpus directory holding every catalog table as ``rows`` rows
+    of (id, lang, n_chars)."""
+    from npm_extraction_server_spark.plans.catalog import TABLES
+
+    df = spark.range(rows).select(
+        "id", F.lit("en").alias("lang"), F.lit(300).alias("n_chars"))
+    for t in TABLES:
+        df.write.parquet(f"{root}/{t}.parquet")
+    return str(root)
+
+
 def test_sql_frontend_views(spark, tmp_path):
-    """register_views/register_warehouse: the whole engine is reachable
+    """register_corpus/register_warehouse: the whole engine is reachable
     from plain spark.sql — a DuckDB-oracle query body runs verbatim-ish
     on Spark SQL, and a materialized warehouse queries by SQL too."""
-    from npm_extraction_server_spark.plans.warehouse import materialize_graph
-    from npm_extraction_server_spark.sources.views import (
-        register_views,
+    from npm_extraction_server_spark.plans.catalog import (
+        register_corpus,
         register_warehouse,
     )
+    from npm_extraction_server_spark.plans.warehouse import materialize_graph
 
-    assert len(register_views(spark, "/root/testdata/sf0.001")) == 10
+    register_corpus(spark, _corpus(spark, tmp_path / "corpus", 3))
     row = spark.sql("""
         SELECT lang, count(*) AS n FROM documents
         WHERE n_chars > 200 GROUP BY lang ORDER BY n DESC, lang LIMIT 1
     """).collect()[0]
-    assert row["n"] > 0
+    assert row["n"] == 3
     pages = pages_df(spark, 12, partitions=2)
     materialize_graph(pages, str(tmp_path / "wh"), do_linking=False,
                       resolve_ranges=False)
@@ -56,6 +68,20 @@ def test_sql_frontend_views(spark, tmp_path):
     n = spark.sql("SELECT count(*) AS n FROM triples WHERE subj IS NOT NULL") \
         .collect()[0]["n"]
     assert n > 100
+
+
+def test_catalog_sql_follows_corpus_dir(spark, tmp_path):
+    """catalog.sql answers from the corpus directory it is given, also
+    right after the views were registered for another one."""
+    from npm_extraction_server_spark.plans.catalog import register_corpus, sql
+
+    big = _corpus(spark, tmp_path / "big", 5)
+    small = _corpus(spark, tmp_path / "small", 2)
+    q = "SELECT count(*) AS n FROM lineitem"
+    assert sql(spark, big, q).collect()[0]["n"] == 5
+    register_corpus(spark, small)
+    assert sql(spark, big, q).collect()[0]["n"] == 5
+    assert sql(spark, small, q).collect()[0]["n"] == 2
 
 
 def test_extract_counts(pipeline):
