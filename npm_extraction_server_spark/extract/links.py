@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.rounds import _rounds
+
 # any anchor, however many attributes precede href (double-quoted)
 _HREF_RE = r'<a[^>]*href="([^"]+)"'
 # scheme is matched case-insensitively: crawled hrefs carry HTTP:// too
@@ -177,8 +179,9 @@ def resolve_redirects(redirects: DataFrame, max_hops: int = 16,
     as connected components (a 10^7-long vanity chain would take
     10^7 sequential joins naively, 24 here). Each round is one
     src-keyed hash join on the (shrinking-constant) chain table; the
-    accumulated frame is lazily localCheckpoint-ed per round so
-    Catalyst never replays prior rounds (plan-diamond rule).
+    chain table is the ``plans/rounds._rounds`` state, lazily
+    localCheckpoint-ed per round so Catalyst never replays prior
+    rounds (plan-diamond rule).
 
     A src whose final target still has an out-edge after the rounds
     either sits on a cycle or exceeds max_hops — both unresolved:
@@ -187,22 +190,24 @@ def resolve_redirects(redirects: DataFrame, max_hops: int = 16,
     """
     import math
 
-    cur = redirects.select(F.col(src_col).alias("src"),
-                           F.col(dst_col).alias("cur"),
-                           F.lit(1).cast("long").alias("hops"))
-    rounds = max(1, math.ceil(math.log2(max_hops)))
-    for _ in range(rounds):
-        cur = cur.localCheckpoint(eager=False)
+    def step(_, hist: list[DataFrame]) -> DataFrame:
+        cur = hist[-1]
         nxt = cur.alias("a").join(
             cur.select(F.col("src").alias("b_src"),
                        F.col("cur").alias("b_cur"),
                        F.col("hops").alias("b_hops")),
             F.col("a.cur") == F.col("b_src"), "left")
-        cur = nxt.select(
+        return nxt.select(
             F.col("a.src").alias("src"),
             F.coalesce("b_cur", F.col("a.cur")).alias("cur"),
             (F.col("a.hops")
              + F.coalesce("b_hops", F.lit(0))).alias("hops"))
+
+    cur = redirects.select(F.col(src_col).alias("src"),
+                           F.col(dst_col).alias("cur"),
+                           F.lit(1).cast("long").alias("hops"))
+    rounds = max(1, math.ceil(math.log2(max_hops)))
+    cur = _rounds(step, cur, rounds, until_empty=False)[-1]
     dom = (redirects.select(F.col(src_col).alias("cur"))
            .distinct().withColumn("_dom", F.lit(True)))
     out = cur.join(dom, "cur", "left")

@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import _rounds, _union_all
+
 __all__ = ["as_quads", "bgp_agg", "bgp_ask", "bgp_construct", "bgp_exists", "path_edges",
            "bgp_describe",
            "bgp_join", "bgp_minus",
@@ -362,11 +364,7 @@ def path_edges(triples: DataFrame, path) -> DataFrame:
         return e.select(F.col("dst").alias("src"),
                         F.col("src").alias("dst"))
     if op == "alt":
-        import functools
-
-        return functools.reduce(
-            lambda a, b: a.unionByName(b),
-            [path_edges(triples, a) for a in args]).distinct()
+        return _union_all([path_edges(triples, a) for a in args]).distinct()
     if op == "seq":
         out = path_edges(triples, args[0])
         for nxt in args[1:]:
@@ -431,10 +429,7 @@ def bgp_construct(triples: DataFrame,
                 (F.lit(None).cast("string") if g is None
                  else term(g)).alias("graph"))
         parts.append(bound.select(*cols))
-    import functools
-
-    return functools.reduce(lambda a, b: a.unionByName(b),
-                            parts).distinct()
+    return _union_all(parts).distinct()
 
 
 def materialize_rules(triples: DataFrame,
@@ -451,28 +446,22 @@ def materialize_rules(triples: DataFrame,
 
     Scale shape: each round is |rules| Catalyst plans over the
     current closure + one anti-join against it (only genuinely NEW
-    triples survive into the next round), checkpointed — rounds are
-    bounded by the derivation depth (e.g. the subclass-chain length),
-    and each round's cost follows the rule matches, not the closure
-    size squared. Raises on non-convergence within ``max_rounds``
+    triples survive into the next round), checkpointed by
+    ``plans/rounds._rounds`` — rounds are bounded by the derivation
+    depth (e.g. the subclass-chain length), and each round's cost
+    follows the rule matches, not the closure size squared. Raises on non-convergence within ``max_rounds``
     (a rule set deriving fresh IRIs forever is a bug, not a
     workload)."""
-    import functools
+    def step(_, outs: list[DataFrame]) -> DataFrame:
+        closure = _union_all(outs)
+        return (_union_all([bgp_construct(closure, pats, tmpl)
+                            for pats, tmpl in rules]).distinct()
+                .join(closure, ["subj", "pred", "obj"], "left_anti"))
 
-    closure = (triples.select("subj", "pred", "obj").distinct()
-               .localCheckpoint(eager=True))
-    for _ in range(max_rounds):
-        derived = functools.reduce(
-            lambda a, b: a.unionByName(b),
-            [bgp_construct(closure, pats, tmpl) for pats, tmpl in rules])
-        fresh = (derived.join(closure, ["subj", "pred", "obj"],
-                              "left_anti")
-                 .distinct().localCheckpoint(eager=True))
-        if not fresh.limit(1).count():
-            return closure
-        closure = closure.unionByName(fresh).localCheckpoint(eager=True)
-    raise RuntimeError(
-        f"materialize_rules: no fixpoint in {max_rounds} rounds")
+    return _union_all(_rounds(
+        step, triples.select("subj", "pred", "obj").distinct()
+        .localCheckpoint(eager=True), max_rounds,
+        exhausted=f"materialize_rules: no fixpoint in {max_rounds} rounds"))
 
 
 _AGG_FNS = {

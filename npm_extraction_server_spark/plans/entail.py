@@ -16,18 +16,23 @@ Scale discipline:
   broadcast into the corpus-sized joins — the data passes are a fixed
   number of broadcast joins + one distinct.
 - TransitiveProperty closure is the one genuinely iterative rule: it
-  runs per-predicate path doubling (T <- T union T.T) with one
-  count() action per round off a lazily checkpointed frame, so a
-  diameter-D relation closes in ceil(log2 D) rounds. Output is the
-  closure SET, whose size (reachability pairs) is the inherent cost
-  of materializing a transitive predicate — the caller's modeling
-  choice, not a plan artifact.
+  runs per-predicate path doubling (T <- T union T.T) on the
+  ``plans/rounds._peel`` driver — each round's frame is checkpointed
+  eagerly and counted once — so a diameter-D relation closes in
+  ceil(log2 D) rounds. Output is the closure SET, whose size
+  (reachability pairs) is the inherent cost of materializing a
+  transitive predicate — the caller's modeling choice, not a plan
+  artifact.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .rounds import _peel
 
 RDF_TYPE = "rdf:type"
 RDFS_SUBCLASS = "rdfs:subClassOf"
@@ -45,23 +50,29 @@ def _spo(df: DataFrame) -> DataFrame:
     return df.select(*_SPO)
 
 
-def _trans_close_small(rel: DataFrame, max_rounds: int = 16) -> DataFrame:
-    """Transitive closure of an ontology-sized (sub, sup) relation by
-    path doubling; one count() per round, converges in log2(depth)."""
-    cur = rel.select("sub", "sup").distinct().localCheckpoint(eager=True)
-    n = cur.count()
-    for _ in range(max_rounds):
-        step = (cur.alias("a")
-                .join(cur.alias("b"), F.col("a.sup") == F.col("b.sub"))
-                .select(F.col("a.sub").alias("sub"),
-                        F.col("b.sup").alias("sup")))
-        nxt = cur.unionByName(step).distinct().localCheckpoint(eager=True)
-        m = nxt.count()
-        if m == n:
-            return nxt
-        cur, n = nxt, m
-    raise RuntimeError("schema closure did not converge "
-                       f"in {max_rounds} rounds")
+def _fixpoint(step: Callable[[DataFrame], DataFrame], rows: DataFrame,
+              max_rounds: int, what: str) -> DataFrame:
+    """The ``_peel`` fixpoint of ``step`` from the distinct ``rows``;
+    raises "``what`` did not converge in ``max_rounds`` rounds"."""
+    live = rows.distinct().localCheckpoint(eager=True)
+    return _peel(step, live, live.count(), max_rounds,
+                 f"{what} did not converge in {max_rounds} rounds")[0]
+
+
+def _transitive_closure(rel: DataFrame, max_rounds: int,
+                        what: str) -> DataFrame:
+    """Transitive closure of (subj, pred, obj) rows within each pred,
+    by path doubling; one count() per round, converges in
+    log2(depth)."""
+    def step(t: DataFrame) -> DataFrame:
+        return t.unionByName(
+            t.alias("a")
+            .join(t.alias("b"), (F.col("a.pred") == F.col("b.pred"))
+                  & (F.col("a.obj") == F.col("b.subj")))
+            .select(F.col("a.subj").alias("subj"),
+                    F.col("a.pred").alias("pred"),
+                    F.col("b.obj").alias("obj"))).distinct()
+    return _fixpoint(step, _spo(rel), max_rounds, what)
 
 
 def rdfs_closure(data: DataFrame, schema: DataFrame) -> DataFrame:
@@ -82,12 +93,16 @@ def rdfs_closure(data: DataFrame, schema: DataFrame) -> DataFrame:
     data = _spo(data)
     schema = _spo(schema)
 
-    spc = _trans_close_small(
-        schema.filter(F.col("pred") == RDFS_SUBPROP)
-        .select(F.col("subj").alias("sub"), F.col("obj").alias("sup")))
-    scc = _trans_close_small(
-        schema.filter(F.col("pred") == RDFS_SUBCLASS)
-        .select(F.col("subj").alias("sub"), F.col("obj").alias("sup")))
+    # rdfs5/rdfs11: subPropertyOf+ and subClassOf+ in one closure
+    sch = _transitive_closure(
+        schema.filter(F.col("pred").isin(RDFS_SUBPROP, RDFS_SUBCLASS)),
+        16, "schema closure")
+
+    def sup_of(pred: str) -> DataFrame:
+        return sch.filter(F.col("pred") == pred).select(
+            F.col("subj").alias("sub"), F.col("obj").alias("sup"))
+
+    spc, scc = sup_of(RDFS_SUBPROP), sup_of(RDFS_SUBCLASS)
 
     # rdfs7: (s p o), p subPropertyOf+ q  =>  (s q o)
     ext = data.unionByName(
@@ -118,12 +133,7 @@ def rdfs_closure(data: DataFrame, schema: DataFrame) -> DataFrame:
                                F.lit(RDF_TYPE).alias("pred"),
                                F.col("c").alias("obj")))
         .unionByName(schema)
-        .unionByName(spc.select(F.col("sub").alias("subj"),
-                                F.lit(RDFS_SUBPROP).alias("pred"),
-                                F.col("sup").alias("obj")))
-        .unionByName(scc.select(F.col("sub").alias("subj"),
-                                F.lit(RDFS_SUBCLASS).alias("pred"),
-                                F.col("sup").alias("obj")))
+        .unionByName(sch)
         .distinct())
     given = data.unionByName(schema).distinct() \
         .withColumn("_given", F.lit(True))
@@ -138,9 +148,7 @@ def _sym_inv_fixpoint(triples: DataFrame, sym_preds: DataFrame,
     symmetric p and (o q s) for p inverseOf q (both directions);
     fixpoint in rounds = nesting depth of the property chains (~2 for
     real ontologies), one count() per round."""
-    cur = triples.distinct().localCheckpoint(eager=True)
-    n = cur.count()
-    for _ in range(max_rounds):
+    def step(cur: DataFrame) -> DataFrame:
         s_new = (cur.join(F.broadcast(sym_preds), cur.pred == sym_preds.p)
                  .select(F.col("obj").alias("subj"), "pred",
                          F.col("subj").alias("obj")))
@@ -148,14 +156,8 @@ def _sym_inv_fixpoint(triples: DataFrame, sym_preds: DataFrame,
                  .select(F.col("obj").alias("subj"),
                          F.col("q").alias("pred"),
                          F.col("subj").alias("obj")))
-        nxt = (cur.unionByName(s_new).unionByName(i_new)
-               .distinct().localCheckpoint(eager=True))
-        m = nxt.count()
-        if m == n:
-            return nxt
-        cur, n = nxt, m
-    raise RuntimeError("sym/inv closure did not converge "
-                       f"in {max_rounds} rounds")
+        return cur.unionByName(s_new).unionByName(i_new).distinct()
+    return _fixpoint(step, triples, max_rounds, "sym/inv closure")
 
 
 def owl_horst_closure(data: DataFrame, schema: DataFrame,
@@ -195,31 +197,10 @@ def owl_horst_closure(data: DataFrame, schema: DataFrame,
     cur = _sym_inv_fixpoint(data, sym_preds, inv)
 
     # rdfp4: per-predicate path doubling over the transitive slice
-    t_edges = (cur.join(F.broadcast(trans_preds), cur.pred == F.col("p"))
-               .select("pred", "subj", "obj")
-               .distinct().localCheckpoint(eager=True))
-    n = t_edges.count()
-    for _ in range(max_rounds):
-        step = (t_edges.alias("a")
-                .join(t_edges.alias("b"),
-                      (F.col("a.pred") == F.col("b.pred"))
-                      & (F.col("a.obj") == F.col("b.subj")))
-                .select(F.col("a.pred").alias("pred"),
-                        F.col("a.subj").alias("subj"),
-                        F.col("b.obj").alias("obj")))
-        nxt = (t_edges.unionByName(step).distinct()
-               .localCheckpoint(eager=True))
-        m = nxt.count()
-        if m == n:
-            t_edges = nxt
-            break
-        t_edges, n = nxt, m
-    else:
-        raise RuntimeError("transitive closure did not converge "
-                           f"in {max_rounds} rounds")
-
-    cur = _sym_inv_fixpoint(
-        cur.unionByName(t_edges.select(*_SPO)), sym_preds, inv)
+    t_edges = _transitive_closure(
+        cur.join(F.broadcast(trans_preds), cur.pred == F.col("p")),
+        max_rounds, "transitive closure")
+    cur = _sym_inv_fixpoint(cur.unionByName(t_edges), sym_preds, inv)
 
     closure = cur.unionByName(schema).distinct()
     given = data.unionByName(schema).distinct() \

@@ -28,16 +28,18 @@ reproduces every hash bit-for-bit — suite ``kg_graph_hash``):
 Scale shape: each round is two edge-keyed hash joins + two
 (graph, node)-keyed sorted-list aggregates (memory ~ per-node degree
 within ONE document's graph — tiny by construction); the color frame
-is lazily checkpointed per round so the plan stays round-deep. The
-final hash is one (graph)-keyed aggregate; the duplicate-class rollup
-runs on |graphs| rows. Nothing is ever quadratic and no Python UDF
-runs.
+is lazily checkpointed per round (``plans/rounds._rounds``) so the
+plan stays round-deep. The final hash is one (graph)-keyed aggregate;
+the duplicate-class rollup runs on |graphs| rows. Nothing is ever
+quadratic and no Python UDF runs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .rounds import _rounds
 
 
 def wl_graph_hash(triples: DataFrame, graph_col: str = "graph",
@@ -63,9 +65,9 @@ def wl_graph_hash(triples: DataFrame, graph_col: str = "graph",
         c0 = F.md5(F.when(is_lit, F.lit("lit")).otherwise(F.lit("n")))
     else:
         c0 = F.md5(F.col("node"))
-    colors = nodes.select("g", "node", c0.alias("c"))
 
-    for _ in range(rounds):
+    def step(_, hist: list[DataFrame]) -> DataFrame:
+        colors = hist[-1]
         osig = (e.join(colors.select(F.col("g").alias("g2"),
                                      F.col("node").alias("o2"),
                                      F.col("c").alias("oc")),
@@ -84,20 +86,22 @@ def wl_graph_hash(triples: DataFrame, graph_col: str = "graph",
                 .groupBy("g", "o")
                 .agg(F.array_join(F.array_sort(F.collect_list("sig")), ",")
                      .alias("ins")))
-        colors = (colors
-                  .join(osig.withColumnsRenamed({"g": "og", "s": "on"}),
-                        (F.col("g") == F.col("og"))
-                        & (F.col("node") == F.col("on")), "left")
-                  .join(isig.withColumnsRenamed({"g": "ig", "o": "in_"}),
-                        (F.col("g") == F.col("ig"))
-                        & (F.col("node") == F.col("in_")), "left")
-                  .select("g", "node",
-                          F.md5(F.concat(
-                              F.col("c"), F.lit("|"),
-                              F.coalesce(F.col("outs"), F.lit("")),
-                              F.lit("|"),
-                              F.coalesce(F.col("ins"), F.lit("")))).alias("c"))
-                  .localCheckpoint(eager=False))
+        return (colors
+                .join(osig.withColumnsRenamed({"g": "og", "s": "on"}),
+                      (F.col("g") == F.col("og"))
+                      & (F.col("node") == F.col("on")), "left")
+                .join(isig.withColumnsRenamed({"g": "ig", "o": "in_"}),
+                      (F.col("g") == F.col("ig"))
+                      & (F.col("node") == F.col("in_")), "left")
+                .select("g", "node",
+                        F.md5(F.concat(
+                            F.col("c"), F.lit("|"),
+                            F.coalesce(F.col("outs"), F.lit("")),
+                            F.lit("|"),
+                            F.coalesce(F.col("ins"), F.lit("")))).alias("c")))
+
+    colors = _rounds(step, nodes.select("g", "node", c0.alias("c")),
+                     rounds, until_empty=False)[-1]
 
     ts = (e.join(colors.select(F.col("g").alias("sg"),
                                F.col("node").alias("sn"),

@@ -30,20 +30,24 @@ re-rounded to 12 — so the belief/trust vectors match DuckDB's
 unrolled CTE bit-for-bit at every iteration.
 
 Scale shape: the (source, entity, attr, value) assertion set is
-deduplicated once and persisted TWICE, hash-partitioned on each join
-side — ``by source`` for the trust->belief half-step and ``by fact``
-for the belief->trust half-step — so each iteration shuffles only the
-trust vector (|sources|-sized, broadcast) and the belief vector
-(|facts|-sized, co-partitioned with the fact-keyed copy), never the
-assertion set itself.  Both normalizing maxima are 1-row aggregates
-broadcast-cross-joined into the update, so each half-step stays a
-single job.
+deduplicated once and persisted TWICE (``plans/rounds._persisted``),
+hash-partitioned on each join side — ``by source`` for the
+trust->belief half-step and ``by fact`` for the belief->trust
+half-step. The trust->belief join broadcasts the |sources|-sized trust
+vector, so it never shuffles the assertions. The belief->trust join
+does: its plan (Spark 4.1, AQE on) exchanges both the belief checkpoint
+and the persisted fact-keyed copy on the fact key, as neither side's
+partitioning reaches the planner; AQE makes it a broadcast join when
+one side is small at run time. Both normalizing maxima are 1-row
+aggregates broadcast-cross-joined into the update.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
+
+from .rounds import _persisted, _rounds
 
 _FACT = ["entity", "attr", "value"]
 _DEC = "decimal(28,12)"
@@ -68,43 +72,41 @@ def truth_discovery(claims: DataFrame, iterations: int = 4,
     """
     a = (claims.select("source", *_FACT).distinct()
          .localCheckpoint(eager=True))
-    a_by_src = a.repartition(F.col("source")).persist()
-    a_by_fact = a.repartition(*[F.col(c) for c in _FACT]).persist()
-    a_by_src.count(), a_by_fact.count()
-
-    trust = (a.select("source").distinct()
-             .withColumn("trust", F.lit(1.0)))
-    belief = None
-    for _ in range(iterations):
-        # trust -> belief: the trust vector is |sources|-sized, so the
-        # join broadcasts it; the groupBy's exchange carries map-side
-        # decimal partials, never raw assertions.
-        raw_b = (a_by_src.join(F.broadcast(trust), "source")
-                 .groupBy(*_FACT).agg(_grid_sum("trust").alias("raw")))
-        bmax = raw_b.agg(F.max("raw").alias("bmax"))
-        belief = (raw_b.crossJoin(F.broadcast(bmax))
-                  .select(*_FACT,
-                          F.round(F.col("raw") / F.col("bmax"), 12)
-                          .alias("belief"))
-                  .localCheckpoint(eager=True))
-        # belief -> trust: belief is |facts|-sized and arrives already
-        # hash-partitioned on the fact key from its groupBy, matching
-        # a_by_fact's persisted partitioning — the join adds no
-        # assertion-sized exchange.
-        raw_t = (a_by_fact.join(belief, _FACT)
-                 .groupBy("source")
-                 .agg((_grid_sum("belief") / F.count("*")).alias("raw")))
-        tmax = raw_t.agg(F.max("raw").alias("tmax"))
-        trust = (raw_t.crossJoin(F.broadcast(tmax))
-                 .select("source",
-                         F.round(F.col("raw") / F.col("tmax"), 12)
-                         .alias("trust"))
-                 .localCheckpoint(eager=True))
-    a_by_src.unpersist()
-    a_by_fact.unpersist()
-    if return_trust:
-        return trust.select("source", F.round("trust", out_scale)
+    trust0 = (a.select("source").distinct()
+              .withColumn("trust", F.lit(1.0)))
+    with _persisted(a, "source") as a_by_src, \
+            _persisted(a, *_FACT) as a_by_fact:
+        def trust_of(belief: DataFrame) -> DataFrame:
+            # belief -> trust: a fact-keyed join that exchanges both
+            # sides (see the module docstring)
+            raw_t = (a_by_fact.join(belief, _FACT)
+                     .groupBy("source")
+                     .agg((_grid_sum("belief") / F.count("*"))
+                          .alias("raw")))
+            tmax = raw_t.agg(F.max("raw").alias("tmax"))
+            return (raw_t.crossJoin(F.broadcast(tmax))
+                    .select("source",
+                            F.round(F.col("raw") / F.col("tmax"), 12)
                             .alias("trust"))
+                    .localCheckpoint(eager=True))
+
+        def step(r: int, outs: list[DataFrame]) -> DataFrame:
+            trust = trust0 if r == 1 else trust_of(outs[-1])
+            # trust -> belief: the trust vector is |sources|-sized, so
+            # the join broadcasts it; the groupBy's exchange carries
+            # map-side decimal partials, never raw assertions.
+            raw_b = (a_by_src.join(F.broadcast(trust), "source")
+                     .groupBy(*_FACT).agg(_grid_sum("trust").alias("raw")))
+            bmax = raw_b.agg(F.max("raw").alias("bmax"))
+            return (raw_b.crossJoin(F.broadcast(bmax))
+                    .select(*_FACT,
+                            F.round(F.col("raw") / F.col("bmax"), 12)
+                            .alias("belief")))
+
+        belief = _rounds(step, trust0, iterations, until_empty=False)[-1]
+        if return_trust:
+            return trust_of(belief).select(
+                "source", F.round("trust", out_scale).alias("trust"))
     n_src = a.groupBy(*_FACT).agg(
         F.countDistinct("source").alias("n_sources"))
     w = (belief.join(n_src, _FACT)

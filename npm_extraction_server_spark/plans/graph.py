@@ -5,65 +5,10 @@ The north-star pipeline materializes an entity graph (triples ->
 linked entities -> canonical ids); these operators answer the
 questions a KG consumer asks of that graph — reachability/hop
 distance from a seed set, link-structure importance, and local
-clustering — with the same execution discipline as
-``plans/linking.connected_components``: iterative DataFrame
-self-joins with eagerly ``localCheckpoint``-ed frontiers (truncating
-lineage so Catalyst never re-derives round N-1 inside round N), every
+clustering — as iterative DataFrame self-joins on the round drivers
+of ``plans/rounds.py`` (``_persisted`` + ``_rounds``, ``_peel``,
+``_min_label``; their contract is that module's docstring), every
 per-round shuffle keyed on the node id.
-
-One round loop (``_persisted`` + ``_rounds``) is the lifecycle every
-loop over a persisted edge set uses:
-
-- ``with _persisted(edges, key) as e:`` hash-partitions the edge set on
-  its join key (``src``; ``dst`` for hyperball) and persists it, so
-  each round shuffles only the small side. There is no warm-up action:
-  the first round's job fills the cache. The edge set is unpersisted
-  when the block exits, also when a round raises, so one block can
-  span several loops (betweenness's forward and backward sweeps).
-- ``_rounds(step, seed, n)`` runs ``step(r, outs)`` for r = 1..n, where
-  ``outs`` is ``[seed, out_1, ..., out_{r-1}]``. Each round's output is
-  ``localCheckpoint``-ed, which truncates lineage so round r never
-  re-derives round r-1. Frontier loops stop at the first empty output,
-  which is not kept (``_empty``: ``DataFrame.isEmpty()``, no job at
-  all for a checkpoint without partitions); fixed-iteration loops pass
-  ``until_empty=False``. The stop rule also sets the checkpoint rule:
-  a loop that probes its rounds checkpoints them EAGERLY (the probe
-  reads the materialised frame); a fixed-iteration loop checkpoints
-  them LAZILY. Under AQE the lazy call still runs the round's shuffle
-  stages, and its last stage runs inside the next round's first job —
-  one job per round fewer, and the persisted edges of a ``_persisted``
-  block are read while the block is open. Callers that promise
-  convergence pass ``exhausted``, the ``RuntimeError`` message for n
-  non-empty rounds. Accumulated state (visited sets, walk corpora) is
-  ``_union_all(outs)``: every input is a checkpoint, so the balanced
-  union is pure metadata and no round rewrites earlier rounds' rows.
-
-One peel loop (``_peel``) is the fixpoint every decomposition uses
-(kcore, coreness, ktruss, trussness, ab_core):
-
-- ``_peel(step, live, n_live, rounds, exhausted)`` replaces the live
-  set by ``step(live)``, eagerly ``localCheckpoint``-ed, until its row
-  count stops changing, and returns ``(live, n_live, rounds left)``.
-  Each round runs ONE count action; the previous checkpoint's count is
-  carried in ``n_live`` — also from one ``_peel`` call into the next —
-  and never recounted. The no-change round counts toward ``rounds``.
-  A round that empties the live set also charges that round without
-  running it: an empty set is a fixpoint. ``exhausted`` is the
-  RuntimeError message raised when the rounds run out.
-- ``kcore``/``coreness`` share the degree step ``_core_step(k)``,
-  ``ktruss``/``trussness`` the triangle-support step
-  ``_truss_step(k)``. ``coreness`` and ``trussness`` call ``_peel``
-  once per ascending threshold with the rounds left over, so
-  ``max_rounds`` bounds the peel rounds over all thresholds, and label
-  what each threshold removed once, after its fixpoint.
-
-One min-label loop (``_min_label``) is the fixpoint connected
-components and SCC coloring share: each round lowers every (node,
-label) row to the min label over its (src, dst) in-edges, pointer-
-doubles (l(v) <- min(l(v), l(l(v))), so chains settle in O(log n)
-rounds), checkpoints through ``_stats_fresh`` and runs ONE count of
-the changed labels. Doubling is valid on directed edges too: l(l(v))
-reaches l(v), which reaches v.
 
 Scale notes (100 TB / 10^9-node graphs):
 
@@ -106,11 +51,14 @@ vectors through every iteration.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .linking import connected_components
+from .rounds import (_empty, _min_label, _peel, _persisted, _rounds,
+                     _stats_fresh, _union_all)
 
 __all__ = ["ab_core", "assortativity_moments", "betweenness", "bfs_distances",
            "bipartite_project", "boruvka_msf", "bowtie", "butterfly_counts",
@@ -127,128 +75,6 @@ __all__ = ["ab_core", "assortativity_moments", "betweenness", "bfs_distances",
            "temporal_reach", "topo_layers", "triad_census", "triad_code_table",
            "triangle_counts", "trussness", "walk_skipgram_pairs",
            "weighted_random_walks", "wl_refinement"]
-
-
-@contextmanager
-def _persisted(edges: DataFrame, key: str = "src") -> Iterator[DataFrame]:
-    """``edges`` hash-partitioned on ``key`` and persisted for the life
-    of the ``with`` block. An ``InMemoryTableScan`` keeps its
-    outputPartitioning (an eager localCheckpoint does not), so every
-    round's join shuffles only the frontier/score side to meet the
-    edges — the edge set is shuffled once per call, not once per
-    round. Unpersisted on exit, also when a round raises."""
-    e = edges.repartition(F.col(key)).persist()
-    try:
-        yield e
-    finally:
-        e.unpersist()
-
-
-def _rounds(step: Callable[[int, list[DataFrame]], DataFrame],
-            seed: DataFrame, n: int, until_empty: bool = True,
-            exhausted: str | None = None) -> list[DataFrame]:
-    """``[seed, out_1, ..., out_k]`` with ``out_r = step(r, outs)``
-    checkpointed, eagerly iff ``until_empty`` (see the module
-    docstring). With ``until_empty`` the loop stops at the first empty
-    output, which is dropped; ``exhausted`` is the RuntimeError message
-    raised when all ``n`` rounds produced rows."""
-    outs = [seed]
-    for r in range(1, n + 1):
-        nxt = step(r, outs).localCheckpoint(eager=until_empty)
-        if until_empty and _empty(nxt):
-            return outs
-        outs.append(nxt)
-    if exhausted is not None:
-        raise RuntimeError(exhausted)
-    return outs
-
-
-def _empty(df: DataFrame) -> bool:
-    """Emptiness of a CHECKPOINTED frame: ``DataFrame.isEmpty()`` (one
-    limit-1 job), skipped when the checkpoint has no partitions at all
-    — an empty one often has none, and isEmpty's single-partition
-    limit exchange would still launch a job for it. (On a lazy plan
-    ``.rdd`` would run its shuffle stages; probe those with
-    ``isEmpty()`` directly.)"""
-    return df.rdd.getNumPartitions() == 0 or df.isEmpty()
-
-
-def _peel(step: Callable[[DataFrame], DataFrame], live: DataFrame,
-          n_live: int, rounds: int,
-          exhausted: str) -> tuple[DataFrame, int, int]:
-    """``(fixpoint, its row count, rounds left)`` of ``step`` from
-    ``live`` (``n_live`` rows) within ``rounds`` rounds (see the
-    module docstring)."""
-    while rounds > 0:
-        rounds -= 1
-        nxt = step(live).localCheckpoint(eager=True)
-        n_nxt = nxt.count()
-        if n_nxt == n_live:
-            return nxt, n_nxt, rounds
-        live, n_live = nxt, n_nxt
-        if not n_live and rounds:
-            # empty is a fixpoint: charge its no-change round, skip its jobs
-            return live, 0, rounds - 1
-    raise RuntimeError(exhausted)
-
-
-def _min_label(labels: DataFrame, edges: DataFrame, n: int,
-               exhausted: str) -> DataFrame:
-    """The (node, label) fixpoint of label(dst) <- min label(src) over
-    (src, dst) ``edges``, from ``labels`` (node, label), within ``n``
-    rounds (see the module docstring)."""
-    for _ in range(n):
-        # (1) neighbor min; the round's input label rides along as
-        # p_label so convergence is counted on the checkpoint, no join
-        nbr_min = (edges.join(labels, edges.src == labels.node)
-                   .groupBy("dst").agg(F.min("label").alias("nbr_min")))
-        stepped = (
-            labels.join(nbr_min, labels.node == nbr_min.dst, "left")
-            .select("node",
-                    F.least("label", F.coalesce("nbr_min", "label"))
-                    .alias("label"),
-                    F.col("label").alias("p_label")))
-        # (2) pointer doubling: l(v) <- l(l(v)); halves path lengths
-        # each round so chains converge in O(log n) rounds, not O(n)
-        rep = stepped.select(F.col("node").alias("rep"),
-                             F.col("label").alias("rep_label"))
-        updated = _stats_fresh(
-            stepped.join(rep, stepped.label == rep.rep, "left")
-            .select("node",
-                    F.least("label", F.coalesce("rep_label", "label"))
-                    .alias("label"),
-                    "p_label"))
-        n_changed = updated.filter(
-            F.col("label") != F.col("p_label")).count()
-        labels = updated.select("node", "label")
-        if n_changed == 0:
-            return labels
-    raise RuntimeError(exhausted)
-
-
-def _stats_fresh(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint that also DROPS the plan's carried size
-    statistics. ``Dataset.localCheckpoint`` preserves the origin
-    plan's estimated sizeInBytes into the checkpoint's LogicalRDD,
-    and the size-only estimator MULTIPLIES child sizes through every
-    join — so an iterative algorithm that feeds checkpoints back into
-    self-joins (pointer doubling) squares the carried number each
-    round. Composed across an outer loop this grows
-    double-exponentially: boruvka_msf round 4 stalled the driver for
-    minutes multiplying ~10^6-digit BigIntegers inside
-    SizeInBytesOnlyStatsPlanVisitor (jstack: BigInteger.multiplyToomCook3
-    under LogicalPlanStats). Rebuilding the frame from the
-    checkpointed InternalRow RDD resets stats to the bounded default
-    (one scan, same data, no extra job). Falls back to the plain
-    checkpoint if the JVM constructor ever disappears."""
-    ck = df.localCheckpoint(eager=True)
-    try:
-        jdf = ck._jdf
-        fresh = df.sparkSession._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False)
-        return DataFrame(fresh, df.sparkSession)
-    except Exception:   # pragma: no cover - Spark-internal dependency
-        return ck
 
 
 def _und_nodes(und: DataFrame, name: str = "n") -> DataFrame:
@@ -335,22 +161,6 @@ def bfs_distances(seeds: DataFrame, edges: DataFrame,
 # meaningful precision, coarse enough that both engines' double
 # round() agree (the proven suite.py money-sum scale).
 _GRID = 12
-
-
-def _union_all(dfs: list[DataFrame]) -> DataFrame:
-    """Balanced unionByName tree (depth log2 n). A left-fold union
-    chain nests the analyzer recursion once per input and overflows
-    the JVM stack beyond a few hundred — exactly the shape of
-    per-round accumulators (peel lists, BFS visited sets, backward-
-    sweep dependencies) on deep graphs, where rounds ∝ depth/diameter.
-    Inputs are typically checkpointed frames, so the union itself is
-    pure metadata either way; only the tree SHAPE changes."""
-    if not dfs:
-        raise ValueError("_union_all: empty input")
-    while len(dfs) > 1:
-        dfs = [dfs[i].unionByName(dfs[i + 1]) if i + 1 < len(dfs)
-               else dfs[i] for i in range(0, len(dfs), 2)]
-    return dfs[0]
 
 
 def _endpoints(edges: DataFrame) -> DataFrame:
@@ -736,12 +546,8 @@ def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
             .distinct()
             .join(dead, "node_id", "left_anti")
             .localCheckpoint(eager=True))
-        if stats is not None:
-            stats["n_nodes"] = n
-            stats["affected"] = []
-
-        changed: DataFrame | None = None
-        for t in range(1, iterations + 1):
+        def step(t: int, outs: list[DataFrame]) -> DataFrame:
+            changed = outs[-1] if t > 1 else None  # round t-1's ranks
             aff = static_aff
             if changed is not None:
                 # one-hop forward propagation, map-side over the cached
@@ -787,18 +593,20 @@ def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
                 .cast(f"decimal(28,{_GRID})").alias("contrib"))
             inflow = contrib.groupBy("dst").agg(
                 F.sum("contrib").cast("double").alias("inflow"))
-            changed = (
+            return (
                 aff.join(inflow, aff.node_id == inflow.dst, "left")
                 .select(
                     "node_id",
                     F.round(F.lit(teleport)
                             + F.lit(damping)
                             * F.coalesce("inflow", F.lit(0.0)),
-                            _GRID).alias("rank"))
-                .localCheckpoint(eager=True))
-            if stats is not None:
-                stats["affected"].append(changed.count())
-        assert changed is not None
+                            _GRID).alias("rank")))
+
+        outs = _rounds(step, static_aff, iterations, until_empty=False)
+        if stats is not None:
+            stats["n_nodes"] = n
+            stats["affected"] = [c.count() for c in outs[1:]]
+        changed = outs[-1]
         # final overlay: the history's last iteration, minus dead
         # nodes, recomputed rows substituted, brand-new nodes appended
         # — one map-side scan of the history, zero full-graph shuffles
@@ -1764,8 +1572,8 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
     on the COMPONENT graph — whose size halves every round, so the
     inner pointer-jumping loops operate on geometrically shrinking
     frames. State frames are EAGERLY checkpointed (with a nested loop
-    per round the job budget is already rounds x cc-rounds), and the
-    two cross-round accumulation points go through ``_stats_fresh`` —
+    per round the job budget is already rounds x cc-rounds), and both
+    cross-round accumulation points carry ``_stats_fresh`` checkpoints —
     see its docstring for the double-exponential carried-stats blowup
     this loop exposed.
 
@@ -1773,8 +1581,6 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
     unrolled; each merge is a recursive-CTE closure over that round's
     pick edges).
     """
-    from .linking import connected_components
-
     und = (
         edges.filter(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("a"),
@@ -1808,14 +1614,13 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
                  .distinct()
                  .localCheckpoint(eager=True))
         forest.append(picks.select("a", "b", "w"))
-        # _stats_fresh at both accumulation points: connected_components'
-        # pointer doubling inflates carried size stats ~2x in DIGITS per
-        # inner round, and feeding that back into next round's joins is
-        # the double-exponential blowup documented on _stats_fresh
-        mapping = _stats_fresh(connected_components(
+        # both accumulation points carry fresh size stats (the blowup
+        # documented on _stats_fresh): the mapping projects _min_label's
+        # _stats_fresh checkpoint, the labels are re-checkpointed here
+        mapping = connected_components(
             labels.select(F.col("comp").alias("entity_iri")).distinct(),
             picks.select(F.col("ca").alias("src"),
-                         F.col("cb").alias("dst"))))
+                         F.col("cb").alias("dst")))
         labels = _stats_fresh(labels.join(
             mapping.select(F.col("entity_iri").alias("comp"),
                            "canonical_id"), "comp")

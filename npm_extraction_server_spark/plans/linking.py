@@ -15,7 +15,7 @@ Stages:
        path entirely, so the hot keys never enter the shuffle (skew
        defense mandated by the north star).
 3. ``connected_components``: min-label propagation with pointer
-   doubling (``plans/graph._min_label``), checkpointed per round to
+   doubling (``plans/rounds._min_label``), checkpointed per round to
    truncate lineage; converges in O(log n) rounds; the convergence
    test is a count of changed labels.
 4. ``canonicalize_triples``: rewrite subj/obj to canonical ids via two
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .graph import _min_label, _stats_fresh
+from .rounds import _min_label, _stats_fresh
 
 FOAF = "http://xmlns.com/foaf/0.1/"
 DOAP = "http://usefulinc.com/ns/doap#"
@@ -199,7 +199,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                          max_rounds: int = 25) -> DataFrame:
     """Min-label propagation union-find: (entity_iri, canonical_id).
 
-    ``plans/graph._min_label`` over the symmetric edge set: each round
+    ``plans/rounds._min_label`` over the symmetric edge set: each round
     takes the min neighbor label, pointer-doubles, and checkpoints the
     labels (truncates the lineage Catalyst would otherwise re-derive).
     Converges in O(log n) rounds; raises if not converged by

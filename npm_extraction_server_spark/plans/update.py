@@ -63,6 +63,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .rounds import _empty
+
 TKEY = "__tkey"
 _TERM_COLS = ("subj", "pred", "obj")
 GRAPH = "graph"
@@ -215,7 +217,7 @@ def _commit_delta(spark: SparkSession, table: str, base: int,
             # spurious delete artifacts
             del_keys = (cur.select(TKEY).join(dkeys, TKEY, "left_semi")
                         .localCheckpoint(eager=True))
-        if not del_keys.limit(1).count():
+        if _empty(del_keys):
             del_keys = None
     if ins is not None:
         live_keys = cur.select(TKEY)
@@ -224,7 +226,7 @@ def _commit_delta(spark: SparkSession, table: str, base: int,
         new_rows = (ins.withColumn(TKEY, triple_key(cols))
                     .join(live_keys, TKEY, "left_anti")
                     .localCheckpoint(eager=True))
-        if not new_rows.limit(1).count():
+        if _empty(new_rows):
             new_rows = None
     else:
         new_rows = None

@@ -55,6 +55,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.rounds import _empty
+
 
 def _meta(table: str) -> Path:
     return Path(table) / "meta"
@@ -1780,7 +1782,7 @@ def mor_delete_where(spark: SparkSession, table: str, predicates,
     hits = (live.select(F.col("__f").alias("file"),
                         F.col("__p").alias("pos"))
             .localCheckpoint(eager=True))
-    if not hits.limit(1).count():
+    if _empty(hits):
         return base
     empty = read_snapshot(spark, table).limit(0).localCheckpoint(eager=True)
     return commit(empty, table, operation="rowdelta", pos_deletes=hits,

@@ -98,3 +98,20 @@ def test_owl_horst_symmetric_transitive_interaction(spark):
     # pair including self-loops via x near y near x
     want = {(s, o) for s in nodes for o in nodes}
     assert got == want
+
+
+def test_owl_horst_transitive_closure_exhausted(spark):
+    """One path-doubling round does not close a 4-node transitive
+    chain: with ``max_rounds=1`` the closure raises its own error
+    instead of returning a partial closure."""
+    import pytest
+
+    data = spark.createDataFrame(
+        [("a", "near", "b"), ("b", "near", "c"), ("c", "near", "d")],
+        "subj string, pred string, obj string")
+    schema = spark.createDataFrame(
+        [("near", "rdf:type", "owl:TransitiveProperty")],
+        "subj string, pred string, obj string")
+    with pytest.raises(RuntimeError, match="^transitive closure did not "
+                       "converge in 1 rounds$"):
+        owl_horst_closure(data, schema, max_rounds=1)

@@ -7,6 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from npm_extraction_server_spark.plans.fusion import truth_discovery
 from npm_extraction_server_spark.plans.graph import (
     bfs_distances,
     pagerank,
@@ -755,7 +756,7 @@ def test_stats_fresh_resets_carried_size_stats(spark):
     behavior is caught here, not as a mystery hang."""
     from pyspark.sql import functions as F
 
-    from npm_extraction_server_spark.plans.graph import _stats_fresh
+    from npm_extraction_server_spark.plans.rounds import _stats_fresh
 
     def size_digits(df):
         return len(str(
@@ -2201,6 +2202,12 @@ def _cycle_with_chord(spark):
         "src long, dst long, w long, t long")
 
 
+def _claims(e):
+    return e.select(F.col("src").cast("string").alias("source"),
+                    F.lit("e").alias("entity"), F.lit("a").alias("attr"),
+                    F.col("dst").cast("string").alias("value"))
+
+
 _CACHE_CASES = {
     "bfs_distances": lambda G, e, s: G.bfs_distances(s, e),
     "closeness": lambda G, e, s: G.closeness(s, e),
@@ -2227,6 +2234,11 @@ _CACHE_CASES = {
         lambda G, e, s: G.strongly_connected_components(e),
     "maximal_independent_set": lambda G, e, s: G.maximal_independent_set(e),
     "maximal_matching": lambda G, e, s: G.maximal_matching(e),
+    # truth_discovery's two persisted assertion copies; claims: every
+    # src asserts value dst for one (entity, attr)
+    "truth_discovery": lambda G, e, s: truth_discovery(_claims(e)),
+    "truth_discovery_trust": lambda G, e, s: truth_discovery(
+        _claims(e), return_trust=True),
     # raising paths: the 3-hop chain 0 -> 1 -> 2 -> 3 needs more rounds
     "betweenness_exhausted": lambda G, e, s: G.betweenness(
         e.filter(F.col("dst") - F.col("src") == 1), max_rounds=1),
