@@ -1039,7 +1039,7 @@ def _web_trustrank_oracle(iterations: int = 5) -> str:
     teleport vector, update round((1.0-0.85)*t + 0.85*inflow, 12))
     over the same adjacency, then exact decimal normalizing sums and
     the identical IEEE share quotient — both taken over the 8-dp
-    OUTPUT grid (pagerank rounds its published ranks to out_scale=8;
+    OUTPUT grid (pagerank rounds its published ranks to 8 decimals;
     the 12-dp grid is internal). (1-d) is repr-injected from
     the SAME Python subtraction the Spark side performs (one ulp off
     the 0.15 literal, which DuckDB would otherwise parse as exact

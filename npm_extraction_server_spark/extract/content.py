@@ -39,10 +39,10 @@ _ANCHOR_BODY_RE = r"(?is)<a[^>]*>(.*?)</a>"
 _TAG_RE = r"<[^>]*>"
 
 
-def extract_main_content(pages: DataFrame, html_col: str = "html",
-                         min_len: int = 25,
+def extract_main_content(pages: DataFrame, min_len: int = 25,
                          max_link_density: float = 1 / 3) -> DataFrame:
-    """Append (main_text, n_blocks, n_content_blocks) to ``pages``.
+    """Append (main_text, n_blocks, n_content_blocks) to ``pages``,
+    read from its ``html`` column (string or UTF-8 binary).
 
     A block is content iff its tag-stripped text is at least
     ``min_len`` chars AND the fraction of those chars living inside
@@ -50,8 +50,8 @@ def extract_main_content(pages: DataFrame, html_col: str = "html",
     is the concatenation of the content blocks' plain text in page
     order (no separator — block boundaries already came from markup).
     """
-    h = F.decode(F.col(html_col), "UTF-8") \
-        if dict(pages.dtypes)[html_col] == "binary" else F.col(html_col)
+    h = F.decode(F.col("html"), "UTF-8") \
+        if dict(pages.dtypes)["html"] == "binary" else F.col("html")
     stripped = F.regexp_replace(h, _STRIP_RE, "")
     blocks = F.split(stripped, _BLOCK_SPLIT_RE)
 

@@ -33,13 +33,13 @@ def _sha_mod(salt: str, col, n: int):
                16, 10).cast("long"), F.lit(n))
 
 
-def synth_robots(hosts: DataFrame, host_col: str = "host") -> DataFrame:
-    """Deterministic robots.txt BYTES per host (the fetched-file model:
+def synth_robots(hosts: DataFrame) -> DataFrame:
+    """Deterministic robots.txt BYTES per ``host`` (the fetched-file model:
     real crawls store the raw response). Each host disallows one
     path-prefix family ``/p/<digit>`` and declares a crawl-delay of
     1-3 s — both pure sha256 functions of the host name, so DuckDB
     re-derives the exact rule set."""
-    h = F.col(host_col)
+    h = F.col("host")
     body = F.concat(
         F.lit("User-agent: *\nDisallow: /p/"),
         _sha_mod("rb:", h, 10).cast("string"),
@@ -70,50 +70,48 @@ def _url_path(col):
     return F.regexp_extract(col, r"(?i)^https?://[^/#?]+([^#?]*)", 1)
 
 
-def robots_filter(frontier: DataFrame, rules: DataFrame,
-                  url_col: str = "canon_url",
-                  host_col: str = "dst_host") -> DataFrame:
-    """Drop frontier URLs whose path starts with a Disallow prefix of
-    their host. The rule table is tiny relative to the frontier (one
-    small file per HOST, not per page) — broadcast left-anti join on
-    host + prefix match, one pass over the frontier."""
-    r = rules.select(F.col("host").alias(host_col), "disallow_prefix")
-    path = _url_path(F.col(url_col))
+def robots_filter(frontier: DataFrame, rules: DataFrame) -> DataFrame:
+    """Drop frontier URLs (``canon_url``) whose path starts with a
+    Disallow prefix of their host (``dst_host``). The rule table is
+    tiny relative to the frontier (one small file per HOST, not per
+    page) — broadcast left-anti join on host + prefix match, one pass
+    over the frontier."""
+    r = rules.select(F.col("host").alias("dst_host"), "disallow_prefix")
+    path = _url_path(F.col("canon_url"))
     return frontier.join(
         F.broadcast(r),
-        on=[frontier[host_col] == r[host_col],
+        on=[frontier["dst_host"] == r["dst_host"],
             path.startswith(r["disallow_prefix"])],
         how="left_anti")
 
 
 def fetch_rounds(frontier: DataFrame, rules: DataFrame,
-                 per_round: int = 2,
-                 url_col: str = "canon_url",
-                 host_col: str = "dst_host") -> DataFrame:
-    """Politeness schedule: each host's (distinct, allowed) URLs are
-    ordered deterministically and cut into rounds of ``per_round``;
-    the earliest fetch offset is round * the host's crawl-delay. At
+                 per_round: int = 2) -> DataFrame:
+    """Politeness schedule: each host's (``dst_host``) distinct,
+    allowed URLs (``canon_url``) are ordered deterministically and cut
+    into rounds of ``per_round``; the earliest fetch offset is round *
+    the host's crawl-delay. At
     most ``per_round`` URLs of a host share a round — the invariant a
     polite fetcher fleet enforces. One window over the host partition;
     hosts without a crawl-delay rule default to 1 s."""
     delays = (rules.groupBy("host")
               .agg(F.max("crawl_delay_s").alias("crawl_delay_s"))
-              .withColumnRenamed("host", host_col))
-    w = Window.partitionBy(host_col).orderBy(url_col)
-    sched = (frontier.select(url_col, host_col).distinct()
+              .withColumnRenamed("host", "dst_host"))
+    w = Window.partitionBy("dst_host").orderBy("canon_url")
+    sched = (frontier.select("canon_url", "dst_host").distinct()
              .withColumn("rn", F.row_number().over(w))
              .withColumn("round",
                          ((F.col("rn") - 1) / per_round).cast("int"))
              .drop("rn"))
-    return (sched.join(F.broadcast(delays), host_col, "left")
+    return (sched.join(F.broadcast(delays), "dst_host", "left")
             .withColumn("crawl_delay_s",
                         F.coalesce("crawl_delay_s", F.lit(1)))
             .withColumn("fetch_offset_s",
                         F.col("round") * F.col("crawl_delay_s")))
 
 
-def synth_sitemaps(hosts: DataFrame, host_col: str = "host") -> DataFrame:
-    """Deterministic sitemap XML per host (the fetched-file model,
+def synth_sitemaps(hosts: DataFrame) -> DataFrame:
+    """Deterministic sitemap XML per ``host`` (the fetched-file model,
     like synth_robots): ~1/4 of hosts publish a SITEMAP INDEX at
     /sitemap.xml referencing two child sitemaps; the rest publish a
     plain urlset there. Every urlset carries 3-6 <url> entries with
@@ -121,7 +119,7 @@ def synth_sitemaps(hosts: DataFrame, host_col: str = "host") -> DataFrame:
     sitemap URL, so DuckDB re-derives the exact frontier. Returns
     (host, sitemap_url, xml bytes) — one row per sitemap FILE (index
     hosts emit the index plus both children)."""
-    h = F.col(host_col)
+    h = F.col("host")
     root = F.concat(F.lit("http://"), h, F.lit("/sitemap.xml"))
     is_idx = _sha_mod("si:", h, 4) == 0
     child = [F.concat(F.lit("http://"), h, F.lit(f"/sitemap-{c}.xml"))

@@ -162,16 +162,15 @@ def cocitation(links: DataFrame) -> DataFrame:
     )
 
 
-def resolve_redirects(redirects: DataFrame, max_hops: int = 16,
-                      src_col: str = "src_url",
-                      dst_col: str = "dst_url") -> DataFrame:
+def resolve_redirects(redirects: DataFrame, max_hops: int = 16) -> DataFrame:
     """Redirect-chain resolution — collapse every crawl-discovered
     redirect (301/302/canonical) to its terminal URL so dedup and
     link analysis key on ONE identity per page. ``redirects`` is a
-    partial function table (one out-edge per src); output has one row
-    per src with (final_url, hops, unresolved): ``unresolved`` marks
-    cycles and chains longer than ``max_hops`` (final_url/hops NULL —
-    a crawler treats those as traps).
+    partial function table (src_url, dst_url), one out-edge per
+    src_url; output has one row per src with (final_url, hops,
+    unresolved): ``unresolved`` marks cycles and chains longer than
+    ``max_hops`` (final_url/hops NULL — a crawler treats those as
+    traps).
 
     Pointer doubling: after k self-join rounds every chain of length
     <= 2^k is fully collapsed, so resolution costs ceil(log2(
@@ -203,12 +202,12 @@ def resolve_redirects(redirects: DataFrame, max_hops: int = 16,
             (F.col("a.hops")
              + F.coalesce("b_hops", F.lit(0))).alias("hops"))
 
-    cur = redirects.select(F.col(src_col).alias("src"),
-                           F.col(dst_col).alias("cur"),
+    cur = redirects.select(F.col("src_url").alias("src"),
+                           F.col("dst_url").alias("cur"),
                            F.lit(1).cast("long").alias("hops"))
     rounds = max(1, math.ceil(math.log2(max_hops)))
     cur = _rounds(step, cur, rounds, until_empty=False)[-1]
-    dom = (redirects.select(F.col(src_col).alias("cur"))
+    dom = (redirects.select(F.col("src_url").alias("cur"))
            .distinct().withColumn("_dom", F.lit(True)))
     out = cur.join(dom, "cur", "left")
     bad = F.col("_dom").isNotNull() | (F.col("hops") > max_hops)

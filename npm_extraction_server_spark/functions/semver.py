@@ -335,12 +335,3 @@ def max_satisfying(versions, range_str) -> str | None:
         if best is None or v > best:
             best, best_raw = v, raw
     return best_raw
-
-
-def compare_key(version: str):
-    """Sortable key for a version string (invalid versions sort first) —
-    used by the Spark-side max_by in the J1 range-resolution join."""
-    v = parse(version)
-    if v is None:
-        return (0, 0, 0, 0, (1,))
-    return (1,) + v._key()

@@ -9,7 +9,6 @@ once and memoizes, /root/reference/lib/npm/NodeEngines.js:12-33).
 from __future__ import annotations
 
 from ..functions.jsuri import encode_uri_component as enc
-from ..functions.semver import max_satisfying
 from .uris import ENGINE_ROOTS, engine_bundle_uri, engine_module_base_uri, engine_module_uri
 
 ENGINE_BUNDLE_CONTEXT = {
@@ -48,10 +47,3 @@ def engine_module_jsonld(name: str, entry: dict, root: str) -> dict:
     clone["owl:sameAs"] = {"@id": ENGINE_ROOTS[name] + enc(entry["version"])}
     clone["bundle"] = engine_module_base_uri(root, name)[:-1]
     return clone
-
-
-def resolve_engine_version(index: list[dict], range_str: str) -> str | None:
-    """NodeEngineBundle.getModule (/root/reference/lib/npm/NodeEngineBundle.js:34-44):
-    strip the 'v' prefix, maxSatisfying, re-prefix."""
-    resolved = max_satisfying([e["version"][1:] for e in index], range_str)
-    return "v" + resolved if resolved else None

@@ -429,11 +429,3 @@ def _nt_term(obj: str, is_literal: bool) -> str:
     if suffix.startswith("^^"):
         return f'"{_nt_escape(value)}"^^<{suffix[2:]}>'
     return f'"{_nt_escape(value)}"{suffix}'
-
-
-def to_ntriples(triples: list[Triple]) -> str:
-    lines = [
-        f"<{t.subj}> <{t.pred}> {_nt_term(t.obj, t.obj_is_literal)} ."
-        for t in triples
-    ]
-    return "\n".join(lines) + ("\n" if lines else "")

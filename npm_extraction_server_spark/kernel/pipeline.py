@@ -21,15 +21,6 @@ from .uris import bundle_uri, engine_bundle_uri, engine_module_uri, module_uri
 from .usermap import build_user_map
 
 
-class BundleError(Exception):
-    """Carries the flattened error-message chain (S22)."""
-
-    def __init__(self, bundle: str, cause: Exception):
-        self.bundle = bundle
-        self.cause = cause
-        super().__init__(error_message(cause))
-
-
 def error_message(error: Exception) -> str:
     """S22 (/root/reference/bin/exportTriples.js:123-136): recursive
     cause-chain flattening."""

@@ -101,18 +101,3 @@ ROOT_CONTEXT: dict = {
     "private": "npm:private",
     "deprecated": "npm:deprecated",
 }
-
-
-def expand_curie(value: str) -> str:
-    """prefix:suffix -> absolute IRI when the prefix is declared;
-    absolute IRIs and unknown strings pass through."""
-    if not isinstance(value, str):
-        return value
-    if "://" in value:
-        return value
-    idx = value.find(":")
-    if idx > 0:
-        prefix = value[:idx]
-        if prefix in PREFIXES:
-            return PREFIXES[prefix] + value[idx + 1:]
-    return value

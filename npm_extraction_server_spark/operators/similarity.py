@@ -122,22 +122,6 @@ def _hyperplane(dim: int, table: int, bit: int) -> list[float]:
     return out
 
 
-def lsh_bucket_col(vec_col, dim: int, table: int, bits: int = 12):
-    """Bucket id = sign-bits against ``bits`` deterministic hyperplanes
-    (expression form — kept for single-table uses; the multi-table path
-    below uses the vectorized numpy variant instead)."""
-    acc = F.lit(0).cast("long")
-    for b in range(bits):
-        plane = _hyperplane(dim, table, b)
-        dot = F.aggregate(
-            F.zip_with(vec_col, F.array(*[F.lit(p) for p in plane]),
-                       lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda a, v: a + v,
-        )
-        acc = acc + F.when(dot > 0, F.lit(1 << b)).otherwise(F.lit(0)).cast("long")
-    return acc
-
-
 def _lsh_buckets_udf(dim: int, tables: int, bits: int):
     """All table buckets in one Arrow batch: (N x dim) @ (dim x T*B)
     numpy matmul -> sign bits -> per-table bucket ids. One UDF call

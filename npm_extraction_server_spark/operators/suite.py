@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from .dedup import (
     embedding_near_dup_pairs,
-    exact_duplicates,
     minhash_lsh_pairs,
     minhash_verified_pairs,
     ngram_jaccard_pairs,
@@ -569,10 +568,6 @@ def dedup_exact(spark, sf):
         sig.groupBy("text_sha")
         .agg(F.min("doc_id").alias("survivor_id"), F.count("*").alias("n_copies"))
     )
-
-
-def dedup_exact_pairs(spark, sf):
-    return exact_duplicates(_t(spark, sf, "documents"))
 
 
 def dedup_ngram(spark, sf):

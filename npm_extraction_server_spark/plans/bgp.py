@@ -59,19 +59,18 @@ __all__ = ["as_quads", "bgp_agg", "bgp_ask", "bgp_construct", "bgp_exists", "pat
            "reorder_patterns", "reorder_patterns_void"]
 
 
-def as_quads(triples: DataFrame,
-             default_graph: str = "src_url") -> DataFrame:
+def as_quads(triples: DataFrame) -> DataFrame:
     """Lift a pipeline triples table into the named-graph dataset the
-    GRAPH patterns run over: graph = COALESCE(graph, <default_graph
-    column>) — triples the JSON-LD converter placed in an explicit
-    named graph keep it, everything else lands in its source
-    document's graph (the reference serves each package as its own
-    RDF document — lib/npm/NpmBundle.js — so the dataset-dump
-    convention is one named graph per source)."""
+    GRAPH patterns run over: graph = COALESCE(graph, src_url) — triples
+    the JSON-LD converter placed in an explicit named graph keep it,
+    everything else lands in its source document's graph (the
+    reference serves each package as its own RDF document —
+    lib/npm/NpmBundle.js — so the dataset-dump convention is one named
+    graph per source)."""
     cols = [c for c in ("subj", "pred", "obj") if c in triples.columns]
     return triples.select(
         *cols,
-        F.coalesce(F.col("graph"), F.col(default_graph)).alias("graph"))
+        F.coalesce(F.col("graph"), F.col("src_url")).alias("graph"))
 
 
 def _norm_pattern(pat) -> tuple:

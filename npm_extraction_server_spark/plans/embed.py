@@ -18,8 +18,8 @@ a trained-embedding eval runs:
 - one equi-join test×candidates on the relation key;
 - FILTERED ranking via a left anti join against the full edge set
   (known-true competitors never count — the standard protocol);
-- the distance is whole-stage-codegen column arithmetic (dim×3 md5s
-  per pair, no Python);
+- the distance is whole-stage-codegen column arithmetic over
+  ``_DIM`` = 4 embedding components (no Python);
 - rank = 1 + count of strictly-better competitors, ties broken by
   candidate IRI so the rank is deterministic cross-engine.
 
@@ -46,6 +46,9 @@ from pyspark.sql import functions as F
 __all__ = ["md5_component", "transe_score", "link_pred_ranks",
            "link_pred_metrics"]
 
+# embedding components per term; the DuckDB twins unroll the same 4
+_DIM = 4
+
 
 def md5_component(col: Column, tag: str, i: int) -> Column:
     """Component ``i`` of the deterministic md5-grid embedding of a
@@ -59,15 +62,14 @@ def md5_component(col: Column, tag: str, i: int) -> Column:
     ).cast("long")
 
 
-def transe_score(src: Column, rel: Column, cand: Column,
-                 dim: int = 4) -> Column:
+def transe_score(src: Column, rel: Column, cand: Column) -> Column:
     """TransE L1 distance ||e(src) + r(rel) - e(cand)||_1 on the
     integer md5 grid — exact BIGINT arithmetic (components < 2^32,
-    the sum of ``dim`` absolute differences < 2^35)."""
+    the sum of ``_DIM`` absolute differences < 2^35)."""
     return reduce(add, [
         F.abs(md5_component(src, "e", i) + md5_component(rel, "r", i)
               - md5_component(cand, "e", i))
-        for i in range(dim)
+        for i in range(_DIM)
     ])
 
 
@@ -82,7 +84,7 @@ def _test_split(edges: DataFrame, test_mod: int) -> DataFrame:
     return edges.filter(coin % test_mod == 0)
 
 
-def link_pred_ranks(edges: DataFrame, dim: int = 4, test_mod: int = 5,
+def link_pred_ranks(edges: DataFrame, test_mod: int = 5,
                     broadcast_candidates: bool | None = None) -> DataFrame:
     """Filtered link-prediction ranks over an edge set.
 
@@ -101,18 +103,18 @@ def link_pred_ranks(edges: DataFrame, dim: int = 4, test_mod: int = 5,
     # Embedding components are materialized ∝ ENTITIES, never ∝ pairs:
     # the test side carries q_i = e(src)_i + r(rel)_i and its true
     # score; the candidate side carries c_i = e(cand)_i. The per-pair
-    # work is then dim subtractions — no md5 inside the pair fan-out
+    # work is then _DIM subtractions — no md5 inside the pair fan-out
     # (measured 15x on the 2M-edge probe vs per-pair hashing).
     test = _test_split(edges, test_mod)
-    for i in range(dim):
+    for i in range(_DIM):
         test = test.withColumn(
             f"q{i}", md5_component(F.col("src"), "e", i)
             + md5_component(F.col("rel"), "r", i))
     test = test.withColumn(
-        "ts", transe_score(F.col("src"), F.col("rel"), F.col("dst"), dim))
+        "ts", transe_score(F.col("src"), F.col("rel"), F.col("dst")))
 
     cands = edges.select("rel", F.col("dst").alias("cand")).distinct()
-    for i in range(dim):
+    for i in range(_DIM):
         cands = cands.withColumn(
             f"c{i}", md5_component(F.col("cand"), "e", i))
     # Join-strategy control (measured on the 2M-edge / 50k-objects-per-
@@ -132,7 +134,7 @@ def link_pred_ranks(edges: DataFrame, dim: int = 4, test_mod: int = 5,
               ["src", "rel", "cand"], "left_anti")
     )
     sc = reduce(add, [F.abs(F.col(f"q{i}") - F.col(f"c{i}"))
-                      for i in range(dim)])
+                      for i in range(_DIM)])
     better = (sc < F.col("ts")) | ((sc == F.col("ts"))
                                    & (F.col("cand") < F.col("dst")))
     grouped = pairs.groupBy("src", "rel", "dst").agg(

@@ -42,15 +42,15 @@ from pyspark.sql import functions as F
 from .rounds import _rounds
 
 
-def wl_graph_hash(triples: DataFrame, graph_col: str = "graph",
-                  rounds: int = 2, structural: bool = True) -> DataFrame:
+def wl_graph_hash(triples: DataFrame, rounds: int = 2,
+                  structural: bool = True) -> DataFrame:
     """Per-graph WL fingerprint over (graph, subj, pred, obj) rows.
 
     Returns (graph, wl_hash, n_triples, class_rep, class_size) where
     class_rep is the lexicographically smallest graph sharing the hash
     (the canonical representative of the duplicate class).
     """
-    e = (triples.select(F.col(graph_col).alias("g"),
+    e = (triples.select(F.col("graph").alias("g"),
                         F.col("subj").alias("s"),
                         F.col("pred").alias("p"),
                         F.col("obj").alias("o"))

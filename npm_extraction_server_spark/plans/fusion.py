@@ -35,11 +35,13 @@ hash-partitioned on each join side — ``by source`` for the
 trust->belief half-step and ``by fact`` for the belief->trust
 half-step. The trust->belief join broadcasts the |sources|-sized trust
 vector, so it never shuffles the assertions. The belief->trust join
-does: its plan (Spark 4.1, AQE on) exchanges both the belief checkpoint
-and the persisted fact-keyed copy on the fact key, as neither side's
-partitioning reaches the planner; AQE makes it a broadcast join when
-one side is small at run time. Both normalizing maxima are 1-row
-aggregates broadcast-cross-joined into the update.
+is keyed on the fact: in AQE's final plan (``explain()``, Spark 4.1,
+both broadcast thresholds at -1) its sort-merge join reads the
+fact-keyed copy from the cache with no exchange above it and exchanges
+only the belief checkpoint, which carries no partitioning. With the
+session's thresholds AQE broadcasts whichever side is small at run
+time instead. Both normalizing maxima are 1-row aggregates
+broadcast-cross-joined into the update.
 """
 
 from __future__ import annotations
@@ -59,16 +61,15 @@ def _grid_sum(col):
 
 
 def truth_discovery(claims: DataFrame, iterations: int = 4,
-                    out_scale: int = 8,
                     return_trust: bool = False) -> DataFrame:
     """Fuse conflicting (source, entity, attr, value) claims.
 
     Returns one fused row per (entity, attr): the value with the
     highest final belief (ties broken toward the lexicographically
-    smallest value — deterministic), its belief on the ``out_scale``
-    grid, and the number of distinct asserting sources.  With
+    smallest value — deterministic), its belief rounded to 8 decimals,
+    and the number of distinct asserting sources.  With
     ``return_trust=True`` returns the final per-source trust vector
-    instead (source, trust).
+    instead (source, trust), rounded the same way.
     """
     a = (claims.select("source", *_FACT).distinct()
          .localCheckpoint(eager=True))
@@ -77,8 +78,8 @@ def truth_discovery(claims: DataFrame, iterations: int = 4,
     with _persisted(a, "source") as a_by_src, \
             _persisted(a, *_FACT) as a_by_fact:
         def trust_of(belief: DataFrame) -> DataFrame:
-            # belief -> trust: a fact-keyed join that exchanges both
-            # sides (see the module docstring)
+            # belief -> trust: a fact-keyed join that exchanges only
+            # the belief side (see the module docstring)
             raw_t = (a_by_fact.join(belief, _FACT)
                      .groupBy("source")
                      .agg((_grid_sum("belief") / F.count("*"))
@@ -106,7 +107,7 @@ def truth_discovery(claims: DataFrame, iterations: int = 4,
         belief = _rounds(step, trust0, iterations, until_empty=False)[-1]
         if return_trust:
             return trust_of(belief).select(
-                "source", F.round("trust", out_scale).alias("trust"))
+                "source", F.round("trust", 8).alias("trust"))
     n_src = a.groupBy(*_FACT).agg(
         F.countDistinct("source").alias("n_sources"))
     w = (belief.join(n_src, _FACT)
@@ -115,5 +116,5 @@ def truth_discovery(claims: DataFrame, iterations: int = 4,
              .orderBy(F.col("belief").desc(), F.col("value").asc()))))
     return (w.filter(F.col("_rk") == 1)
             .select("entity", "attr", "value",
-                    F.round("belief", out_scale).alias("belief"),
+                    F.round("belief", 8).alias("belief"),
                     "n_sources"))

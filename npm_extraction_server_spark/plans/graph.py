@@ -10,17 +10,28 @@ of ``plans/rounds.py`` (``_persisted`` + ``_rounds``, ``_peel``,
 ``_min_label``; their contract is that module's docstring), every
 per-round shuffle keyed on the node id.
 
+What the plans show for the persisted edge sets (``explain()`` of a
+2,000-edge pagerank-shaped join, Spark 4.1, both broadcast thresholds
+at -1): the round's sort-merge join on src reads the ``_persisted``
+frame from the cache with no exchange above it in AQE's final plan,
+and exchanges only the other side. The initial plan's exchange over
+the ``InMemoryTableScan`` is dropped once the cache stage has run. A
+``localCheckpoint``-ed frame (rank vector, frontier, visited set)
+carries no partitioning into the next plan, so a shuffle join
+exchanges it every round. With the session's thresholds, AQE
+broadcasts whichever side is small at run time instead.
+
 Scale notes (100 TB / 10^9-node graphs):
 
-- ``bfs_distances`` shuffles only the FRONTIER each round (nodes first
-  reached that round), not the full vertex set: cost follows the BFS
-  wavefront. The visited set is carried as a checkpointed DataFrame
-  and the frontier anti-joins against it — both sides hash-partitioned
-  on node id, so each round is one shuffle of the frontier plus one of
-  the newly-reached set.
-- ``pagerank`` is the classic power iteration: one join (edges x
-  ranks, co-partitioned on src) + one groupBy(dst) per round — two
-  shuffles per iteration, both on node id; AQE coalesces the tail.
+- ``bfs_distances`` joins only the FRONTIER each round (nodes first
+  reached that round) against the persisted edges, not the full
+  vertex set: cost follows the BFS wavefront. The visited set is
+  carried as checkpointed DataFrames and the frontier anti-joins
+  against it on node id.
+- ``pagerank`` is the classic power iteration: one join (persisted
+  edges x ranks on src, only the rank vector exchanged) + one
+  groupBy(dst) per round, both keyed on node id; AQE coalesces the
+  tail.
   Dangling nodes (no out-edges — the COMMON case in a real KG: sink
   entities referenced but never described) are handled explicitly:
   their rank mass is summed each iteration (a 1-row aggregate,
@@ -161,6 +172,11 @@ def bfs_distances(seeds: DataFrame, edges: DataFrame,
 # meaningful precision, coarse enough that both engines' double
 # round() agree (the proven suite.py money-sum scale).
 _GRID = 12
+# decimals of the published ranks and scores (pagerank and its
+# variants, salsa, katz); the DuckDB twins round to the same 8
+_OUT_SCALE = 8
+# damping factor of every PageRank variant; the twins unroll 0.85 too
+_DAMPING = 0.85
 
 
 def _endpoints(edges: DataFrame) -> DataFrame:
@@ -228,7 +244,7 @@ def _rank_graph(edges: DataFrame, dangling: str, who: str,
 
 
 def _power_rounds(edges: DataFrame, base: DataFrame, ranks: DataFrame,
-                  iterations: int, damping: float, teleport: Column,
+                  iterations: int, teleport: Column,
                   dangling_share: Column,
                   dang: DataFrame | None) -> list[DataFrame]:
     """The PageRank round body shared by pagerank and
@@ -237,15 +253,16 @@ def _power_rounds(edges: DataFrame, base: DataFrame, ranks: DataFrame,
     with the rank vector, a decimal-grid inflow sum per dst, and the
     damped update over ``base`` (node_id plus whatever columns
     ``teleport``/``dangling_share`` read):
-    ``round(teleport + damping * (inflow + dangling_share), 12)``,
+    ``round(teleport + 0.85 * (inflow + dangling_share), 12)``,
     where the dangling share (read from the broadcast 1-row ``_dmass``)
     only enters when ``dang`` is a non-empty sink set. A weighted edge
     set (column ``w``) splits rank w/sum_w per source instead of
     uniformly.
 
-    (src, dst, out_deg) is loop-invariant and persisted hash-partitioned
-    on src, so each iteration's rank join shuffles only the |V|-sized
-    rank vector, never the |E|-sized adjacency. No eager adj.count()
+    (src, dst, out_deg) is loop-invariant and ``_persisted`` on src, so
+    each iteration's rank join exchanges (or broadcasts) only the
+    |V|-sized rank vector, never the |E|-sized adjacency (AQE's final
+    plan, see the module docstring). No eager adj.count()
     (round 6): the first round's job fills the cache."""
     weighted = "w" in edges.columns
     out_deg = edges.groupBy("src").agg(
@@ -271,31 +288,30 @@ def _power_rounds(edges: DataFrame, base: DataFrame, ranks: DataFrame,
                 gain = gain + dangling_share
             return upd.select(
                 "node_id",
-                F.round(teleport + F.lit(damping) * gain,
+                F.round(teleport + F.lit(_DAMPING) * gain,
                         _GRID).alias("rank"))
 
         return _rounds(step, ranks, iterations, until_empty=False)
 
 
-def _rank_result(hist: list[DataFrame], return_history: bool,
-                 out_scale: int) -> DataFrame:
-    """Final ranks rounded to ``out_scale``, or with ``return_history``
+def _rank_result(hist: list[DataFrame], return_history: bool) -> DataFrame:
+    """Final ranks rounded to ``_OUT_SCALE``, or with ``return_history``
     the per-iteration GRID ranks (node_id, iter, rank), iter 0..k — the
     warm state pagerank_incremental consumes."""
     if return_history:
         return _union_all([h.withColumn("iter", F.lit(i))
                            for i, h in enumerate(hist)])
     return hist[-1].select("node_id",
-                           F.round("rank", out_scale).alias("rank"))
+                           F.round("rank", _OUT_SCALE).alias("rank"))
 
 
 def pagerank(edges: DataFrame, iterations: int = 5,
-             damping: float = 0.85, out_scale: int = 8,
              dangling: str = "redistribute",
              normalized: bool = True,
              return_history: bool = False,
              weight_col: str | None = None) -> DataFrame:
-    """Fixed-iteration PageRank over a directed multigraph.
+    """Fixed-iteration PageRank over a directed multigraph, with damping
+    0.85 (``_DAMPING``).
 
     ``edges``: (src, dst); parallel edges each carry their own share
     of the source's rank (out_degree counts multiplicity).
@@ -325,7 +341,7 @@ def pagerank(edges: DataFrame, iterations: int = 5,
     iteration. The dangling share uses the same protocol:
     ``round(decimal_sum(rank)::double / n, 12)`` added INSIDE the
     damped term, so the dangling oracle unrolls to the same doubles.
-    Output rank is rounded to ``out_scale``.
+    Output rank is rounded to 8 decimals (``_OUT_SCALE``).
 
     ``weight_col``: integer edge weights — rank splits w/sum_w per
     source instead of uniformly (``round(rank*w/sum_w, 12)`` on the
@@ -347,10 +363,10 @@ def pagerank(edges: DataFrame, iterations: int = 5,
     # (e.g. the web host graph).
     if normalized:
         init = round(1.0 / n, _GRID)
-        teleport = round((1.0 - damping) / n, _GRID)
+        teleport = round((1.0 - _DAMPING) / n, _GRID)
     else:
         init = 1.0
-        teleport = round(1.0 - damping, _GRID)
+        teleport = round(1.0 - _DAMPING, _GRID)
     # Round-6 note (measured, kept for the record): two "obvious"
     # restructurings were A/B-tested here and REVERTED because both
     # were slower on the suite graph in a 0%-steal window — (a)
@@ -363,14 +379,13 @@ def pagerank(edges: DataFrame, iterations: int = 5,
     # survive: the lazy dangling probe and no eager adj.count().
     ranks = nodes.withColumn("rank", F.lit(init)).localCheckpoint(eager=True)
     hist = _power_rounds(
-        edges, nodes, ranks, iterations, damping, F.lit(teleport),
+        edges, nodes, ranks, iterations, F.lit(teleport),
         F.round(F.col("_dmass") / F.lit(float(n)), _GRID), dang)
-    return _rank_result(hist, return_history, out_scale)
+    return _rank_result(hist, return_history)
 
 
 def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
                          history: DataFrame, iterations: int = 5,
-                         damping: float = 0.85, out_scale: int = 8,
                          normalized: bool = True,
                          stats: dict | None = None,
                          added: DataFrame | None = None,
@@ -433,7 +448,7 @@ def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
 
     ``stats``, when passed, receives {"affected": [per-round counts],
     "n_nodes": n} — the delta-proportionality evidence the probes
-    assert on. Returns (node_id, rank) rounded to ``out_scale``,
+    assert on. Returns (node_id, rank) rounded to ``_OUT_SCALE``,
     exactly as ``pagerank`` does.
     """
     if (added is None) != (removed is None):
@@ -506,11 +521,11 @@ def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
                     "recompute, or use normalized=False")
             n = hist_nodes.count()
             init = round(1.0 / n, _GRID)
-            teleport = round((1.0 - damping) / n, _GRID)
+            teleport = round((1.0 - _DAMPING) / n, _GRID)
         else:
             n = None
             init = 1.0
-            teleport = round(1.0 - damping, _GRID)
+            teleport = round(1.0 - _DAMPING, _GRID)
 
         # sink check: on the changelog path only a removed edge's
         # source can LOSE its last out-edge, so exactly those are probed
@@ -598,7 +613,7 @@ def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
                 .select(
                     "node_id",
                     F.round(F.lit(teleport)
-                            + F.lit(damping)
+                            + F.lit(_DAMPING)
                             * F.coalesce("inflow", F.lit(0.0)),
                             _GRID).alias("rank")))
 
@@ -624,7 +639,7 @@ def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
                 changed.join(F.broadcast(new_nodes), "node_id",
                              "left_semi").select("node_id", "rank"))
         out = out.select("node_id",
-                         F.round("rank", out_scale).alias("rank"))
+                         F.round("rank", _OUT_SCALE).alias("rank"))
         return out
     finally:
         # ``out`` reads the history's last iteration lazily; released
@@ -688,9 +703,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
 
 
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
-                          iterations: int = 5, damping: float = 0.85,
-                          out_scale: int = 8,
-                          dangling: str = "redistribute",
+                          iterations: int = 5,
                           return_history: bool = False) -> DataFrame:
     """Personalized PageRank: teleport mass goes to ``seeds`` (one
     column ``node_id``) instead of uniformly — importance RELATIVE TO
@@ -701,12 +714,13 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     contract is pagerank's (persisted src-partitioned adjacency,
     decimal-grid updates, bit-exact vs the unrolled DuckDB oracle).
 
-    ``dangling`` follows :func:`pagerank`, except redistributed mass
-    lands on the TELEPORT vector (the personalized analog of the
-    uniform share): gain = inflow + round(dmass * t(v), 12) — mass
-    flows back to the seed neighborhood instead of diluting the whole
-    graph. Sink-free graphs skip the term after one upfront check."""
-    edges, nodes, dang = _rank_graph(edges, dangling,
+    Dangling mass is redistributed as in :func:`pagerank`'s default,
+    except that it lands on the TELEPORT vector (the personalized
+    analog of the uniform share): gain = inflow + round(dmass * t(v),
+    12) — mass flows back to the seed neighborhood instead of diluting
+    the whole graph. Sink-free graphs skip the term after one upfront
+    check."""
+    edges, nodes, dang = _rank_graph(edges, "redistribute",
                                      "personalized_pagerank")
     n_seeds = seeds.select("node_id").distinct().count()
     tv = round(1.0 / n_seeds, _GRID)
@@ -720,9 +734,9 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     )
     hist = _power_rounds(
         edges, base, base.select("node_id", F.col("t").alias("rank")),
-        iterations, damping, F.lit(1.0 - damping) * F.col("t"),
+        iterations, F.lit(1.0 - _DAMPING) * F.col("t"),
         F.round(F.col("_dmass") * F.col("t"), _GRID), dang)
-    return _rank_result(hist, return_history, out_scale)
+    return _rank_result(hist, return_history)
 
 
 def _least(parts: list[DataFrame], col: str,
@@ -747,7 +761,7 @@ def sssp(seeds: DataFrame, edges: DataFrame,
 
     Execution is frontier Bellman-Ford (delta-free): each round
     relaxes ONLY the frontier — nodes whose distance improved last
-    round — against the (persisted, src-hash-partitioned) edge set,
+    round — against the ``_persisted`` (src-keyed) edge set,
     takes the per-dst min offer, and keeps offers that beat the
     current label (the per-node min over the rounds' improvements,
     joined on node id — both sides hash-partitioned by their
@@ -800,7 +814,7 @@ def temporal_reach(seeds: DataFrame, edges: DataFrame,
     relaxation converges exactly, as in sssp).
 
     Scale shape: identical to sssp — per round the IMPROVED frontier
-    joins the (persisted, src-hash-partitioned) contact set with the
+    joins the ``_persisted`` (src-keyed) contact set with the
     admissibility predicate, one per-dst min, one improvement join;
     work follows the wavefront. One emptiness probe per round.
 
@@ -838,7 +852,7 @@ def propagate_labels(seeds: DataFrame, edges: DataFrame,
     few entities with types/communities and flood the neighborhood.
 
     Execution = :func:`bfs_distances` with a label payload: per round
-    one frontier-sized join against the (persisted, src-partitioned)
+    one frontier-sized join against the ``_persisted`` (src-keyed)
     edge set, a min-label aggregate over the round's offers, and an
     anti-join against the already-labeled set. Work follows the
     wavefront; the edge set is shuffled once."""
@@ -1074,11 +1088,13 @@ def hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
     HITS: the score RATIOS equal normalized HITS', since
     normalization is one global scalar per round).
 
-    The edge set is the loop invariant: persisted hash-partitioned on
-    src once; each half-round shuffles only the |V|-sized score
-    vector. Returns (node_id, hub, auth) with 0 for absent roles —
-    on a bipartite page->url graph, pages get auth=0 and leaf urls
-    hub=0.
+    The edge set is the loop invariant, ``_persisted`` on src once.
+    In AQE's final plan (see the module docstring) the src-keyed
+    hub->auth join exchanges only the |V|-sized score vector; the
+    dst-keyed auth->hub join exchanges the persisted edges on dst as
+    well, every round. Returns (node_id, hub, auth) with 0 for absent
+    roles — on a bipartite page->url graph, pages get auth=0 and leaf
+    urls hub=0.
     """
     with _persisted(edges.select("src", "dst")) as e:
         nodes = _endpoints(e)
@@ -1251,10 +1267,10 @@ def random_walks(edges: DataFrame, starts: DataFrame, length: int = 8,
     ``walks_per_node`` walks with walk_id = node_id * walks_per_node
     + r. Returns (walk_id, step, node), step 0 = the start node.
 
-    Scale shape: the edge set is deduped and persisted hash-
-    partitioned on src ONCE; each step is one join of the |walks|-row
-    frontier against it plus a groupBy(walk_id) argmin — per-step
-    shuffle is O(frontier out-degree), never |V| or |E|. Exactly the
+    Scale shape: the edge set is deduped and ``_persisted`` on src
+    ONCE; each step is one join of the |walks|-row frontier against it
+    plus a groupBy(walk_id) argmin — per-step shuffle is O(frontier
+    out-degree), never |V| or |E|. Exactly the
     bfs_distances discipline with an argmin instead of a distinct.
 
     Oracle twin: _graph_walks_sql in operators/suite.py (steps
@@ -1356,11 +1372,11 @@ def _multi_source_sweep(seeds: DataFrame, edges: DataFrame,
     closeness / harmonic / eccentricity: one level-synchronous
     traversal carrying every seed's wavefront at once; returns the
     visited set (seed, node, dist) with exact hop distances. Edges are
-    shuffled once (persisted src-hash-partitioned); per-round shuffles
-    carry only the (seed, node) frontier. ``shared_seed`` puts every
-    seed under one shared key — the seed column is dropped, so the
-    visited set is (node, dist) with dist the hop distance from the
-    nearest seed: plain multi-seed BFS."""
+    shuffled once (``_persisted`` on src); the rounds' joins exchange
+    the frontier and the checkpointed visited set, not the edges.
+    ``shared_seed`` puts every seed under one shared key — the seed
+    column is dropped, so the visited set is (node, dist) with dist the
+    hop distance from the nearest seed: plain multi-seed BFS."""
     key = ["node"] if shared_seed else ["seed", "node"]
     frontier = (seeds.select("node_id").distinct()
                 .select(*[F.col("node_id").alias(k) for k in key],
@@ -1420,7 +1436,7 @@ def closeness(seeds: DataFrame, edges: DataFrame,
     frontier; the visited set is bounded by |seeds| * |reachable| —
     the sample size is the knob that trades estimator variance for
     memory, exactly as in the published landmark/pivot estimators.
-    Edges are shuffled once (persisted src-hash-partitioned).
+    Edges are shuffled once (``_persisted`` on src).
 
     ``harmonic=True`` appends the harmonic-centrality sample sum
     Σ_{d(s,v)>0} 1/d(s,v) — the variant that stays well-defined on
@@ -1458,10 +1474,11 @@ def neighbor_agg(edges: DataFrame, features: DataFrame,
     are not in the output — give every vertex a row, zero if need
     be).
 
-    Scale shape: per round ONE join (edges x current features,
-    co-partitioned on src against the once-shuffled persisted edge
-    set) + one groupBy(dst) partial-aggregated sum + one left join
-    back onto the feature table — all keyed on node id; the feature
+    Scale shape: per round ONE join (edges x current features on
+    src; the once-shuffled ``_persisted`` edge set is read from the
+    cache, only the features are exchanged) + one groupBy(dst)
+    partial-aggregated sum + one left join back onto the feature
+    table — all keyed on node id; the feature
     table is the only state and it never grows beyond |V| x rounds
     columns.
     """
@@ -1551,8 +1568,7 @@ def maximal_independent_set(edges: DataFrame,
     return _union_all(outs).filter("won").select(F.col("n").alias("node_id"))
 
 
-def boruvka_msf(edges: DataFrame, weight_col: str = "w",
-                max_rounds: int = 25) -> DataFrame:
+def boruvka_msf(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
     """Borůvka's minimum spanning forest — THE parallel MST algorithm
     (every component picks its minimum outgoing edge each round, so
     components at least halve: O(log n) rounds regardless of graph
@@ -1562,7 +1578,8 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
     exists for an MST algorithm. Parallel edges collapse to their
     minimum weight first (only the lightest can ever be picked).
 
-    Returns (a, b, w): the forest edges (a < b). Spanning tree per
+    ``edges``: (src, dst, w) with integer weights ``w``. Returns
+    (a, b, w): the forest edges (a < b). Spanning tree per
     connected component; total weight is the MST weight.
 
     Scale shape: per round, two node-keyed label joins attach
@@ -1585,7 +1602,7 @@ def boruvka_msf(edges: DataFrame, weight_col: str = "w",
         edges.filter(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("a"),
                 F.greatest("src", "dst").alias("b"),
-                F.col(weight_col).cast("long").alias("w"))
+                F.col("w").cast("long").alias("w"))
         .groupBy("a", "b").agg(F.min("w").alias("w"))
         .localCheckpoint(eager=True)
     )
@@ -1944,7 +1961,7 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
 
 
 def betweenness(edges: DataFrame, sources: DataFrame | None = None,
-                max_rounds: int = 40, out_scale: int = 6,
+                max_rounds: int = 40,
                 scale_to_n: bool = False) -> DataFrame:
     """Betweenness centrality by Brandes' dependency accumulation
     (Brandes 2001), run for ALL sources simultaneously as one
@@ -2071,9 +2088,9 @@ def betweenness(edges: DataFrame, sources: DataFrame | None = None,
           * F.lit("0.00000001").cast("decimal(10,8)"))
     if scale_to_n and not exact_factor:
         bc = F.round((d8 * F.lit(int(n))).cast("double")
-                     / F.lit(float(n_sources)), out_scale)
+                     / F.lit(float(n_sources)), 6)
     else:
-        bc = F.round(d8, out_scale).cast("double")
+        bc = F.round(d8, 6).cast("double")
     agg = (acc.groupBy(F.col("v").alias("node_id")).agg(bc.alias("bc")))
     # every node gets a row — endpoints that lie on no shortest path
     # carry an explicit 0.0, the per-node-metric contract the rest of
@@ -2215,8 +2232,7 @@ def bipartite_project(edges: DataFrame, min_common: int = 1,
             .filter(F.col("common") >= F.lit(int(min_common))))
 
 
-def butterfly_counts(edges: DataFrame,
-                     max_degree: int | None = None) -> DataFrame:
+def butterfly_counts(edges: DataFrame) -> DataFrame:
     """Per-LEFT-vertex butterfly counts over a bipartite (u, v) edge
     set. A butterfly is the bipartite 4-cycle — two left nodes
     sharing two right nodes — the smallest bipartite motif with
@@ -2229,12 +2245,12 @@ def butterfly_counts(edges: DataFrame,
 
     Exact and all-integer (c*(c-1) DIV 2), so the DuckDB oracle is
     bit-exact. Cost rides on ``bipartite_project`` (wedge enumeration
-    at right centers, same ``max_degree`` hub cap); the per-vertex
+    at right centers, no hub cap); the per-vertex
     rollup is one more (node)-keyed aggregation over the pair set —
     the Wang/Fu/Cheng peeling-free exact counting shape, which at
     10^9 edges is the only part of butterfly analytics that stays an
     aggregation rather than an iteration."""
-    pairs = bipartite_project(edges, min_common=2, max_degree=max_degree)
+    pairs = bipartite_project(edges, min_common=2)
     bf = pairs.select(
         "a", "b",
         F.expr("CAST((common * (common - 1)) DIV 2 AS BIGINT)")
@@ -2766,8 +2782,7 @@ def bowtie(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
     return lab.select("node_id", c.alias("component"))
 
 
-def salsa(edges: DataFrame, iterations: int = 2,
-          out_scale: int = 8) -> DataFrame:
+def salsa(edges: DataFrame, iterations: int = 2) -> DataFrame:
     """SALSA (Lempel & Moran 2000): hub/authority ranking via the two
     DEGREE-NORMALIZED random walks over the directed support graph —
     the Twitter-WTF / web-spam-resistant alternative to HITS, whose
@@ -2785,12 +2800,15 @@ def salsa(edges: DataFrame, iterations: int = 2,
     Deterministic across engines on the pagerank decimal protocol:
     each contribution is round(x / deg, 12) (correctly-rounded IEEE
     division), summed exactly as decimal(28,12), re-rounded to the
-    12-dp grid; output rounded to ``out_scale`` — the DuckDB twin
+    12-dp grid; output rounded to ``_OUT_SCALE`` — the DuckDB twin
     (_web_salsa_oracle) is bit-exact.
 
-    Scale shape: the degree-annotated edge set is built once and
-    persisted hash-partitioned on src; each half-round shuffles only
-    the |V|-sized score vector into it (the hits discipline). Returns
+    Scale shape: the degree-annotated edge set is built once from the
+    ``_persisted`` support graph and checkpointed; each half-round
+    joins the |V|-sized score vector into it. Being a checkpoint, it
+    carries no partitioning into the plan, so every half-round's
+    shuffle join exchanges the edge set as well (see the module
+    docstring). Returns
     (node_id, hub, auth) with 0 for absent roles.
     """
     g = str(_GRID)
@@ -2818,9 +2836,9 @@ def salsa(edges: DataFrame, iterations: int = 2,
             .join(hub, "node_id", "left")
             .join(auth, "node_id", "left")
             .select("node_id",
-                    F.round(F.coalesce("hub", F.lit(0.0)), out_scale)
+                    F.round(F.coalesce("hub", F.lit(0.0)), _OUT_SCALE)
                     .alias("hub"),
-                    F.round(F.coalesce("auth", F.lit(0.0)), out_scale)
+                    F.round(F.coalesce("auth", F.lit(0.0)), _OUT_SCALE)
                     .alias("auth")))
 
 
@@ -2874,8 +2892,8 @@ def ic_cascade(edges: DataFrame, seeds: DataFrame, rounds: int = 4,
     ``seeds``: one column ``node_id`` (activated at round 0). Returns
     (node_id, round) for every activated node within ``rounds``.
 
-    Scale shape: the edge set is persisted hash-partitioned on src
-    once; each round joins only the NEW-activation frontier against
+    Scale shape: the edge set is ``_persisted`` on src once; each
+    round joins only the NEW-activation frontier against
     it (frontier-proportional work, the bfs_distances discipline) plus
     one anti-join against the activated set; stops early when a round
     activates nothing.
@@ -2899,8 +2917,8 @@ def ic_cascade(edges: DataFrame, seeds: DataFrame, rounds: int = 4,
         return _union_all(_rounds(step, active, rounds))
 
 
-def katz(edges: DataFrame, iterations: int = 4, decay_pow: int = 1,
-         out_scale: int = 8) -> DataFrame:
+def katz(edges: DataFrame, iterations: int = 4,
+         decay_pow: int = 1) -> DataFrame:
     """Truncated Katz centrality (Katz 1953): c(v) = sum over path
     lengths k = 1..iterations of beta^k * (number of walks of length
     k ending at v) — the influence measure that counts ALL inbound
@@ -2920,15 +2938,15 @@ def katz(edges: DataFrame, iterations: int = 4, decay_pow: int = 1,
     differ between engines) and no float protocol anywhere in the
     loop — acc is exact decimal(38,0) integer state, and the only
     floating step is the final correctly-rounded double division by
-    the exactly-representable S^K, re-rounded to ``out_scale``. The
+    the exactly-representable S^K, re-rounded to ``_OUT_SCALE``. The
     DuckDB twin (_katz_sql, HUGEINT accumulator) is bit-exact by
     construction. Requires iterations * decay_pow <= 15 so S^K stays
     an exact double.
 
     Returns (node_id, katz) over all edge endpoints.
 
-    Scale shape: the edge set is persisted hash-partitioned on src
-    once; each round shuffles only the |V|-row walk-count vector (one
+    Scale shape: the edge set is ``_persisted`` on src once; each
+    round exchanges only the |V|-row walk-count vector (one
     join + one dst-keyed sum), checkpointed per round; the Horner sum
     is then unrolled into ONE node-keyed sum over the rounds' counts
     (w_k scaled by S^(K-k)). Truncation depth is the adversarial knob,
@@ -2960,7 +2978,7 @@ def katz(edges: DataFrame, iterations: int = 4, decay_pow: int = 1,
             .select("node_id",
                     F.round(F.coalesce(F.col("acc"), F.lit(0).cast(dec))
                             .cast("double") / F.lit(denom),
-                            out_scale).alias("katz")))
+                            _OUT_SCALE).alias("katz")))
 
 
 def dyad_census(edges: DataFrame) -> DataFrame:
@@ -3007,8 +3025,8 @@ def dyad_census(edges: DataFrame) -> DataFrame:
                     .alias("reciprocity")))
 
 
-def spam_mass(edges: DataFrame, seeds: DataFrame, iterations: int = 5,
-              damping: float = 0.85) -> DataFrame:
+def spam_mass(edges: DataFrame, seeds: DataFrame,
+              iterations: int = 5) -> DataFrame:
     """TrustRank + relative spam mass (Gyongyi, Garcia-Molina &
     Pedersen, VLDB 2004) — the link-spam demotion signal a crawl
     pipeline runs before trusting PageRank: trust flows from a
@@ -3031,10 +3049,8 @@ def spam_mass(edges: DataFrame, seeds: DataFrame, iterations: int = 5,
     only corpus-sized exchanges are the per-round inflow aggregates
     both pageranks already pay.
     """
-    pr = pagerank(edges, iterations=iterations, damping=damping,
-                  normalized=False)
-    tr = (personalized_pagerank(edges, seeds, iterations=iterations,
-                                damping=damping)
+    pr = pagerank(edges, iterations=iterations, normalized=False)
+    tr = (personalized_pagerank(edges, seeds, iterations=iterations)
           .withColumnRenamed("rank", "trank"))
     spr = pr.agg(F.sum(F.col("rank").cast("decimal(38,12)"))
                  .cast("double").alias("spr"))
@@ -3052,18 +3068,17 @@ def spam_mass(edges: DataFrame, seeds: DataFrame, iterations: int = 5,
         F.round(F.lit(1.0) - share_tr / share_pr, 8).alias("spam_mass"))
 
 
-def simrank(edges: DataFrame, iterations: int = 3, decay_num: int = 4,
-            decay_den: int = 5, scale: int = 8) -> DataFrame:
+def simrank(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """SimRank structural similarity (Jeh & Widom, KDD 2002): two
     nodes are similar if their in-neighbors are similar —
     ``s_k(a,b) = C/(|I(a)||I(b)|) * sum s_{k-1}(I(a) x I(b))`` with
     ``s(a,a) = 1``; the KG use is ranking candidate duplicate
     entities by how interchangeably the graph cites them.
 
-    ALL-INTEGER protocol: scores live on the 10^-scale grid as
-    longs; C = decay_num/decay_den stays rational, each update is one
+    ALL-INTEGER protocol: scores live on the 10^-8 grid as longs
+    (``s_e8``); the decay C = 4/5 stays rational, each update is one
     exact HALF_UP integer division
-    ``(2*num*C_n + C_d*|Ia|*|Ib|) div (2*C_d*|Ia|*|Ib|)`` — no
+    ``(2*4*num + 5*|Ia|*|Ib|) div (2*5*|Ia|*|Ib|)`` — no
     doubles anywhere, so the DuckDB twin (HUGEINT) is bit-identical
     with zero float protocol. In-neighbor sets are MULTISETS (every
     parallel edge contributes), matching the multigraph inputs.
@@ -3082,17 +3097,17 @@ def simrank(edges: DataFrame, iterations: int = 3, decay_num: int = 4,
              .unionByName(E.select(F.col("dst").alias("n")))
              .distinct().localCheckpoint(eager=True))
     ind = E.groupBy("dst").agg(F.count("*").alias("ind"))
-    grid = 10 ** scale
+    grid = 10 ** 8
     diag = nodes.select(F.col("n").alias("u"), F.col("n").alias("v"),
                         F.lit(grid).cast("long").alias("s_e8"))
     ea = E.select(F.col("src").alias("u"), F.col("dst").alias("a"))
     eb = E.select(F.col("src").alias("v"), F.col("dst").alias("b"))
     s_expr = F.expr(
-        f"(2 * {decay_num} * CAST(num AS DECIMAL(38,0))"
-        f" + {decay_den} * CAST(ia AS DECIMAL(38,0))"
-        f"   * CAST(ib AS DECIMAL(38,0)))"
-        f" div (2 * {decay_den} * CAST(ia AS DECIMAL(38,0))"
-        f"      * CAST(ib AS DECIMAL(38,0)))")
+        "(2 * 4 * CAST(num AS DECIMAL(38,0))"
+        " + 5 * CAST(ia AS DECIMAL(38,0))"
+        "   * CAST(ib AS DECIMAL(38,0)))"
+        " div (2 * 5 * CAST(ia AS DECIMAL(38,0))"
+        "      * CAST(ib AS DECIMAL(38,0)))")
 
     def step(_, outs):
         num = (outs[-1].join(ea, "u").join(eb, "v")
@@ -3289,25 +3304,24 @@ def triad_census(edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(rows, "triad string, n long")
 
 
-def ppr_push(edges: DataFrame, seeds: DataFrame, rounds: int = 8,
-             alpha_num: int = 15, alpha_den: int = 100,
-             eps_thresh: int = 0, scale: int = 12) -> DataFrame:
+def ppr_push(edges: DataFrame, seeds: DataFrame,
+             rounds: int = 8) -> DataFrame:
     """Personalized PageRank by BATCHED local push (the synchronized
     variant of Andersen-Chung-Lang, FOCS 2006): residual mass starts
-    on the seeds and spreads one hop per round; a node pushes only
-    when its residual clears ``r > eps_thresh * out_deg`` — so the
-    computation touches ONLY the seed neighborhood the tolerance
-    implies, never the whole graph. This is the shape that matters at
+    on the seeds and spreads one hop per round; every node holding
+    residual (``r > 0``) with an out-edge pushes — so the computation
+    touches ONLY the seed neighborhood ``rounds`` hops reach, never
+    the whole graph. This is the shape that matters at
     10^9 nodes: power-iteration PPR (personalized_pagerank) costs a
     full rank-vector shuffle per round regardless of |seeds|; push
     cost follows the touched frontier.
 
-    ALL-INTEGER mass accounting on the 10^-scale grid (longs):
-    a push moves ``r*alpha_num div alpha_den`` into the estimate p,
+    ALL-INTEGER mass accounting on the 10^-12 grid (longs):
+    a push moves ``r*15 div 100`` (alpha = 0.15) into the estimate p,
     spreads ``(r - pushed) div out_deg`` along EACH out-edge
     (multiset semantics), and the integer dust
     ``rem - q*out_deg`` stays in the node's residual — mass is
-    conserved EXACTLY (sum(p) + sum(r) == 10^scale at every round),
+    conserved EXACTLY (sum(p) + sum(r) == 10^12 at every round),
     every quantity is a long, and the DuckDB twin is bit-identical
     with zero float protocol. Sinks and sub-threshold nodes hold
     their residual (documented contract).
@@ -3318,7 +3332,7 @@ def ppr_push(edges: DataFrame, seeds: DataFrame, rounds: int = 8,
     (see the module docstring), so the seed count is the only driver
     action before the caller's.
     """
-    grid = 10 ** scale
+    grid = 10 ** 12
     E = edges.select("src", "dst").localCheckpoint(eager=True)
     deg = E.groupBy("src").agg(F.count("*").alias("deg"))
     nodes = (E.select(F.col("src").alias("node_id"))
@@ -3339,11 +3353,10 @@ def ppr_push(edges: DataFrame, seeds: DataFrame, rounds: int = 8,
                    F.lit(0).cast("long").alias("p"),
                    F.when(F.col("_s"), F.lit(grid // n_seeds))
                    .otherwise(F.lit(0)).cast("long").alias("r")))
-    push = (F.col("deg") > 0) & \
-        (F.col("r") > F.lit(eps_thresh) * F.col("deg"))
-    pushed = F.expr(f"(r * {alpha_num}) div {alpha_den}")
+    push = (F.col("deg") > 0) & (F.col("r") > 0)
+    pushed = F.expr("(r * 15) div 100")
     rem = F.col("r") - pushed
-    q = F.expr(f"(r - (r * {alpha_num}) div {alpha_den}) div deg")
+    q = F.expr("(r - (r * 15) div 100) div deg")
 
     def step(_, outs):
         st = outs[-1].select(

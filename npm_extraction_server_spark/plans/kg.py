@@ -60,15 +60,15 @@ TRIPLES_SCHEMA = T.StructType([
 ])
 
 
-def repartition_pages(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Explicit url-hash repartition (north_rule): spreads crawl-order
-    locality so no executor sees a hot host's pages clustered."""
-    n = num_partitions or pages.sparkSession.sparkContext.defaultParallelism
+def repartition_pages(pages: DataFrame) -> DataFrame:
+    """Explicit url-hash repartition (north_rule) into the default
+    parallelism: spreads crawl-order locality so no executor sees a hot
+    host's pages clustered."""
+    n = pages.sparkSession.sparkContext.defaultParallelism
     return pages.repartition(n, F.xxhash64("url"))
 
 
-def maybe_repartition_pages(pages: DataFrame,
-                            num_partitions: int | None = None) -> DataFrame:
+def maybe_repartition_pages(pages: DataFrame) -> DataFrame:
     """Shuffle only when the scan is under-parallel. A shuffle feeding a
     python stage forces row-wise shuffle-read -> Arrow conversion, which
     measured ~2x slower than the columnar parquet->Arrow path — so when
@@ -76,8 +76,7 @@ def maybe_repartition_pages(pages: DataFrame,
     shards), skip it; the explicit url-hash shuffle stays for skewed
     layouts (hot hosts clustered into few files) and for the bucketed
     writers."""
-    spark = pages.sparkSession
-    target = num_partitions or spark.sparkContext.defaultParallelism
+    target = pages.sparkSession.sparkContext.defaultParallelism
     current = pages.rdd.getNumPartitions()
     if current >= target:
         return pages
@@ -226,18 +225,15 @@ def pages_to_triples(pages: DataFrame, root: str = DEFAULT_ROOT) -> DataFrame:
         _fused_partition(root), schema=TRIPLES_SCHEMA)
 
 
-def engine_triples(spark: SparkSession, root: str = DEFAULT_ROOT,
-                   index_by_name: dict | None = None) -> DataFrame:
+def engine_triples(spark: SparkSession, root: str = DEFAULT_ROOT) -> DataFrame:
     """The engine dimension (SC8): tiny, generated driver-side once —
     the analog of the reference's single nodejs.org fetch."""
     from ..kernel.pipeline import export_engines
     from ..sources.engine_index import ENGINE_INDEX
 
-    if index_by_name is None:
-        index_by_name = ENGINE_INDEX
     rows = [
         ("engine:", "engines", t.subj, t.pred, t.obj, t.obj_is_literal, t.graph, -1, None)
-        for t in export_engines(index_by_name, root)
+        for t in export_engines(ENGINE_INDEX, root)
     ]
     return spark.createDataFrame(rows, schema=TRIPLES_SCHEMA)
 
@@ -250,12 +246,12 @@ def split_errors(triples_raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     return triples, errors
 
 
-def lineage(triples_raw: DataFrame, stage: str = "doc_to_triples") -> DataFrame:
+def lineage(triples_raw: DataFrame) -> DataFrame:
     """A6/SN4: per-partition metrics derived from the triple rows."""
     return (
         triples_raw.groupBy("part_id")
         .agg(
-            F.lit(stage).alias("stage"),
+            F.lit("doc_to_triples").alias("stage"),
             F.countDistinct("src_url").alias("n_in"),
             F.count("subj").alias("n_out"),
             F.count("error").alias("n_failed"),
@@ -275,21 +271,19 @@ def verify_text_invariant(pages: DataFrame, docs: DataFrame) -> int:
     return joined.filter(F.col("in_sha") != F.col("out_sha")).count()
 
 
-def write_triples(triples: DataFrame, path: str, n_buckets: int = 64,
-                  mode: str = "overwrite") -> None:
-    """Partitioned sink (Iceberg-table stand-in: parquet with explicit
-    subj-hash bucketing — Iceberg's bucket(N, subj) transform; jars for
-    the real catalog are not in this image)."""
+def write_triples(triples: DataFrame, path: str, n_buckets: int = 64) -> None:
+    """Partitioned sink, overwriting ``path`` (Iceberg-table stand-in:
+    parquet with explicit subj-hash bucketing — Iceberg's bucket(N,
+    subj) transform; jars for the real catalog are not in this image)."""
     (
         triples.withColumn("bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int"))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)
     )
 
 
 def run_pipeline(pages: DataFrame, root: str = DEFAULT_ROOT,
-                 num_partitions: int | None = None,
                  include_engines: bool = True) -> dict:
     """Full extract->triples pass; returns the interesting DataFrames.
 
@@ -298,7 +292,7 @@ def run_pipeline(pages: DataFrame, root: str = DEFAULT_ROOT,
     extract stage (lazy; only computed if the caller uses it, e.g. for
     the text-pass-through check)."""
     spark = pages.sparkSession
-    pages_p = maybe_repartition_pages(pages, num_partitions)
+    pages_p = maybe_repartition_pages(pages)
     docs = extract_docs(pages_p)
     raw = pages_to_triples(pages_p, root)
     triples, errors = split_errors(raw)

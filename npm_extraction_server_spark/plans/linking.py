@@ -84,22 +84,21 @@ def _norm_url(col):
         r"(\.git)?/?$", "")
 
 
-def head_entity_dictionary(triples: DataFrame, top_k: int = 1000) -> DataFrame:
-    """The most-referenced entity IRIs (objects of non-literal triples):
-    broadcast side of the skew short-circuit."""
+def head_entity_dictionary(triples: DataFrame) -> DataFrame:
+    """The 1,000 most-referenced entity IRIs (objects of non-literal
+    triples): broadcast side of the skew short-circuit."""
     return (
         triples.filter(~F.col("obj_is_literal"))
         .groupBy(F.col("obj").alias("entity_iri"))
         .agg(F.count("*").alias("n_refs"))
         .orderBy(F.desc("n_refs"), F.asc("entity_iri"))
-        .limit(top_k)
+        .limit(1000)
     )
 
 
-def _name_shingle_buckets(mentions: DataFrame, num_hashes: int = 12,
-                          bands: int = 6) -> DataFrame:
-    """MinHash-LSH over character-3-gram shingles of the normalized name."""
-    rows_per_band = num_hashes // bands
+def _name_shingle_buckets(mentions: DataFrame) -> DataFrame:
+    """MinHash-LSH over character-3-gram shingles of the normalized name:
+    12 hashes in 6 bands of 2 rows."""
     named = mentions.filter(F.col("name").isNotNull()).select(
         "entity_iri", "kind", F.lower(F.regexp_replace("name", r"\s+", " ")).alias("nname"))
     n = F.length("nname")
@@ -111,7 +110,7 @@ def _name_shingle_buckets(mentions: DataFrame, num_hashes: int = 12,
         "entity_iri", "kind", "nname", "shingles",
         *[F.array_min(F.transform("shingles",
                                   lambda s: F.xxhash64(s, F.lit(seed)))).alias(f"h{seed}")
-          for seed in range(num_hashes)],
+          for seed in range(12)],
     )
     return mh.select(
         "entity_iri", "kind", "nname", "shingles",
@@ -119,23 +118,22 @@ def _name_shingle_buckets(mentions: DataFrame, num_hashes: int = 12,
             F.struct(
                 F.lit(b).alias("band_id"),
                 F.xxhash64(F.concat_ws(",", *[
-                    F.col(f"h{b * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
+                    F.col(f"h{b * 2 + r}").cast("string")
+                    for r in range(2)
                 ])).alias("band_hash"))
-            for b in range(bands)
+            for b in range(6)
         ])).alias("band"),
     ).select("entity_iri", "kind", "nname", "shingles", "band.band_id", "band.band_hash")
 
 
 def candidate_edges(mentions: DataFrame, triples: DataFrame | None = None,
-                    name_jaccard: float = 0.8, head_top_k: int = 1000,
-                    max_bucket_size: int = 64) -> DataFrame:
+                    name_jaccard: float = 0.8) -> DataFrame:
     """(src, dst) same-as candidate pairs.
 
-    ``max_bucket_size`` caps the LSH name-blocking buckets: a corpus of
-    templated names (pkg-1, pkg-2, ...) shares most 3-grams, so band
-    buckets grow with the corpus and the within-bucket pairing turns
-    quadratic — measured 390 s of a 498 s end-to-end run at 48k pages
+    LSH name-blocking buckets of more than 64 mentions are dropped: a
+    corpus of templated names (pkg-1, pkg-2, ...) shares most 3-grams,
+    so band buckets grow with the corpus and the within-bucket pairing
+    turns quadratic — measured 390 s of a 498 s end-to-end run at 48k pages
     before the cap, ~8 s after. Oversized buckets are boilerplate-name
     clusters: their members still link through the exact email/URL
     channels, which is the correct production trade (same guard as
@@ -167,12 +165,12 @@ def candidate_edges(mentions: DataFrame, triples: DataFrame | None = None,
     # (c) LSH name blocking (heads short-circuited out of the fuzzy path)
     banded = _name_shingle_buckets(mentions)
     if triples is not None:
-        heads = head_entity_dictionary(triples, head_top_k).select("entity_iri")
+        heads = head_entity_dictionary(triples).select("entity_iri")
         banded = banded.join(F.broadcast(heads), "entity_iri", "left_anti")
     oversized = (
         banded.groupBy("band_id", "band_hash")
         .agg(F.count("*").alias("bucket_n"))
-        .filter(F.col("bucket_n") > max_bucket_size)
+        .filter(F.col("bucket_n") > 64)
         .select("band_id", "band_hash")
     )
     banded = banded.join(F.broadcast(oversized),
@@ -269,12 +267,12 @@ def incremental_components(old_labels: DataFrame, new_edges: DataFrame,
     return relabeled_old.unionByName(new_only)
 
 
-def link_entities(triples: DataFrame, name_jaccard: float = 0.8) -> DataFrame:
+def link_entities(triples: DataFrame) -> DataFrame:
     """triples -> entities table (entity_iri, kind, name, email, url,
     canonical_id)."""
     mentions = entity_mentions(triples)
     mentions = mentions.localCheckpoint(eager=True)
-    edges = candidate_edges(mentions, triples, name_jaccard)
+    edges = candidate_edges(mentions, triples)
     labels = connected_components(mentions.select("entity_iri"), edges)
     return mentions.join(labels, "entity_iri", "left").withColumn(
         "canonical_id", F.coalesce("canonical_id", "entity_iri"))
@@ -338,9 +336,7 @@ def pair_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
                     (F.col("g2") - F.col("tp")).cast("bigint").alias("fn")))
 
 
-def ifp_smush(triples: DataFrame, ifp_preds: list[str],
-              subj_col: str = "subj", pred_col: str = "pred",
-              obj_col: str = "obj") -> DataFrame:
+def ifp_smush(triples: DataFrame, ifp_preds: list[str]) -> DataFrame:
     """owl:InverseFunctionalProperty smushing — the classic RDF
     entity-resolution rule (two subjects sharing a value of an IFP
     like foaf:mbox denote the SAME entity), run as equality blocking
@@ -357,10 +353,10 @@ def ifp_smush(triples: DataFrame, ifp_preds: list[str],
     least one IFP assertion; canonical = lexicographic min of the
     connected equivalence class.
     """
-    t = (triples.filter(F.col(pred_col).isin(list(ifp_preds)))
-         .select(F.col(pred_col).alias("p"),
-                 F.col(obj_col).alias("o"),
-                 F.col(subj_col).alias("s"))
+    t = (triples.filter(F.col("pred").isin(list(ifp_preds)))
+         .select(F.col("pred").alias("p"),
+                 F.col("obj").alias("o"),
+                 F.col("subj").alias("s"))
          .distinct()
          .localCheckpoint(eager=False))
     grp = t.groupBy("p", "o").agg(F.min("s").alias("canon"))

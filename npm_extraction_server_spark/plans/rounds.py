@@ -66,11 +66,13 @@ from pyspark.sql import functions as F
 @contextmanager
 def _persisted(df: DataFrame, *keys: str) -> Iterator[DataFrame]:
     """``df`` hash-partitioned on ``keys`` (default ``src``) and
-    persisted for the life of the ``with`` block. With AQE on (the
-    session default) the planner does not see the cached partitioning:
-    a round's shuffle join still exchanges the persisted side (a
-    broadcast join does not). Unpersisted on exit, also when a round
-    raises."""
+    persisted for the life of the ``with`` block. A round's sort-merge
+    join on those keys reads it from the cache with no exchange above
+    it in AQE's final plan, and exchanges only the other side; the
+    initial plan's exchange over the ``InMemoryTableScan`` is dropped
+    once the cache stage has run (``explain()``, Spark 4.1, both
+    broadcast thresholds at -1). A join on other columns exchanges it
+    every round. Unpersisted on exit, also when a round raises."""
     e = df.repartition(*[F.col(k) for k in keys or ("src",)]).persist()
     try:
         yield e

@@ -96,9 +96,10 @@ def nt_lines(triples: DataFrame) -> DataFrame:
                  F.lit("> "), term, F.lit(" .")).alias("line"))
 
 
-def export_ntriples(triples: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """SN1 analog: the bulk text export, written distributed."""
-    nt_lines(triples).write.mode(mode).text(path)
+def export_ntriples(triples: DataFrame, path: str) -> None:
+    """SN1 analog: the bulk text export, written distributed (overwrites
+    ``path``)."""
+    nt_lines(triples).write.mode("overwrite").text(path)
 
 
 def materialize_graph(pages: DataFrame, out_dir: str,

@@ -726,17 +726,16 @@ def commit(df: DataFrame, table: str, partitions: int | None = None,
 def compact(spark: SparkSession, table: str,
             partitions: int | None = None,
             cluster_by: list[str] | None = None,
-            cluster_mode: str = "range",
             partition_spec: list | None = None) -> int:
     """Rewrite the CURRENT table state as one 'replace' snapshot —
     the small-files maintenance op. Readers planning from the new
     snapshot open the compacted files only; older snapshots stay
     readable (time travel) until their manifests are removed. At scale
     this is what keeps a high-frequency-commit table's file count (and
-    scan-planning cost) bounded. ``cluster_by`` (+ ``cluster_mode=
-    'zorder'``) re-clusters the rewritten table so stats pruning stays
-    sharp after many interleaved commits/merges have scattered the key
-    ranges — Iceberg's rewrite-with-sort-order.
+    scan-planning cost) bounded. ``cluster_by`` range-clusters the
+    rewritten table so stats pruning stays sharp after many interleaved
+    commits/merges have scattered the key ranges — Iceberg's
+    rewrite-with-sort-order.
 
     Compaction's content IS a function of the parent it read, so it
     commits with ``expected_parent`` (CAS): if a concurrent append
@@ -746,7 +745,7 @@ def compact(spark: SparkSession, table: str,
     df = read_snapshot(spark, table, snapshot_id=base)
     return commit(df, table, partitions=partitions, operation="replace",
                   expected_parent=base, cluster_by=cluster_by,
-                  cluster_mode=cluster_mode, partition_spec=partition_spec)
+                  partition_spec=partition_spec)
 
 
 def _plan_full(table: str, to_incl: int):

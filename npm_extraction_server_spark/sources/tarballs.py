@@ -1,8 +1,9 @@
 """SC9/SC10 as Spark operators: tarballs are opaque binary blobs in a
-column (from the ``binaryFile`` source for on-disk .tgz, or any table
-with a binary payload); extraction / path-resolve / component-BFS run
-as Arrow-batched ``mapInPandas`` stages — one tarball is always local
-to one row, so the walk is embarrassingly parallel with zero shuffle.
+(tar_id, payload) table (e.g. a ``binaryFile`` scan of on-disk .tgz, or
+any table with a binary payload); extraction / path-resolve /
+component-BFS run as Arrow-batched ``mapInPandas`` stages — one tarball
+is always local to one row, so the walk is embarrassingly parallel with
+zero shuffle.
 
 Reference: /root/reference/lib/util/Tarball.js (download+extract+
 resolve) and /root/reference/lib/npm/NpmModule.js:216-250 (the lsd
@@ -19,7 +20,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEMBER_SCHEMA = T.StructType([
@@ -40,15 +40,6 @@ COMPONENT_SCHEMA = T.StructType([
     T.StructField("tar_id", T.StringType(), False),
     T.StructField("component_json", T.StringType(), False),
 ])
-
-
-def read_tarballs(spark: SparkSession, path: str) -> DataFrame:
-    """On-disk .tgz via the binaryFile source: (tar_id, payload).
-    Pushdown note: binaryFile supports pathGlobFilter + modifiedAfter
-    options for scan-time pruning at lake scale."""
-    raw = spark.read.format("binaryFile").load(path)
-    return raw.select(F.col("path").alias("tar_id"),
-                      F.col("content").alias("payload"))
 
 
 def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -108,12 +99,12 @@ def resolve_tar_paths(tarballs: DataFrame, paths: list[str]) -> DataFrame:
         fn, schema=RESOLVE_SCHEMA)
 
 
-def lsd_component_closure(tarballs: DataFrame,
-                          entry_path: str = "components.jsonld") -> DataFrame:
+def lsd_component_closure(tarballs: DataFrame) -> DataFrame:
     """The server-mode lsd BFS (NpmModule.js:216-243) per tarball:
-    follow JSON-LD 'import' edges from ``entry_path``, emit one row per
-    collected component (with the importer's @context attached,
-    serialized with sorted keys for deterministic comparison)."""
+    follow JSON-LD 'import' edges from ``components.jsonld``, emit one
+    row per collected component (with the importer's @context
+    attached, serialized with sorted keys for deterministic
+    comparison)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.tarball import component_closure, try_extract_tar
@@ -126,7 +117,7 @@ def lsd_component_closure(tarballs: DataFrame,
                 if tree is None:
                     continue
                 try:
-                    comps = component_closure(entry_path, tree)
+                    comps = component_closure("components.jsonld", tree)
                 except KeyError:
                     comps = []
                 for c in comps:

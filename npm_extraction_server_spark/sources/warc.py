@@ -270,14 +270,13 @@ def read_warc(
     path: str,
     *,
     record_types: tuple = ("response",),
-    strip_http: bool = True,
 ) -> DataFrame:
     """Read WARC/WET/WAT files under ``path`` into (url, warc_date,
     warc_type, http_status, payload). One task per file (binaryFile
     source); ``warcinfo`` records and types outside ``record_types``
-    are skipped. For ``response`` records with ``strip_http`` the HTTP
-    header block is removed so ``payload`` is the raw html body and
-    ``http_status`` carries the status code."""
+    are skipped. For ``response`` records the HTTP header block is
+    removed so ``payload`` is the raw html body and ``http_status``
+    carries the status code."""
     wanted = set(record_types)
     files = (spark.read.format("binaryFile")
              .load(os.path.join(path, "part-*.warc*"))
@@ -292,7 +291,7 @@ def read_warc(
                     if wtype == "warcinfo" or wtype not in wanted:
                         continue
                     status = None
-                    if wtype == "response" and strip_http:
+                    if wtype == "response":
                         status, payload = split_http_payload(payload)
                     rows.append((
                         headers.get("warc-target-uri"),

@@ -21,9 +21,19 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
 from ..plans.kg import pages_to_triples, split_errors
 from ..sources.pages import PAGES_SCHEMA
+
+# the (event_id, ts, user_id) event files the event-time streams read
+_EVENTS_SCHEMA = StructType([
+    StructField("event_id", LongType()),
+    StructField("ts", TimestampType()),
+    StructField("user_id", LongType()),
+])
+# how far behind the max seen event time a row may arrive and still count
+_WATERMARK_DELAY = "30 minutes"
 
 
 def changed_since(pages: DataFrame, start: str, end: str | None = None) -> DataFrame:
@@ -139,18 +149,7 @@ def stream_sessionize(spark: SparkSession, events_dir: str, out_dir: str,
     custom-stateful path the reference has no analog for."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
 
-    schema = StructType([
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-    ])
     out_schema = StructType([
         StructField("user_id", LongType()),
         StructField("n_sessions", LongType()),
@@ -177,7 +176,7 @@ def stream_sessionize(spark: SparkSession, events_dir: str, out_dir: str,
                             "n_events": [n_events]})
 
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 4)
         .parquet(events_dir)
     )
@@ -195,29 +194,21 @@ def stream_sessionize(spark: SparkSession, events_dir: str, out_dir: str,
 
 
 def stream_windowed_counts(spark: SparkSession, events_dir: str, out_dir: str,
-                           checkpoint_dir: str,
-                           window_duration: str = "10 minutes",
-                           watermark_delay: str = "30 minutes"):
-    """Watermarked event-time tumbling-window aggregation (§2.8 late
-    data): events later than ``watermark_delay`` behind the max seen
-    event time are DROPPED; closed windows are emitted exactly once
-    (append mode requires the watermark). The batch-equivalent query is
-    the same groupBy(window(ts)) — the test compares against it."""
-    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
-
-    schema = StructType([
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-    ])
+                           checkpoint_dir: str):
+    """Watermarked event-time 10-minute tumbling-window counts (§2.8
+    late data): events more than ``_WATERMARK_DELAY`` (30 minutes)
+    behind the max seen event time are DROPPED; closed windows are
+    emitted exactly once (append mode requires the watermark). The
+    batch-equivalent query is the same groupBy(window(ts)) — the test
+    compares against it."""
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)  # one file per micro-batch so
         .parquet(events_dir)              # the watermark advances between files
     )
     agg = (
-        stream.withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_duration))
+        stream.withWatermark("ts", _WATERMARK_DELAY)
+        .groupBy(F.window("ts", "10 minutes"))
         .agg(F.count("*").alias("n_events"))
         .select(F.col("window.start").alias("win_start"),
                 F.col("window.end").alias("win_end"), "n_events")
@@ -234,8 +225,7 @@ def stream_windowed_counts(spark: SparkSession, events_dir: str, out_dir: str,
 
 def stream_upsert_to_snapshots(spark: SparkSession, updates_dir: str,
                                table: str, checkpoint_dir: str,
-                               key: str, schema, order_col: str | None = None,
-                               cluster: bool = True):
+                               key: str, schema, order_col: str | None = None):
     """CDC ingestion: a stream of row-level updates MERGEs into the
     snapshot table — each micro-batch becomes one copy-on-write
     'overwrite' snapshot (sources/snapshots.merge_upsert), with the
@@ -253,7 +243,8 @@ def stream_upsert_to_snapshots(spark: SparkSession, updates_dir: str,
     partitioned by key, so the key itself can never discriminate —
     making the pick a pure function of the row set); without it,
     duplicate keys in one batch are an error (merge_upsert enforces).
-    The first batch into an empty table is a plain clustered commit."""
+    The first batch into an empty table is a plain commit; every
+    commit, that one included, is clustered by ``key``."""
     from pyspark.sql import Window
 
     from ..sources.snapshots import (
@@ -269,7 +260,7 @@ def stream_upsert_to_snapshots(spark: SparkSession, updates_dir: str,
         .option("maxFilesPerTrigger", 1)
         .parquet(updates_dir)
     )
-    cluster_by = [key] if cluster else None
+    cluster_by = [key]
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if current_snapshot_id(table) is not None:
@@ -285,7 +276,7 @@ def stream_upsert_to_snapshots(spark: SparkSession, updates_dir: str,
             # tie-break; map columns are unorderable in Spark and
             # would fail analysis, so they are excluded — ties that
             # differ ONLY in unorderable columns remain best-effort)
-            from pyspark.sql.types import ArrayType, MapType, StructType
+            from pyspark.sql.types import ArrayType, MapType
 
             def _orderable(dt) -> bool:
                 if isinstance(dt, MapType):
@@ -323,61 +314,50 @@ def stream_upsert_to_snapshots(spark: SparkSession, updates_dir: str,
 def stream_interval_join(spark: SparkSession, views_dir: str,
                          purchases_dir: str, out_dir: str,
                          checkpoint_dir: str,
-                         within: str = "1 hour",
-                         watermark_delay: str = "30 minutes",
                          max_files_per_trigger: int = 64):
     """Watermarked STREAM-STREAM interval join — the attribution query
     (which view led to this purchase?) as two unbounded inputs: each
-    purchase joins every view by the same user in the preceding
-    ``within`` window.
+    purchase joins every view by the same user in the preceding hour.
 
     The state story is the whole point at scale: BOTH sides carry an
     event-time watermark and the join condition bounds purchase time
-    to [view_ts, view_ts + within], so Spark derives a state watermark
+    to [view_ts, view_ts + 1 hour], so Spark derives a state watermark
     and EVICTS buffered rows once they can no longer match — state is
-    bounded by (watermark_delay + within) of traffic, not the stream
-    history. Without the time bound (or the watermarks) the state
-    grows forever and the query is rightly rejected/unbounded; this is
-    the canonical shape from the Structured Streaming docs, applied to
-    the events table. Batch-equivalence is the test contract: the same
-    join over the same files as plain DataFrames gives the identical
-    row set."""
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    bounded by (``_WATERMARK_DELAY`` + 1 hour) of traffic, not the
+    stream history. Without the time bound (or the watermarks) the
+    state grows forever and the query is rightly rejected/unbounded;
+    this is the canonical shape from the Structured Streaming docs,
+    applied to the events table. Batch-equivalence is the test
+    contract: the same join over the same files as plain DataFrames
+    gives the identical row set.
 
-    schema = StructType([
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-    ])
-    # max_files_per_trigger trades per-micro-batch fixed cost (state
-    # checkpoint + commit) against watermark granularity; tests pass 1
-    # to force multi-batch behavior, production wants a big batch
-    views = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(views_dir)
-        .withWatermark("ts", watermark_delay)
-        .select(F.col("user_id").alias("v_user"),
-                F.col("ts").alias("v_ts"),
-                F.col("event_id").alias("view_id")))
-    purchases = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(purchases_dir)
-        .withWatermark("ts", watermark_delay)
-        .select(F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-                F.col("event_id").alias("purchase_id")))
+    ``max_files_per_trigger`` trades per-micro-batch fixed cost (state
+    checkpoint + commit) against watermark granularity; tests pass 1
+    to force multi-batch behavior, production wants a big batch."""
+    return _interval_join(spark, views_dir, purchases_dir, out_dir,
+                          checkpoint_dir, max_files_per_trigger, "inner")
+
+
+def _interval_join(spark: SparkSession, views_dir: str, purchases_dir: str,
+                   out_dir: str, checkpoint_dir: str,
+                   max_files_per_trigger: int, how: str):
+    """The body of both interval joins; ``how`` is the join type."""
+    def side(path, user, ts, event_id):
+        return (spark.readStream.schema(_EVENTS_SCHEMA)
+                .option("maxFilesPerTrigger", max_files_per_trigger)
+                .parquet(path)
+                .withWatermark("ts", _WATERMARK_DELAY)
+                .select(F.col("user_id").alias(user), F.col("ts").alias(ts),
+                        F.col("event_id").alias(event_id)))
+
+    views = side(views_dir, "v_user", "v_ts", "view_id")
+    purchases = side(purchases_dir, "p_user", "p_ts", "purchase_id")
     joined = views.join(
         purchases,
-        F.expr(f"""v_user = p_user
-                   AND p_ts >= v_ts
-                   AND p_ts <= v_ts + interval {within}"""))
+        F.expr("""v_user = p_user
+                  AND p_ts >= v_ts
+                  AND p_ts <= v_ts + interval 1 hour"""),
+        how)
     return (
         joined.select("v_user", "view_id", "purchase_id", "v_ts", "p_ts")
         .writeStream.outputMode("append")
@@ -442,38 +422,26 @@ def read_link_degrees(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def stream_dedup(spark: SparkSession, events_dir: str, out_dir: str,
-                 checkpoint_dir: str, key_col: str = "event_id",
-                 watermark_delay: str = "30 minutes"):
+                 checkpoint_dir: str):
     """Watermarked streaming DEDUPLICATION: at-least-once sources
-    (replayed files, retried producers) emit the same keyed event more
+    (replayed files, retried producers) emit the same event more
     than once; ``dropDuplicatesWithinWatermark`` keeps the FIRST
-    arrival of each key and discards re-deliveries that arrive within
-    the watermark of the original — after which the key's state is
+    arrival of each ``event_id`` and discards re-deliveries that
+    arrive within the watermark (``_WATERMARK_DELAY``) of the
+    original — after which the key's state is
     dropped, so state is bounded by (keys per watermark window), not
     the stream's lifetime (the property that matters on an unbounded
     crawl feed; a plain dropDuplicates would grow state forever).
     Restart-safe via the checkpoint. The batch equivalent is
     dropDuplicates on the key — the test compares against it."""
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    schema = StructType([
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-    ])
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)  # re-deliveries land in later
         .parquet(events_dir)              # micro-batches (the real shape)
     )
     deduped = (
-        stream.withWatermark("ts", watermark_delay)
-        .dropDuplicatesWithinWatermark([key_col])
+        stream.withWatermark("ts", _WATERMARK_DELAY)
+        .dropDuplicatesWithinWatermark(["event_id"])
     )
     return (
         deduped.writeStream.outputMode("append")
@@ -487,59 +455,16 @@ def stream_dedup(spark: SparkSession, events_dir: str, out_dir: str,
 
 def stream_interval_join_outer(spark: SparkSession, views_dir: str,
                                purchases_dir: str, out_dir: str,
-                               checkpoint_dir: str,
-                               within: str = "1 hour",
-                               watermark_delay: str = "30 minutes",
-                               max_files_per_trigger: int = 64):
+                               checkpoint_dir: str):
     """LEFT OUTER watermarked stream-stream interval join — the other
     half of attribution: views that led to NO purchase within the
     window must also be emitted (null purchase columns), and they can
     only be emitted once the watermark proves no future purchase can
     still match. Same bounded-state story as the inner form
-    (stream_interval_join); the outer rows ride the state EVICTION:
-    an unmatched buffered view is released with nulls exactly when
-    its match window expires, so output completeness is a function of
-    watermark progress, never of stream end."""
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    schema = StructType([
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-    ])
-    views = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(views_dir)
-        .withWatermark("ts", watermark_delay)
-        .select(F.col("user_id").alias("v_user"),
-                F.col("ts").alias("v_ts"),
-                F.col("event_id").alias("view_id")))
-    purchases = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(purchases_dir)
-        .withWatermark("ts", watermark_delay)
-        .select(F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-                F.col("event_id").alias("purchase_id")))
-    joined = views.join(
-        purchases,
-        F.expr(f"""v_user = p_user
-                   AND p_ts >= v_ts
-                   AND p_ts <= v_ts + interval {within}"""),
-        "leftOuter")
-    return (
-        joined.select("v_user", "view_id", "purchase_id", "v_ts", "p_ts")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{out_dir}/attributed")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    (stream_interval_join, 64 files per trigger); the outer rows ride
+    the state EVICTION: an unmatched buffered view is released with
+    nulls exactly when its match window expires, so output
+    completeness is a function of watermark progress, never of stream
+    end."""
+    return _interval_join(spark, views_dir, purchases_dir, out_dir,
+                          checkpoint_dir, 64, "leftOuter")

@@ -1433,7 +1433,7 @@ def test_betweenness_matches_pure_python_brandes(spark):
 
 def test_personalized_pagerank_history(spark):
     """PPR return_history: iter 0..k grid ranks; iter k matches the
-    default output before out_scale rounding."""
+    default output before its 8-decimal rounding."""
     from npm_extraction_server_spark.plans.graph import personalized_pagerank
 
     e = _edges(spark, [(0, 1), (1, 2), (2, 0)])

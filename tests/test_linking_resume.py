@@ -312,6 +312,27 @@ def test_name_lsh_blocking_planted(spark):
     assert not any("iri:c" in e for pair in edges for e in pair)
 
 
+def test_name_lsh_oversized_bucket_dropped(spark):
+    """The LSH name-blocking cap: a band bucket holding more than 64
+    mentions is boilerplate and yields no name edges; at or under the
+    cap, same-kind mentions with one identical name pair up fully."""
+    def name_edges(n):
+        iris = [f"iri:{i:03d}" for i in range(n)]
+        mentions = spark.createDataFrame(
+            [(iri, "user", "Jonathan Q Smithers", None, None) for iri in iris],
+            "entity_iri string, kind string, name string, email string, "
+            "url string")
+        got = {(r["src"], r["dst"])
+               for r in candidate_edges(mentions, None).collect()}
+        return got, {(a, b) for a in iris for b in iris if a < b}
+
+    got, _ = name_edges(70)
+    assert got == set()
+    for n in (5, 64):
+        got, every_pair = name_edges(n)
+        assert got == every_pair
+
+
 def test_stream_windowed_watermark(spark, tmp_path):
     """Watermarked tumbling windows over event time: on-time events are
     aggregated exactly once in append mode; an event arriving in a
