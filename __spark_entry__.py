@@ -8,8 +8,13 @@ extract -> doc->triples (SURVEY.md §3.1) and the triples DataFrame is
 returned.
 
 ``queries()`` / ``oracle_sql()`` expose the operator suite
-(npm_extraction_server_spark/operators/suite.py) for the DuckDB
-cross-check at sf=0.01.
+(npm_extraction_server_spark/operators/suite.py) plus the queries
+defined here, for the DuckDB cross-check at sf=0.01. Both read one
+registry (operators/registry.py). To add a query, define
+``name(spark, sf_dir) -> DataFrame`` in either module under one
+``@query(oracle)`` line: ``oracle`` is the DuckDB SQL over the same
+parquet tables, or ``None`` for a rows-only query. The function's
+name is the query's name; ``_PRIORITY`` below picks the first 50.
 """
 
 from __future__ import annotations
@@ -22,6 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from npm_extraction_server_spark.operators.registry import (  # noqa: E402
+    ORACLE_SQL,
+    SPARK_QUERIES,
+    query,
+)
 
 _SHIPPED: set[str] = set()
 
@@ -49,7 +60,9 @@ def _pages_from_documents(spark: SparkSession, sf_dir: str, limit: int | None = 
     import pandas as pd
     from pyspark.sql import types as T
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    from npm_extraction_server_spark.operators.suite import _t
+
+    docs = _t(spark, sf_dir, "documents")
     if limit:
         docs = docs.filter(F.col("doc_id") < limit)
 
@@ -109,81 +122,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from npm_extraction_server_spark.operators.suite import SPARK_QUERIES
-
-    extra: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        "kg_pipeline_triples": _kg_pipeline_triples,
-        "kg_lineage": _kg_lineage,
-        "semver_resolve": _semver_resolve,
-        "kg_entity_linking": _kg_entity_linking,
-        "kg_user_index": _kg_user_index,
-        "kg_incremental": _kg_incremental,
-        "mm_media_features": _mm_media_features,
-        "mm_audio_features": _mm_audio_features,
-        "mm_audio_decimate": _mm_audio_decimate,
-        "mm_image_features": _mm_image_features,
-        "mm_image_resize": _mm_image_resize,
-        "mm_video_features": _mm_video_features,
-        "mm_video_sample": _mm_video_sample,
-        "tar_members": _tar_members,
-        "tar_components": _tar_components,
-        "kg_triples_doap": _kg_triples_doap,
-        "kg_bgp_version_meta": _kg_bgp_version_meta,
-        "kg_bgp_dep_chain": _kg_bgp_dep_chain,
-        "kg_bgp_optional_deps": _kg_bgp_optional_deps,
-        "kg_bgp_union_labels": _kg_bgp_union_labels,
-        "kg_bgp_construct_labels": _kg_bgp_construct_labels,
-        "kg_bgp_dep_counts": _kg_bgp_dep_counts,
-        "kg_describe": _kg_describe,
-        "kg_bgp_ask": _kg_bgp_ask,
-        "kg_void_stats": _kg_void_stats,
-        "kg_bgp_minus_deps": _kg_bgp_minus_deps,
-        "kg_bgp_exists_deps": _kg_bgp_exists_deps,
-        "kg_bgp_bind": _kg_bgp_bind,
-        "kg_bgp_path_ops": _kg_bgp_path_ops,
-        "kg_bgp_values": _kg_bgp_values,
-        "kg_bgp_group_concat": _kg_bgp_group_concat,
-        "kg_bgp_subquery": _kg_bgp_subquery,
-        "kg_trig_roundtrip": _kg_trig_roundtrip,
-        "kg_bgp_quads_meta": _kg_bgp_quads_meta,
-        "kg_bgp_graph_const": _kg_bgp_graph_const,
-        "kg_bgp_topk_deps": _kg_bgp_topk_deps,
-        "kg_transitive_deps": _kg_transitive_deps,
-        "kg_dep_assoc": _kg_dep_assoc,
-        "web_outlinks": _web_outlinks,
-        "web_url_normalize": _web_url_normalize,
-        "web_main_content": _web_main_content,
-        "web_host_degree": _web_host_degree,
-        "web_cocitation": _web_cocitation,
-        "web_host_pagerank": _web_host_pagerank,
-        "web_hits": _web_hits,
-        "web_salsa": _web_salsa,
-        "web_trustrank": _web_trustrank,
-        "web_redirects": _web_redirects,
-        "web_anchor_text": _web_anchor_text,
-        "web_crawl_schedule": _web_crawl_schedule,
-        "web_url_patterns": _web_url_patterns,
-        "web_sitemap_frontier": _web_sitemap_frontier,
-        "warc_roundtrip": _warc_roundtrip,
-        "warc_cdx": _warc_cdx,
-        "warc_wet_text": _warc_wet_text,
-        "warc_wat_outlinks": _warc_wat_outlinks,
-        "warc_revisits": _warc_revisits,
-        "web_anchor_tfidf": _web_anchor_tfidf,
-        "kg_link_pred_rank": _kg_link_pred_rank,
-        "kg_link_pred_metrics": _kg_link_pred_metrics,
-        "kg_shacl_report": _kg_shacl_report,
-        "kg_prov_triples": _kg_prov_triples,
-        "kg_property_graph": _kg_property_graph,
-        "kg_char_sets": _kg_char_sets,
-        "kg_graph_hash": _kg_graph_hash,
-        "kg_text_mentions": _kg_text_mentions,
-        "kg_truth_fusion": _kg_truth_fusion,
-        "kg_truth_trust": _kg_truth_trust,
-        "kg_sparql_text_agg": _kg_sparql_text_agg,
-        "kg_sparql_text_topk": _kg_sparql_text_topk,
-        "kg_sparql_text_path": _kg_sparql_text_path,
-    }
+    from npm_extraction_server_spark.operators import suite  # noqa: F401  (registers)
 
     def _wrap(fn):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,419 +132,44 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         wrapped.__name__ = getattr(fn, "__name__", "query")
         return wrapped
 
-    merged = {**SPARK_QUERIES, **extra}
-    # Deliberate ordering: the driver's correctness run has recorded
-    # exactly the FIRST 50 dict entries in rounds 1-3, so the head of
-    # this dict is curated to cover EVERY operator family (scan/join/
-    # agg/window, TPC-H, dedup, text, retrieval, similarity, graph,
-    # lakehouse snapshots, sketches, sampling/packing, KG pipeline,
-    # multimodal, tarballs). Entries past the head are the
-    # long-recorded-green siblings (3 rounds of driver passes + local
-    # tools/check_oracles.py runs archived in CORRECTNESS_FULL_r*.json).
-    head = [n for n in _PRIORITY if n in merged]
-    tail = [n for n in merged if n not in _PRIORITY]
-    return {name: _wrap(merged[name]) for name in head + tail}
+    # _PRIORITY first (a misspelt name raises KeyError), then the rest
+    # in registration order: suite.py's queries, then this module's.
+    tail = sorted((n for n in SPARK_QUERIES if n not in _PRIORITY),
+                  key=lambda n: SPARK_QUERIES[n].__module__ == __name__)
+    return {name: _wrap(SPARK_QUERIES[name]) for name in _PRIORITY + tail}
 
 
-# The curated driver-budget head (see queries()); keep <= 50 entries
-# and keep every family represented when adding queries.
+# The curated driver-budget head: the driver's correctness run records
+# exactly the FIRST 50 queries() entries, so these 50 go first. Rule:
+# give the head to queries with no driver record yet, keep every
+# family (scan/join/agg/window, TPC-H, dedup, text, retrieval,
+# similarity, graph, lakehouse snapshots, sketches, sampling, events,
+# KG/BGP, web, WARC) represented, and demote only a query that is
+# hard-green in the committed CORRECTNESS_FULL_r*.json self-runs. Each
+# swap's reasons are in git history and ROUND*.md.
 _PRIORITY: list[str] = [
-    # Curation principle (round-3 VERDICT item 1, reaffirmed r4): the
-    # driver records exactly the FIRST 50 queries() entries each
-    # round, so the head holds queries with NO prior driver record —
-    # everything demoted is green in CORRECTNESS_r01-r04 (driver) or
-    # the committed CORRECTNESS_FULL_r04.json self-run; this round's
-    # full self-run is CORRECTNESS_FULL_r05.json.
-    # round-5 additions (SPARQL quads/modifiers/paths/VALUES/1.1 aggs,
-    # TriG parse round trip, incremental PageRank, betweenness,
-    # IVF-PQ recall, Gopher rules, equality deletes)
-    # batch-27 swap: sim_ivfpq_recall -> sim_knn_components (the
-    # mutual-kNN graph + connected-components semantic-cluster
-    # composition, hard-oracled; the rows-only recall instrument
-    # keeps its pytest floor and is green in the FULL self-runs)
     "text_gopher_rules", "sim_knn_components", "dedup_containment",
-    "graph_pagerank_incr", "kg_bgp_bind",
-    # batch-29 swap: snap_zorder -> snap_branch_diff (diverged-refs
-    # row diff over the branch machinery; zorder is hard-green in the
-    # committed FULL self-runs at both sfs with its pruning gate
-    # asserted inside the query itself)
-    "snap_eq_delete", "snap_branch_diff",
-    "kg_bgp_path_ops",
-    # batch-18 swap: kg_bgp_values / kg_bgp_exists_deps ->
-    # kg_rdfs_entail / kg_owl_entail (RDFS rho-df + OWL-Horst closure
-    # materialization; both demoted BGP forms are hard-green in the
-    # committed FULL self-runs at both sfs, and BGP keeps bind /
-    # path_ops / quads_meta / subquery / dep_chain in the head)
-    "kg_rdfs_entail", "kg_owl_entail",
-    # round-5 late additions (HyperBall, SPARQL subquery) — demoted
-    # q18_large_orders / snap_dedup_incr / graph_mis to the tail (each
-    # family keeps >= 2 head slots; all three green in the committed
-    # CORRECTNESS_FULL_r04/r05 self-runs + the judge's independent
-    # round-4 re-run)
-    # batch-20 swap: graph_hyperball -> graph_triads (full 16-class
-    # directed triad census, brute-force cross-checked; hyperball is
-    # hard-green in the committed FULL self-runs at both sfs and
-    # keeps its nf sibling + 2M probe)
-    "graph_triads",
-    # batch-22 swap: graph_betweenness -> graph_ppr_push (ACL local
-    # push with exact integer mass conservation; betweenness is
-    # hard-green in the committed FULL self-runs at both sfs with its
-    # own Brandes pytest + 2M probe)
-    # batch-30 swap: graph_ppr_push -> graph_conductance (the
-    # community-quality rollup composing on the Louvain pass already
-    # in this head; ppr_push is hard-green in the committed FULL
-    # self-runs at both sfs with conservation pinned by pytest+probe)
-    "graph_conductance",
-    # round-5 final additions: embedding link-prediction eval (TransE
-    # filtered ranking on the md5 grid — demoted web_hits and
-    # web_crawl_schedule, both green in the committed FULL self-runs)
-    "kg_link_pred_rank", "kg_link_pred_metrics",
-    # SHACL-style shape validation report (demoted sketch_bloom — green
-    # in the committed FULL self-runs; sketch family keeps
-    # sketch_distinct in the head)
-    "kg_shacl_report",
-    # PROV-O provenance star per source document (demoted
-    # sample_weighted — green in the committed FULL self-run; sampling
-    # keeps sample_k_per_domain in the head)
-    # batch-17 swap: kg_prov_triples -> kg_ifp_smush (IFP entity
-    # smushing; prov_triples is hard-green in the committed FULL
-    # self-runs at both sfs)
-    "kg_ifp_smush",
-    # property-graph export (demoted text_collocations — green in the
-    # committed FULL self-run; text family keeps gopher/hashed/bpe)
-    # batch-17 swap: kg_property_graph -> graph_simrank (all-integer
-    # SimRank; property_graph is hard-green in the committed FULL
-    # self-runs at both sfs)
-    # batch-26 swap: graph_simrank -> graph_louvain (semi-synchronous
-    # one-level Louvain with exact integer gains; simrank is
-    # hard-green in the committed FULL self-runs at both sfs with its
-    # per-ER-block contract pinned by probe + pytest)
-    # batch-28 swap: graph_louvain -> graph_louvain_l2 (the two-level
-    # hierarchy runs the level-1 pass AND the weighted contraction on
-    # the same code path; L1 stays hard-green in the FULL self-runs)
-    "graph_louvain_l2",
-    # SPARQL text front-end (demoted j11_asof_forward and sql_lang_stats
-    # — both green in the committed FULL self-runs; TPC-H/SQL keeps
-    # q6_forecast_revenue in the head)
-    # batch-32 swap: kg_sparql_text_agg -> kg_text_mentions (the
-    # north-star's prose-mention extraction source; the SPARQL text
-    # front-end is hard-green in the committed FULL self-runs at both
-    # sfs and parses onto the BGP algebra pinned across this head)
-    "kg_text_mentions",
-    # RDFa-lite end-to-end extraction (final session; demoted
-    # kg_sparql_text_topk — TakeOrderedAndProject coverage moved to
-    # text_kn_bigram in this head, and the text front-end keeps
-    # kg_sparql_text_agg; green in the refreshed FULL self-run)
-    "kg_rdfa_triples",
-    # kg_sparql_text_path and kg_bgp_topk_deps demoted for
-    # graph_temporal_reach / snap_meta_tables (text front-end keeps
-    # agg+topk in the head; TakeOrdered stays covered by
-    # kg_sparql_text_topk; both green in the refreshed FULL self-run)
-    # continuation-session additions: Borůvka MSF, greedy coloring,
-    # maximal matching, LPA communities, TextRank, characteristic
-    # sets, and the ra_grid-extended link prediction (demoted
-    # graph_hyperball_nf / graph_harmonic / graph_pagerank_weighted /
-    # graph_kcore / text_hashed_features / kg_bgp_ask /
-    # web_host_degree — every one green in the committed
-    # CORRECTNESS_FULL_r05.json self-run; each family keeps head
-    # slots: hyperball keeps graph_hyperball, pagerank keeps
-    # graph_pagerank_incr, text keeps gopher/bpe_train, BGP keeps
-    # version_meta/dep_chain/void, web keeps web_url_normalize)
-    "graph_lpa_communities", "text_textrank",
-    # batch-24 swap: kg_char_sets -> kg_graph_hash (WL canonical
-    # RDF-graph fingerprints over the SAME oracle-able KG slice
-    # construction; char_sets is hard-green in the committed FULL
-    # self-runs at both sfs)
-    "kg_graph_hash",
-    # batch-33 swaps: sim_mrl_verified and graph_fastrp join the head
-    # for graph_wl_classes and text_dsir_weights (both hard-green in
-    # the committed FULL self-runs at both sfs; WL machinery stays
-    # exercised via kg_graph_hash in this head, DSIR via
-    # text_dsir_sample on the same code path)
-    "sim_mrl_verified", "graph_fastrp",
-    # WL refinement + DSIR (this session's additions; demoted
-    # graph_link_predict — the ONE head entry with a prior driver
-    # record (r1-r4) — and graph_eccentricity, which shares
-    # _multi_source_sweep with closeness/harmonic; both green in the
-    # committed FULL self-run. graph_wl_colors / text_dsir_sample ride
-    # the same code paths as the two recorded here.)
-    # local clustering coefficient (final session; demoted
-    # graph_coreness — the ascending-threshold peel machinery stays
-    # pinned by graph_trussness in this head + its own pytest, and
-    # coreness is hard-green in the refreshed FULL self-runs)
-    # batch-17 swap: graph_clustering -> web_trustrank (TrustRank +
-    # spam mass; clustering is hard-green in the committed FULL
-    # self-runs at both sfs and pinned by its own pytest)
-    # batch-34 swap: web_trustrank -> kg_truth_fusion (conflicting-
-    # fact truth discovery — the claim-level source-reliability
-    # fixpoint next to trustrank's link-level one; trustrank is
-    # hard-green in the committed FULL self-runs at both sfs, and the
-    # web family keeps url_patterns/anchor_tfidf/template_lines in
-    # this head)
-    "kg_truth_fusion",
-    # bow-tie census + truss decomposition (this session; demoted
-    # graph_assortativity — the simplest integer-moment aggregation in
-    # the family — and snap_meta_tables (snapshots keep stats_prune /
-    # eq_delete / zorder in the head); both green in the committed
-    # FULL self-run)
-    # batch-17 swap: graph_trussness -> web_redirects (pointer-
-    # doubling redirect resolution; trussness is hard-green in the
-    # committed FULL self-runs and pinned by its clique probe)
-    # batch-25 swap: web_redirects -> web_url_patterns (URL template
-    # mining; redirects is hard-green in the committed FULL self-runs
-    # at both sfs, its pointer-doubling loop pinned by the 1,023-hop
-    # probe + pytest)
-    "web_url_patterns",
-    # GROUPING SETS + batch interval join (final session; demoted
-    # sim_range_search — sim keeps ivfpq_recall and mmr_diverse — and
-    # q19_disjunctive_bands — SQL/TPC-H keeps g4 + the plan-asserted
-    # q19 pytest; both hard-green in the refreshed FULL self-run)
-    "g4_grouping_sets", "j13_interval_join",
-    # batch-27 swap: ts_autocorr -> ts_theilsen (exact pairwise-median
-    # robust trend on the same dense grid; autocorr is hard-green in
-    # the committed FULL self-runs at both sfs with its own pytest)
-    "ts_theilsen",
-    # joins / TPC-H / SQL surface: q19_disjunctive_bands (above)
-    # text / retrieval: text_textrank + text_gopher_rules (above)
-    # batch-24 swap: sample_k_per_domain -> sample_kcenter (Gonzalez
-    # k-center coreset selection; k_per_domain is hard-green in the
-    # committed FULL self-runs at both sfs and its window machinery
-    # is shared with the recorded w1/w4 family)
-    "sample_kcenter",
-    # SPARQL 1.1 Update over the triple store (late round-5 addition;
-    # demoted graph_labelprop and graph_ppr — both green in the
-    # committed FULL self-runs and the judge's round-4 independent
-    # re-run)
-    "kg_sparql_update",
-    # Good-Turing rare-tail table + Goh-Barabasi burstiness (final
-    # session; demoted kg_sparql_load — the update family keeps
-    # kg_sparql_update, and LOAD rides the same store machinery —
-    # and graph_topo_layers, whose one-action-per-round loop is
-    # pinned by its own deep-DAG pytest probes; both hard-green in
-    # the refreshed CORRECTNESS_FULL_r05.json)
-    "text_good_turing",
-    # Gini activity concentration on the exact 1e-8 grid (continuation
-    # session; demoted events_burstiness — the family's simplest
-    # moment aggregation, hard-green in the refreshed FULL self-runs;
-    # events keeps 6 head slots incl. survival/dau_wau/attribution)
-    "events_gini",
-    # last-touch attribution (final session; demoted snap_stats_prune
-    # — snapshots keep eq_delete + zorder in the head, and the
-    # stats-pruning path is green in the refreshed FULL self-run)
-    # DAU/WAU sliding-distinct (final session; demoted sketch_distinct
-    # — the sketch family's KMV/HLL paths are also exercised by
-    # sketch_hll/sketch_set_ops in the FULL self-runs, all green)
-    "events_dau_wau",
-    # Kaplan-Meier time-to-conversion survival (final session; demoted
-    # graph_msf — Borůvka stays pinned by its own pytest and is
-    # hard-green in the refreshed FULL self-runs, and the graph family
-    # keeps 8 head slots incl. lpa/wl/clustering/trussness)
-    "events_survival",
-    # bipartite analytics (continuation additions; demoted
-    # mm_audio_features and tar_members — BOTH already hold driver
-    # records from rounds 1-4 (the only head entries that did) and
-    # stay green in the committed FULL self-runs, so these two slots
-    # are the cheapest way to give never-recorded queries a record)
-    # KG / BGP layer (kg_void_stats demoted — its stats feed the
-    # VoID-ordering pytest and it is green in the FULL self-run)
-    "kg_bgp_dep_chain",
-    # seasonally-adjusted anomaly scan + langid confusion-matrix eval
-    # (final session; demoted graph_bowtie and graph_butterflies —
-    # both hard-green in the committed FULL self-run; the graph
-    # family keeps 11 head slots incl. trussness on the same peel
-    # machinery as bowtie's SCC dependencies)
-    # batch-25 swap: text_langid_eval -> text_lang_mix (per-segment
-    # code-switching detection carries the same marker heuristic the
-    # langid eval scored, plus the majority/ppm rollup; langid_eval is
-    # hard-green in the committed FULL self-runs at both sfs)
-    # batch-29 swap: events_seasonality -> events_ab_test (exact
-    # decimal(38,0) chi-square experiment scorecard; seasonality is
-    # hard-green in the committed FULL self-runs at both sfs and its
-    # variance test is pinned by the diurnal-plant pytest)
-    "events_ab_test", "text_lang_mix",
-    # final-session additions: Zipf OLS fit, Heaps vocabulary curve,
-    # Kneser-Ney bigram LM, MMR diversified retrieval, CUSUM
-    # changepoint scan. Demoted graph_coloring / graph_matching /
-    # graph_bipartite_project (graph family keeps 12+ head slots),
-    # kg_sparql_update_graphs (update family keeps update + load) and
-    # kg_bgp_version_meta (BGP keeps dep_chain/bind/path_ops/values/
-    # exists/quads_meta/subquery/char_sets) — all five hard-green in
-    # the committed CORRECTNESS_FULL_r05.json self-run.
-    # batch-17 (second continuation session): the mojibake/encoding-
-    # noise detector and RAKE keyword extraction — demoted
-    # text_zipf_fit / text_heaps_curve (both hard-green in the
-    # committed CORRECTNESS_FULL_r05.json self-runs at both sfs;
-    # text_good_turing keeps the corpus-health axis in the head)
-    # batch-31 swaps: text_mojibake -> warc_revisits (CDX revisit
-    # consolidation — the Common-Crawl storage-dedup rule; mojibake is
-    # hard-green in the committed FULL self-runs at both sfs with its
-    # hand-computed pytest) and text_rake -> web_anchor_tfidf (the
-    # anchor-term relevance index; rake is hard-green in the committed
-    # FULL self-runs at both sfs, its sentinel split pinned by pytest)
-    "warc_revisits", "web_anchor_tfidf",
-    # batch-21 swap: kg_trig_roundtrip -> text_fertility (per-lang BPE
-    # fertility; trig roundtrip is hard-green in the committed FULL
-    # self-runs at both sfs and pinned by the 5-format parser pytests)
-    "text_fertility",
-    # batch-19 swap: kg_bgp_quads_meta / kg_bgp_subquery ->
-    # text_idf_drift / events_paths (cross-snapshot IDF drift and
-    # user-journey trigrams; both demoted BGP forms are hard-green in
-    # the committed FULL self-runs at both sfs — BGP keeps bind /
-    # path_ops / dep_chain and the quad model stays pinned by
-    # kg_bgp_graph_const in the tail plus its pytest suite)
-    "text_idf_drift", "events_paths",
-    # batch-23 swap: events_attribution -> events_entropy_rate (the
-    # Markov predictability scalar; attribution is hard-green in the
-    # committed FULL self-runs at both sfs with its 50M-event probe)
-    "events_entropy_rate",
-    # batch-25 swap: kg_dep_assoc -> kg_direct_mapping (W3C RDB2RDF
-    # Direct Mapping — the relational entrance into the triple model;
-    # dep_assoc is hard-green in the committed FULL self-runs at both
-    # sfs with its A-priori pruning pinned by pytest)
-    "kg_direct_mapping",
-    # char-bigram entropy (final session; demoted text_dup_spans —
-    # FULL-green, the ExactSubstr path also pinned by its own pytest)
-    "text_char_entropy",
-    # batch-32 swap: sim_mmr_diverse -> sim_sq8_verified (the SQ8 leg
-    # of the ANN compression ladder; MMR is hard-green in the
-    # committed FULL self-runs at both sfs with its exact-decimal
-    # rounding trap pinned by pytest)
-    "sim_sq8_verified",
-    # RFM segment matrix with histogram-derived quantile thresholds
-    # (continuation session; demoted events_changepoint — FULL-green,
-    # its CUSUM semantics pinned by a dedicated pytest; events keeps
-    # 7 head slots)
-    "events_rfm",
-    # Katz centrality (all-integer Horner — this session)
-    "graph_katz",
-    # batch-24 swap: web_salsa -> web_template_lines (CCNet-style
-    # per-site boilerplate line removal; salsa is hard-green in the
-    # committed FULL self-runs at both sfs and the web family keeps
-    # trustrank + redirects + template_lines in the head)
-    "web_template_lines",
+    "graph_pagerank_incr", "kg_bgp_bind", "snap_eq_delete",
+    "snap_branch_diff", "kg_bgp_path_ops", "kg_rdfs_entail",
+    "kg_owl_entail", "graph_triads", "graph_conductance",
+    "kg_link_pred_rank", "kg_link_pred_metrics", "kg_shacl_report",
+    "kg_ifp_smush", "graph_louvain_l2", "kg_text_mentions",
+    "kg_rdfa_triples", "graph_lpa_communities", "text_textrank",
+    "kg_graph_hash", "sim_mrl_verified", "graph_fastrp", "kg_truth_fusion",
+    "web_url_patterns", "g4_grouping_sets", "j13_interval_join",
+    "ts_theilsen", "sample_kcenter", "kg_sparql_update", "text_good_turing",
+    "events_gini", "events_dau_wau", "events_survival", "kg_bgp_dep_chain",
+    "events_ab_test", "text_lang_mix", "warc_revisits", "web_anchor_tfidf",
+    "text_fertility", "text_idf_drift", "events_paths",
+    "events_entropy_rate", "kg_direct_mapping", "text_char_entropy",
+    "sim_sq8_verified", "events_rfm", "graph_katz", "web_template_lines",
 ]
 
 
 def oracle_sql() -> dict[str, str]:
-    from npm_extraction_server_spark.operators.suite import ORACLE_SQL
+    from npm_extraction_server_spark.operators import suite  # noqa: F401  (registers)
 
-    # kg_pipeline_triples / kg_lineage and the custom stateful ops are
-    # non-SQL-expressible -> rows-only (mm_media_features too: DuckDB
-    # core sha256 only hashes VARCHAR, not the binary payloads). Every
-    # rows-only query has a hard-oracle SIBLING exercising the same
-    # code path: kg_pipeline_triples/kg_lineage -> kg_triples_doap,
-    # dedup_minhash -> dedup_minhash_verified, dedup_simhash ->
-    # dedup_simhash_verified, sim_lsh_topk -> sim_lsh_verified,
-    # sim_ivf_topk -> sim_ivf_verified, kg_entity_linking (J7 CC) ->
-    # graph_components, mm_media_features -> mm_audio_features.
-    # kg_user_index and semver_resolve HAVE hard oracles: the synthetic
-    # corpus is a pure function of doc_id (sources/synth.py), so DuckDB
-    # re-derives the expected output from documents.doc_id alone.
-    return {**ORACLE_SQL,
-            "kg_user_index": _KG_USER_INDEX_ORACLE,
-            "semver_resolve": _SEMVER_RESOLVE_ORACLE,
-            "tar_members": _TAR_MEMBERS_ORACLE,
-            "tar_components": _TAR_COMPONENTS_ORACLE,
-            "mm_audio_features": _MM_AUDIO_ORACLE,
-            "mm_audio_decimate": _MM_AUDIO_DECIMATE_ORACLE,
-            "mm_image_features": _MM_IMAGE_ORACLE,
-            "mm_image_resize": _MM_IMAGE_RESIZE_ORACLE,
-            "mm_video_features": _MM_VIDEO_ORACLE,
-            "mm_video_sample": _MM_VIDEO_SAMPLE_ORACLE,
-            "kg_triples_doap": _KG_TRIPLES_DOAP_ORACLE,
-            "kg_bgp_version_meta": _KG_BGP_VERSION_META_ORACLE,
-            "kg_bgp_dep_chain": _KG_BGP_DEP_CHAIN_ORACLE,
-            "kg_bgp_optional_deps": _KG_BGP_OPTIONAL_DEPS_ORACLE,
-            "kg_bgp_union_labels": _KG_BGP_UNION_LABELS_ORACLE,
-            "kg_bgp_construct_labels": _KG_BGP_CONSTRUCT_ORACLE,
-            "kg_bgp_dep_counts": _KG_BGP_DEP_COUNTS_ORACLE,
-            "kg_describe": _KG_DESCRIBE_ORACLE,
-            "kg_bgp_ask": _KG_BGP_ASK_ORACLE,
-            "kg_void_stats": _KG_VOID_STATS_ORACLE,
-            "kg_char_sets": _KG_CHAR_SETS_ORACLE,
-            "kg_graph_hash": _KG_GRAPH_HASH_ORACLE,
-            "kg_text_mentions": _KG_TEXT_MENTIONS_ORACLE,
-            "kg_truth_fusion": _KG_TRUTH_FUSION_ORACLE,
-            "kg_truth_trust": _KG_TRUTH_TRUST_ORACLE,
-            "kg_bgp_minus_deps": _KG_BGP_MINUS_DEPS_ORACLE,
-            "kg_bgp_exists_deps": _KG_BGP_EXISTS_DEPS_ORACLE,
-            "kg_bgp_bind": _KG_BGP_BIND_ORACLE,
-            "kg_bgp_path_ops": _KG_BGP_PATH_OPS_ORACLE,
-            "kg_bgp_values": _KG_BGP_VALUES_ORACLE,
-            "kg_bgp_group_concat": _KG_BGP_GROUP_CONCAT_ORACLE,
-            "kg_bgp_subquery": _KG_BGP_SUBQUERY_ORACLE,
-            "kg_trig_roundtrip": _KG_TRIG_ROUNDTRIP_ORACLE,
-            "kg_bgp_quads_meta": _KG_BGP_QUADS_META_ORACLE,
-            "kg_bgp_graph_const": _KG_BGP_GRAPH_CONST_ORACLE,
-            "kg_bgp_topk_deps": _KG_BGP_TOPK_DEPS_ORACLE,
-            "kg_transitive_deps": _KG_TRANSITIVE_DEPS_ORACLE,
-            "kg_dep_assoc": _KG_DEP_ASSOC_ORACLE,
-            "kg_incremental": _KG_INCREMENTAL_ORACLE,
-            "web_outlinks": _WEB_OUTLINKS_ORACLE,
-            "web_url_normalize": _WEB_URL_NORMALIZE_ORACLE,
-            "web_main_content": _WEB_MAIN_CONTENT_ORACLE,
-            "web_host_degree": _WEB_HOST_DEGREE_ORACLE,
-            "web_cocitation": _WEB_COCITATION_ORACLE,
-            "web_host_pagerank": _WEB_HOST_PAGERANK_ORACLE,
-            "web_hits": _WEB_HITS_ORACLE,
-            "web_url_patterns": _WEB_URL_PATTERNS_ORACLE,
-            "warc_revisits": _WARC_REVISITS_ORACLE,
-            "web_anchor_tfidf": _WEB_ANCHOR_TFIDF_ORACLE,
-            "web_salsa": _WEB_SALSA_ORACLE,
-            "web_trustrank": _WEB_TRUSTRANK_ORACLE,
-            "web_redirects": _WEB_REDIRECTS_ORACLE,
-            "web_anchor_text": _WEB_ANCHOR_TEXT_ORACLE,
-            "web_crawl_schedule": _WEB_CRAWL_SCHEDULE_ORACLE,
-            "web_sitemap_frontier": _WEB_SITEMAP_FRONTIER_ORACLE,
-            "warc_roundtrip": _WARC_ROUNDTRIP_ORACLE,
-            "warc_cdx": _WARC_CDX_ORACLE,
-            "warc_wet_text": _WARC_WET_TEXT_ORACLE,
-            "warc_wat_outlinks": _WARC_WAT_OUTLINKS_ORACLE,
-            "kg_link_pred_rank": _KG_LINK_PRED_RANK_ORACLE,
-            "kg_link_pred_metrics": _KG_LINK_PRED_METRICS_ORACLE,
-            "kg_shacl_report": _KG_SHACL_ORACLE,
-            "kg_prov_triples": _KG_PROV_ORACLE,
-            "kg_property_graph": _KG_PROPERTY_GRAPH_ORACLE,
-            "kg_sparql_text_agg": _KG_BGP_DEP_COUNTS_ORACLE,
-            "kg_sparql_text_topk": _KG_BGP_TOPK_DEPS_ORACLE,
-            "kg_sparql_text_path": _KG_BGP_PATH_OPS_ORACLE}
-
-
-# DuckDB replica of sources/synth.py synth_package(i)'s maintainer facts:
-# h = first 8 bytes of sha256("pkg:{i}") big-endian; owner = dev{h%97};
-# one doap:maintainer triple on the bundle IRI + one per version module
-# IRI (kernel/context.py:202 + kernel/usermap.py:51).
-_KG_USER_INDEX_ORACLE = """
-WITH base AS (
-  SELECT doc_id AS i,
-         ('0x' || substr(sha256('pkg:' || doc_id), 1, 16))::UBIGINT AS h
-  FROM documents WHERE doc_id < 100
-),
-pkg AS (
-  SELECT i, h,
-    CASE WHEN i=0 THEN 'hotpkg' WHEN i=1 THEN 'megalib' WHEN i=2 THEN 'ultrautil'
-         WHEN h%11=0 THEN '@org' || (h%7) || '/pkg-' || i
-         ELSE 'pkg-' || i END AS name,
-    'dev' || (h%97) AS owner,
-    (1 + (h%3))::INT AS n_versions
-  FROM base
-),
-vers AS (
-  SELECT i, name, owner,
-    ((1+(h%2)) || '.' || v || '.' || ((h>>4)%10)) AS ver
-  FROM pkg, unnest(generate_series(0, n_versions-1)) AS t(v)
-),
-mentions AS (
-  SELECT owner, 'http://example.org/bundles/npm/' || name AS iri FROM pkg
-  UNION ALL
-  SELECT owner, 'http://example.org/bundles/npm/' ||
-     replace(replace(name,'@','%40'),'/','%2F') || '/' || ver AS iri FROM vers
-)
-SELECT 'http://example.org/users/npm/' || owner AS user_iri,
-       string_agg(DISTINCT iri, ',' ORDER BY iri) AS maintains,
-       count(*)::BIGINT AS n_mentions
-FROM mentions GROUP BY 1
-"""
+    return dict(ORACLE_SQL)
 
 
 # DuckDB replica of the J1 semver-resolution join over the synthetic
@@ -676,7 +240,6 @@ _RNG_ENC_CASE = """CASE rng WHEN '^1.0.0' THEN '%5E1.0.0'
          ELSE rng END"""
 
 
-
 _SEMVER_RESOLVE_ORACLE = """
 WITH docs AS (
   SELECT doc_id AS i,
@@ -731,35 +294,12 @@ FROM edges e LEFT JOIN targets t USING (dep_pkg)
 """
 
 
-# Transitive dependency closure from hotpkg's versions over the
-# RESOLVED dependency graph: the semver-resolution oracle (verbatim, as
-# a CTE) gives the concrete version->version edges; a recursive CTE
-# walks them. Mirrors _kg_transitive_deps (BFS over resolve_ranges
-# output). hotpkg is doc 0, so its version list re-derives standalone.
-_KG_TRANSITIVE_DEPS_ORACLE = (
-    "WITH RECURSIVE resolved AS (" + _SEMVER_RESOLVE_ORACLE + """),
-re AS (SELECT src_bundle || '@' || src_version AS src,
-              dep_pkg || '@' || resolved_version AS dst
-       FROM resolved WHERE resolved_version IS NOT NULL),
-""" + _SYNTH_VERS_CTE.format(lo=0, hi=10).strip().rstrip() + """,
-reach(node_id, dist) AS (
-    SELECT DISTINCT name || '@' || ver, 0 FROM vers
-    UNION
-    SELECT re.dst, r.dist + 1
-    FROM reach r JOIN re ON re.src = r.node_id
-    WHERE r.dist < 30
-)
-SELECT node_id, min(dist)::INT AS dist FROM reach GROUP BY node_id
-""")
-
-
 # Market-basket association rules over dependency baskets. The synth
 # vers replica re-derives each basket (bundle -> distinct valid-semver
 # dep targets across its versions) from doc_id arithmetic alone:
 # trio deps when hv%10 < 8, the pkg-(hv%1000) tail dep when hv%9 <= 5
 # (ranges 6-8 of _RANGES fail valid_range, matching sources/synth.py).
-_KG_DEP_ASSOC_ORACLE = (
-    "WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
 bitems AS (
   SELECT DISTINCT name AS b,
     CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
@@ -802,9 +342,7 @@ SELECT antecedent, consequent, n::BIGINT AS n_baskets,
          // (2*supp_a*supp_c))::DOUBLE / 100000000.0) AS lift
 FROM r
 """)
-
-
-def _kg_dep_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kg_dep_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association rules over dependency baskets — "packages that
     depend on X also depend on Y" (A-priori, pairwise; see
     operators/assoc.py for the exactness + scale contract): basket =
@@ -824,7 +362,26 @@ def _kg_dep_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_supp=2)
 
 
-def _kg_transitive_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
+# Transitive dependency closure from hotpkg's versions over the
+# RESOLVED dependency graph: the semver-resolution oracle (verbatim, as
+# a CTE) gives the concrete version->version edges; a recursive CTE
+# walks them. Mirrors kg_transitive_deps (BFS over resolve_ranges
+# output). hotpkg is doc 0, so its version list re-derives standalone.
+@query("WITH RECURSIVE resolved AS (" + _SEMVER_RESOLVE_ORACLE + """),
+re AS (SELECT src_bundle || '@' || src_version AS src,
+              dep_pkg || '@' || resolved_version AS dst
+       FROM resolved WHERE resolved_version IS NOT NULL),
+""" + _SYNTH_VERS_CTE.format(lo=0, hi=10).strip().rstrip() + """,
+reach(node_id, dist) AS (
+    SELECT DISTINCT name || '@' || ver, 0 FROM vers
+    UNION
+    SELECT re.dst, r.dist + 1
+    FROM reach r JOIN re ON re.src = r.node_id
+    WHERE r.dist < 30
+)
+SELECT node_id, min(dist)::INT AS dist FROM reach GROUP BY node_id
+""")
+def kg_transitive_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The question a dependency KG exists to answer: everything
     REACHABLE from a package through resolved dependency edges.
     Composition of three engine pieces — extraction (docs), the semver
@@ -922,23 +479,6 @@ def _web_links_sql() -> str:
 
 _WEB_LINKS_SQL = _web_links_sql()
 
-_WEB_OUTLINKS_ORACLE = ("WITH " + _WEB_LINKS_SQL
-                        + "SELECT url, dst_url, dst_host FROM links")
-
-# the boilerplate remover must return the article prose byte-identical
-# with exactly one surviving content block — the north text invariant
-_WEB_MAIN_CONTENT_ORACLE = f"""
-SELECT 'http://crawl.example.org/' || (doc_id % 100) || '/doc-' || doc_id
-           AS url,
-       text AS main_text,
-       1::INT AS n_content_blocks
-FROM documents WHERE doc_id < {_WEB_HI}
-"""
-
-_WEB_HOST_DEGREE_ORACLE = ("WITH " + _WEB_LINKS_SQL + """
-SELECT dst_host, count(*)::BIGINT AS n_links,
-       count(DISTINCT url)::BIGINT AS n_pages
-FROM links GROUP BY dst_host""")
 
 _WEB_COCITATION_CTE = _WEB_LINKS_SQL + """,
 hosts AS (SELECT DISTINCT url, dst_host FROM links),
@@ -950,30 +490,6 @@ co AS (
     GROUP BY 1, 2
 )
 """
-
-_WEB_COCITATION_ORACLE = ("WITH " + _WEB_COCITATION_CTE
-                          + "SELECT host_a, host_b, weight FROM co")
-
-# An INDEPENDENT DuckDB implementation of the normalization spec (not a
-# generator re-derivation): lowercase scheme+host, strip the scheme's
-# default port, drop the fragment, keep path+query bytes.
-_WEB_URL_NORMALIZE_ORACLE = ("WITH " + _WEB_LINKS_SQL + """
-, raw AS (SELECT DISTINCT dst_url FROM links),
-parts AS (
-    SELECT dst_url,
-           lower(regexp_extract(dst_url, '(?i)^(https?)://', 1)) AS scheme,
-           lower(regexp_extract(dst_url, '(?i)^https?://([^/#?]+)', 1)) AS host,
-           regexp_extract(dst_url, '(?i)^https?://[^/#?]+([^#]*)', 1) AS rest
-    FROM raw
-)
-SELECT dst_url,
-       scheme || '://' ||
-       CASE WHEN scheme = 'http' AND host LIKE '%:80'
-                 THEN substr(host, 1, length(host) - 3)
-            WHEN scheme = 'https' AND host LIKE '%:443'
-                 THEN substr(host, 1, length(host) - 4)
-            ELSE host END || rest AS canonical_url
-FROM parts""")
 
 
 def _web_pagerank_oracle(iterations: int = 5) -> str:
@@ -1005,32 +521,6 @@ def _web_pagerank_oracle(iterations: int = 5) -> str:
     sql += f"""
     SELECT node_id AS host, round(rank, 8) AS rank FROM r{iterations}"""
     return sql
-
-
-_WEB_HOST_PAGERANK_ORACLE = _web_pagerank_oracle(5)
-
-
-def _web_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TrustRank + relative spam mass over the symmetrized host
-    co-citation graph (plans/graph.spam_mass): trust teleports to the
-    'hub*' seed hosts via personalized PageRank; spam mass is the
-    PageRank share not explained by trusted flow. Hard oracle: both
-    power iterations unrolled on the 12-dp grid, the normalizing sums
-    as exact DECIMAL(38,12) aggregates, the share quotient the same
-    IEEE op sequence — bit-identical."""
-    from npm_extraction_server_spark.extract.links import cocitation
-    from npm_extraction_server_spark.plans.graph import spam_mass
-
-    co = cocitation(_web_links_df(spark, sf_dir))
-    edges = (co.select(F.col("host_a").alias("src"),
-                       F.col("host_b").alias("dst"))
-             .unionByName(co.select(F.col("host_b").alias("src"),
-                                    F.col("host_a").alias("dst"))))
-    seeds = (edges.select(F.col("src").alias("node_id")).distinct()
-             .filter(F.col("node_id").startswith("hub")))
-    return (spam_mass(edges, seeds, iterations=5)
-            .select(F.col("node_id").alias("host"), "pr", "tr",
-                    "spam_mass"))
 
 
 def _web_trustrank_oracle(iterations: int = 5) -> str:
@@ -1096,38 +586,31 @@ def _web_trustrank_oracle(iterations: int = 5) -> str:
     return sql
 
 
-_WEB_TRUSTRANK_ORACLE = _web_trustrank_oracle(5)
+@query(_web_trustrank_oracle(5))
+def web_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TrustRank + relative spam mass over the symmetrized host
+    co-citation graph (plans/graph.spam_mass): trust teleports to the
+    'hub*' seed hosts via personalized PageRank; spam mass is the
+    PageRank share not explained by trusted flow. Hard oracle: both
+    power iterations unrolled on the 12-dp grid, the normalizing sums
+    as exact DECIMAL(38,12) aggregates, the share quotient the same
+    IEEE op sequence — bit-identical."""
+    from npm_extraction_server_spark.extract.links import cocitation
+    from npm_extraction_server_spark.plans.graph import spam_mass
+
+    co = cocitation(_web_links_df(spark, sf_dir))
+    edges = (co.select(F.col("host_a").alias("src"),
+                       F.col("host_b").alias("dst"))
+             .unionByName(co.select(F.col("host_b").alias("src"),
+                                    F.col("host_a").alias("dst"))))
+    seeds = (edges.select(F.col("src").alias("node_id")).distinct()
+             .filter(F.col("node_id").startswith("hub")))
+    return (spam_mass(edges, seeds, iterations=5)
+            .select(F.col("node_id").alias("host"), "pr", "tr",
+                    "spam_mass"))
 
 
-def _web_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Redirect-chain resolution (extract/links.resolve_redirects)
-    over a deterministic redirect map on doc_ids < 500: ids >= 490
-    form a 10-cycle, other non-multiples-of-8 redirect one step down
-    (chains up to 7 hops ending at multiples of 8). Pointer doubling
-    must report the TRUE hop count for every resolved chain and mark
-    the cycle block unresolved. Hard oracle: a recursive CTE walks
-    every chain step-by-step (hop cap 16) and classifies terminals
-    identically."""
-    from npm_extraction_server_spark.extract.links import (
-        resolve_redirects,
-    )
-
-    d = F.col("doc_id")
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id").filter(d < 500))
-
-    def u(c):
-        return F.concat(F.lit("http://r.example.org/u/"),
-                        c.cast("long").cast("string"))
-
-    red = (docs.filter((d >= 490) | (d % 8 != 0))
-           .select(u(d).alias("src_url"),
-                   u(F.when(d >= 490, 490 + ((d - 490 + 1) % 10))
-                     .otherwise(d - 1)).alias("dst_url")))
-    return resolve_redirects(red, max_hops=16)
-
-
-_WEB_REDIRECTS_ORACLE = """
+@query("""
     WITH RECURSIVE r AS (
         SELECT 'http://r.example.org/u/' || doc_id AS src,
                'http://r.example.org/u/' ||
@@ -1155,15 +638,33 @@ _WEB_REDIRECTS_ORACLE = """
                  THEN NULL ELSE l.hops END)::BIGINT AS hops,
            (d.src IS NOT NULL OR l.hops > 16) AS unresolved
     FROM last l
-    LEFT JOIN (SELECT DISTINCT src FROM r) d ON d.src = l.cur"""
+    LEFT JOIN (SELECT DISTINCT src FROM r) d ON d.src = l.cur""")
+def web_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Redirect-chain resolution (extract/links.resolve_redirects)
+    over a deterministic redirect map on doc_ids < 500: ids >= 490
+    form a 10-cycle, other non-multiples-of-8 redirect one step down
+    (chains up to 7 hops ending at multiples of 8). Pointer doubling
+    must report the TRUE hop count for every resolved chain and mark
+    the cycle block unresolved. Hard oracle: a recursive CTE walks
+    every chain step-by-step (hop cap 16) and classifies terminals
+    identically."""
+    from npm_extraction_server_spark.extract.links import (
+        resolve_redirects,
+    )
+    from npm_extraction_server_spark.operators.suite import _t
 
+    d = F.col("doc_id")
+    docs = _t(spark, sf_dir, "documents").select("doc_id").filter(d < 500)
 
+    def u(c):
+        return F.concat(F.lit("http://r.example.org/u/"),
+                        c.cast("long").cast("string"))
 
-_WEB_ANCHOR_TEXT_ORACLE = ("WITH " + _WEB_LINKS_SQL + """
-SELECT canon_url AS target,
-       string_agg(DISTINCT anchor, ',' ORDER BY anchor) AS anchor_terms,
-       count(*)::BIGINT AS n_anchors
-FROM links GROUP BY canon_url""")
+    red = (docs.filter((d >= 490) | (d % 8 != 0))
+           .select(u(d).alias("src_url"),
+                   u(F.when(d >= 490, 490 + ((d - 490 + 1) % 10))
+                     .otherwise(d - 1)).alias("dst_url")))
+    return resolve_redirects(red, max_hops=16)
 
 
 def _web_hits_oracle(iterations: int = 2) -> str:
@@ -1191,9 +692,6 @@ def _web_hits_oracle(iterations: int = 2) -> str:
     LEFT JOIN h{iterations} h ON h.node_id = n.node_id
     LEFT JOIN a{iterations} a ON a.node_id = n.node_id"""
     return sql
-
-
-_WEB_HITS_ORACLE = _web_hits_oracle(2)
 
 
 def _web_salsa_oracle(iterations: int = 2) -> str:
@@ -1233,16 +731,15 @@ def _web_salsa_oracle(iterations: int = 2) -> str:
     return sql
 
 
-_WEB_SALSA_ORACLE = _web_salsa_oracle(2)
-
-
 def _web_links_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     from npm_extraction_server_spark.extract.links import outlinks
 
     return outlinks(_pages_from_documents(spark, sf_dir, limit=_WEB_HI))
 
 
-def _web_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query("WITH " + _WEB_LINKS_SQL
+                        + "SELECT url, dst_url, dst_host FROM links")
+def web_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-anchor outlink extraction from raw html — pure JVM regex
     (regexp_extract_all + explode; the html column never reaches a
     Python worker). Hard oracle: the sha256-replica link derivation
@@ -1250,7 +747,27 @@ def _web_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _web_links_df(spark, sf_dir).select("url", "dst_url", "dst_host")
 
 
-def _web_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+# An INDEPENDENT DuckDB implementation of the normalization spec (not a
+# generator re-derivation): lowercase scheme+host, strip the scheme's
+# default port, drop the fragment, keep path+query bytes.
+@query("WITH " + _WEB_LINKS_SQL + """
+, raw AS (SELECT DISTINCT dst_url FROM links),
+parts AS (
+    SELECT dst_url,
+           lower(regexp_extract(dst_url, '(?i)^(https?)://', 1)) AS scheme,
+           lower(regexp_extract(dst_url, '(?i)^https?://([^/#?]+)', 1)) AS host,
+           regexp_extract(dst_url, '(?i)^https?://[^/#?]+([^#]*)', 1) AS rest
+    FROM raw
+)
+SELECT dst_url,
+       scheme || '://' ||
+       CASE WHEN scheme = 'http' AND host LIKE '%:80'
+                 THEN substr(host, 1, length(host) - 3)
+            WHEN scheme = 'https' AND host LIKE '%:443'
+                 THEN substr(host, 1, length(host) - 4)
+            ELSE host END || rest AS canonical_url
+FROM parts""")
+def web_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization over the distinct extracted hrefs — the
     messy forms (uppercase scheme/host, explicit :80, fragments) fold
     onto their canonical twins in one codegen projection. Hard oracle:
@@ -1263,7 +780,16 @@ def _web_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("canonical_url", normalize_url("dst_url")))
 
 
-def _web_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
+# the boilerplate remover must return the article prose byte-identical
+# with exactly one surviving content block — the north text invariant
+@query(f"""
+SELECT 'http://crawl.example.org/' || (doc_id % 100) || '/doc-' || doc_id
+           AS url,
+       text AS main_text,
+       1::INT AS n_content_blocks
+FROM documents WHERE doc_id < {_WEB_HI}
+""")
+def web_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boilerplate removal over the raw pages (extract/content.py):
     text-density block classification must recover EXACTLY the
     <article> prose — scripts stripped, the nav footer rejected at
@@ -1282,130 +808,10 @@ def _web_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
         "url", "main_text", "n_content_blocks")
 
 
-def _web_sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap discovery over the link graph's host set
-    (extract/crawl.py): synthesize each host's sitemap XML (1/4 are
-    sitemap INDEXES referencing two child files), parse with JVM
-    regex, and expand root -> children -> URL frontier through the
-    fetch-join. Hard oracle: the frontier (loc/lastmod/priority) is a
-    pure sha256 function of the sitemap URLs, re-derived in DuckDB."""
-    from npm_extraction_server_spark.extract.crawl import (
-        sitemap_frontier,
-        synth_sitemaps,
-    )
-
-    hosts = (_web_links_df(spark, sf_dir)
-             .select(F.col("dst_host").alias("host")).distinct())
-    return sitemap_frontier(synth_sitemaps(hosts))
-
-
-def _web_host_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-level in-degree over extracted links: anchor count +
-    distinct citing pages per destination host. The hub hosts absorb
-    ~60% of all links (deliberate power-law head) — map-side partial
-    aggregation collapses the skew before the shuffle."""
-    from npm_extraction_server_spark.extract.links import host_degree
-
-    return host_degree(_web_links_df(spark, sf_dir))
-
-
-def _web_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host co-citation projection: hosts a < b weighted by the number
-    of pages citing both. Implemented with a per-page collect_set +
-    JVM array pair-expansion (no self-join, no Python): the k*(k-1)/2
-    blowup happens AFTER the per-page aggregate, bounded by
-    links-per-page."""
-    from npm_extraction_server_spark.extract.links import cocitation
-
-    return cocitation(_web_links_df(spark, sf_dir))
-
-
-def _web_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-text aggregation: for every canonical target URL, the
-    distinct link texts the web uses to refer to it (classic web
-    search's strongest relevance signal) plus the raw anchor count.
-    (href, text) pairs come out of the html via the two-stage JVM
-    regex in extract/links.anchor_texts."""
-    from npm_extraction_server_spark.extract.links import (
-        anchor_texts,
-        normalize_url,
-    )
-
-    at = anchor_texts(_pages_from_documents(spark, sf_dir, limit=_WEB_HI))
-    return (at.select(normalize_url("dst_url").alias("target"), "anchor")
-            .groupBy("target")
-            .agg(F.array_join(F.array_sort(F.collect_set("anchor")), ",")
-                 .alias("anchor_terms"),
-                 F.count("*").alias("n_anchors")))
-
-
-def _web_url_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL template mining over the canonicalized link corpus: path
-    digit-runs collapse to '{N}' and the (host, template) rollup
-    counts links, distinct URLs, and the smallest example — the
-    crawl-ops primitive behind frontier dedup, pagination detection,
-    and per-site URL-space budgeting. One codegen projection + one
-    grouped aggregate (map-side combined); the skewed hub hosts
-    collapse before the shuffle. Hard oracle: the identical
-    regex algebra over the sha256 link replica."""
-    from npm_extraction_server_spark.extract.links import normalize_url
-
-    links = _web_links_df(spark, sf_dir)
-    cu = normalize_url("dst_url")
-    host = F.regexp_extract("cu", "^https?://([^/]+)", 1)
-    path = F.regexp_extract("cu", "^https?://[^/]+(/.*)?$", 1)
-    tmpl = F.regexp_replace(path, "[0-9]+", "{N}")
-    return (links.select(cu.alias("cu"))
-            .select(host.alias("host"), tmpl.alias("path_template"), "cu")
-            .groupBy("host", "path_template")
-            .agg(F.count("*").alias("n_links"),
-                 F.countDistinct("cu").alias("n_urls"),
-                 F.min("cu").alias("example_url")))
-
-
-_WEB_URL_PATTERNS_ORACLE = ("WITH " + _WEB_LINKS_SQL + """
-, pat AS (
-    SELECT regexp_extract(canon_url, '^https?://([^/]+)', 1) AS host,
-           regexp_replace(
-               regexp_extract(canon_url, '^https?://[^/]+(/.*)?$', 1),
-               '[0-9]+', '{N}', 'g') AS path_template,
-           canon_url
-    FROM links)
-SELECT host, path_template, count(*)::BIGINT AS n_links,
-       count(DISTINCT canon_url)::BIGINT AS n_urls,
-       min(canon_url) AS example_url
-FROM pat GROUP BY 1, 2""")
-
-
-def _web_crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-frontier politeness pipeline: distinct outlink targets ->
-    per-host robots.txt bytes synthesized + PARSED (regexp over the
-    fetched file, JVM-side) -> disallowed path-prefixes filtered out
-    (broadcast anti-join) -> remaining URLs cut into per-host fetch
-    rounds of 2 spaced by the host's Crawl-delay. Hard oracle: DuckDB
-    re-derives the rule set from the same sha256 host digests and
-    replays the window arithmetic."""
-    from npm_extraction_server_spark.extract.crawl import (
-        fetch_rounds,
-        parse_robots,
-        robots_filter,
-        synth_robots,
-    )
-    from npm_extraction_server_spark.extract.links import normalize_url
-
-    links = _web_links_df(spark, sf_dir)
-    frontier = links.select(normalize_url("dst_url").alias("canon_url"),
-                            "dst_host").distinct()
-    hosts = frontier.select(F.col("dst_host").alias("host")).distinct()
-    rules = parse_robots(synth_robots(hosts))
-    allowed = robots_filter(frontier, rules)
-    return fetch_rounds(allowed, rules, per_round=2)
-
-
 # sitemap frontier: root urlsets' entries + index roots' children's
 # entries; every field a sha256 function of the sitemap URL (exact
 # replica of extract/crawl.synth_sitemaps)
-_WEB_SITEMAP_FRONTIER_ORACLE = ("WITH " + _WEB_LINKS_SQL + """
+@query("WITH " + _WEB_LINKS_SQL + """
 , hosts AS (SELECT DISTINCT dst_host AS host FROM links),
 hi AS (
     SELECT host,
@@ -1436,9 +842,111 @@ SELECT host,
                 ::UBIGINT % 10) AS priority
 FROM entries, unnest(generate_series(1, n)) AS t(j)
 """)
+def web_sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sitemap discovery over the link graph's host set
+    (extract/crawl.py): synthesize each host's sitemap XML (1/4 are
+    sitemap INDEXES referencing two child files), parse with JVM
+    regex, and expand root -> children -> URL frontier through the
+    fetch-join. Hard oracle: the frontier (loc/lastmod/priority) is a
+    pure sha256 function of the sitemap URLs, re-derived in DuckDB."""
+    from npm_extraction_server_spark.extract.crawl import (
+        sitemap_frontier,
+        synth_sitemaps,
+    )
+
+    hosts = (_web_links_df(spark, sf_dir)
+             .select(F.col("dst_host").alias("host")).distinct())
+    return sitemap_frontier(synth_sitemaps(hosts))
 
 
-_WEB_CRAWL_SCHEDULE_ORACLE = ("WITH " + _WEB_LINKS_SQL + """
+@query("WITH " + _WEB_LINKS_SQL + """
+SELECT dst_host, count(*)::BIGINT AS n_links,
+       count(DISTINCT url)::BIGINT AS n_pages
+FROM links GROUP BY dst_host""")
+def web_host_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Host-level in-degree over extracted links: anchor count +
+    distinct citing pages per destination host. The hub hosts absorb
+    ~60% of all links (deliberate power-law head) — map-side partial
+    aggregation collapses the skew before the shuffle."""
+    from npm_extraction_server_spark.extract.links import host_degree
+
+    return host_degree(_web_links_df(spark, sf_dir))
+
+
+@query("WITH " + _WEB_COCITATION_CTE
+                          + "SELECT host_a, host_b, weight FROM co")
+def web_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Host co-citation projection: hosts a < b weighted by the number
+    of pages citing both. Implemented with a per-page collect_set +
+    JVM array pair-expansion (no self-join, no Python): the k*(k-1)/2
+    blowup happens AFTER the per-page aggregate, bounded by
+    links-per-page."""
+    from npm_extraction_server_spark.extract.links import cocitation
+
+    return cocitation(_web_links_df(spark, sf_dir))
+
+
+@query("WITH " + _WEB_LINKS_SQL + """
+SELECT canon_url AS target,
+       string_agg(DISTINCT anchor, ',' ORDER BY anchor) AS anchor_terms,
+       count(*)::BIGINT AS n_anchors
+FROM links GROUP BY canon_url""")
+def web_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Anchor-text aggregation: for every canonical target URL, the
+    distinct link texts the web uses to refer to it (classic web
+    search's strongest relevance signal) plus the raw anchor count.
+    (href, text) pairs come out of the html via the two-stage JVM
+    regex in extract/links.anchor_texts."""
+    from npm_extraction_server_spark.extract.links import (
+        anchor_texts,
+        normalize_url,
+    )
+
+    at = anchor_texts(_pages_from_documents(spark, sf_dir, limit=_WEB_HI))
+    return (at.select(normalize_url("dst_url").alias("target"), "anchor")
+            .groupBy("target")
+            .agg(F.array_join(F.array_sort(F.collect_set("anchor")), ",")
+                 .alias("anchor_terms"),
+                 F.count("*").alias("n_anchors")))
+
+
+@query("WITH " + _WEB_LINKS_SQL + """
+, pat AS (
+    SELECT regexp_extract(canon_url, '^https?://([^/]+)', 1) AS host,
+           regexp_replace(
+               regexp_extract(canon_url, '^https?://[^/]+(/.*)?$', 1),
+               '[0-9]+', '{N}', 'g') AS path_template,
+           canon_url
+    FROM links)
+SELECT host, path_template, count(*)::BIGINT AS n_links,
+       count(DISTINCT canon_url)::BIGINT AS n_urls,
+       min(canon_url) AS example_url
+FROM pat GROUP BY 1, 2""")
+def web_url_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL template mining over the canonicalized link corpus: path
+    digit-runs collapse to '{N}' and the (host, template) rollup
+    counts links, distinct URLs, and the smallest example — the
+    crawl-ops primitive behind frontier dedup, pagination detection,
+    and per-site URL-space budgeting. One codegen projection + one
+    grouped aggregate (map-side combined); the skewed hub hosts
+    collapse before the shuffle. Hard oracle: the identical
+    regex algebra over the sha256 link replica."""
+    from npm_extraction_server_spark.extract.links import normalize_url
+
+    links = _web_links_df(spark, sf_dir)
+    cu = normalize_url("dst_url")
+    host = F.regexp_extract("cu", "^https?://([^/]+)", 1)
+    path = F.regexp_extract("cu", "^https?://[^/]+(/.*)?$", 1)
+    tmpl = F.regexp_replace(path, "[0-9]+", "{N}")
+    return (links.select(cu.alias("cu"))
+            .select(host.alias("host"), tmpl.alias("path_template"), "cu")
+            .groupBy("host", "path_template")
+            .agg(F.count("*").alias("n_links"),
+                 F.countDistinct("cu").alias("n_urls"),
+                 F.min("cu").alias("example_url")))
+
+
+@query("WITH " + _WEB_LINKS_SQL + """
 , front AS (SELECT DISTINCT canon_url, dst_host FROM links),
 rules AS (
     SELECT dst_host,
@@ -1461,9 +969,33 @@ SELECT canon_url, dst_host,
        (((row_number() OVER (PARTITION BY dst_host ORDER BY canon_url) - 1)
         // 2) * delay)::INT AS fetch_offset_s
 FROM allowed""")
+def web_crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Crawl-frontier politeness pipeline: distinct outlink targets ->
+    per-host robots.txt bytes synthesized + PARSED (regexp over the
+    fetched file, JVM-side) -> disallowed path-prefixes filtered out
+    (broadcast anti-join) -> remaining URLs cut into per-host fetch
+    rounds of 2 spaced by the host's Crawl-delay. Hard oracle: DuckDB
+    re-derives the rule set from the same sha256 host digests and
+    replays the window arithmetic."""
+    from npm_extraction_server_spark.extract.crawl import (
+        fetch_rounds,
+        parse_robots,
+        robots_filter,
+        synth_robots,
+    )
+    from npm_extraction_server_spark.extract.links import normalize_url
+
+    links = _web_links_df(spark, sf_dir)
+    frontier = links.select(normalize_url("dst_url").alias("canon_url"),
+                            "dst_host").distinct()
+    hosts = frontier.select(F.col("dst_host").alias("host")).distinct()
+    rules = parse_robots(synth_robots(hosts))
+    allowed = robots_filter(frontier, rules)
+    return fetch_rounds(allowed, rules, per_round=2)
 
 
-def _web_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(_web_hits_oracle(2))
+def web_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS over the bipartite page -> canonical-URL link graph: pages
     are hubs, linked URLs authorities. Unnormalized (plans/graph.hits),
     so after 2 rounds every score is an exact BIGINT path count — the
@@ -1479,7 +1011,8 @@ def _web_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits(edges, iterations=2)
 
 
-def _web_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(_web_salsa_oracle(2))
+def web_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SALSA over the bipartite page -> canonical-URL link graph —
     the degree-normalized (TKC-immune) counterpart ranked next to
     web_hits: same support graph, stationary-walk semantics instead
@@ -1495,7 +1028,8 @@ def _web_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
     return salsa(edges, iterations=2)
 
 
-def _web_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(_web_pagerank_oracle(5))
+def web_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the symmetrized host co-citation graph
     (normalized=False: init 1, teleport 0.15 — constants free of |V|,
     which is data-dependent here). Hard oracle: the unrolled power
@@ -1524,7 +1058,20 @@ def _warc_scratch(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix)
 
 
-def _warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+_WARC_PAGES_CTE = f"""
+p AS (
+    SELECT 'http://crawl.example.org/' || (doc_id % 100) || '/doc-' || doc_id
+               AS url,
+           TIMESTAMP '2017-06-01 00:00:00' + to_seconds(doc_id) AS warc_ts,
+           text
+    FROM documents WHERE doc_id < {_WEB_HI}
+)
+"""
+
+
+@query("WITH " + _WARC_PAGES_CTE + """
+SELECT url, warc_ts, true AS payload_ok, 200::INT AS http_status FROM p""")
+def warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pages -> WARC response records (per-record gzip members, HTTP
     payload wrapping) -> read back. payload_ok proves the html bytes
     survived both framings; url/warc_ts come from the parsed WARC
@@ -1545,7 +1092,9 @@ def _warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "http_status")
 
 
-def _warc_wet_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query("WITH " + _WARC_PAGES_CTE + """
+SELECT url, warc_ts, text FROM p""")
+def warc_wet_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pages -> WET conversion records -> read back. The returned text
     is decoded from the WET payload bytes and oracle-compared against
     documents.text directly — the north rule's byte-identical-text
@@ -1562,7 +1111,16 @@ def _warc_wet_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.decode("payload", "UTF-8").alias("text"))
 
 
-def _warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
+# CDX slice: SURT urlkey + sha256(text) re-derived from the
+# deterministic corpus (url = http://crawl.example.org/{i%100}/doc-{i}
+# -> org,example,crawl)/{i%100}/doc-{i}; WET payload == text bytes).
+@query("WITH " + _WARC_PAGES_CTE + """
+SELECT 'org,example,crawl)/' || (doc_id % 100) || '/doc-' || doc_id
+           AS urlkey,
+       TIMESTAMP '2017-06-01 00:00:00' + to_seconds(doc_id) AS warc_ts,
+       sha256(text) AS digest
+FROM documents WHERE doc_id < 300""")
+def warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pages -> WET warc -> CDX index (SURT urlkey + per-record gzip
     member spans + payload sha256). The driver-compared slice is
     (urlkey, warc_ts, digest) — all re-derivable in DuckDB from
@@ -1577,7 +1135,28 @@ def _warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
     return W.build_cdx(spark, d).select("urlkey", "warc_ts", "digest")
 
 
-def _warc_revisits(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query("""
+    WITH caps AS (
+        SELECT 'org,example,crawl)/' || (doc_id % 100) || '/doc-' || doc_id
+                   AS urlkey,
+               TIMESTAMP '2017-06-01 00:00:00' + to_seconds(doc_id)
+                   + CASE WHEN cap = 1 THEN INTERVAL 1 DAY
+                          ELSE INTERVAL 0 DAY END AS warc_ts,
+               doc_id
+        FROM documents, unnest([0, 1]) AS t(cap)
+        WHERE doc_id < 300 AND (cap = 0 OR doc_id < 100))
+    SELECT urlkey, warc_ts,
+           CASE WHEN rn = 1 THEN 'response' ELSE 'revisit' END AS kind,
+           CASE WHEN rn > 1 THEN f END AS ref_ts
+    FROM (
+        SELECT urlkey, warc_ts,
+               row_number() OVER (PARTITION BY doc_id
+                                  ORDER BY warc_ts) AS rn,
+               first_value(warc_ts) OVER (PARTITION BY doc_id
+                                          ORDER BY warc_ts) AS f
+        FROM caps)
+""")
+def warc_revisits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDX revisit consolidation (sources/warc.consolidate_revisits):
     the crawl re-captures pages doc_id<100 one day later with
     byte-identical text, so their CDX digests collide — the
@@ -1600,30 +1179,17 @@ def _warc_revisits(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("urlkey", "warc_ts", "kind", "ref_ts"))
 
 
-_WARC_REVISITS_ORACLE = """
-    WITH caps AS (
-        SELECT 'org,example,crawl)/' || (doc_id % 100) || '/doc-' || doc_id
-                   AS urlkey,
-               TIMESTAMP '2017-06-01 00:00:00' + to_seconds(doc_id)
-                   + CASE WHEN cap = 1 THEN INTERVAL 1 DAY
-                          ELSE INTERVAL 0 DAY END AS warc_ts,
-               doc_id
-        FROM documents, unnest([0, 1]) AS t(cap)
-        WHERE doc_id < 300 AND (cap = 0 OR doc_id < 100))
-    SELECT urlkey, warc_ts,
-           CASE WHEN rn = 1 THEN 'response' ELSE 'revisit' END AS kind,
-           CASE WHEN rn > 1 THEN f END AS ref_ts
-    FROM (
-        SELECT urlkey, warc_ts,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY warc_ts) AS rn,
-               first_value(warc_ts) OVER (PARTITION BY doc_id
-                                          ORDER BY warc_ts) AS f
-        FROM caps)
-"""
-
-
-def _web_anchor_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query("WITH " + _WEB_LINKS_SQL + """
+, ta AS (SELECT canon_url AS target, anchor FROM links),
+tf AS (SELECT target, anchor, count(*) AS tf FROM ta GROUP BY 1, 2),
+df AS (SELECT anchor, count(DISTINCT target) AS df FROM ta GROUP BY 1),
+n AS (SELECT count(DISTINCT target) AS n FROM ta)
+SELECT target, anchor, tf, df,
+       tf * round(ln(n.n::DOUBLE / df.df), 8) AS score
+FROM tf JOIN df USING (anchor), n
+ORDER BY score DESC, target, anchor
+LIMIT 100""")
+def web_anchor_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anchor-text relevance index: tf-idf of anchor terms per
     canonical target URL — tf = anchors carrying the term to the
     target, idf = round(ln(N/df), 8) over distinct targets — classic
@@ -1649,19 +1215,9 @@ def _web_anchor_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.desc("score"), "target", "anchor").limit(100)
 
 
-_WEB_ANCHOR_TFIDF_ORACLE = ("WITH " + _WEB_LINKS_SQL + """
-, ta AS (SELECT canon_url AS target, anchor FROM links),
-tf AS (SELECT target, anchor, count(*) AS tf FROM ta GROUP BY 1, 2),
-df AS (SELECT anchor, count(DISTINCT target) AS df FROM ta GROUP BY 1),
-n AS (SELECT count(DISTINCT target) AS n FROM ta)
-SELECT target, anchor, tf, df,
-       tf * round(ln(n.n::DOUBLE / df.df), 8) AS score
-FROM tf JOIN df USING (anchor), n
-ORDER BY score DESC, target, anchor
-LIMIT 100""")
-
-
-def _warc_wat_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query("WITH " + _WEB_LINKS_SQL
+                             + "SELECT url, dst_url FROM links")
+def warc_wat_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pages -> WAT metadata records (JSON envelope with the outlink
     list, built in-plan via to_json) -> read back -> from_json +
     explode. Ends at the same (url, dst_url) rows as direct html
@@ -1674,53 +1230,26 @@ def _warc_wat_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return W.wat_outlinks(W.read_warc(spark, d, record_types=("metadata",)))
 
 
-_WARC_PAGES_CTE = f"""
-p AS (
-    SELECT 'http://crawl.example.org/' || (doc_id % 100) || '/doc-' || doc_id
-               AS url,
-           TIMESTAMP '2017-06-01 00:00:00' + to_seconds(doc_id) AS warc_ts,
-           text
-    FROM documents WHERE doc_id < {_WEB_HI}
-)
-"""
-
-_WARC_ROUNDTRIP_ORACLE = ("WITH " + _WARC_PAGES_CTE + """
-SELECT url, warc_ts, true AS payload_ok, 200::INT AS http_status FROM p""")
-
-_WARC_WET_TEXT_ORACLE = ("WITH " + _WARC_PAGES_CTE + """
-SELECT url, warc_ts, text FROM p""")
-
-# CDX slice: SURT urlkey + sha256(text) re-derived from the
-# deterministic corpus (url = http://crawl.example.org/{i%100}/doc-{i}
-# -> org,example,crawl)/{i%100}/doc-{i}; WET payload == text bytes).
-_WARC_CDX_ORACLE = ("WITH " + _WARC_PAGES_CTE + """
-SELECT 'org,example,crawl)/' || (doc_id % 100) || '/doc-' || doc_id
-           AS urlkey,
-       TIMESTAMP '2017-06-01 00:00:00' + to_seconds(doc_id) AS warc_ts,
-       sha256(text) AS digest
-FROM documents WHERE doc_id < 300""")
-
-_WARC_WAT_OUTLINKS_ORACLE = ("WITH " + _WEB_LINKS_SQL
-                             + "SELECT url, dst_url FROM links")
-
-
 # --- rows-only KG queries -------------------------------------------------
 
-def _kg_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(None)
+def kg_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from npm_extraction_server_spark.plans.kg import run_pipeline
 
     pages = _pages_from_documents(spark, sf_dir, limit=100)
     return run_pipeline(pages)["triples"]
 
 
-def _kg_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(None)
+def kg_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from npm_extraction_server_spark.plans.kg import run_pipeline
 
     pages = _pages_from_documents(spark, sf_dir, limit=100)
     return run_pipeline(pages)["lineage"]
 
 
-def _kg_entity_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(None)
+def kg_entity_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6/J7: MinHash-LSH blocking + connected-components canonical ids."""
     from pyspark.sql import functions as F
 
@@ -1733,7 +1262,42 @@ def _kg_entity_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
         "entity_iri", "kind", "canonical_id").orderBy("entity_iri")
 
 
-def _kg_user_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+# DuckDB replica of sources/synth.py synth_package(i)'s maintainer facts:
+# h = first 8 bytes of sha256("pkg:{i}") big-endian; owner = dev{h%97};
+# one doap:maintainer triple on the bundle IRI + one per version module
+# IRI (kernel/context.py:202 + kernel/usermap.py:51).
+@query("""
+WITH base AS (
+  SELECT doc_id AS i,
+         ('0x' || substr(sha256('pkg:' || doc_id), 1, 16))::UBIGINT AS h
+  FROM documents WHERE doc_id < 100
+),
+pkg AS (
+  SELECT i, h,
+    CASE WHEN i=0 THEN 'hotpkg' WHEN i=1 THEN 'megalib' WHEN i=2 THEN 'ultrautil'
+         WHEN h%11=0 THEN '@org' || (h%7) || '/pkg-' || i
+         ELSE 'pkg-' || i END AS name,
+    'dev' || (h%97) AS owner,
+    (1 + (h%3))::INT AS n_versions
+  FROM base
+),
+vers AS (
+  SELECT i, name, owner,
+    ((1+(h%2)) || '.' || v || '.' || ((h>>4)%10)) AS ver
+  FROM pkg, unnest(generate_series(0, n_versions-1)) AS t(v)
+),
+mentions AS (
+  SELECT owner, 'http://example.org/bundles/npm/' || name AS iri FROM pkg
+  UNION ALL
+  SELECT owner, 'http://example.org/bundles/npm/' ||
+     replace(replace(name,'@','%40'),'/','%2F') || '/' || ver AS iri FROM vers
+)
+SELECT 'http://example.org/users/npm/' || owner AS user_iri,
+       string_agg(DISTINCT iri, ',' ORDER BY iri) AS maintains,
+       count(*)::BIGINT AS n_mentions
+FROM mentions GROUP BY 1
+""")
+def kg_user_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SC4/A1: byUser inverted index over the triples table."""
     from npm_extraction_server_spark.plans.kg import run_pipeline
     from npm_extraction_server_spark.plans.warehouse import user_package_index
@@ -1745,7 +1309,7 @@ def _kg_user_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _doap_slice(t: DataFrame) -> DataFrame:
     """The oracle-comparable doap:name/doap:revision projection of a
-    triples table (skolem genids excluded) — see _kg_triples_doap."""
+    triples table (skolem genids excluded) — see kg_triples_doap."""
     DOAP = "http://usefulinc.com/ns/doap#"
     return (
         t.filter(F.col("pred").isin(DOAP + "name", DOAP + "revision")
@@ -1756,7 +1320,24 @@ def _doap_slice(t: DataFrame) -> DataFrame:
     )
 
 
-def _kg_bgp_version_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+# Three triple families in the slice: each module version's
+# name+revision, each bundle's name, and each (valid-range) dependency
+# reference's range-module revision (NpmModule dependency handling
+# emits a module IRI at the RAW range, doap:revision = the range
+# literal). The CASE arm is JS encodeURIComponent over the 6 valid
+# synth ranges. The {lo}/{hi} doc window parameterizes the slice: the
+# full-pipeline query uses [0, 100), the changed-since incremental
+# query [30, 100) (warc_ts = 2017-06-01 + doc_id seconds).
+# BGP star join (?m doap:name ?name)(?m doap:revision ?rev): exactly
+# the version modules — bundles carry name only, dependency range
+# modules revision only, so the conjunction discriminates.
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
+SELECT DISTINCT module_iri AS m,
+       '"' || name || '"' AS name,
+       '"' || ver || '"' AS rev
+FROM vers
+""")
+def kg_bgp_version_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL-style BGP star join over the RAW pipeline triples table:
     (?m doap:name ?name)(?m doap:revision ?rev) — two filtered scans
     of the same triples joined on the subject variable. Exactly the
@@ -1774,536 +1355,11 @@ def _kg_bgp_version_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
                     select=["m", "name", "rev"])
 
 
-def _kg_bgp_dep_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BGP 2-pattern chain over the raw triples:
-    (?v npm:dependency ?d)(?d doap:revision ?rng) — every version's
-    dependency edge joined to the range-module's revision literal, the
-    1-hop property path a KG consumer walks to resolve a dependency.
-    Hard oracle: synth replica of both dependency arms per version."""
-    from npm_extraction_server_spark.plans.bgp import bgp_join
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    return bgp_join(t, [("?v", NPM + "dependency", "?d"),
-                        ("?d", DOAP + "revision", "?rng")],
-                    select=["v", "d", "rng"])
-
-
-def _kg_bgp_optional_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL OPTIONAL over the raw triples: the version-meta star
-    (?m doap:name ?name)(?m doap:revision ?rev) left-extended with the
-    2-pattern group OPTIONAL {(?m npm:dependency ?d)(?d doap:revision
-    ?rng)} — valid-semver-range dependencies only (tarball/repo-
-    shorthand deps are skolem blank nodes WITHOUT a revision, so the
-    inner chain excludes them, replicating the reference's valid_range
-    split at NpmModule handling). Versions whose every dep is invalid
-    (~7% of the corpus) keep their row with NULL ?d. Hard oracle:
-    vers LEFT JOIN the per-version valid-dependency replica."""
-    from npm_extraction_server_spark.plans.bgp import bgp_optional
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    return bgp_optional(
-        t,
-        [("?m", DOAP + "name", "?name"), ("?m", DOAP + "revision", "?rev")],
-        [[("?m", NPM + "dependency", "?d"),
-          ("?d", DOAP + "revision", "?rng")]],
-        select=["m", "rev", "d"])
-
-
-def _kg_bgp_union_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL UNION + FILTER over the raw triples:
-    {(?s doap:name ?label)} UNION {(?s doap:revision ?label)} with
-    FILTER(strstarts(?s, bundle prefix) && !contains '/.well-known/')
-    — every human-readable label in the KG keyed by subject, the
-    union-of-solution-mappings form. Hard oracle: the doap-slice
-    derivation reshaped to (s, label)."""
-    from npm_extraction_server_spark.plans.bgp import bgp_union
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    return bgp_union(
-        t,
-        [[("?s", DOAP + "name", "?label")],
-         [("?s", DOAP + "revision", "?label")]],
-        select=["s", "label"],
-        filters=[F.col("s").startswith("http://example.org/bundles/npm/")
-                 & ~F.col("s").contains("/.well-known/")])
-
-
-def _kg_bgp_construct_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL CONSTRUCT over the raw triples: from the version-meta
-    star, materialize the inference rule "every named+versioned
-    module gets an rdfs:label and an explicit type triple" — two
-    template triples per binding, the single-rule materialized-
-    inference shape rule sets compose from. Hard oracle: both
-    template arms re-derived from the vers replica."""
-    from npm_extraction_server_spark.plans.bgp import bgp_construct
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    RDFS = "http://www.w3.org/2000/01/rdf-schema#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    return bgp_construct(
-        t,
-        [("?m", DOAP + "name", "?name"), ("?m", DOAP + "revision", "?rev")],
-        [("?m", RDFS + "label", "?name"),
-         ("?m", "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
-          DOAP + "Version")])
-
-
-def _kg_bgp_dep_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL GROUP BY over the raw triples: how many (distinct)
-    valid-range dependencies does each version declare, and what is
-    its lexicographically-first range literal —
-    SELECT ?v (COUNT(DISTINCT ?d) AS n_deps) (MIN(?rng) AS min_rng)
-    WHERE {(?v npm:dependency ?d)(?d doap:revision ?rng)} GROUP BY ?v.
-    Hard oracle: the alldeps synth replica grouped identically (all
-    outputs are integers/ASCII strings — no float drift)."""
-    from npm_extraction_server_spark.plans.bgp import bgp_agg
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    return bgp_agg(
-        t,
-        [("?v", NPM + "dependency", "?d"),
-         ("?d", DOAP + "revision", "?rng")],
-        group_by=["v"],
-        aggs=[("d", "count_distinct", "n_deps"),
-              ("rng", "min", "min_rng")])
-
-
-def _kg_bgp_minus_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL MINUS over the raw triples: the version-meta star MINUS
-    the valid-dependency chain — versions declaring NO valid-semver
-    dependency (~7% of the corpus; their deps are all tarball/repo-
-    shorthand skolem nodes without a revision). The negation query
-    that finds the KG's leaves. Hard oracle: vers anti-joined against
-    the alldeps replica."""
-    from npm_extraction_server_spark.plans.bgp import bgp_minus
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    return bgp_minus(
-        t,
-        [("?m", DOAP + "name", "?name"),
-         ("?m", DOAP + "revision", "?rev")],
-        [[("?m", NPM + "dependency", "?d"),
-          ("?d", DOAP + "revision", "?rng")]],
-        select=["m", "name", "rev"])
-
-
-def _kg_bgp_quads_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL GRAPH with a graph VARIABLE over the quad dataset: the
-    version-meta star constrained to a single named graph —
-    GRAPH ?g { ?m doap:name ?name . ?m doap:revision ?rev } — over
-    as_quads(triples) (graph = each triple's source document, the
-    per-package-document dataset the reference serves). Binds which
-    crawl page each version's metadata came from. Hard oracle: the
-    vers replica with g re-derived from doc_id (the synthetic page
-    url is a pure function of it)."""
-    from npm_extraction_server_spark.plans.bgp import as_quads, bgp_join
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    q = as_quads(run_pipeline(pages)["triples"])
-    return bgp_join(q, [("?m", DOAP + "name", "?name", "?g"),
-                        ("?m", DOAP + "revision", "?rev", "?g")],
-                    select=["m", "rev", "g"])
-
-
-def _kg_bgp_graph_const(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL GRAPH with a CONSTANT graph IRI: all doap:name bindings
-    inside ONE source document's named graph — GRAPH <doc-0's url>
-    { ?s doap:name ?name } — the "what did this page contribute"
-    provenance query. The constant graph term is an ordinary scan
-    filter (partition-prunable on a graph-partitioned layout). Hard
-    oracle: doc 0 is the fixed 'hotpkg' package, so the bundle IRI +
-    its version-module IRIs are re-derived from doc_id 0 alone."""
-    from npm_extraction_server_spark.plans.bgp import as_quads, bgp_join
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    q = as_quads(run_pipeline(pages)["triples"])
-    return bgp_join(
-        q,
-        [("?s", DOAP + "name", "?name", "http://crawl.example.org/0/doc-0")],
-        select=["s", "name"],
-        filters=[F.col("s").startswith("http://example.org/bundles/npm/")])
-
-
-def _kg_bgp_topk_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL solution modifiers (ORDER BY + LIMIT) as a BGP-layer
-    surface: the dependency-chain bindings ordered by the full
-    (v, d, rng) tuple, first 25 — a deterministic top-k page. Plans
-    as TakeOrderedAndProject (per-partition heap + k-row merge),
-    never a global sort (plan-asserted in tests/test_plans.py). Hard
-    oracle: the dep-chain replica under the same ORDER BY/LIMIT."""
-    from npm_extraction_server_spark.plans.bgp import bgp_join
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    return bgp_join(t, [("?v", NPM + "dependency", "?d"),
-                        ("?d", DOAP + "revision", "?rng")],
-                    select=["v", "d", "rng"],
-                    order_by=["v", "d", "rng"], limit=25)
-
-
-def _kg_bgp_exists_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL FILTER EXISTS (plans/bgp.bgp_exists): the version-meta
-    star kept only where a valid-semver dependency chain EXISTS — the
-    positive dual of kg_bgp_minus_deps (their row sets partition the
-    version universe; both hard-oracled, so the duality itself is
-    cross-checked). One LEFT SEMI join on the shared ?m."""
-    from npm_extraction_server_spark.plans.bgp import bgp_exists
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    return bgp_exists(
-        t,
-        [("?m", DOAP + "name", "?name"),
-         ("?m", DOAP + "revision", "?rev")],
-        [[("?m", NPM + "dependency", "?d"),
-          ("?d", DOAP + "revision", "?rng")]],
-        select=["m", "name", "rev"])
-
-
-def _kg_bgp_bind(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL BIND over the dep-chain bindings: derive the bare range
-    string (strip the literal quotes) and its length, then FILTER on
-    the derived variable — BIND(expr AS ?var) evaluated before FILTER
-    so downstream clauses see it, exactly the SPARQL scoping. Hard
-    oracle: identical string derivation in DuckDB."""
-    from npm_extraction_server_spark.plans.bgp import bgp_join
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    return bgp_join(
-        t, [("?v", NPM + "dependency", "?d"),
-            ("?d", DOAP + "revision", "?rng")],
-        bind={"bare": "substring(rng, 2, length(rng) - 2)",
-              "rng_len": "length(rng) - 2"},
-        filters=["rng_len >= 4"],
-        select=["v", "bare", "rng_len"])
-
-
-def _kg_bgp_path_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL property-path ALGEBRA (plans/bgp.path_edges): the path
-    ``(npm:dependency / doap:revision) | owl:sameAs`` — sequence
-    composes the dependency hop with the range-literal hop,
-    alternative unions in each bundle's npmjs identity edge. One
-    Catalyst plan: two pushed predicate scans joined on the midpoint,
-    a third unioned in. Hard oracle: the dep-chain replica UNION the
-    encodeURIComponent-escaped npmjs sameAs replica."""
-    from npm_extraction_server_spark.plans.bgp import path_edges
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    OWL_SAME = "http://www.w3.org/2002/07/owl#sameAs"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    # crawl-derived triples only: the engine DIMENSION (SC8's fixed
-    # node/iojs table) also carries sameAs edges, constant and
-    # corpus-independent — excluded so the oracle derives every row
-    # from doc_id
-    t = run_pipeline(pages)["triples"].filter(
-        ~F.col("subj").startswith("http://example.org/engines/"))
-    return path_edges(
-        t, ("alt", ("seq", NPM + "dependency", DOAP + "revision"),
-            OWL_SAME))
-
-
-def _kg_bgp_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL VALUES: the dependency-chain bindings pinned to an
-    explicit two-module list — VALUES ?d { <hotpkg@^1.0.0>
-    <megalib@^1.0.0> } — the entity-list constraint a KG consumer
-    sends with every lookup batch. The inline table broadcasts into
-    the binding join. Hard oracle: the dep-chain replica filtered to
-    the same two IRIs."""
-    from npm_extraction_server_spark.plans.bgp import bgp_join
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    pin = ["http://example.org/bundles/npm/hotpkg/%5E1.0.0",
-           "http://example.org/bundles/npm/megalib/%5E1.0.0"]
-    return bgp_join(t, [("?v", NPM + "dependency", "?d"),
-                        ("?d", DOAP + "revision", "?rng")],
-                    select=["v", "d", "rng"],
-                    values=(["d"], [(p,) for p in pin]))
-
-
-def _kg_bgp_group_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL 1.1 aggregate completions over the dep-chain bindings,
-    GROUP BY ?v: GROUP_CONCAT(?rng) with canonical (sorted) element
-    order, SAMPLE(?d) (deterministic = min), COUNT(?d). Hard oracle:
-    DuckDB string_agg ORDER BY over the same distinct bindings."""
-    from npm_extraction_server_spark.plans.bgp import bgp_agg
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    return bgp_agg(
-        t,
-        [("?v", NPM + "dependency", "?d"),
-         ("?d", DOAP + "revision", "?rng")],
-        group_by=["v"],
-        aggs=[("rng", "group_concat", "all_ranges"),
-              ("d", "sample", "sample_dep"),
-              ("d", "count", "n_deps")])
-
-
-def _kg_bgp_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL 1.1 subquery: the dep-chain bindings extended with each
-    version's dependency count from a nested aggregate SELECT —
-    { SELECT ?v (COUNT(?d) AS ?n_deps) WHERE {...} GROUP BY ?v } —
-    and filtered to versions declaring >= 2 dependencies. Bottom-up
-    evaluation as one Catalyst plan: the aggregate joins back into
-    the outer bindings on ?v (broadcast under AQE — group cardinality
-    << binding count). Hard oracle: the dep-chain replica joined to
-    its own distinct-count CTE."""
-    from npm_extraction_server_spark.plans.bgp import bgp_agg, bgp_join
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    # the inner group repeats the revision pattern so the count runs
-    # over range-bearing deps only (bundledDependencies skolems carry
-    # npm:dependency but no doap:revision — S10's reified nodes)
-    sub = bgp_agg(t, [("?v", NPM + "dependency", "?d"),
-                      ("?d", DOAP + "revision", "?rng")],
-                  group_by=["v"], aggs=[("d", "count_distinct", "n_deps")])
-    return bgp_join(t, [("?v", NPM + "dependency", "?d"),
-                        ("?d", DOAP + "revision", "?rng")],
-                    subqueries=[sub],
-                    filters=["n_deps >= 2"],
-                    select=["v", "d", "rng", "n_deps"])
-
-
-def _kg_trig_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Named-graph serialization ROUND TRIP through real TriG text
-    (kernel/serialize.to_trig -> kernel/parse.parse_trig), executed
-    distributed: each partition's doap-slice quads (graph = source
-    page, the as_quads dataset-dump convention) are serialized to a
-    TriG document and re-parsed, and the parsed rows must equal the
-    input — the warc_roundtrip analog for the RDF text formats, in
-    the direction (parsing) the engine previously lacked. Hard
-    oracle: the doap replica extended with per-source graph
-    attribution (dep-range modules repeat per citing page; version/
-    bundle triples are unique to theirs)."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from npm_extraction_server_spark.plans.bgp import as_quads
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    q = (as_quads(t.filter(
-            F.col("pred").isin(DOAP + "name", DOAP + "revision")
-            & F.col("subj").startswith("http://example.org/bundles/npm/")
-            & ~F.col("subj").contains("/.well-known/"))
-         .select("subj", "pred", "obj", "obj_is_literal", "graph",
-                 "src_url")))
-
-    schema = T.StructType([
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("g", T.StringType(), False),
-    ])
-
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from npm_extraction_server_spark.kernel.jsonld_rdf import Triple
-        from npm_extraction_server_spark.kernel.parse import parse_trig
-        from npm_extraction_server_spark.kernel.serialize import to_trig
-
-        for pdf in batches:
-            ts = [Triple(s, p, o, True, g)
-                  for s, p, o, g in zip(pdf["subj"], pdf["pred"],
-                                        pdf["obj"], pdf["graph"])]
-            back = parse_trig(to_trig(ts))
-            yield pd.DataFrame(
-                {"subj": [x.subj for x in back],
-                 "pred": [x.pred for x in back],
-                 "obj": [x.obj for x in back],
-                 "g": [x.graph for x in back]})
-
-    return (q.select("subj", "pred", "obj", "graph")
-            .mapInPandas(roundtrip, schema=schema)
-            .dropDuplicates(["subj", "pred", "obj", "g"]))
-
-
-def _kg_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL DESCRIBE of the hotpkg bundle entity over the doap
-    slice (subject-or-object closure, depth 1) — completes the
-    SELECT / CONSTRUCT / DESCRIBE verb triad. Hard oracle: the doap
-    replica filtered the same way (hotpkg is doc 0's fixed name, so
-    the IRI is corpus-independent)."""
-    from npm_extraction_server_spark.plans.bgp import bgp_describe
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = _doap_slice(run_pipeline(pages)["triples"])
-    return bgp_describe(t, "http://example.org/bundles/npm/hotpkg")
-
-
-def _kg_void_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VoID-style dataset statistics over the doap slice: per
-    predicate, triple count + distinct subjects + distinct objects —
-    the RDF dataset-description standard a KG publishes about itself.
-    Hard oracle: the same aggregates over the doap replica."""
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = _doap_slice(run_pipeline(pages)["triples"])
-    return (t.groupBy("pred")
-            .agg(F.count("*").alias("n_triples"),
-                 F.count_distinct("subj").alias("n_subjects"),
-                 F.count_distinct("obj").alias("n_objects")))
-
-
-def _kg_bgp_ask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL ASK: does any version declare a dependency on
-    hotpkg@^1.0.0? (constant-object pattern -> LIMIT 1 probe).
-    Hard oracle: EXISTS over the alldeps replica."""
-    from npm_extraction_server_spark.plans.bgp import bgp_ask
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    return bgp_ask(t, [(
-        "?v", NPM + "dependency",
-        "http://example.org/bundles/npm/hotpkg/%5E1.0.0")])
-
-
-def _kg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SC5: changed-since window -> pipeline over only those pages,
-    projected to the doap slice so the driver can hard-verify it (the
-    synthetic warc_ts is 2017-06-01 + doc_id seconds, so the window
-    [00:00:30, 00:01:40) selects exactly doc_id in [30, 100))."""
-    from npm_extraction_server_spark.streaming.incremental import incremental_triples
-
-    pages = _pages_from_documents(spark, sf_dir, limit=200)
-    return _doap_slice(
-        incremental_triples(pages, "2017-06-01 00:00:30", "2017-06-01 00:01:40"))
-
-
-
-def _synth_blobs(spark: SparkSession, synth_fn, n: int = 64) -> DataFrame:
-    """Shared scaffold for the multimodal driver queries: n media
-    blobs generated distributedly from a deterministic per-id synth
-    function (one definition instead of six copy-pasted schema+gen
-    blocks)."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["id"],
-                "payload": [synth_fn(int(i)) for i in pdf["id"]],
-            })
-
-    return spark.range(n).mapInPandas(gen, schema=schema)
-
-
-def _mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary media -> typed metadata + features."""
-    from pyspark.sql import functions as F
-
-    from npm_extraction_server_spark.operators.multimodal import (
-        decode_features,
-        synth_media_df,
-    )
-
-    media = synth_media_df(spark, 64)
-    feats = decode_features(media, dim=8)
-    return media.select("media_id", "media_kind", "n_bytes", "sha").join(
-        feats.select("media_id", F.round(
-            F.aggregate("features", F.lit(0.0),
-                        lambda a, v: a + v * v), 6).alias("feat_norm_sq")),
-        "media_id")
-
-
-def _kg_triples_doap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A driver-verifiable SLICE of the full KG pipeline output: the
-    doap:name / doap:revision triples of every module version (skolem
-    genid subjects excluded). End-to-end coverage — page synthesis ->
-    html blob extraction -> kernel doc->RDF -> triples table — checked
-    bit-exact against a DuckDB re-derivation from doc_id alone."""
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    return _doap_slice(run_pipeline(pages)["triples"])
-
-
-# Three triple families in the slice: each module version's
-# name+revision, each bundle's name, and each (valid-range) dependency
-# reference's range-module revision (NpmModule dependency handling
-# emits a module IRI at the RAW range, doap:revision = the range
-# literal). The CASE arm is JS encodeURIComponent over the 6 valid
-# synth ranges. The {lo}/{hi} doc window parameterizes the slice: the
-# full-pipeline query uses [0, 100), the changed-since incremental
-# query [30, 100) (warc_ts = 2017-06-01 + doc_id seconds).
-# BGP star join (?m doap:name ?name)(?m doap:revision ?rev): exactly
-# the version modules — bundles carry name only, dependency range
-# modules revision only, so the conjunction discriminates.
-_KG_BGP_VERSION_META_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
-SELECT DISTINCT module_iri AS m,
-       '"' || name || '"' AS name,
-       '"' || ver || '"' AS rev
-FROM vers
-""")
-
 # BGP chain (?v npm:dependency ?d)(?d doap:revision ?rng): each
 # version's dependency edges joined to the range-module's revision
 # literal — per-VERSION (not per-package-distinct like the doap
 # slice's deps arm), replicating synth_package's two dependency arms.
-_KG_BGP_DEP_CHAIN_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
 alldeps AS (
   SELECT module_iri AS v,
     CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
@@ -2325,11 +1381,28 @@ SELECT DISTINCT v,
   '"' || rng || '"' AS rng
 FROM alldeps
 """)
+def kg_bgp_dep_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BGP 2-pattern chain over the raw triples:
+    (?v npm:dependency ?d)(?d doap:revision ?rng) — every version's
+    dependency edge joined to the range-module's revision literal, the
+    1-hop property path a KG consumer walks to resolve a dependency.
+    Hard oracle: synth replica of both dependency arms per version."""
+    from npm_extraction_server_spark.plans.bgp import bgp_join
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    return bgp_join(t, [("?v", NPM + "dependency", "?d"),
+                        ("?d", DOAP + "revision", "?rng")],
+                    select=["v", "d", "rng"])
+
 
 # OPTIONAL (?m npm:dependency ?d) over the version-meta star: vers
 # LEFT JOIN the per-version dependency replica (same alldeps CTE as
 # the dep chain); versions failing both arms keep a NULL d.
-_KG_BGP_OPTIONAL_DEPS_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
 alldeps AS (
   SELECT module_iri AS v,
     CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
@@ -2353,6 +1426,29 @@ SELECT DISTINCT vers.module_iri AS m,
   END AS d
 FROM vers LEFT JOIN alldeps a ON a.v = vers.module_iri
 """)
+def kg_bgp_optional_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL OPTIONAL over the raw triples: the version-meta star
+    (?m doap:name ?name)(?m doap:revision ?rev) left-extended with the
+    2-pattern group OPTIONAL {(?m npm:dependency ?d)(?d doap:revision
+    ?rng)} — valid-semver-range dependencies only (tarball/repo-
+    shorthand deps are skolem blank nodes WITHOUT a revision, so the
+    inner chain excludes them, replicating the reference's valid_range
+    split at NpmModule handling). Versions whose every dep is invalid
+    (~7% of the corpus) keep their row with NULL ?d. Hard oracle:
+    vers LEFT JOIN the per-version valid-dependency replica."""
+    from npm_extraction_server_spark.plans.bgp import bgp_optional
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    return bgp_optional(
+        t,
+        [("?m", DOAP + "name", "?name"), ("?m", DOAP + "revision", "?rev")],
+        [[("?m", NPM + "dependency", "?d"),
+          ("?d", DOAP + "revision", "?rng")]],
+        select=["m", "rev", "d"])
 
 
 _DOAP_ORACLE_TMPL = """
@@ -2411,12 +1507,37 @@ SELECT DISTINCT subj, pred, obj FROM (
 )
 """
 
+
 _KG_TRIPLES_DOAP_ORACLE = _DOAP_ORACLE_TMPL.format(lo=0, hi=100)
-_KG_INCREMENTAL_ORACLE = _DOAP_ORACLE_TMPL.format(lo=30, hi=100)
+
+
+@query("SELECT DISTINCT subj AS s, obj AS label FROM ("
+    + _KG_TRIPLES_DOAP_ORACLE + ")")
+def kg_bgp_union_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL UNION + FILTER over the raw triples:
+    {(?s doap:name ?label)} UNION {(?s doap:revision ?label)} with
+    FILTER(strstarts(?s, bundle prefix) && !contains '/.well-known/')
+    — every human-readable label in the KG keyed by subject, the
+    union-of-solution-mappings form. Hard oracle: the doap-slice
+    derivation reshaped to (s, label)."""
+    from npm_extraction_server_spark.plans.bgp import bgp_union
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    return bgp_union(
+        t,
+        [[("?s", DOAP + "name", "?label")],
+         [("?s", DOAP + "revision", "?label")]],
+        select=["s", "label"],
+        filters=[F.col("s").startswith("http://example.org/bundles/npm/")
+                 & ~F.col("s").contains("/.well-known/")])
+
 
 # CONSTRUCT from the version-meta star: both template arms re-derived
 # from the vers replica (label literal + constant type triple).
-_KG_BGP_CONSTRUCT_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
 SELECT DISTINCT subj, pred, obj FROM (
   SELECT module_iri AS subj,
          'http://www.w3.org/2000/01/rdf-schema#label' AS pred,
@@ -2429,27 +1550,27 @@ SELECT DISTINCT subj, pred, obj FROM (
   FROM vers
 )
 """)
+def kg_bgp_construct_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL CONSTRUCT over the raw triples: from the version-meta
+    star, materialize the inference rule "every named+versioned
+    module gets an rdfs:label and an explicit type triple" — two
+    template triples per binding, the single-rule materialized-
+    inference shape rule sets compose from. Hard oracle: both
+    template arms re-derived from the vers replica."""
+    from npm_extraction_server_spark.plans.bgp import bgp_construct
+    from npm_extraction_server_spark.plans.kg import run_pipeline
 
-# UNION of the two label predicates + subject FILTER == the doap
-# slice reshaped to (s, label): reuse its derivation verbatim.
-_KG_DESCRIBE_ORACLE = (
-    "SELECT DISTINCT subj, pred, obj FROM (" + _KG_TRIPLES_DOAP_ORACLE
-    + ") WHERE subj = 'http://example.org/bundles/npm/hotpkg'"
-      " OR obj = 'http://example.org/bundles/npm/hotpkg'")
+    DOAP = "http://usefulinc.com/ns/doap#"
+    RDFS = "http://www.w3.org/2000/01/rdf-schema#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    return bgp_construct(
+        t,
+        [("?m", DOAP + "name", "?name"), ("?m", DOAP + "revision", "?rev")],
+        [("?m", RDFS + "label", "?name"),
+         ("?m", "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
+          DOAP + "Version")])
 
-_KG_BGP_ASK_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
-SELECT EXISTS(SELECT 1 FROM vers WHERE hv % 3 = 0 AND hv % 10 < 8)
-    AS ask""")
-
-_KG_VOID_STATS_ORACLE = (
-    "SELECT pred, count(*)::BIGINT AS n_triples,"
-    " count(DISTINCT subj)::BIGINT AS n_subjects,"
-    " count(DISTINCT obj)::BIGINT AS n_objects FROM ("
-    + _KG_TRIPLES_DOAP_ORACLE + ") GROUP BY pred")
-
-_KG_BGP_UNION_LABELS_ORACLE = (
-    "SELECT DISTINCT subj AS s, obj AS label FROM ("
-    + _KG_TRIPLES_DOAP_ORACLE + ")")
 
 # GROUP BY ?v over the distinct (v, d, rng) bindings of the dep chain:
 # count distinct dep-module IRIs + min range literal per version. The
@@ -2480,9 +1601,35 @@ SELECT v, count(DISTINCT d)::BIGINT AS n_deps, min(rng) AS min_rng
 FROM bindings GROUP BY v
 """)
 
+
+@query(_KG_BGP_DEP_COUNTS_ORACLE)
+def kg_bgp_dep_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL GROUP BY over the raw triples: how many (distinct)
+    valid-range dependencies does each version declare, and what is
+    its lexicographically-first range literal —
+    SELECT ?v (COUNT(DISTINCT ?d) AS n_deps) (MIN(?rng) AS min_rng)
+    WHERE {(?v npm:dependency ?d)(?d doap:revision ?rng)} GROUP BY ?v.
+    Hard oracle: the alldeps synth replica grouped identically (all
+    outputs are integers/ASCII strings — no float drift)."""
+    from npm_extraction_server_spark.plans.bgp import bgp_agg
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    return bgp_agg(
+        t,
+        [("?v", NPM + "dependency", "?d"),
+         ("?d", DOAP + "revision", "?rng")],
+        group_by=["v"],
+        aggs=[("d", "count_distinct", "n_deps"),
+              ("rng", "min", "min_rng")])
+
+
 # MINUS: version modules whose every dependency is invalid — vers
 # anti-joined against the dep-chain replica on the shared ?m.
-_KG_BGP_MINUS_DEPS_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
 alldeps AS (
   SELECT module_iri AS v FROM vers WHERE hv%10 < 8
   UNION ALL
@@ -2493,20 +1640,318 @@ SELECT DISTINCT module_iri AS m,
        '"' || ver || '"' AS rev
 FROM vers WHERE module_iri NOT IN (SELECT v FROM alldeps)
 """)
+def kg_bgp_minus_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL MINUS over the raw triples: the version-meta star MINUS
+    the valid-dependency chain — versions declaring NO valid-semver
+    dependency (~7% of the corpus; their deps are all tarball/repo-
+    shorthand skolem nodes without a revision). The negation query
+    that finds the KG's leaves. Hard oracle: vers anti-joined against
+    the alldeps replica."""
+    from npm_extraction_server_spark.plans.bgp import bgp_minus
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    return bgp_minus(
+        t,
+        [("?m", DOAP + "name", "?name"),
+         ("?m", DOAP + "revision", "?rev")],
+        [[("?m", NPM + "dependency", "?d"),
+          ("?d", DOAP + "revision", "?rng")]],
+        select=["m", "name", "rev"])
+
 
 # GRAPH ?g star: each version's (m, rev) plus the named graph it lives
 # in = its source page's url (as_quads coalesces NULL graph -> src_url;
 # the synthetic url is a pure function of doc_id, vers carries i).
-_KG_BGP_QUADS_META_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
 SELECT DISTINCT module_iri AS m,
        '"' || ver || '"' AS rev,
        'http://crawl.example.org/' || (i % 100) || '/doc-' || i AS g
 FROM vers
 """)
+def kg_bgp_quads_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL GRAPH with a graph VARIABLE over the quad dataset: the
+    version-meta star constrained to a single named graph —
+    GRAPH ?g { ?m doap:name ?name . ?m doap:revision ?rev } — over
+    as_quads(triples) (graph = each triple's source document, the
+    per-package-document dataset the reference serves). Binds which
+    crawl page each version's metadata came from. Hard oracle: the
+    vers replica with g re-derived from doc_id (the synthetic page
+    url is a pure function of it)."""
+    from npm_extraction_server_spark.plans.bgp import as_quads, bgp_join
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    q = as_quads(run_pipeline(pages)["triples"])
+    return bgp_join(q, [("?m", DOAP + "name", "?name", "?g"),
+                        ("?m", DOAP + "revision", "?rev", "?g")],
+                    select=["m", "rev", "g"])
+
+
+# GRAPH <const>: doc 0 is the fixed 'hotpkg' package; its graph holds
+# the bundle's doap:name plus one per version module (dep-range modules
+# carry revision only, so the name pattern excludes them).
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
+SELECT DISTINCT s, name FROM (
+  SELECT 'http://example.org/bundles/npm/hotpkg' AS s,
+         '"hotpkg"' AS name
+  FROM pkg WHERE i = 0
+  UNION ALL
+  SELECT module_iri, '"' || name || '"' FROM vers WHERE i = 0
+)
+""")
+def kg_bgp_graph_const(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL GRAPH with a CONSTANT graph IRI: all doap:name bindings
+    inside ONE source document's named graph — GRAPH <doc-0's url>
+    { ?s doap:name ?name } — the "what did this page contribute"
+    provenance query. The constant graph term is an ordinary scan
+    filter (partition-prunable on a graph-partitioned layout). Hard
+    oracle: doc 0 is the fixed 'hotpkg' package, so the bundle IRI +
+    its version-module IRIs are re-derived from doc_id 0 alone."""
+    from npm_extraction_server_spark.plans.bgp import as_quads, bgp_join
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    q = as_quads(run_pipeline(pages)["triples"])
+    return bgp_join(
+        q,
+        [("?s", DOAP + "name", "?name", "http://crawl.example.org/0/doc-0")],
+        select=["s", "name"],
+        filters=[F.col("s").startswith("http://example.org/bundles/npm/")])
+
+
+# ORDER BY (v, d, rng) LIMIT 25 over the distinct dep-chain bindings —
+# full-tuple ordering, so the page is deterministic in both engines.
+_KG_BGP_TOPK_DEPS_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+alldeps AS (
+  SELECT module_iri AS v,
+    CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
+              ELSE 'ultrautil' END AS dep_pkg,
+    '^1.0.0' AS rng
+  FROM vers WHERE hv%10 < 8
+  UNION ALL
+  SELECT module_iri, 'pkg-' || (hv%1000),
+    CASE hv%9 WHEN 0 THEN '^1.0.0' WHEN 1 THEN '~1.2' WHEN 2 THEN '1.x'
+              WHEN 3 THEN '*' WHEN 4 THEN '>=1.0.0 <2'
+              WHEN 5 THEN '1.0.0' END
+  FROM vers WHERE hv%9 <= 5
+),
+bindings AS (
+  SELECT DISTINCT v,
+    'http://example.org/bundles/npm/' || dep_pkg || '/' ||
+      """ + _RNG_ENC_CASE + """ AS d,
+    '"' || rng || '"' AS rng
+  FROM alldeps
+)
+SELECT v, d, rng FROM bindings ORDER BY v, d, rng LIMIT 25
+""")
+
+
+@query(_KG_BGP_TOPK_DEPS_ORACLE)
+def kg_bgp_topk_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL solution modifiers (ORDER BY + LIMIT) as a BGP-layer
+    surface: the dependency-chain bindings ordered by the full
+    (v, d, rng) tuple, first 25 — a deterministic top-k page. Plans
+    as TakeOrderedAndProject (per-partition heap + k-row merge),
+    never a global sort (plan-asserted in tests/test_plans.py). Hard
+    oracle: the dep-chain replica under the same ORDER BY/LIMIT."""
+    from npm_extraction_server_spark.plans.bgp import bgp_join
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    return bgp_join(t, [("?v", NPM + "dependency", "?d"),
+                        ("?d", DOAP + "revision", "?rng")],
+                    select=["v", "d", "rng"],
+                    order_by=["v", "d", "rng"], limit=25)
+
+
+# EXISTS dual of the minus oracle: versions WITH a valid dep.
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+alldeps AS (
+  SELECT module_iri AS v FROM vers WHERE hv%10 < 8
+  UNION ALL
+  SELECT module_iri FROM vers WHERE hv%9 <= 5
+)
+SELECT DISTINCT module_iri AS m,
+       '"' || name || '"' AS name,
+       '"' || ver || '"' AS rev
+FROM vers WHERE module_iri IN (SELECT v FROM alldeps)
+""")
+def kg_bgp_exists_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL FILTER EXISTS (plans/bgp.bgp_exists): the version-meta
+    star kept only where a valid-semver dependency chain EXISTS — the
+    positive dual of kg_bgp_minus_deps (their row sets partition the
+    version universe; both hard-oracled, so the duality itself is
+    cross-checked). One LEFT SEMI join on the shared ?m."""
+    from npm_extraction_server_spark.plans.bgp import bgp_exists
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    return bgp_exists(
+        t,
+        [("?m", DOAP + "name", "?name"),
+         ("?m", DOAP + "revision", "?rev")],
+        [[("?m", NPM + "dependency", "?d"),
+          ("?d", DOAP + "revision", "?rng")]],
+        select=["m", "name", "rev"])
+
+
+# BIND derivation: bare range + its length from the quoted literal.
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+alldeps AS (
+  SELECT module_iri AS v,
+    CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
+              ELSE 'ultrautil' END AS dep_pkg,
+    '^1.0.0' AS rng
+  FROM vers WHERE hv%10 < 8
+  UNION ALL
+  SELECT module_iri, 'pkg-' || (hv%1000),
+    CASE hv%9 WHEN 0 THEN '^1.0.0' WHEN 1 THEN '~1.2' WHEN 2 THEN '1.x'
+              WHEN 3 THEN '*' WHEN 4 THEN '>=1.0.0 <2'
+              WHEN 5 THEN '1.0.0' END
+  FROM vers WHERE hv%9 <= 5
+)
+SELECT DISTINCT v, rng AS bare, length(rng)::INT AS rng_len
+FROM alldeps WHERE length(rng) >= 4
+""")
+def kg_bgp_bind(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL BIND over the dep-chain bindings: derive the bare range
+    string (strip the literal quotes) and its length, then FILTER on
+    the derived variable — BIND(expr AS ?var) evaluated before FILTER
+    so downstream clauses see it, exactly the SPARQL scoping. Hard
+    oracle: identical string derivation in DuckDB."""
+    from npm_extraction_server_spark.plans.bgp import bgp_join
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    return bgp_join(
+        t, [("?v", NPM + "dependency", "?d"),
+            ("?d", DOAP + "revision", "?rng")],
+        bind={"bare": "substring(rng, 2, length(rng) - 2)",
+              "rng_len": "length(rng) - 2"},
+        filters=["rng_len >= 4"],
+        select=["v", "bare", "rng_len"])
+
+
+# (dependency/revision) | sameAs: dep-chain (v -> range literal) UNION
+# bundle -> npmjs identity (encodeURIComponent-escaped name).
+_KG_BGP_PATH_OPS_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+alldeps AS (
+  SELECT module_iri AS v,
+    CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
+              ELSE 'ultrautil' END AS dep_pkg,
+    '^1.0.0' AS rng
+  FROM vers WHERE hv%10 < 8
+  UNION ALL
+  SELECT module_iri, 'pkg-' || (hv%1000),
+    CASE hv%9 WHEN 0 THEN '^1.0.0' WHEN 1 THEN '~1.2' WHEN 2 THEN '1.x'
+              WHEN 3 THEN '*' WHEN 4 THEN '>=1.0.0 <2'
+              WHEN 5 THEN '1.0.0' END
+  FROM vers WHERE hv%9 <= 5
+)
+SELECT DISTINCT src, dst FROM (
+  SELECT v AS src, '"' || rng || '"' AS dst FROM alldeps
+  UNION ALL
+  SELECT 'http://example.org/bundles/npm/' || name,
+         'https://www.npmjs.com/package/' ||
+           replace(replace(name,'@','%40'),'/','%2F')
+  FROM pkg
+)
+""")
+
+
+@query(_KG_BGP_PATH_OPS_ORACLE)
+def kg_bgp_path_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL property-path ALGEBRA (plans/bgp.path_edges): the path
+    ``(npm:dependency / doap:revision) | owl:sameAs`` — sequence
+    composes the dependency hop with the range-literal hop,
+    alternative unions in each bundle's npmjs identity edge. One
+    Catalyst plan: two pushed predicate scans joined on the midpoint,
+    a third unioned in. Hard oracle: the dep-chain replica UNION the
+    encodeURIComponent-escaped npmjs sameAs replica."""
+    from npm_extraction_server_spark.plans.bgp import path_edges
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    OWL_SAME = "http://www.w3.org/2002/07/owl#sameAs"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    # crawl-derived triples only: the engine DIMENSION (SC8's fixed
+    # node/iojs table) also carries sameAs edges, constant and
+    # corpus-independent — excluded so the oracle derives every row
+    # from doc_id
+    t = run_pipeline(pages)["triples"].filter(
+        ~F.col("subj").startswith("http://example.org/engines/"))
+    return path_edges(
+        t, ("alt", ("seq", NPM + "dependency", DOAP + "revision"),
+            OWL_SAME))
+
+
+# dep chain under VALUES ?d { hotpkg@^1.0.0, megalib@^1.0.0 }.
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+alldeps AS (
+  SELECT module_iri AS v,
+    CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
+              ELSE 'ultrautil' END AS dep_pkg,
+    '^1.0.0' AS rng
+  FROM vers WHERE hv%10 < 8
+  UNION ALL
+  SELECT module_iri, 'pkg-' || (hv%1000),
+    CASE hv%9 WHEN 0 THEN '^1.0.0' WHEN 1 THEN '~1.2' WHEN 2 THEN '1.x'
+              WHEN 3 THEN '*' WHEN 4 THEN '>=1.0.0 <2'
+              WHEN 5 THEN '1.0.0' END
+  FROM vers WHERE hv%9 <= 5
+),
+bindings AS (
+  SELECT DISTINCT v,
+    'http://example.org/bundles/npm/' || dep_pkg || '/' ||
+      """ + _RNG_ENC_CASE + """ AS d,
+    '"' || rng || '"' AS rng
+  FROM alldeps
+)
+SELECT v, d, rng FROM bindings
+WHERE d IN ('http://example.org/bundles/npm/hotpkg/%5E1.0.0',
+            'http://example.org/bundles/npm/megalib/%5E1.0.0')
+""")
+def kg_bgp_values(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL VALUES: the dependency-chain bindings pinned to an
+    explicit two-module list — VALUES ?d { <hotpkg@^1.0.0>
+    <megalib@^1.0.0> } — the entity-list constraint a KG consumer
+    sends with every lookup batch. The inline table broadcasts into
+    the binding join. Hard oracle: the dep-chain replica filtered to
+    the same two IRIs."""
+    from npm_extraction_server_spark.plans.bgp import bgp_join
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    pin = ["http://example.org/bundles/npm/hotpkg/%5E1.0.0",
+           "http://example.org/bundles/npm/megalib/%5E1.0.0"]
+    return bgp_join(t, [("?v", NPM + "dependency", "?d"),
+                        ("?d", DOAP + "revision", "?rng")],
+                    select=["v", "d", "rng"],
+                    values=(["d"], [(p,) for p in pin]))
+
 
 # GROUP BY ?v over distinct dep-chain bindings with canonical-order
 # GROUP_CONCAT + min-SAMPLE + COUNT.
-_KG_BGP_GROUP_CONCAT_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
 alldeps AS (
   SELECT module_iri AS v,
     CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
@@ -2533,11 +1978,92 @@ SELECT v,
        count(d)::BIGINT AS n_deps
 FROM bindings GROUP BY v
 """)
+def kg_bgp_group_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL 1.1 aggregate completions over the dep-chain bindings,
+    GROUP BY ?v: GROUP_CONCAT(?rng) with canonical (sorted) element
+    order, SAMPLE(?d) (deterministic = min), COUNT(?d). Hard oracle:
+    DuckDB string_agg ORDER BY over the same distinct bindings."""
+    from npm_extraction_server_spark.plans.bgp import bgp_agg
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    return bgp_agg(
+        t,
+        [("?v", NPM + "dependency", "?d"),
+         ("?d", DOAP + "revision", "?rng")],
+        group_by=["v"],
+        aggs=[("rng", "group_concat", "all_ranges"),
+              ("d", "sample", "sample_dep"),
+              ("d", "count", "n_deps")])
+
+
+# Subquery: dep-chain bindings joined to the per-version dependency
+# count (the nested aggregate SELECT), kept where n_deps >= 2.
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+alldeps AS (
+  SELECT module_iri AS v,
+    CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
+              ELSE 'ultrautil' END AS dep_pkg,
+    '^1.0.0' AS rng
+  FROM vers WHERE hv%10 < 8
+  UNION ALL
+  SELECT module_iri, 'pkg-' || (hv%1000),
+    CASE hv%9 WHEN 0 THEN '^1.0.0' WHEN 1 THEN '~1.2' WHEN 2 THEN '1.x'
+              WHEN 3 THEN '*' WHEN 4 THEN '>=1.0.0 <2'
+              WHEN 5 THEN '1.0.0' END
+  FROM vers WHERE hv%9 <= 5
+),
+bindings AS (
+  SELECT DISTINCT v,
+    'http://example.org/bundles/npm/' || dep_pkg || '/' ||
+      """ + _RNG_ENC_CASE + """ AS d,
+    '"' || rng || '"' AS rng
+  FROM alldeps
+),
+counts AS (
+  SELECT v, count(DISTINCT d)::BIGINT AS n_deps
+  FROM bindings GROUP BY v
+)
+SELECT b.v, b.d, b.rng, c.n_deps
+FROM bindings b JOIN counts c USING (v)
+WHERE c.n_deps >= 2
+""")
+def kg_bgp_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL 1.1 subquery: the dep-chain bindings extended with each
+    version's dependency count from a nested aggregate SELECT —
+    { SELECT ?v (COUNT(?d) AS ?n_deps) WHERE {...} GROUP BY ?v } —
+    and filtered to versions declaring >= 2 dependencies. Bottom-up
+    evaluation as one Catalyst plan: the aggregate joins back into
+    the outer bindings on ?v (broadcast under AQE — group cardinality
+    << binding count). Hard oracle: the dep-chain replica joined to
+    its own distinct-count CTE."""
+    from npm_extraction_server_spark.plans.bgp import bgp_agg, bgp_join
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    # the inner group repeats the revision pattern so the count runs
+    # over range-bearing deps only (bundledDependencies skolems carry
+    # npm:dependency but no doap:revision — S10's reified nodes)
+    sub = bgp_agg(t, [("?v", NPM + "dependency", "?d"),
+                      ("?d", DOAP + "revision", "?rng")],
+                  group_by=["v"], aggs=[("d", "count_distinct", "n_deps")])
+    return bgp_join(t, [("?v", NPM + "dependency", "?d"),
+                        ("?d", DOAP + "revision", "?rng")],
+                    subqueries=[sub],
+                    filters=["n_deps >= 2"],
+                    select=["v", "d", "rng", "n_deps"])
+
 
 # The doap replica with per-source-graph attribution: version/bundle
 # triples belong to their own page's graph; dep-range revisions repeat
 # once per citing page (DISTINCT per (quad), not per (triple)).
-_KG_TRIG_ROUNDTRIP_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
 SELECT DISTINCT subj, pred, obj, g FROM (
   SELECT module_iri AS subj, 'http://usefulinc.com/ns/doap#name' AS pred,
          '"' || name || '"' AS obj,
@@ -2576,189 +2102,190 @@ SELECT DISTINCT subj, pred, obj, g FROM (
   )
 )
 """)
+def kg_trig_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Named-graph serialization ROUND TRIP through real TriG text
+    (kernel/serialize.to_trig -> kernel/parse.parse_trig), executed
+    distributed: each partition's doap-slice quads (graph = source
+    page, the as_quads dataset-dump convention) are serialized to a
+    TriG document and re-parsed, and the parsed rows must equal the
+    input — the warc_roundtrip analog for the RDF text formats, in
+    the direction (parsing) the engine previously lacked. Hard
+    oracle: the doap replica extended with per-source graph
+    attribution (dep-range modules repeat per citing page; version/
+    bundle triples are unique to theirs)."""
+    from typing import Iterator
 
-# BIND derivation: bare range + its length from the quoted literal.
-_KG_BGP_BIND_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
-alldeps AS (
-  SELECT module_iri AS v,
-    CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
-              ELSE 'ultrautil' END AS dep_pkg,
-    '^1.0.0' AS rng
-  FROM vers WHERE hv%10 < 8
-  UNION ALL
-  SELECT module_iri, 'pkg-' || (hv%1000),
-    CASE hv%9 WHEN 0 THEN '^1.0.0' WHEN 1 THEN '~1.2' WHEN 2 THEN '1.x'
-              WHEN 3 THEN '*' WHEN 4 THEN '>=1.0.0 <2'
-              WHEN 5 THEN '1.0.0' END
-  FROM vers WHERE hv%9 <= 5
-)
-SELECT DISTINCT v, rng AS bare, length(rng)::INT AS rng_len
-FROM alldeps WHERE length(rng) >= 4
-""")
+    import pandas as pd
+    from pyspark.sql import types as T
 
-# EXISTS dual of the minus oracle: versions WITH a valid dep.
-_KG_BGP_EXISTS_DEPS_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
-alldeps AS (
-  SELECT module_iri AS v FROM vers WHERE hv%10 < 8
-  UNION ALL
-  SELECT module_iri FROM vers WHERE hv%9 <= 5
-)
-SELECT DISTINCT module_iri AS m,
-       '"' || name || '"' AS name,
-       '"' || ver || '"' AS rev
-FROM vers WHERE module_iri IN (SELECT v FROM alldeps)
-""")
+    from npm_extraction_server_spark.plans.bgp import as_quads
+    from npm_extraction_server_spark.plans.kg import run_pipeline
 
-# (dependency/revision) | sameAs: dep-chain (v -> range literal) UNION
-# bundle -> npmjs identity (encodeURIComponent-escaped name).
-_KG_BGP_PATH_OPS_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
-alldeps AS (
-  SELECT module_iri AS v,
-    CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
-              ELSE 'ultrautil' END AS dep_pkg,
-    '^1.0.0' AS rng
-  FROM vers WHERE hv%10 < 8
-  UNION ALL
-  SELECT module_iri, 'pkg-' || (hv%1000),
-    CASE hv%9 WHEN 0 THEN '^1.0.0' WHEN 1 THEN '~1.2' WHEN 2 THEN '1.x'
-              WHEN 3 THEN '*' WHEN 4 THEN '>=1.0.0 <2'
-              WHEN 5 THEN '1.0.0' END
-  FROM vers WHERE hv%9 <= 5
-)
-SELECT DISTINCT src, dst FROM (
-  SELECT v AS src, '"' || rng || '"' AS dst FROM alldeps
-  UNION ALL
-  SELECT 'http://example.org/bundles/npm/' || name,
-         'https://www.npmjs.com/package/' ||
-           replace(replace(name,'@','%40'),'/','%2F')
-  FROM pkg
-)
-""")
+    DOAP = "http://usefulinc.com/ns/doap#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    q = (as_quads(t.filter(
+            F.col("pred").isin(DOAP + "name", DOAP + "revision")
+            & F.col("subj").startswith("http://example.org/bundles/npm/")
+            & ~F.col("subj").contains("/.well-known/"))
+         .select("subj", "pred", "obj", "obj_is_literal", "graph",
+                 "src_url")))
 
-# dep chain under VALUES ?d { hotpkg@^1.0.0, megalib@^1.0.0 }.
-_KG_BGP_VALUES_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
-alldeps AS (
-  SELECT module_iri AS v,
-    CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
-              ELSE 'ultrautil' END AS dep_pkg,
-    '^1.0.0' AS rng
-  FROM vers WHERE hv%10 < 8
-  UNION ALL
-  SELECT module_iri, 'pkg-' || (hv%1000),
-    CASE hv%9 WHEN 0 THEN '^1.0.0' WHEN 1 THEN '~1.2' WHEN 2 THEN '1.x'
-              WHEN 3 THEN '*' WHEN 4 THEN '>=1.0.0 <2'
-              WHEN 5 THEN '1.0.0' END
-  FROM vers WHERE hv%9 <= 5
-),
-bindings AS (
-  SELECT DISTINCT v,
-    'http://example.org/bundles/npm/' || dep_pkg || '/' ||
-      """ + _RNG_ENC_CASE + """ AS d,
-    '"' || rng || '"' AS rng
-  FROM alldeps
-)
-SELECT v, d, rng FROM bindings
-WHERE d IN ('http://example.org/bundles/npm/hotpkg/%5E1.0.0',
-            'http://example.org/bundles/npm/megalib/%5E1.0.0')
-""")
+    schema = T.StructType([
+        T.StructField("subj", T.StringType(), False),
+        T.StructField("pred", T.StringType(), False),
+        T.StructField("obj", T.StringType(), False),
+        T.StructField("g", T.StringType(), False),
+    ])
 
-# Subquery: dep-chain bindings joined to the per-version dependency
-# count (the nested aggregate SELECT), kept where n_deps >= 2.
-_KG_BGP_SUBQUERY_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
-alldeps AS (
-  SELECT module_iri AS v,
-    CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
-              ELSE 'ultrautil' END AS dep_pkg,
-    '^1.0.0' AS rng
-  FROM vers WHERE hv%10 < 8
-  UNION ALL
-  SELECT module_iri, 'pkg-' || (hv%1000),
-    CASE hv%9 WHEN 0 THEN '^1.0.0' WHEN 1 THEN '~1.2' WHEN 2 THEN '1.x'
-              WHEN 3 THEN '*' WHEN 4 THEN '>=1.0.0 <2'
-              WHEN 5 THEN '1.0.0' END
-  FROM vers WHERE hv%9 <= 5
-),
-bindings AS (
-  SELECT DISTINCT v,
-    'http://example.org/bundles/npm/' || dep_pkg || '/' ||
-      """ + _RNG_ENC_CASE + """ AS d,
-    '"' || rng || '"' AS rng
-  FROM alldeps
-),
-counts AS (
-  SELECT v, count(DISTINCT d)::BIGINT AS n_deps
-  FROM bindings GROUP BY v
-)
-SELECT b.v, b.d, b.rng, c.n_deps
-FROM bindings b JOIN counts c USING (v)
-WHERE c.n_deps >= 2
-""")
+    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from npm_extraction_server_spark.kernel.jsonld_rdf import Triple
+        from npm_extraction_server_spark.kernel.parse import parse_trig
+        from npm_extraction_server_spark.kernel.serialize import to_trig
 
-# GRAPH <const>: doc 0 is the fixed 'hotpkg' package; its graph holds
-# the bundle's doap:name plus one per version module (dep-range modules
-# carry revision only, so the name pattern excludes them).
-_KG_BGP_GRAPH_CONST_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
-SELECT DISTINCT s, name FROM (
-  SELECT 'http://example.org/bundles/npm/hotpkg' AS s,
-         '"hotpkg"' AS name
-  FROM pkg WHERE i = 0
-  UNION ALL
-  SELECT module_iri, '"' || name || '"' FROM vers WHERE i = 0
-)
-""")
+        for pdf in batches:
+            ts = [Triple(s, p, o, True, g)
+                  for s, p, o, g in zip(pdf["subj"], pdf["pred"],
+                                        pdf["obj"], pdf["graph"])]
+            back = parse_trig(to_trig(ts))
+            yield pd.DataFrame(
+                {"subj": [x.subj for x in back],
+                 "pred": [x.pred for x in back],
+                 "obj": [x.obj for x in back],
+                 "g": [x.graph for x in back]})
 
-# ORDER BY (v, d, rng) LIMIT 25 over the distinct dep-chain bindings —
-# full-tuple ordering, so the page is deterministic in both engines.
-_KG_BGP_TOPK_DEPS_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
-alldeps AS (
-  SELECT module_iri AS v,
-    CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
-              ELSE 'ultrautil' END AS dep_pkg,
-    '^1.0.0' AS rng
-  FROM vers WHERE hv%10 < 8
-  UNION ALL
-  SELECT module_iri, 'pkg-' || (hv%1000),
-    CASE hv%9 WHEN 0 THEN '^1.0.0' WHEN 1 THEN '~1.2' WHEN 2 THEN '1.x'
-              WHEN 3 THEN '*' WHEN 4 THEN '>=1.0.0 <2'
-              WHEN 5 THEN '1.0.0' END
-  FROM vers WHERE hv%9 <= 5
-),
-bindings AS (
-  SELECT DISTINCT v,
-    'http://example.org/bundles/npm/' || dep_pkg || '/' ||
-      """ + _RNG_ENC_CASE + """ AS d,
-    '"' || rng || '"' AS rng
-  FROM alldeps
-)
-SELECT v, d, rng FROM bindings ORDER BY v, d, rng LIMIT 25
-""")
+    return (q.select("subj", "pred", "obj", "graph")
+            .mapInPandas(roundtrip, schema=schema)
+            .dropDuplicates(["subj", "pred", "obj", "g"]))
 
 
-def _tar_members(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SC9: gunzip+tar walk over binary tarball blobs (Spark really
-    extracts; the DuckDB oracle re-derives the expected members
-    analytically from the deterministic corpus)."""
-    from npm_extraction_server_spark.sources.tarballs import (
-        synth_tarballs,
-        tarball_members,
+# UNION of the two label predicates + subject FILTER == the doap
+# slice reshaped to (s, label): reuse its derivation verbatim.
+@query("SELECT DISTINCT subj, pred, obj FROM (" + _KG_TRIPLES_DOAP_ORACLE
+    + ") WHERE subj = 'http://example.org/bundles/npm/hotpkg'"
+      " OR obj = 'http://example.org/bundles/npm/hotpkg'")
+def kg_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL DESCRIBE of the hotpkg bundle entity over the doap
+    slice (subject-or-object closure, depth 1) — completes the
+    SELECT / CONSTRUCT / DESCRIBE verb triad. Hard oracle: the doap
+    replica filtered the same way (hotpkg is doc 0's fixed name, so
+    the IRI is corpus-independent)."""
+    from npm_extraction_server_spark.plans.bgp import bgp_describe
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = _doap_slice(run_pipeline(pages)["triples"])
+    return bgp_describe(t, "http://example.org/bundles/npm/hotpkg")
+
+
+@query("SELECT pred, count(*)::BIGINT AS n_triples,"
+    " count(DISTINCT subj)::BIGINT AS n_subjects,"
+    " count(DISTINCT obj)::BIGINT AS n_objects FROM ("
+    + _KG_TRIPLES_DOAP_ORACLE + ") GROUP BY pred")
+def kg_void_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """VoID-style dataset statistics over the doap slice: per
+    predicate, triple count + distinct subjects + distinct objects —
+    the RDF dataset-description standard a KG publishes about itself.
+    Hard oracle: the same aggregates over the doap replica."""
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = _doap_slice(run_pipeline(pages)["triples"])
+    return (t.groupBy("pred")
+            .agg(F.count("*").alias("n_triples"),
+                 F.count_distinct("subj").alias("n_subjects"),
+                 F.count_distinct("obj").alias("n_objects")))
+
+
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """
+SELECT EXISTS(SELECT 1 FROM vers WHERE hv % 3 = 0 AND hv % 10 < 8)
+    AS ask""")
+def kg_bgp_ask(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPARQL ASK: does any version declare a dependency on
+    hotpkg@^1.0.0? (constant-object pattern -> LIMIT 1 probe).
+    Hard oracle: EXISTS over the alldeps replica."""
+    from npm_extraction_server_spark.plans.bgp import bgp_ask
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    return bgp_ask(t, [(
+        "?v", NPM + "dependency",
+        "http://example.org/bundles/npm/hotpkg/%5E1.0.0")])
+
+
+@query(_DOAP_ORACLE_TMPL.format(lo=30, hi=100))
+def kg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SC5: changed-since window -> pipeline over only those pages,
+    projected to the doap slice so the driver can hard-verify it (the
+    synthetic warc_ts is 2017-06-01 + doc_id seconds, so the window
+    [00:00:30, 00:01:40) selects exactly doc_id in [30, 100))."""
+    from npm_extraction_server_spark.streaming.incremental import incremental_triples
+
+    pages = _pages_from_documents(spark, sf_dir, limit=200)
+    return _doap_slice(
+        incremental_triples(pages, "2017-06-01 00:00:30", "2017-06-01 00:01:40"))
+
+
+def _synth_blobs(spark: SparkSession, synth_fn, n: int = 64) -> DataFrame:
+    """Shared scaffold for the multimodal driver queries: n media
+    blobs generated distributedly from a deterministic per-id synth
+    function (one definition instead of six copy-pasted schema+gen
+    blocks)."""
+    from typing import Iterator
+
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), True),
+    ])
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame({
+                "media_id": pdf["id"],
+                "payload": [synth_fn(int(i)) for i in pdf["id"]],
+            })
+
+    return spark.range(n).mapInPandas(gen, schema=schema)
+
+
+@query(None)
+def mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal plumbing: binary media -> typed metadata + features."""
+    from pyspark.sql import functions as F
+
+    from npm_extraction_server_spark.operators.multimodal import (
+        decode_features,
+        synth_media_df,
     )
 
-    return tarball_members(synth_tarballs(spark, 20))
+    media = synth_media_df(spark, 64)
+    feats = decode_features(media, dim=8)
+    return media.select("media_id", "media_kind", "n_bytes", "sha").join(
+        feats.select("media_id", F.round(
+            F.aggregate("features", F.lit(0.0),
+                        lambda a, v: a + v * v), 6).alias("feat_norm_sq")),
+        "media_id")
 
 
-def _tar_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SC10 + the lsd component BFS: resolve 'components.jsonld' under
-    package/, follow relative 'import' edges, emit components with the
-    defining file's @context (NpmModule.js:216-243)."""
-    from npm_extraction_server_spark.sources.tarballs import (
-        lsd_component_closure,
-        synth_tarballs,
-    )
+@query(_KG_TRIPLES_DOAP_ORACLE)
+def kg_triples_doap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A driver-verifiable SLICE of the full KG pipeline output: the
+    doap:name / doap:revision triples of every module version (skolem
+    genid subjects excluded). End-to-end coverage — page synthesis ->
+    html blob extraction -> kernel doc->RDF -> triples table — checked
+    bit-exact against a DuckDB re-derivation from doc_id alone."""
+    from npm_extraction_server_spark.plans.kg import run_pipeline
 
-    return lsd_component_closure(synth_tarballs(spark, 20))
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    return _doap_slice(run_pipeline(pages)["triples"])
 
 
-_TAR_MEMBERS_ORACLE = """
+@query("""
 WITH t AS (SELECT unnest(generate_series(0, 19)) AS i),
 files AS (
   SELECT 'tar-' || i AS tar_id, 'package/package.json' AS member_path,
@@ -2779,9 +2306,20 @@ files AS (
 SELECT tar_id, member_path, length(body)::BIGINT AS n_bytes,
        sha256(body) AS sha
 FROM files
-"""
+""")
+def tar_members(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SC9: gunzip+tar walk over binary tarball blobs (Spark really
+    extracts; the DuckDB oracle re-derives the expected members
+    analytically from the deterministic corpus)."""
+    from npm_extraction_server_spark.sources.tarballs import (
+        synth_tarballs,
+        tarball_members,
+    )
 
-_TAR_COMPONENTS_ORACLE = """
+    return tarball_members(synth_tarballs(spark, 20))
+
+
+@query("""
 WITH t AS (SELECT unnest(generate_series(0, 19)) AS i)
 SELECT 'tar-' || i AS tar_id,
        '{"@context":"http://example.org/ctx/' || i ||
@@ -2792,25 +2330,22 @@ SELECT 'tar-' || i,
        '{"@context":"http://example.org/ctx/' || i ||
        '/sub","@id":"http://example.org/c/' || i || '/extra"}'
 FROM t
-"""
-
-
-def _mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode: Spark parses actual PCM WAV blobs (stdlib
-    wave) and computes sample statistics; the DuckDB oracle re-derives
-    every field ANALYTICALLY from the synthesis formula — a hard check
-    on the whole container round-trip."""
-    from npm_extraction_server_spark.operators.multimodal import (
-        audio_features,
-        synth_media_df,
+""")
+def tar_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SC10 + the lsd component BFS: resolve 'components.jsonld' under
+    package/, follow relative 'import' edges, emit components with the
+    defining file's @context (NpmModule.js:216-243)."""
+    from npm_extraction_server_spark.sources.tarballs import (
+        lsd_component_closure,
+        synth_tarballs,
     )
 
-    return audio_features(synth_media_df(spark, 64))
+    return lsd_component_closure(synth_tarballs(spark, 20))
 
 
 # samples[j] = ((i*37 + j*13) % 2048) - 1024 over n = 200 + (i%7)*100
 # frames at 8 kHz mono 16-bit; rms/peak/duration re-derived in SQL.
-_MM_AUDIO_ORACLE = """
+@query("""
 WITH audio AS (
   SELECT unnest(generate_series(0, 63)) AS i
 ),
@@ -2830,49 +2365,24 @@ SELECT i::BIGINT AS media_id, true AS ok,
        n::BIGINT AS n_frames, (n * 1000 // 8000)::BIGINT AS duration_ms,
        rms, peak
 FROM stats
-"""
-
-
-def _mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode: Spark sniffs ("BM" magic) and parses actual
-    24-bit BMP blobs (stdlib codec, npm_extraction_server_spark/
-    operators/multimodal.py:decode_bmp) and computes per-channel pixel
-    means; the DuckDB oracle re-derives dimensions and means
-    ANALYTICALLY from the pixel formula — a hard check on the whole
-    encode -> sniff -> decode round-trip."""
+""")
+def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL audio decode: Spark parses actual PCM WAV blobs (stdlib
+    wave) and computes sample statistics; the DuckDB oracle re-derives
+    every field ANALYTICALLY from the synthesis formula — a hard check
+    on the whole container round-trip."""
     from npm_extraction_server_spark.operators.multimodal import (
-        attach_media_metadata,
-        image_features,
-        synth_bmp,
+        audio_features,
+        synth_media_df,
     )
 
-    blobs = _synth_blobs(spark, synth_bmp)
-    return image_features(attach_media_metadata(blobs))
-
-
-def _mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL resize composed with REAL decode: BMP blobs ->
-    resize_bmp_images(3x2, nearest neighbor, re-encoded as valid BMP)
-    -> image_features decodes THAT. The oracle re-derives the 3x2
-    sampled pixels analytically (src = (x*w//3, y*h//2) into the luma
-    formulas), so decode -> resample -> encode -> decode is verified
-    end-to-end."""
-    from npm_extraction_server_spark.operators.multimodal import (
-        attach_media_metadata,
-        image_features,
-        resize_bmp_images,
-        synth_bmp,
-    )
-
-    blobs = _synth_blobs(spark, synth_bmp)
-    resized = resize_bmp_images(attach_media_metadata(blobs), 3, 2)
-    return image_features(resized.filter(F.col("ok")))
+    return audio_features(synth_media_df(spark, 64))
 
 
 # pixels: r=(i*5+x*23+y*31)%256, g=(i*11+x*3+y*17)%256,
 # b=(i*7+x*13+y*29)%256 over w=4+(i%5), h=3+(i%4); means are
 # floor(sum/n) — integer-exact in both engines.
-_MM_IMAGE_ORACLE = """
+@query("""
 WITH ids AS (SELECT unnest(generate_series(0, 63)) AS i),
 px AS (
   SELECT ids.i, tx.x, ty.y
@@ -2892,56 +2402,27 @@ SELECT i::BIGINT AS media_id, true AS ok,
        (sr // n)::INT AS mean_r, (sg // n)::INT AS mean_g,
        (sb // n)::INT AS mean_b
 FROM stats
-"""
-
-
-def _mm_audio_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio downsampling composed with REAL decode: WAV blobs ->
-    decimate_wav(factor=2: every 2nd sample, rate 8000->4000,
-    re-encoded as valid WAV) -> audio_features decodes THAT. Oracle:
-    stats over the even-index samples of the synth formula at the
-    halved rate — decode -> decimate -> encode -> decode verified
-    end-to-end (the audio leg of the transform round-trip family)."""
+""")
+def mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL image decode: Spark sniffs ("BM" magic) and parses actual
+    24-bit BMP blobs (stdlib codec, npm_extraction_server_spark/
+    operators/multimodal.py:decode_bmp) and computes per-channel pixel
+    means; the DuckDB oracle re-derives dimensions and means
+    ANALYTICALLY from the pixel formula — a hard check on the whole
+    encode -> sniff -> decode round-trip."""
     from npm_extraction_server_spark.operators.multimodal import (
         attach_media_metadata,
-        audio_features,
-        decimate_wav,
-        synth_wav,
+        image_features,
+        synth_bmp,
     )
 
-    blobs = _synth_blobs(spark, synth_wav)
-    dec = decimate_wav(attach_media_metadata(blobs), factor=2)
-    return audio_features(dec.filter(F.col("ok")))
-
-
-# even-index samples of the synth triangle wave at the halved rate;
-# n' = ceil(n/2) (n = 200 + (i%7)*100 is always even -> n' = n/2)
-_MM_AUDIO_DECIMATE_ORACLE = """
-WITH ids AS (SELECT unnest(generate_series(0, 63)) AS i),
-aud AS (SELECT i, (200 + (i % 7) * 100) AS n FROM ids),
-samples AS (
-  SELECT a.i, a.n // 2 AS n2,
-         (((a.i * 37 + j * 13) % 2048) - 1024) AS s
-  FROM aud a, unnest(generate_series(0, a.n - 1)) AS t(j)
-  WHERE j % 2 = 0
-),
-stats AS (
-  SELECT i, any_value(n2) AS n2,
-         floor(sqrt(sum(s * s) / count(*)))::INT AS rms,
-         max(abs(s))::INT AS peak
-  FROM samples GROUP BY i
-)
-SELECT i::BIGINT AS media_id, true AS ok,
-       4000 AS sample_rate, 1 AS n_channels, 2 AS sample_width,
-       n2::BIGINT AS n_frames, (n2 * 1000 // 4000)::BIGINT AS duration_ms,
-       rms, peak
-FROM stats
-"""
+    blobs = _synth_blobs(spark, synth_bmp)
+    return image_features(attach_media_metadata(blobs))
 
 
 # 3x2 nearest-neighbor resample of the synth BMPs: target (x,y) maps
 # to source (x*w//3, y*h//2); channel means over the 6 sampled pixels.
-_MM_IMAGE_RESIZE_ORACLE = """
+@query("""
 WITH ids AS (SELECT unnest(generate_series(0, 63)) AS i),
 tgt AS (
   SELECT ids.i, tx.x, ty.y
@@ -2966,10 +2447,90 @@ SELECT i::BIGINT AS media_id, true AS ok,
        (sr // n)::INT AS mean_r, (sg // n)::INT AS mean_g,
        (sb // n)::INT AS mean_b
 FROM stats
-"""
+""")
+def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL resize composed with REAL decode: BMP blobs ->
+    resize_bmp_images(3x2, nearest neighbor, re-encoded as valid BMP)
+    -> image_features decodes THAT. The oracle re-derives the 3x2
+    sampled pixels analytically (src = (x*w//3, y*h//2) into the luma
+    formulas), so decode -> resample -> encode -> decode is verified
+    end-to-end."""
+    from npm_extraction_server_spark.operators.multimodal import (
+        attach_media_metadata,
+        image_features,
+        resize_bmp_images,
+        synth_bmp,
+    )
+
+    blobs = _synth_blobs(spark, synth_bmp)
+    resized = resize_bmp_images(attach_media_metadata(blobs), 3, 2)
+    return image_features(resized.filter(F.col("ok")))
 
 
-def _mm_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+# even-index samples of the synth triangle wave at the halved rate;
+# n' = ceil(n/2) (n = 200 + (i%7)*100 is always even -> n' = n/2)
+@query("""
+WITH ids AS (SELECT unnest(generate_series(0, 63)) AS i),
+aud AS (SELECT i, (200 + (i % 7) * 100) AS n FROM ids),
+samples AS (
+  SELECT a.i, a.n // 2 AS n2,
+         (((a.i * 37 + j * 13) % 2048) - 1024) AS s
+  FROM aud a, unnest(generate_series(0, a.n - 1)) AS t(j)
+  WHERE j % 2 = 0
+),
+stats AS (
+  SELECT i, any_value(n2) AS n2,
+         floor(sqrt(sum(s * s) / count(*)))::INT AS rms,
+         max(abs(s))::INT AS peak
+  FROM samples GROUP BY i
+)
+SELECT i::BIGINT AS media_id, true AS ok,
+       4000 AS sample_rate, 1 AS n_channels, 2 AS sample_width,
+       n2::BIGINT AS n_frames, (n2 * 1000 // 4000)::BIGINT AS duration_ms,
+       rms, peak
+FROM stats
+""")
+def mm_audio_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL audio downsampling composed with REAL decode: WAV blobs ->
+    decimate_wav(factor=2: every 2nd sample, rate 8000->4000,
+    re-encoded as valid WAV) -> audio_features decodes THAT. Oracle:
+    stats over the even-index samples of the synth formula at the
+    halved rate — decode -> decimate -> encode -> decode verified
+    end-to-end (the audio leg of the transform round-trip family)."""
+    from npm_extraction_server_spark.operators.multimodal import (
+        attach_media_metadata,
+        audio_features,
+        decimate_wav,
+        synth_wav,
+    )
+
+    blobs = _synth_blobs(spark, synth_wav)
+    dec = decimate_wav(attach_media_metadata(blobs), factor=2)
+    return audio_features(dec.filter(F.col("ok")))
+
+
+# luma[f][y][x] = (i*7 + f*31 + y*13 + x*5) % 256 over w=4+(i%3)*2,
+# h=4+(i%2)*2, frames 2+(i%3); per-frame mean = floor(sum / (w*h)).
+@query("""
+WITH ids AS (SELECT unnest(generate_series(0, 63)) AS i),
+px AS (
+  SELECT ids.i, tf.f, ty.y, tx.x
+  FROM ids,
+       unnest(generate_series(0, 2 + (ids.i % 3) - 1)) AS tf(f),
+       unnest(generate_series(0, 4 + (ids.i % 2) * 2 - 1)) AS ty(y),
+       unnest(generate_series(0, 4 + (ids.i % 3) * 2 - 1)) AS tx(x)
+),
+stats AS (
+  SELECT i, f, count(*) AS n,
+         sum((i*7 + f*31 + y*13 + x*5) % 256) AS sy
+  FROM px GROUP BY i, f
+)
+SELECT i::BIGINT AS media_id, true AS ok,
+       (4 + (i % 3) * 2)::INT AS width, (4 + (i % 2) * 2)::INT AS height,
+       f::INT AS frame_idx, (sy // n)::INT AS mean_y
+FROM stats
+""")
+def mm_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video decode: Spark sniffs and parses actual Y4M
     (YUV4MPEG2) blobs — the standard uncompressed video container —
     and emits per-frame mean luma; the DuckDB oracle re-derives every
@@ -2985,7 +2546,27 @@ def _mm_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return video_features(attach_media_metadata(blobs))
 
 
-def _mm_video_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+# Sampled variant (every_n=2): even source frames only, reindexed.
+@query("""
+WITH ids AS (SELECT unnest(generate_series(0, 63)) AS i),
+px AS (
+  SELECT ids.i, tf.f, ty.y, tx.x
+  FROM ids,
+       unnest(generate_series(0, 2 + (ids.i % 3) - 1)) AS tf(f),
+       unnest(generate_series(0, 4 + (ids.i % 2) * 2 - 1)) AS ty(y),
+       unnest(generate_series(0, 4 + (ids.i % 3) * 2 - 1)) AS tx(x)
+),
+stats AS (
+  SELECT i, f, count(*) AS n,
+         sum((i*7 + f*31 + y*13 + x*5) % 256) AS sy
+  FROM px WHERE f % 2 = 0 GROUP BY i, f
+)
+SELECT i::BIGINT AS media_id, true AS ok,
+       (4 + (i % 3) * 2)::INT AS width, (4 + (i % 2) * 2)::INT AS height,
+       (f // 2)::INT AS frame_idx, (sy // n)::INT AS mean_y
+FROM stats
+""")
+def mm_video_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL frame sampling composed with REAL decode: Y4M blobs ->
     sample_video_frames(every_n=2) keeps frames 0,2,... and RE-ENCODES
     a valid Y4M stream -> video_features decodes THAT and emits the
@@ -3005,52 +2586,8 @@ def _mm_video_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return video_features(sampled.filter(F.col("ok")))
 
 
-# luma[f][y][x] = (i*7 + f*31 + y*13 + x*5) % 256 over w=4+(i%3)*2,
-# h=4+(i%2)*2, frames 2+(i%3); per-frame mean = floor(sum / (w*h)).
-_MM_VIDEO_ORACLE = """
-WITH ids AS (SELECT unnest(generate_series(0, 63)) AS i),
-px AS (
-  SELECT ids.i, tf.f, ty.y, tx.x
-  FROM ids,
-       unnest(generate_series(0, 2 + (ids.i % 3) - 1)) AS tf(f),
-       unnest(generate_series(0, 4 + (ids.i % 2) * 2 - 1)) AS ty(y),
-       unnest(generate_series(0, 4 + (ids.i % 3) * 2 - 1)) AS tx(x)
-),
-stats AS (
-  SELECT i, f, count(*) AS n,
-         sum((i*7 + f*31 + y*13 + x*5) % 256) AS sy
-  FROM px GROUP BY i, f
-)
-SELECT i::BIGINT AS media_id, true AS ok,
-       (4 + (i % 3) * 2)::INT AS width, (4 + (i % 2) * 2)::INT AS height,
-       f::INT AS frame_idx, (sy // n)::INT AS mean_y
-FROM stats
-"""
-
-
-# Sampled variant (every_n=2): even source frames only, reindexed.
-_MM_VIDEO_SAMPLE_ORACLE = """
-WITH ids AS (SELECT unnest(generate_series(0, 63)) AS i),
-px AS (
-  SELECT ids.i, tf.f, ty.y, tx.x
-  FROM ids,
-       unnest(generate_series(0, 2 + (ids.i % 3) - 1)) AS tf(f),
-       unnest(generate_series(0, 4 + (ids.i % 2) * 2 - 1)) AS ty(y),
-       unnest(generate_series(0, 4 + (ids.i % 3) * 2 - 1)) AS tx(x)
-),
-stats AS (
-  SELECT i, f, count(*) AS n,
-         sum((i*7 + f*31 + y*13 + x*5) % 256) AS sy
-  FROM px WHERE f % 2 = 0 GROUP BY i, f
-)
-SELECT i::BIGINT AS media_id, true AS ok,
-       (4 + (i % 3) * 2)::INT AS width, (4 + (i % 2) * 2)::INT AS height,
-       (f // 2)::INT AS frame_idx, (sy // n)::INT AS mean_y
-FROM stats
-"""
-
-
-def _semver_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(_SEMVER_RESOLVE_ORACLE)
+def semver_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: the distributed semver range-resolution join over the
     synthetic corpus (dep edges x version lists -> npm:maxSatisfying)."""
     from npm_extraction_server_spark.operators.semver_join import (
@@ -3088,26 +2625,6 @@ def _dep_edge_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("subj").alias("src"), F.col("pred").alias("rel"),
                 F.col("obj").alias("dst"))
     )
-
-
-def _kg_link_pred_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered TransE link-prediction ranks over the dependency-edge
-    KG (md5-grid embeddings -> exact integer scores; hard oracle
-    re-derives edges + the identical scoring in DuckDB)."""
-    from npm_extraction_server_spark.plans.embed import link_pred_ranks
-
-    return link_pred_ranks(_dep_edge_set(spark, sf_dir))
-
-
-def _kg_link_pred_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scorecard over the ranks: n / hits@1 / hits@10 / integer-grid
-    MRR numerator (floor(1e8/rank) summed — exact in both engines)."""
-    from npm_extraction_server_spark.plans.embed import (
-        link_pred_metrics,
-        link_pred_ranks,
-    )
-
-    return link_pred_metrics(link_pred_ranks(_dep_edge_set(spark, sf_dir)))
 
 
 def _lp_h(x: str, tag: str, i: int) -> str:
@@ -3178,55 +2695,41 @@ ranks AS (
 )
 """)
 
-_KG_LINK_PRED_RANK_ORACLE = _LP_RANKS_CTE + "SELECT * FROM ranks"
 
-_KG_LINK_PRED_METRICS_ORACLE = (_LP_RANKS_CTE + """
+@query(_LP_RANKS_CTE + "SELECT * FROM ranks")
+def kg_link_pred_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Filtered TransE link-prediction ranks over the dependency-edge
+    KG (md5-grid embeddings -> exact integer scores; hard oracle
+    re-derives edges + the identical scoring in DuckDB)."""
+    from npm_extraction_server_spark.plans.embed import link_pred_ranks
+
+    return link_pred_ranks(_dep_edge_set(spark, sf_dir))
+
+
+@query(_LP_RANKS_CTE + """
 SELECT count(*)::BIGINT AS n,
        sum(CASE WHEN rank <= 1 THEN 1 ELSE 0 END)::BIGINT AS hits1,
        sum(CASE WHEN rank <= 10 THEN 1 ELSE 0 END)::BIGINT AS hits10,
        sum(100000000 // rank)::BIGINT AS sum_rr_e8
 FROM ranks
 """)
+def kg_link_pred_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scorecard over the ranks: n / hits@1 / hits@10 / integer-grid
+    MRR numerator (floor(1e8/rank) summed — exact in both engines)."""
+    from npm_extraction_server_spark.plans.embed import (
+        link_pred_metrics,
+        link_pred_ranks,
+    )
+
+    return link_pred_metrics(link_pred_ranks(_dep_edge_set(spark, sf_dir)))
 
 
 # --- SHACL-style shape validation (plans/shacl.py) -------------------------
 
-def _kg_shacl_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality gate on the pipeline KG: VersionShape (targetSubjectsOf
-    doap:name) validates revision cardinality+pattern, qualified
-    dependency cardinality (valid range modules only — skolem genid
-    deps don't count, the qualifiedValueShape analog) and a
-    deliberately-failing nodeKind (names are literals, the shape says
-    IRI) so every constraint component appears in the report."""
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-    from npm_extraction_server_spark.plans.shacl import shacl_validate
-
-    DOAP = "http://usefulinc.com/ns/doap#"
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    shapes = [{
-        "id": "VersionShape",
-        "target_pred": DOAP + "name",
-        "target_also_pred": DOAP + "revision",
-        "target_not_contains": "/.well-known/",
-        "properties": [
-            {"path": DOAP + "revision", "min_count": 1, "max_count": 1,
-             "pattern": '^"1\\.'},
-            {"path": NPM + "dependency",
-             "qualified_prefix": "http://example.org/bundles/npm/",
-             "qualified_not_contains": "/.well-known/",
-             "min_count": 1, "max_count": 1},
-            {"path": DOAP + "name", "node_kind": "IRI"},
-        ],
-    }]
-    return shacl_validate(t, shapes)
-
-
 # Violation replica: dep cardinality per version is (hv%10<8)+(hv%9<=5)
 # distinct range-module IRIs; revisions start "1." iff h%2=0; every
 # version's doap:name is a literal (the intentional nodeKind failure).
-_KG_SHACL_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
 alldeps AS (
   SELECT module_iri AS v,
     CASE hv%3 WHEN 0 THEN 'hotpkg' WHEN 1 THEN 'megalib'
@@ -3267,23 +2770,41 @@ SELECT module_iri, 'VersionShape',
   'http://usefulinc.com/ns/doap#name', 'sh:nodeKind', 1::BIGINT
 FROM vers
 """)
+def kg_shacl_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality gate on the pipeline KG: VersionShape (targetSubjectsOf
+    doap:name) validates revision cardinality+pattern, qualified
+    dependency cardinality (valid range modules only — skolem genid
+    deps don't count, the qualifiedValueShape analog) and a
+    deliberately-failing nodeKind (names are literals, the shape says
+    IRI) so every constraint component appears in the report."""
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+    from npm_extraction_server_spark.plans.shacl import shacl_validate
+
+    DOAP = "http://usefulinc.com/ns/doap#"
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    shapes = [{
+        "id": "VersionShape",
+        "target_pred": DOAP + "name",
+        "target_also_pred": DOAP + "revision",
+        "target_not_contains": "/.well-known/",
+        "properties": [
+            {"path": DOAP + "revision", "min_count": 1, "max_count": 1,
+             "pattern": '^"1\\.'},
+            {"path": NPM + "dependency",
+             "qualified_prefix": "http://example.org/bundles/npm/",
+             "qualified_not_contains": "/.well-known/",
+             "min_count": 1, "max_count": 1},
+            {"path": DOAP + "name", "node_kind": "IRI"},
+        ],
+    }]
+    return shacl_validate(t, shapes)
 
 
 # --- PROV-O provenance emission (plans/kg.prov_triples) ---------------------
 
-def _kg_prov_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3C PROV-O star per source document over the pipeline KG
-    (page/graph prov:Entity, #extract prov:Activity, derivation/use
-    edges + generatedAtTime from the page's warc_ts). Hard oracle:
-    src_url and warc_ts are pure functions of doc_id."""
-    from npm_extraction_server_spark.plans.kg import prov_triples, run_pipeline
-
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages, include_engines=False)["triples"]
-    return prov_triples(t, pages=pages)
-
-
-_KG_PROV_ORACLE = """
+@query("""
 WITH docs AS (
   SELECT 'http://crawl.example.org/' || (doc_id % 100) || '/doc-' || doc_id
            AS url,
@@ -3314,34 +2835,22 @@ UNION ALL
 SELECT url || '#graph', 'http://www.w3.org/ns/prov#generatedAtTime',
        '"' || ts || '"^^http://www.w3.org/2001/XMLSchema#dateTime'
 FROM docs
-"""
+""")
+def kg_prov_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W3C PROV-O star per source document over the pipeline KG
+    (page/graph prov:Entity, #extract prov:Activity, derivation/use
+    edges + generatedAtTime from the page's warc_ts). Hard oracle:
+    src_url and warc_ts are pure functions of doc_id."""
+    from npm_extraction_server_spark.plans.kg import prov_triples, run_pipeline
+
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages, include_engines=False)["triples"]
+    return prov_triples(t, pages=pages)
 
 
 # --- property-graph export (plans/warehouse.property_graph) ----------------
 
-def _kg_property_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RDF -> property-graph export over the oracle-able KG slice
-    (doap literal star + valid dependency edges): nodes with out/in
-    degree + property counts. Hard oracle: both inputs have synth
-    replicas, so DuckDB rebuilds the full node relation."""
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-    from npm_extraction_server_spark.plans.warehouse import property_graph
-
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pref = "http://example.org/bundles/npm/"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    dep_edges = (
-        t.filter((F.col("pred") == NPM + "dependency")
-                 & F.col("obj").startswith(pref)
-                 & ~F.col("obj").contains("/.well-known/")
-                 & ~F.col("subj").contains("/.well-known/"))
-        .select("subj", "pred", "obj")
-    )
-    return property_graph(_doap_slice(t).unionByName(dep_edges))["nodes"]
-
-
-_KG_PROPERTY_GRAPH_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + ",\n"
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + ",\n"
     + _SYNTH_DEPS_CTES + """,
 slice AS (
   SELECT DISTINCT subj, pred, obj FROM (
@@ -3381,20 +2890,13 @@ FROM ids LEFT JOIN outd o ON o.src = id
          LEFT JOIN ind i ON i.dst = id
          LEFT JOIN np p ON p.subj = id
 """)
-
-
-def _kg_char_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Characteristic sets (Neumann & Moerkotte, ICDE 2011) over the
-    oracle-able KG slice (doap literal star + valid dependency
-    edges): one row per distinct per-subject predicate set with
-    subject/triple counts — the star-join cardinality statistic one
-    step past kg_void_stats' per-predicate counts. Hard oracle: the
-    synth replica re-derives every subject's predicate set, and the
-    signature/counters are deterministic integers/ASCII strings."""
+def kg_property_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RDF -> property-graph export over the oracle-able KG slice
+    (doap literal star + valid dependency edges): nodes with out/in
+    degree + property counts. Hard oracle: both inputs have synth
+    replicas, so DuckDB rebuilds the full node relation."""
     from npm_extraction_server_spark.plans.kg import run_pipeline
-    from npm_extraction_server_spark.plans.warehouse import (
-        characteristic_sets,
-    )
+    from npm_extraction_server_spark.plans.warehouse import property_graph
 
     NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
     pref = "http://example.org/bundles/npm/"
@@ -3407,12 +2909,10 @@ def _kg_char_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                  & ~F.col("subj").contains("/.well-known/"))
         .select("subj", "pred", "obj")
     )
-    trip = (_doap_slice(t).unionByName(dep_edges)
-            .dropDuplicates(["subj", "pred", "obj"]))
-    return characteristic_sets(trip)
+    return property_graph(_doap_slice(t).unionByName(dep_edges))["nodes"]
 
 
-_KG_CHAR_SETS_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + ",\n"
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + ",\n"
     + _SYNTH_DEPS_CTES + """,
 trip AS (
   SELECT DISTINCT subj, pred, obj FROM (
@@ -3449,9 +2949,65 @@ SELECT char_set, min(n_preds)::BIGINT AS n_preds,
        count(*)::BIGINT AS n_subjects, sum(n_triples)::BIGINT AS n_triples
 FROM per_subj GROUP BY char_set
 """)
+def kg_char_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Characteristic sets (Neumann & Moerkotte, ICDE 2011) over the
+    oracle-able KG slice (doap literal star + valid dependency
+    edges): one row per distinct per-subject predicate set with
+    subject/triple counts — the star-join cardinality statistic one
+    step past kg_void_stats' per-predicate counts. Hard oracle: the
+    synth replica re-derives every subject's predicate set, and the
+    signature/counters are deterministic integers/ASCII strings."""
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+    from npm_extraction_server_spark.plans.warehouse import (
+        characteristic_sets,
+    )
+
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pref = "http://example.org/bundles/npm/"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    dep_edges = (
+        t.filter((F.col("pred") == NPM + "dependency")
+                 & F.col("obj").startswith(pref)
+                 & ~F.col("obj").contains("/.well-known/")
+                 & ~F.col("subj").contains("/.well-known/"))
+        .select("subj", "pred", "obj")
+    )
+    trip = (_doap_slice(t).unionByName(dep_edges)
+            .dropDuplicates(["subj", "pred", "obj"]))
+    return characteristic_sets(trip)
 
 
-def _kg_text_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
+base AS (
+  SELECT d.doc_id,
+         d.text
+         || CASE WHEN d.doc_id % 2 = 0
+                 THEN ' see pkg-' || ((d.doc_id * 3) % 100) ELSE '' END
+         || CASE WHEN d.doc_id % 3 = 0
+                 THEN ' and pkg-' || ((d.doc_id * 3) % 100) || ' again'
+                 ELSE '' END
+         || CASE WHEN d.doc_id % 5 = 0 THEN ' uses hotpkg' ELSE '' END
+         || CASE WHEN d.doc_id % 7 = 0 THEN ' try pkg-99999' ELSE '' END
+             AS t
+  FROM documents d WHERE d.doc_id < 100),
+mentions AS (
+  SELECT doc_id,
+         unnest(regexp_extract_all(t,
+             '(@org[0-9]+/pkg-[0-9]+|pkg-[0-9]+|hotpkg|megalib|ultrautil)',
+             1)) AS m
+  FROM base),
+hits AS (
+  SELECT mn.doc_id, mn.m, count(*) AS n
+  FROM mentions mn JOIN (SELECT DISTINCT name FROM pkg) dict
+    ON dict.name = mn.m
+  GROUP BY 1, 2)
+SELECT 'http://crawl.example.org/' || (doc_id % 100) || '/doc-' || doc_id
+           AS url,
+       'http://example.org/bundles/npm/' || m AS bundle,
+       n AS n_mentions
+FROM hits""")
+def kg_text_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prose text-mention extraction + dictionary linking — the
     north-star's third extraction source next to embedded structured
     metadata: package-name-shaped tokens in the ARTICLE TEXT are
@@ -3464,12 +3020,12 @@ def _kg_text_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans/linking.py documents. Hard oracle: the injected mention
     sentences and the pkg-name dictionary re-derive from doc_id
     arithmetic."""
+    from npm_extraction_server_spark.operators.suite import _t
     from npm_extraction_server_spark.plans.kg import run_pipeline
 
     pages = _pages_from_documents(spark, sf_dir, limit=100)
     d = F.col("doc_id")
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .filter(d < 100))
+    docs = _t(spark, sf_dir, "documents").filter(d < 100)
     text2 = F.concat(
         F.col("text"),
         F.when(d % 2 == 0,
@@ -3506,79 +3062,6 @@ def _kg_text_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.concat(F.lit("http://example.org/bundles/npm/"),
                              F.col("name")).alias("bundle"),
                     "n_mentions"))
-
-
-_KG_TEXT_MENTIONS_ORACLE = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + """,
-base AS (
-  SELECT d.doc_id,
-         d.text
-         || CASE WHEN d.doc_id % 2 = 0
-                 THEN ' see pkg-' || ((d.doc_id * 3) % 100) ELSE '' END
-         || CASE WHEN d.doc_id % 3 = 0
-                 THEN ' and pkg-' || ((d.doc_id * 3) % 100) || ' again'
-                 ELSE '' END
-         || CASE WHEN d.doc_id % 5 = 0 THEN ' uses hotpkg' ELSE '' END
-         || CASE WHEN d.doc_id % 7 = 0 THEN ' try pkg-99999' ELSE '' END
-             AS t
-  FROM documents d WHERE d.doc_id < 100),
-mentions AS (
-  SELECT doc_id,
-         unnest(regexp_extract_all(t,
-             '(@org[0-9]+/pkg-[0-9]+|pkg-[0-9]+|hotpkg|megalib|ultrautil)',
-             1)) AS m
-  FROM base),
-hits AS (
-  SELECT mn.doc_id, mn.m, count(*) AS n
-  FROM mentions mn JOIN (SELECT DISTINCT name FROM pkg) dict
-    ON dict.name = mn.m
-  GROUP BY 1, 2)
-SELECT 'http://crawl.example.org/' || (doc_id % 100) || '/doc-' || doc_id
-           AS url,
-       'http://example.org/bundles/npm/' || m AS bundle,
-       n AS n_mentions
-FROM hits""")
-
-
-def _kg_graph_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical per-package RDF graph fingerprints
-    (plans/fingerprint.wl_graph_hash, structural mode): the pipeline's
-    oracle-able KG slice (doap literal star + dependency edges) is
-    grouped into per-package graphs by SUBJECT locality (the package
-    segment of the subject IRI, scoped names decoded), then 2 rounds
-    of predicate-labeled WL color refinement hash each graph
-    invariantly to node identity — packages whose dependency-star
-    SHAPES are isomorphic collide into one class (class_rep/
-    class_size), the KG-document structural-dedup primitive. Hard
-    oracle: every color and hash is a deterministic md5 string
-    function, so DuckDB unrolls both rounds bit-exactly from the
-    synth replica."""
-    from npm_extraction_server_spark.plans.fingerprint import (
-        wl_graph_hash,
-    )
-    from npm_extraction_server_spark.plans.kg import run_pipeline
-
-    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
-    pref = "http://example.org/bundles/npm/"
-    pages = _pages_from_documents(spark, sf_dir, limit=100)
-    t = run_pipeline(pages)["triples"]
-    dep_edges = (
-        t.filter((F.col("pred") == NPM + "dependency")
-                 & F.col("obj").startswith(pref)
-                 & ~F.col("obj").contains("/.well-known/")
-                 & ~F.col("subj").contains("/.well-known/"))
-        .select("subj", "pred", "obj")
-    )
-    trip = (_doap_slice(t).unionByName(dep_edges)
-            .dropDuplicates(["subj", "pred", "obj"]))
-    rest = F.regexp_replace("subj", "^http://example\\.org/bundles/npm/",
-                            "")
-    parts = F.split(rest, "/")
-    pkgseg = (F.when(rest.startswith("@"),
-                     F.concat(parts[0], F.lit("/"), parts[1]))
-              .otherwise(parts[0]))
-    graph = F.replace(F.replace(pkgseg, F.lit("%40"), F.lit("@")),
-                      F.lit("%2F"), F.lit("/"))
-    return wl_graph_hash(trip.withColumn("graph", graph), rounds=2)
 
 
 def _kg_graph_hash_oracle(rounds: int = 2) -> str:
@@ -3660,7 +3143,47 @@ FROM gh JOIN rep USING (wl_hash)"""
     return sql
 
 
-_KG_GRAPH_HASH_ORACLE = _kg_graph_hash_oracle(2)
+@query(_kg_graph_hash_oracle(2))
+def kg_graph_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canonical per-package RDF graph fingerprints
+    (plans/fingerprint.wl_graph_hash, structural mode): the pipeline's
+    oracle-able KG slice (doap literal star + dependency edges) is
+    grouped into per-package graphs by SUBJECT locality (the package
+    segment of the subject IRI, scoped names decoded), then 2 rounds
+    of predicate-labeled WL color refinement hash each graph
+    invariantly to node identity — packages whose dependency-star
+    SHAPES are isomorphic collide into one class (class_rep/
+    class_size), the KG-document structural-dedup primitive. Hard
+    oracle: every color and hash is a deterministic md5 string
+    function, so DuckDB unrolls both rounds bit-exactly from the
+    synth replica."""
+    from npm_extraction_server_spark.plans.fingerprint import (
+        wl_graph_hash,
+    )
+    from npm_extraction_server_spark.plans.kg import run_pipeline
+
+    NPM = "https://linkedsoftwaredependencies.org/vocabularies/npm#"
+    pref = "http://example.org/bundles/npm/"
+    pages = _pages_from_documents(spark, sf_dir, limit=100)
+    t = run_pipeline(pages)["triples"]
+    dep_edges = (
+        t.filter((F.col("pred") == NPM + "dependency")
+                 & F.col("obj").startswith(pref)
+                 & ~F.col("obj").contains("/.well-known/")
+                 & ~F.col("subj").contains("/.well-known/"))
+        .select("subj", "pred", "obj")
+    )
+    trip = (_doap_slice(t).unionByName(dep_edges)
+            .dropDuplicates(["subj", "pred", "obj"]))
+    rest = F.regexp_replace("subj", "^http://example\\.org/bundles/npm/",
+                            "")
+    parts = F.split(rest, "/")
+    pkgseg = (F.when(rest.startswith("@"),
+                     F.concat(parts[0], F.lit("/"), parts[1]))
+              .otherwise(parts[0]))
+    graph = F.replace(F.replace(pkgseg, F.lit("%40"), F.lit("@")),
+                      F.lit("%2F"), F.lit("/"))
+    return wl_graph_hash(trip.withColumn("graph", graph), rounds=2)
 
 
 # --- SPARQL text front-end (plans/sparql.py) --------------------------------
@@ -3671,7 +3194,8 @@ PREFIX npm: <https://linkedsoftwaredependencies.org/vocabularies/npm#>
 """
 
 
-def _kg_sparql_text_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(_KG_BGP_DEP_COUNTS_ORACLE)
+def kg_sparql_text_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The kg_bgp_dep_counts aggregate expressed as SPARQL TEXT
     (plans/sparql.py parses it onto bgp_agg — same Catalyst plan,
     same hard oracle as the Python-API form)."""
@@ -3687,7 +3211,8 @@ def _kg_sparql_text_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-def _kg_sparql_text_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(_KG_BGP_TOPK_DEPS_ORACLE)
+def kg_sparql_text_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The kg_bgp_topk_deps ORDER BY + LIMIT page as SPARQL TEXT
     (parses onto bgp_join's solution modifiers — still
     TakeOrderedAndProject, same oracle)."""
@@ -3703,7 +3228,8 @@ def _kg_sparql_text_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-def _kg_sparql_text_path(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(_KG_BGP_PATH_OPS_ORACLE)
+def kg_sparql_text_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The kg_bgp_path_ops property path written as SPARQL TEXT —
     ((npm:dependency/doap:revision)|owl:sameAs) parses onto the same
     path_edges algebra and reuses its hard oracle."""
@@ -3730,8 +3256,9 @@ def _truth_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
     the truth L(e%5) densely for e<16 and THINLY for the planted tail
     e>=16 (exactly one honest claimant) — on the tail a majority vote
     picks the clique's value 4:1, the fixpoint recovers the truth."""
-    d = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-         .filter(F.col("doc_id") < 480))
+    from npm_extraction_server_spark.operators.suite import _t
+
+    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 480)
     base = d.select((F.col("doc_id") % 24).alias("s"),
                     F.floor(F.col("doc_id") / 24).cast("long").alias("e"))
     s, e = F.col("s"), F.col("e")
@@ -3746,33 +3273,6 @@ def _truth_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.concat(F.lit("pkg-"), e.cast("string")).alias("entity"),
                     F.lit("license").alias("attr"),
                     F.concat(F.lit("L"), val.cast("string")).alias("value")))
-
-
-def _kg_truth_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truth discovery over conflicting multi-source claims
-    (plans/fusion.truth_discovery, 4 iterations): one fused
-    (entity, attr) row each — the belief-argmax value, its belief on
-    the 8-dp grid, and the distinct-source count. The reference never
-    fuses (it renders one curated registry JSON per package,
-    lib/npm/NpmCouchDb.js); a crawl-scale extractor must. The planted
-    tail entities pkg-16..19 are majority-vote-WRONG (spam clique 3 +
-    a coinciding lone spammer vs 1 honest source) and fusion-right —
-    pinned by tests/test_fusion.py. Hard oracle: the same fixpoint
-    unrolled as chained CTEs on the identical 12-dp decimal grid."""
-    from npm_extraction_server_spark.plans.fusion import truth_discovery
-
-    return truth_discovery(_truth_claims(spark, sf_dir), iterations=4)
-
-
-def _kg_truth_trust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The final per-source trust vector of the same fixpoint
-    (return_trust=True): honest sources score ~0.85-1.0, the spam
-    clique ~0.013, lone spammers ~1e-4 — the source-reliability
-    scorecard a crawl pipeline feeds back into fetch scheduling."""
-    from npm_extraction_server_spark.plans.fusion import truth_discovery
-
-    return truth_discovery(_truth_claims(spark, sf_dir), iterations=4,
-                           return_trust=True)
 
 
 _TRUTH_CLAIMS_CTE = """
@@ -3827,7 +3327,7 @@ t{k} AS MATERIALIZED (
     return sql
 
 
-_KG_TRUTH_FUSION_ORACLE = _truth_sql(4) + """,
+@query(_truth_sql(4) + """,
 nsrc AS (SELECT entity, attr, value, count(DISTINCT source) AS n_sources
          FROM claims GROUP BY entity, attr, value),
 ranked AS (
@@ -3836,8 +3336,33 @@ ranked AS (
                             ORDER BY b.belief DESC, b.value ASC) AS rk
   FROM bn4 b JOIN nsrc n USING (entity, attr, value))
 SELECT entity, attr, value, round(belief, 8) AS belief, n_sources
-FROM ranked WHERE rk = 1"""
+FROM ranked WHERE rk = 1""")
+def kg_truth_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Truth discovery over conflicting multi-source claims
+    (plans/fusion.truth_discovery, 4 iterations): one fused
+    (entity, attr) row each — the belief-argmax value, its belief on
+    the 8-dp grid, and the distinct-source count. The reference never
+    fuses (it renders one curated registry JSON per package,
+    lib/npm/NpmCouchDb.js); a crawl-scale extractor must. The planted
+    tail entities pkg-16..19 are majority-vote-WRONG (spam clique 3 +
+    a coinciding lone spammer vs 1 honest source) and fusion-right —
+    pinned by tests/test_fusion.py. Hard oracle: the same fixpoint
+    unrolled as chained CTEs on the identical 12-dp decimal grid."""
+    from npm_extraction_server_spark.plans.fusion import truth_discovery
+
+    return truth_discovery(_truth_claims(spark, sf_dir), iterations=4)
 
 
-_KG_TRUTH_TRUST_ORACLE = _truth_sql(4) + """
-SELECT source, round(trust, 8) AS trust FROM t4"""
+@query(_truth_sql(4) + """
+SELECT source, round(trust, 8) AS trust FROM t4""")
+def kg_truth_trust(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The final per-source trust vector of the same fixpoint
+    (return_trust=True): honest sources score ~0.85-1.0, the spam
+    clique ~0.013, lone spammers ~1e-4 — the source-reliability
+    scorecard a crawl pipeline feeds back into fetch scheduling."""
+    from npm_extraction_server_spark.plans.fusion import truth_discovery
+
+    return truth_discovery(_truth_claims(spark, sf_dir), iterations=4,
+                           return_trust=True)
+
+

@@ -548,8 +548,12 @@ def tfidf_topk(documents: DataFrame, query_terms: list[str], k: int = 20,
             .select(id_col, "score", "rank"))
 
 
+# BM25's TF saturation (k1) and length normalization (b), shared with
+# the DuckDB twin suite._bm25_oracle
+_BM25_K1, _BM25_B = 1.2, 0.75
+
+
 def bm25_topk(documents: DataFrame, query_terms: list[str], k: int = 20,
-              k1: float = 1.2, b: float = 0.75,
               text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Okapi BM25 top-k — TF saturation (k1) + document-length
     normalization (b) on top of :func:`tfidf_topk`'s plan shape: the
@@ -596,12 +600,12 @@ def bm25_topk(documents: DataFrame, query_terms: list[str], k: int = 20,
                               + F.lit(0.5)) / (F.col("df").cast("double")
                                                + F.lit(0.5))), 8)
             .alias("idf")))
-    k1p1, one_m_b = k1 + 1.0, 1.0 - b
+    k1p1, one_m_b = _BM25_K1 + 1.0, 1.0 - _BM25_B
     num = F.col("tf").cast("double") * F.lit(k1p1)
     den = (F.col("tf").cast("double")
-           + F.lit(k1) * (F.lit(one_m_b)
-                          + F.lit(b) * F.col("dl").cast("double")
-                          / F.col("avgdl")))
+           + F.lit(_BM25_K1) * (F.lit(one_m_b)
+                                + F.lit(_BM25_B) * F.col("dl").cast("double")
+                                / F.col("avgdl")))
     scored = (
         dt.join(F.broadcast(idf), "term")
         .select(id_col, F.round(F.col("idf") * (num / den), 8)

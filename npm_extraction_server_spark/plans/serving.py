@@ -45,23 +45,23 @@ class NotAcceptable(ValueError):
     Express res.format()'s 406 (/root/reference/bin/index.js:140)."""
 
 
-def negotiate(accept: str | None, default: str = "nt",
-              strict: bool = False) -> str:
-    """Accept header -> format key. Unknown/absent -> default for batch
-    callers; ``strict=True`` replicates the reference server exactly:
-    an Accept header that matches no supported type raises
-    NotAcceptable (-> 406), as Express res.format does."""
+def negotiate(accept: str | None, strict: bool = False) -> str:
+    """Accept header -> format key. Absent or a wildcard -> "nt"
+    (N-Triples); unknown -> "nt" for batch callers, while
+    ``strict=True`` replicates the reference server exactly: an Accept
+    header that matches no supported type raises NotAcceptable
+    (-> 406), as Express res.format does."""
     if not accept:
-        return default
+        return "nt"
     for part in accept.split(","):
         mime = part.split(";")[0].strip().lower()
         if mime in _BY_MIME:
             return _BY_MIME[mime]
         if mime in ("*/*", "text/*", "application/*"):
-            return default
+            return "nt"
     if strict:
         raise NotAcceptable(accept)
-    return default
+    return "nt"
 
 
 def split_format_ext(path: str) -> tuple[str, str | None]:

@@ -1694,7 +1694,7 @@ def _check_mor_updates(spark: SparkSession, table: str,
 
 
 def mor_upsert(spark: SparkSession, table: str, updates: DataFrame,
-               key: str, props: dict | None = None) -> int:
+               key: str) -> int:
     """MERGE-ON-READ row-level upsert (Iceberg v2 equality deletes,
     from the public design): instead of rewriting every data file whose
     key range overlaps an update (copy-on-write, :func:`merge_upsert`),
@@ -1720,12 +1720,11 @@ def mor_upsert(spark: SparkSession, table: str, updates: DataFrame,
     _check_mor_updates(spark, table, updates, key)
     updates = updates.localCheckpoint(eager=True)
     return commit(updates, table, operation="rowdelta",
-                  delete_keys=updates.select(key), delete_key=key,
-                  props=props)
+                  delete_keys=updates.select(key), delete_key=key)
 
 
 def mor_delete(spark: SparkSession, table: str, keys: DataFrame,
-               key: str, props: dict | None = None) -> int:
+               key: str) -> int:
     """Merge-on-read row-level DELETE: commits one small equality-
     delete file (the distinct non-null values of ``keys``'s ``key``
     column) and no data rows. ``read_snapshot`` hides the rows
@@ -1738,11 +1737,10 @@ def mor_delete(spark: SparkSession, table: str, keys: DataFrame,
     empty = read_snapshot(spark, table).limit(0).localCheckpoint(eager=True)
     keys = keys.select(key).distinct().localCheckpoint(eager=True)
     return commit(empty, table, operation="rowdelta",
-                  delete_keys=keys, delete_key=key, props=props)
+                  delete_keys=keys, delete_key=key)
 
 
-def mor_delete_where(spark: SparkSession, table: str, predicates,
-                     props: dict | None = None) -> int:
+def mor_delete_where(spark: SparkSession, table: str, predicates) -> int:
     """Merge-on-read POSITIONAL delete (Iceberg v2 position-delete
     files, public design): delete every CURRENT row matching the
     conjunctive ``predicates`` (plan_scan's (col, op, val) form) by
@@ -1784,8 +1782,7 @@ def mor_delete_where(spark: SparkSession, table: str, predicates,
     if _empty(hits):
         return base
     empty = read_snapshot(spark, table).limit(0).localCheckpoint(eager=True)
-    return commit(empty, table, operation="rowdelta", pos_deletes=hits,
-                  props=props)
+    return commit(empty, table, operation="rowdelta", pos_deletes=hits)
 
 
 def _project_era_keep(seg: DataFrame, era, current, keep: tuple):

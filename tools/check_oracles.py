@@ -14,8 +14,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import duckdb
 import pandas as pd
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+from npm_extraction_server_spark.plans.catalog import TABLES
 
 
 def normalize(df: pd.DataFrame, float_cols: set | None = None) -> pd.DataFrame:
