@@ -492,8 +492,8 @@ co AS (
 """
 
 
-def _web_pagerank_oracle(iterations: int = 5) -> str:
-    """plans/graph.pagerank(normalized=False) unrolled over the
+def _web_pagerank_oracle() -> str:
+    """plans/graph.pagerank(normalized=False, iterations=5) unrolled over the
     symmetrized host co-citation graph: init rank 1.0, teleport
     round(1-0.85, 12) = 0.15 — no |V| literal needed, so the oracle
     holds for any data-dependent host count. Same 12-decimal
@@ -507,7 +507,7 @@ def _web_pagerank_oracle(iterations: int = 5) -> str:
     adj AS (SELECT e0.src, e0.dst, deg.out_deg FROM e0 JOIN deg USING (src)),
     nodes AS (SELECT src AS node_id FROM e0 UNION SELECT dst FROM e0),
     r0 AS (SELECT node_id, 1.0::DOUBLE AS rank FROM nodes)""")
-    for k in range(1, iterations + 1):
+    for k in range(1, 6):
         sql += f""",
     r{k} AS (
         SELECT n.node_id,
@@ -519,15 +519,16 @@ def _web_pagerank_oracle(iterations: int = 5) -> str:
             FROM adj a JOIN r{k - 1} r ON r.node_id = a.src
             GROUP BY a.dst) s ON s.dst = n.node_id)"""
     sql += f"""
-    SELECT node_id AS host, round(rank, 8) AS rank FROM r{iterations}"""
+    SELECT node_id AS host, round(rank, 8) AS rank FROM r5"""
     return sql
 
 
-def _web_trustrank_oracle(iterations: int = 5) -> str:
-    """plans/graph.spam_mass unrolled: the normalized=False pagerank
-    chain (init 1, teleport 0.15) AND the personalized chain (init =
-    teleport vector, update round((1.0-0.85)*t + 0.85*inflow, 12))
-    over the same adjacency, then exact decimal normalizing sums and
+def _web_trustrank_oracle() -> str:
+    """plans/graph.spam_mass unrolled (5 iterations): the
+    normalized=False pagerank chain (init 1, teleport 0.15) AND the
+    personalized chain (init = teleport vector, update
+    round((1.0-0.85)*t + 0.85*inflow, 12)) over the same adjacency,
+    then exact decimal normalizing sums and
     the identical IEEE share quotient — both taken over the 8-dp
     OUTPUT grid (pagerank rounds its published ranks to 8 decimals;
     the 12-dp grid is internal). (1-d) is repr-injected from
@@ -551,7 +552,7 @@ def _web_trustrank_oracle(iterations: int = 5) -> str:
         FROM nodes),
     p0 AS (SELECT node_id, 1.0::DOUBLE AS rank FROM nodes),
     t0 AS (SELECT node_id, t AS rank FROM base)""")
-    for k in range(1, iterations + 1):
+    for k in range(1, 6):
         sql += f""",
     p{k} AS (
         SELECT n.node_id,
@@ -573,8 +574,8 @@ def _web_trustrank_oracle(iterations: int = 5) -> str:
             FROM adj a JOIN t{k - 1} r ON r.node_id = a.src
             GROUP BY a.dst) s ON s.dst = b.node_id)"""
     sql += f""",
-    p8 AS (SELECT node_id, round(rank, 8) AS rank FROM p{iterations}),
-    t8 AS (SELECT node_id, round(rank, 8) AS rank FROM t{iterations}),
+    p8 AS (SELECT node_id, round(rank, 8) AS rank FROM p5),
+    t8 AS (SELECT node_id, round(rank, 8) AS rank FROM t5),
     sp AS (SELECT cast(sum(cast(rank AS DECIMAL(38,12))) AS DOUBLE)
                AS spr FROM p8),
     st AS (SELECT cast(sum(cast(rank AS DECIMAL(38,12))) AS DOUBLE)
@@ -586,7 +587,7 @@ def _web_trustrank_oracle(iterations: int = 5) -> str:
     return sql
 
 
-@query(_web_trustrank_oracle(5))
+@query(_web_trustrank_oracle())
 def web_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TrustRank + relative spam mass over the symmetrized host
     co-citation graph (plans/graph.spam_mass): trust teleports to the
@@ -667,16 +668,16 @@ def web_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resolve_redirects(red, max_hops=16)
 
 
-def _web_hits_oracle(iterations: int = 2) -> str:
-    """plans/graph.hits unrolled: unnormalized HITS is pure integer
-    arithmetic (auth_k = in-sum of hub_{k-1}, hub_k = out-sum of
-    auth_k, hub_0 = 1), so every score is an exact BIGINT path count —
-    bit-equality needs no float protocol at all."""
+def _web_hits_oracle() -> str:
+    """plans/graph.hits unrolled (2 iterations): unnormalized HITS is
+    pure integer arithmetic (auth_k = in-sum of hub_{k-1}, hub_k =
+    out-sum of auth_k, hub_0 = 1), so every score is an exact BIGINT
+    path count — bit-equality needs no float protocol at all."""
     sql = ("WITH " + _WEB_LINKS_SQL + """,
     e0 AS (SELECT url AS src, canon_url AS dst FROM links),
     nodes AS (SELECT src AS node_id FROM e0 UNION SELECT dst FROM e0),
     h0 AS (SELECT node_id, 1::BIGINT AS hub FROM nodes)""")
-    for k in range(1, iterations + 1):
+    for k in range(1, 3):
         sql += f""",
     a{k} AS (SELECT e0.dst AS node_id, sum(h.hub)::BIGINT AS auth
              FROM e0 JOIN h{k - 1} h ON h.node_id = e0.src
@@ -689,15 +690,15 @@ def _web_hits_oracle(iterations: int = 2) -> str:
            coalesce(h.hub, 0)::BIGINT AS hub,
            coalesce(a.auth, 0)::BIGINT AS auth
     FROM nodes n
-    LEFT JOIN h{iterations} h ON h.node_id = n.node_id
-    LEFT JOIN a{iterations} a ON a.node_id = n.node_id"""
+    LEFT JOIN h2 h ON h.node_id = n.node_id
+    LEFT JOIN a2 a ON a.node_id = n.node_id"""
     return sql
 
 
-def _web_salsa_oracle(iterations: int = 2) -> str:
-    """plans/graph.salsa unrolled: contributions round(x/deg, 12),
-    summed as DECIMAL(28,12), re-rounded to the 12-dp grid per
-    half-round (the pagerank protocol), output at 8 dp."""
+def _web_salsa_oracle() -> str:
+    """plans/graph.salsa unrolled (2 iterations): contributions
+    round(x/deg, 12), summed as DECIMAL(28,12), re-rounded to the 12-dp
+    grid per half-round (the pagerank protocol), output at 8 dp."""
     sql = ("WITH " + _WEB_LINKS_SQL + """,
     e0 AS (SELECT DISTINCT url AS src, canon_url AS dst FROM links),
     od AS (SELECT src, count(*) AS od FROM e0 GROUP BY src),
@@ -707,7 +708,7 @@ def _web_salsa_oracle(iterations: int = 2) -> str:
                    JOIN idg ON idg.dst = e0.dst),
     nodes AS (SELECT src AS node_id FROM e0 UNION SELECT dst FROM e0),
     a0 AS (SELECT dst AS node_id, 1.0::DOUBLE AS auth FROM idg)""")
-    for k in range(1, iterations + 1):
+    for k in range(1, 3):
         sql += f""",
     h{k} AS (
         SELECT ed.src AS node_id,
@@ -726,8 +727,8 @@ def _web_salsa_oracle(iterations: int = 2) -> str:
            round(coalesce(h.hub, 0.0), 8) AS hub,
            round(coalesce(a.auth, 0.0), 8) AS auth
     FROM nodes n
-    LEFT JOIN h{iterations} h ON h.node_id = n.node_id
-    LEFT JOIN a{iterations} a ON a.node_id = n.node_id"""
+    LEFT JOIN h2 h ON h.node_id = n.node_id
+    LEFT JOIN a2 a ON a.node_id = n.node_id"""
     return sql
 
 
@@ -994,7 +995,7 @@ def web_crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fetch_rounds(allowed, rules, per_round=2)
 
 
-@query(_web_hits_oracle(2))
+@query(_web_hits_oracle())
 def web_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS over the bipartite page -> canonical-URL link graph: pages
     are hubs, linked URLs authorities. Unnormalized (plans/graph.hits),
@@ -1011,7 +1012,7 @@ def web_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits(edges, iterations=2)
 
 
-@query(_web_salsa_oracle(2))
+@query(_web_salsa_oracle())
 def web_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SALSA over the bipartite page -> canonical-URL link graph —
     the degree-normalized (TKC-immune) counterpart ranked next to
@@ -1028,7 +1029,7 @@ def web_salsa(spark: SparkSession, sf_dir: str) -> DataFrame:
     return salsa(edges, iterations=2)
 
 
-@query(_web_pagerank_oracle(5))
+@query(_web_pagerank_oracle())
 def web_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the symmetrized host co-citation graph
     (normalized=False: init 1, teleport 0.15 — constants free of |V|,
@@ -1052,12 +1053,6 @@ def web_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the oracle checks the container codec end-to-end: any corrupted
 # byte, header, or timestamp breaks the hash.
 
-def _warc_scratch(prefix: str) -> str:
-    import tempfile
-
-    return tempfile.mkdtemp(prefix=prefix)
-
-
 _WARC_PAGES_CTE = f"""
 p AS (
     SELECT 'http://crawl.example.org/' || (doc_id % 100) || '/doc-' || doc_id
@@ -1077,10 +1072,11 @@ def warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     survived both framings; url/warc_ts come from the parsed WARC
     headers (not the source table), so the oracle checks header
     serialization too."""
+    from npm_extraction_server_spark.operators.suite import _scratch
     from npm_extraction_server_spark.sources import warc as W
 
     pages = _pages_from_documents(spark, sf_dir, limit=_WEB_HI)
-    d = _warc_scratch("warcq_")
+    d = _scratch("warcq_")
     W.write_warc(pages.select("url", "warc_ts", "html"), d,
                  kind="response", compress=True)
     back = W.read_warc(spark, d)
@@ -1099,10 +1095,11 @@ def warc_wet_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     is decoded from the WET payload bytes and oracle-compared against
     documents.text directly — the north rule's byte-identical-text
     invariant proven through a file-format round trip."""
+    from npm_extraction_server_spark.operators.suite import _scratch
     from npm_extraction_server_spark.sources import warc as W
 
     pages = _pages_from_documents(spark, sf_dir, limit=_WEB_HI)
-    d = _warc_scratch("wetq_")
+    d = _scratch("wetq_")
     W.write_warc(W.wet_from_pages(pages), d, kind="conversion")
     wet = W.read_warc(spark, d, record_types=("conversion",))
     return wet.select(
@@ -1127,10 +1124,11 @@ def warc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents (sha256 of the text, SURT from the deterministic url);
     the offset/length spans are pinned by the slice-fetch pytest
     (tests/test_warc.py)."""
+    from npm_extraction_server_spark.operators.suite import _scratch
     from npm_extraction_server_spark.sources import warc as W
 
     pages = _pages_from_documents(spark, sf_dir, limit=_WEB_HI)
-    d = _warc_scratch("cdxq_")
+    d = _scratch("cdxq_")
     W.write_warc(W.wet_from_pages(pages), d, kind="conversion")
     return W.build_cdx(spark, d).select("urlkey", "warc_ts", "digest")
 
@@ -1165,6 +1163,7 @@ def warc_revisits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original timestamp (the Common-Crawl storage-dedup rule).
     Hard oracle: both captures and the window rule re-derived from
     doc_id arithmetic."""
+    from npm_extraction_server_spark.operators.suite import _scratch
     from npm_extraction_server_spark.sources import warc as W
 
     pages = _pages_from_documents(spark, sf_dir, limit=_WEB_HI)
@@ -1172,7 +1171,7 @@ def warc_revisits(spark: SparkSession, sf_dir: str) -> DataFrame:
              .filter(F.col("url").rlike("/doc-\\d{1,2}$"))
              .withColumn("warc_ts",
                          F.col("warc_ts") + F.expr("INTERVAL 1 DAY")))
-    d = _warc_scratch("revq_")
+    d = _scratch("revq_")
     W.write_warc(W.wet_from_pages(pages.unionByName(recap)), d,
                  kind="conversion")
     return (W.consolidate_revisits(W.build_cdx(spark, d))
@@ -1222,10 +1221,11 @@ def warc_wat_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     list, built in-plan via to_json) -> read back -> from_json +
     explode. Ends at the same (url, dst_url) rows as direct html
     extraction, so the link CTE oracle covers the whole WAT codec."""
+    from npm_extraction_server_spark.operators.suite import _scratch
     from npm_extraction_server_spark.sources import warc as W
 
     pages = _pages_from_documents(spark, sf_dir, limit=_WEB_HI)
-    d = _warc_scratch("watq_")
+    d = _scratch("watq_")
     W.write_warc(W.wat_from_pages(pages), d, kind="metadata")
     return W.wat_outlinks(W.read_warc(spark, d, record_types=("metadata",)))
 
@@ -2228,8 +2228,8 @@ def kg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_triples(pages, "2017-06-01 00:00:30", "2017-06-01 00:01:40"))
 
 
-def _synth_blobs(spark: SparkSession, synth_fn, n: int = 64) -> DataFrame:
-    """Shared scaffold for the multimodal driver queries: n media
+def _synth_blobs(spark: SparkSession, synth_fn) -> DataFrame:
+    """Shared scaffold for the multimodal driver queries: 64 media
     blobs generated distributedly from a deterministic per-id synth
     function (one definition instead of six copy-pasted schema+gen
     blocks)."""
@@ -2250,7 +2250,7 @@ def _synth_blobs(spark: SparkSession, synth_fn, n: int = 64) -> DataFrame:
                 "payload": [synth_fn(int(i)) for i in pdf["id"]],
             })
 
-    return spark.range(n).mapInPandas(gen, schema=schema)
+    return spark.range(64).mapInPandas(gen, schema=schema)
 
 
 @query(None)
@@ -2633,12 +2633,14 @@ def _lp_h(x: str, tag: str, i: int) -> str:
             "::UBIGINT)::BIGINT")
 
 
-def _lp_score(src: str, rel: str, cand: str, dim: int = 4) -> str:
+def _lp_score(src: str, rel: str, cand: str) -> str:
     """DuckDB twin of plans/embed.transe_score (L1 on the md5 grid)."""
+    from npm_extraction_server_spark.plans.embed import _DIM
+
     return " + ".join(
         f"abs({_lp_h(src, 'e', i)} + {_lp_h(rel, 'r', i)}"
         f" - {_lp_h(cand, 'e', i)})"
-        for i in range(dim))
+        for i in range(_DIM))
 
 
 # Edges replica = the dep-chain bindings (distinct v, d); test split,
@@ -3064,8 +3066,8 @@ def kg_text_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "n_mentions"))
 
 
-def _kg_graph_hash_oracle(rounds: int = 2) -> str:
-    """WL fingerprint rounds unrolled over the synth KG-slice replica
+def _kg_graph_hash_oracle() -> str:
+    """Two WL fingerprint rounds unrolled over the synth KG-slice replica
     with the graph key assigned at generation time (subject's package
     name) — the same md5 color/hash algebra as wl_graph_hash."""
     sql = ("WITH " + _SYNTH_VERS_CTE.format(lo=0, hi=100) + ",\n"
@@ -3105,7 +3107,7 @@ c0 AS MATERIALIZED (
   SELECT g, node,
          md5(CASE WHEN node LIKE '"%' THEN 'lit' ELSE 'n' END) AS c
   FROM nodes)""")
-    for r in range(1, rounds + 1):
+    for r in range(1, 3):
         sql += f""",
 o{r} AS (
   SELECT t.g, t.s,
@@ -3130,8 +3132,8 @@ c{r} AS MATERIALIZED (
 ts AS (
   SELECT t.g, md5(cs.c || ' ' || t.p || ' ' || co.c) AS tsg
   FROM trip t
-  JOIN c{rounds} cs ON cs.g = t.g AND cs.node = t.s
-  JOIN c{rounds} co ON co.g = t.g AND co.node = t.o),
+  JOIN c2 cs ON cs.g = t.g AND cs.node = t.s
+  JOIN c2 co ON co.g = t.g AND co.node = t.o),
 gh AS MATERIALIZED (
   SELECT g, md5(string_agg(tsg, ',' ORDER BY tsg)) AS wl_hash,
          count(*) AS n_triples
@@ -3143,7 +3145,7 @@ FROM gh JOIN rep USING (wl_hash)"""
     return sql
 
 
-@query(_kg_graph_hash_oracle(2))
+@query(_kg_graph_hash_oracle())
 def kg_graph_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical per-package RDF graph fingerprints
     (plans/fingerprint.wl_graph_hash, structural mode): the pipeline's
@@ -3290,8 +3292,8 @@ claims AS MATERIALIZED (
      OR (e >= 16 AND s = 1 + e % 2))"""
 
 
-def _truth_sql(iterations: int = 4) -> str:
-    """plans/fusion.truth_discovery unrolled: belief = exact
+def _truth_sql() -> str:
+    """plans/fusion.truth_discovery unrolled (4 iterations): belief = exact
     decimal(28,12) sum of 12-dp trusts, max-normalized and re-rounded
     to 12; trust = the MEAN of 12-dp beliefs on the same grid,
     max-normalized — expression-for-expression the Spark loop, so both
@@ -3303,7 +3305,7 @@ def _truth_sql(iterations: int = 4) -> str:
     after."""
     sql = "WITH " + _TRUTH_CLAIMS_CTE + """,
 t0 AS (SELECT DISTINCT source, 1.0::DOUBLE AS trust FROM claims)"""
-    for k in range(1, iterations + 1):
+    for k in range(1, 5):
         sql += f""",
 b{k} AS MATERIALIZED (
   SELECT entity, attr, value,
@@ -3327,7 +3329,7 @@ t{k} AS MATERIALIZED (
     return sql
 
 
-@query(_truth_sql(4) + """,
+@query(_truth_sql() + """,
 nsrc AS (SELECT entity, attr, value, count(DISTINCT source) AS n_sources
          FROM claims GROUP BY entity, attr, value),
 ranked AS (
@@ -3353,7 +3355,7 @@ def kg_truth_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return truth_discovery(_truth_claims(spark, sf_dir), iterations=4)
 
 
-@query(_truth_sql(4) + """
+@query(_truth_sql() + """
 SELECT source, round(trust, 8) AS trust FROM t4""")
 def kg_truth_trust(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The final per-source trust vector of the same fixpoint

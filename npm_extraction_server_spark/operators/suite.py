@@ -42,6 +42,26 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+_SCRATCH_ROOT: str | None = None
+
+
+def _scratch(prefix: str) -> str:
+    """A fresh directory for a query's on-disk tables (snapshot tables,
+    views, WARC files). The returned DataFrames read them lazily, so
+    they must outlive the query call: every directory lives under one
+    per-process root that is removed at interpreter exit."""
+    global _SCRATCH_ROOT
+    import tempfile
+
+    if _SCRATCH_ROOT is None:
+        import atexit
+        import shutil
+
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="spark-kg-scratch-")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+
+
 def _dec_sum(col, scale=2):
     """Deterministic money-sum: round each term, sum exactly as decimal,
     emit double AT THE SAME SCALE. Re-rounding the exact decimal sum to
@@ -2635,12 +2655,10 @@ def snap_incremental(spark, sf):
     (sources/snapshots.py); the incremental read of (snap1, snap3]
     must return exactly the rows the last two commits added — the scan
     is planned from the manifests and opens ONLY those commits' files."""
-    import tempfile
-
     from ..sources.snapshots import commit, read_incremental
 
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snaptab_")
+    table = _scratch("snaptab_")
     s1 = commit(docs.filter(F.col("doc_id") < 200), table)
     commit(docs.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 400)), table)
     commit(docs.filter(F.col("doc_id") >= 400), table)
@@ -3033,12 +3051,10 @@ def snap_stats_prune(spark, sf):
     min/max overlap the predicate (the Iceberg stats-pruning story;
     pruned-vs-total is asserted in tests/test_snapshots.py). Results
     must equal a plain filtered scan, which is what DuckDB runs."""
-    import tempfile
-
     from ..sources.snapshots import commit, plan_scan, read_where
 
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapstats_")
+    table = _scratch("snapstats_")
     commit(docs, table, partitions=8, cluster_by=["doc_id"])
     preds = [("doc_id", ">=", 150), ("doc_id", "<", 340)]
     kept, total = plan_scan(table, preds)
@@ -3060,12 +3076,10 @@ def snap_zorder(spark, sf):
     tests/test_snapshots.py). The read must equal a plain filtered
     scan, which is what DuckDB runs — the curve is pure layout, never
     semantics."""
-    import tempfile
-
     from ..sources.snapshots import commit, plan_scan, read_where
 
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapz_")
+    table = _scratch("snapz_")
     commit(docs, table, partitions=16, cluster_by=["doc_id", "n_chars"],
            cluster_mode="zorder")
     p1 = [("doc_id", ">=", 100), ("doc_id", "<", 160)]
@@ -3094,8 +3108,6 @@ def snap_merge_upsert(spark, sf):
     Only files whose manifest key range overlaps the update keys are
     rewritten (asserted); DuckDB re-derives the merged table with
     plain CASE/UNION set logic."""
-    import tempfile
-
     from ..sources.snapshots import (
         commit,
         merge_upsert,
@@ -3105,7 +3117,7 @@ def snap_merge_upsert(spark, sf):
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapmerge_")
+    table = _scratch("snapmerge_")
     commit(docs, table, partitions=8, cluster_by=["doc_id"])
     updates = (
         docs.filter((d >= 100) & (d < 200))
@@ -3140,13 +3152,11 @@ def snap_changelog(spark, sf):
     the pure inserts — survivor rows copied between rewritten files
     cancel out of the diff. DuckDB re-derives the change set with
     plain set logic."""
-    import tempfile
-
     from ..sources.snapshots import commit, merge_upsert, read_changes
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapcdf_")
+    table = _scratch("snapcdf_")
     s1 = commit(docs, table, partitions=8, cluster_by=["doc_id"])
     updates = (
         docs.filter((d >= 100) & (d < 200))
@@ -3181,15 +3191,13 @@ def snap_incr_view(spark, sf):
     rescan (asserted: the refresh consumed exactly the change rows,
     two orders below the table). DuckDB recomputes the final
     aggregate from scratch; incremental must equal recompute."""
-    import tempfile
-
     from ..plans.views import create_agg_view, read_view, refresh_agg_view
     from ..sources.snapshots import commit, merge_upsert
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapview_")
-    view = tempfile.mkdtemp(prefix="aggview_")
+    table = _scratch("snapview_")
+    view = _scratch("aggview_")
     commit(docs.filter(d < 150), table, partitions=8,
            cluster_by=["doc_id"])
     create_agg_view(spark, table, view, group_by=["lang"],
@@ -3270,13 +3278,11 @@ def snap_compact(spark, sf):
     state (DuckDB recomputes it from documents) and the file count
     must actually shrink (asserted) — the small-files maintenance op
     end-to-end."""
-    import tempfile
-
     from ..sources.snapshots import commit, compact, plan_scan, read_snapshot
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapcompact_")
+    table = _scratch("snapcompact_")
     for i in range(8):
         commit(docs.filter((d % 8) == i), table, partitions=4)
     pre = len(plan_scan(table, [])[1])
@@ -3451,12 +3457,11 @@ def snap_hidden_partition(spark, sf):
     (asserted). DuckDB runs the plain filter; results must match
     exactly, proving the layout is a pure optimization."""
     import datetime
-    import tempfile
 
     from ..sources.snapshots import commit, plan_scan, read_where
 
     ev = _t(spark, sf, "events").select("event_id", "ts", "user_id")
-    table = tempfile.mkdtemp(prefix="snaphp_")
+    table = _scratch("snaphp_")
     commit(ev, table, partitions=8, partition_spec=[("day", "ts")])
     preds = [("ts", ">=", datetime.datetime(2024, 1, 10)),
              ("ts", "<", datetime.datetime(2024, 1, 12))]
@@ -3484,7 +3489,6 @@ def snap_mor_merge(spark, sf):
     readers applying the delete as a broadcast anti-join against
     strictly-older files. DuckDB re-derives the state with CASE/UNION
     set logic, so the two write strategies are pinned equivalent."""
-    import tempfile
     from pathlib import Path
 
     from ..sources.snapshots import (
@@ -3496,7 +3500,7 @@ def snap_mor_merge(spark, sf):
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapmor_")
+    table = _scratch("snapmor_")
     commit(docs, table, partitions=8, cluster_by=["doc_id"])
     before = {str(p) for p in Path(table).rglob("*.parquet")}
     updates = (
@@ -3532,8 +3536,6 @@ def snap_schema_evolution(spark, sf):
     returns ONE uniform schema — old files read through the rename by
     field id, their quality is NULL. DuckDB re-derives both eras with
     plain aliasing/UNION, proving the mapping is purely logical."""
-    import tempfile
-
     from ..sources.snapshots import (
         commit,
         evolve_schema,
@@ -3543,7 +3545,7 @@ def snap_schema_evolution(spark, sf):
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapevo_")
+    table = _scratch("snapevo_")
     commit(docs.filter(d < 300), table, partitions=4, cluster_by=["doc_id"])
     evolve_schema(table, rename={"n_chars": "chars"},
                   add=[("quality", "bigint")])
@@ -3567,8 +3569,6 @@ def snap_pos_delete(spark, sf):
     zero data files rewritten (asserted) — and readers hide exactly
     the matching rows. DuckDB runs the plain NOT(window) filter; the
     match proves the coordinate bookkeeping is a pure optimization."""
-    import tempfile
-
     from ..sources.snapshots import (
         commit,
         mor_delete_where,
@@ -3577,7 +3577,7 @@ def snap_pos_delete(spark, sf):
     )
 
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snappd_")
+    table = _scratch("snappd_")
     commit(docs, table, partitions=8, cluster_by=["doc_id"])
     mor_delete_where(spark, table,
                      [("doc_id", ">=", 120), ("doc_id", "<", 180)])
@@ -3604,13 +3604,11 @@ def snap_meta_tables(spark, sf):
     re-stated in SQL, row counts derived from the same documents
     table; the rowdelta commit carries its one empty data file).
     committed_at is wall time and excluded."""
-    import tempfile
-
     from ..sources.snapshots import commit, mor_delete, snapshots_table
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapmeta_")
+    table = _scratch("snapmeta_")
     commit(docs, table, partitions=8, cluster_by=["doc_id"])
     commit(docs.filter(d < 100), table, partitions=2,
            cluster_by=["doc_id"])
@@ -3635,13 +3633,11 @@ def snap_files_meta(spark, sf):
     kind with footer row counts, aggregated to (kind, n_files,
     total_rows) — per-file row splits depend on the range
     partitioner's sampling, the aggregate does not (hard oracle)."""
-    import tempfile
-
     from ..sources.snapshots import commit, files_table, mor_delete
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapfiles_")
+    table = _scratch("snapfiles_")
     commit(docs, table, partitions=8, cluster_by=["doc_id"])
     commit(docs.filter(d < 100), table, partitions=2,
            cluster_by=["doc_id"])
@@ -3665,8 +3661,6 @@ def snap_eq_delete(spark, sf):
     the plain NOT IN filter. The other MOR flavor next to
     snap_pos_delete: keys when you have them, coordinates when you
     don't."""
-    import tempfile
-
     from ..sources.snapshots import (
         commit,
         mor_delete,
@@ -3676,7 +3670,7 @@ def snap_eq_delete(spark, sf):
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snaped_")
+    table = _scratch("snaped_")
     commit(docs, table, partitions=8, cluster_by=["doc_id"])
     keys = docs.filter((d % 7 == 0) & (d < 210)).select("doc_id")
     mor_delete(spark, table, keys, key="doc_id")
@@ -3732,8 +3726,6 @@ def kg_sparql_update(spark, sf):
     delete-then-insert machinery implements exactly the spec's update
     semantics (delete evaluated before insert, set semantics both
     ways)."""
-    import tempfile
-
     from ..plans.update import (
         create_triple_table,
         delete_data,
@@ -3754,7 +3746,7 @@ def kg_sparql_update(spark, sf):
                 F.concat(F.lit("doc:"), d.cast("string")).alias("subj"),
                 F.lit("ex:chars").alias("pred"),
                 F.col("n_chars").cast("string").alias("obj"))))
-    table = tempfile.mkdtemp(prefix="kgupd_")
+    table = _scratch("kgupd_")
     create_triple_table(spark, base, table, partitions=4)
 
     insert_data(spark, table, [
@@ -3830,8 +3822,6 @@ def kg_sparql_update_graphs(spark, sf):
     delta joins are null-safe on graph, so the default graph
     participates in set semantics like any named graph. DuckDB
     re-derives the final quad set with plain set algebra."""
-    import tempfile
-
     from ..plans.update import (
         add_graph,
         clear_graph,
@@ -3855,7 +3845,7 @@ def kg_sparql_update_graphs(spark, sf):
                 subj, F.lit("ex:lang").alias("pred"),
                 F.col("lang").alias("obj"),
                 F.lit(None).cast("string").alias("graph"))))
-    table = tempfile.mkdtemp(prefix="kgupdg_")
+    table = _scratch("kgupdg_")
     create_triple_table(spark, base, table, partitions=4)
 
     sparql_update(spark, table,
@@ -3901,8 +3891,6 @@ def kg_sparql_load(spark, sf):
     table as ONE set-semantics append. DuckDB re-derives the final
     quad set from the documents table directly, proving
     text -> parse -> commit loses nothing and dedups exactly."""
-    import tempfile
-
     from ..plans.update import (
         create_triple_table,
         load_documents,
@@ -3928,7 +3916,7 @@ def kg_sparql_load(spark, sf):
     seed = spark.createDataFrame(
         [("ex:corpus", "rdf:type", "ex:Corpus", None)],
         "subj string, pred string, obj string, graph string")
-    table = tempfile.mkdtemp(prefix="kgload_")
+    table = _scratch("kgload_")
     create_triple_table(spark, seed, table, partitions=4)
     load_documents(spark, table, rdf_docs, "doc", fmt="nq")
     return read_triple_table(spark, table)
@@ -3945,8 +3933,6 @@ def snap_wap(spark, sf):
     atomically. The returned table is main AFTER publish; DuckDB
     re-derives it as the plain doc_id<350 selection, proving the whole
     branch dance is metadata-only."""
-    import tempfile
-
     from ..sources.snapshots import (
         commit,
         create_branch,
@@ -3958,7 +3944,7 @@ def snap_wap(spark, sf):
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapwap_")
+    table = _scratch("snapwap_")
     main_id = commit(docs.filter(d < 200), table, partitions=4)
     create_branch(table, "audit")
     commit(docs.filter((d >= 200) & (d < 300)), table, branch="audit")
@@ -3984,16 +3970,14 @@ def snap_dedup_incr(spark, sf):
     corpus is exactly doc_id<400 (DuckDB re-derives it trivially —
     the copies' absence IS the assertion). The 10^12-document crawl
     pattern: per-batch cost follows the batch, never the corpus."""
-    import tempfile
-
     from ..operators.dedup import dedup_against_corpus
     from ..sources.snapshots import commit, read_snapshot
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars",
                                              "text")
-    corpus_t = tempfile.mkdtemp(prefix="snapcorp_")
-    digest_t = tempfile.mkdtemp(prefix="snapdig_")
+    corpus_t = _scratch("snapcorp_")
+    digest_t = _scratch("snapdig_")
 
     batch1 = docs.filter(d < 250)
     b1 = batch1.withColumn("digest", F.sha2(F.col("text"), 256))
@@ -4031,13 +4015,11 @@ def snap_mor_changelog(spark, sf):
     (pruned to the manifest's delete-key range) as deletes and the
     commit's own files as inserts — no file-set diff needed, because
     no files were rewritten."""
-    import tempfile
-
     from ..sources.snapshots import commit, mor_upsert, read_changes
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapmorcdf_")
+    table = _scratch("snapmorcdf_")
     s1 = commit(docs, table, partitions=8, cluster_by=["doc_id"])
     updates = (
         docs.filter((d >= 100) & (d < 200))
@@ -9648,8 +9630,6 @@ def snap_branch_diff(spark, sf):
     oracle: both deltas re-derived from doc_id arithmetic. The
     changelog family covers chain-related anchors; this is the
     branch-audit comparison no changelog connects."""
-    import tempfile
-
     from ..sources.snapshots import (
         commit,
         create_branch,
@@ -9659,7 +9639,7 @@ def snap_branch_diff(spark, sf):
 
     d = F.col("doc_id")
     docs = _t(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    table = tempfile.mkdtemp(prefix="snapdiff_")
+    table = _scratch("snapdiff_")
     commit(docs.filter(d < 300), table, partitions=4)
     create_branch(table, "audit")
     commit(docs.filter((d >= 300) & (d < 350)), table)

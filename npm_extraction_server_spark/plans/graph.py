@@ -434,10 +434,11 @@ def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
     Locality constraints (checked, not assumed):
     - the new graph must be SINK-FREE — the dangling-mass term is a
       global sum, one changed sink would touch every node (on the
-      changelog path only the removed edges' sources can become
-      sinks, so exactly those are checked; the OLD graph being
-      sink-free is the caller's contract — history produced with an
-      active dangling term would poison the formula either way).
+      changelog path only the removed edges' sources and brand-new
+      nodes can become sinks, so exactly those are checked; the OLD
+      graph being sink-free is the caller's contract — history
+      produced with an active dangling term would poison the formula
+      either way).
     - with ``normalized=True`` the node SET must be unchanged (init
       and teleport are 1/n — a node-count change shifts every rank).
       ``normalized=False`` (constants independent of n) accepts node
@@ -528,14 +529,15 @@ def pagerank_incremental(edges_old: DataFrame, edges_new: DataFrame,
             teleport = round(1.0 - _DAMPING, _GRID)
 
         # sink check: on the changelog path only a removed edge's
-        # source can LOSE its last out-edge, so exactly those are probed
-        # (the old graph being sink-free is the documented caller
-        # contract); the diff path keeps the full whole-graph check,
-        # since it makes no assumption about how the inputs were
-        # produced
+        # source can LOSE its last out-edge, and only a brand-new node
+        # (e.g. one reached by an added edge alone) can start without
+        # one, so exactly those are probed (the old graph being
+        # sink-free is the documented caller contract); the diff path
+        # keeps the full whole-graph check, since it makes no
+        # assumption about how the inputs were produced
         if changelog:
             sink_cand = (removed.select(F.col("src").alias("node_id"))
-                         .distinct())
+                         .unionByName(new_nodes).distinct())
             has_out = _members([(e_new, "src")], sink_cand)
             sinks = sink_cand.join(has_out, "node_id", "left_anti")
         else:

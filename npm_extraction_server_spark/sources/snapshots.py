@@ -30,10 +30,29 @@ concurrent committers serialize on the lock so no snapshot is ever
 silently dropped. (Single-host POSIX lock semantics; on an object
 store the lock step becomes the catalog's atomic CAS swap.)
 
-Reads follow the PARENT CHAIN from a snapshot to the root, so
-``rollback`` is a pure metadata operation (move CURRENT to an older
-snapshot) and commits after a rollback fork the chain — orphaned
-snapshots simply stop being reachable.
+Reads follow the PARENT CHAIN from a snapshot to the root (``_chain``
+is the one walk), so ``rollback`` is a pure metadata operation (move
+CURRENT to an older snapshot) and commits after a rollback fork the
+chain — orphaned snapshots simply stop being reachable.
+
+View rules — what a full read at snapshot ``s`` sees; ``_plan_full``
+is the one place that applies them:
+
+- **Cutoff.** The walk from ``s`` stops at the newest 'replace'
+  (compaction) snapshot: its files ARE the table state below it.
+- **Removed files.** An 'overwrite' (copy-on-write merge) hides its
+  ``removed_files`` from every snapshot below it in the walk.
+- **Delete sequence rule.** A 'rowdelta' equality-delete file at
+  snapshot ``d`` masks data files whose origin snapshot is STRICTLY
+  older than ``d`` (Iceberg v2 sequence numbers), so an upsert's own
+  inserted rows are never shadowed by its own delete keys. Positional
+  deletes name exact (file, row) coordinates.
+- **Expired anchors.** Manifests that ``expire_snapshots`` stamped
+  ``expired`` may still be walked through by a kept view, but cannot
+  anchor a read: their own view may reference vacuumed files.
+- **Schema eras.** Each data file is read under the field list it was
+  written with (the newest 'evolve' above it in the walk supplies it)
+  and projected onto the current schema by field id.
 
 Why this matters at 100 TB: SC5's changed-since scan
 (streaming/incremental.py, reference README "only process entries
@@ -52,6 +71,7 @@ import os
 import time
 import uuid
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -91,16 +111,45 @@ def current_snapshot_id(table: str) -> int | None:
     return int(cur.read_text().strip())
 
 
+def _chain(table: str, sid: int | None, stop: int | None = None):
+    """Manifests from ``sid`` down the parent chain, newest first,
+    ending before ``stop``. Raises when ``stop`` is given and the walk
+    reaches the root without meeting it."""
+    start = sid
+    while sid is not None and sid != stop:
+        man = _read_json(_meta(table) / f"snap-{sid}.json")
+        yield man
+        sid = man["parent"]
+    if stop is not None and sid != stop:
+        raise ValueError(f"snapshot {stop} is not an ancestor of {start}")
+
+
 def snapshot_log(table: str) -> list[dict]:
     """The reachable snapshot chain, root first (parent-chain walk from
     CURRENT — snapshots orphaned by a rollback are not listed)."""
-    sid = current_snapshot_id(table)
-    chain: list[dict] = []
-    while sid is not None:
-        man = _read_json(_meta(table) / f"snap-{sid}.json")
-        chain.append(man)
-        sid = man["parent"]
-    return list(reversed(chain))
+    return list(_chain(table, current_snapshot_id(table)))[::-1]
+
+
+def _flip(table: str, sid: int, ref: str | None = None) -> None:
+    """The atomic commit point: write ``sid`` to a temp file and
+    ``os.replace`` it over CURRENT, or over the ref file ``ref``
+    (``branch-<name>`` / ``tag-<name>``)."""
+    tmp = _meta(table) / f"CURRENT.{uuid.uuid4().hex}.tmp"
+    tmp.write_text(str(sid))
+    os.replace(tmp, _refs_dir(table) / ref if ref
+               else _meta(table) / "CURRENT")
+
+
+def _claim_id(table: str) -> int:
+    """Next snapshot id, claimed under the commit lock over BOTH
+    manifests and data directories: a crash between data-rename and
+    manifest-write can orphan a dir, which must never wedge future
+    ids."""
+    claimed = [int(p.stem.split("-")[1])
+               for p in _meta(table).glob("snap-*.json")]
+    claimed += [int(d.name.split("-")[1])
+                for d in (Path(table) / "data").glob("snap-*") if d.is_dir()]
+    return max(claimed, default=0) + 1
 
 
 _UNSET = object()
@@ -402,37 +451,40 @@ def plan_scan(table: str, predicates, snapshot_id: int | None = None):
     sid = snapshot_id if snapshot_id is not None else current_snapshot_id(table)
     if sid is None:
         raise ValueError(f"{table}: empty table (no CURRENT)")
-    files = _chain_files(table, None, sid)
-    stats: dict = {}
-    walk: int | None = sid
-    spec = None
-    while walk is not None:
-        man = _read_json(_meta(table) / f"snap-{walk}.json")
-        if spec is None:
-            spec = man.get("partition_spec")
-        stats.update(man.get("file_stats", {}))
-        if man.get("operation", "append") == "replace":
-            break
-        walk = man["parent"]
+    view = _plan_full(table, sid)
+    files = view.files
     # hidden-partition rewrite: user predicates on source columns gain
     # derived-column twins the per-file stats can prune on
-    preds = list(predicates) + _rewrite_preds(spec, predicates)
-    current, era_index = _file_eras(table, sid)
+    preds = list(predicates) + _rewrite_preds(view.spec, predicates)
     kept = []
     for f in files:
-        fp = preds
-        if current is not None:
-            # schema evolution: per-file stats are keyed by the file's
-            # WRITE-TIME column names — translate predicate columns
-            # current->era by field id; a predicate on a column added
-            # after the file's era can match no row (all NULL there),
-            # so the file is provably prunable
-            fp = _translate_preds(preds, era_index.get(f), current)
-            if fp is None:
-                continue
-        if _file_may_match(stats.get(f, {}), fp):
+        # schema evolution: per-file stats are keyed by the file's
+        # WRITE-TIME column names — translate predicate columns
+        # current->era by field id; a predicate on a column added
+        # after the file's era can match no row (all NULL there),
+        # so the file is provably prunable
+        fp = _translate_preds(preds, view.eras.get(f), view.current)
+        if fp is not None and _file_may_match(view.stats.get(f, {}), fp):
             kept.append(f)
     return kept, files
+
+
+def _scan_where(spark: SparkSession, table: str, predicates,
+                sid: int | None, keep_coords: bool = False):
+    """read_where's scan before the hidden columns are dropped: the
+    stats-kept files of the view with its deletes applied, then the
+    full predicate as a residual filter. None when no file survives."""
+    from pyspark.sql import functions as F
+
+    kept, _files = plan_scan(table, predicates, sid)
+    # pruning never changes which rows a delete removes — it only
+    # skips files with no matching row
+    df = _apply_deletes(spark, _plan_full(table, sid), keep_only=kept,
+                        keep_coords=keep_coords)
+    if df is not None:
+        for col, op, val in predicates:
+            df = df.filter(getattr(F.col(col), _OPS[op])(F.lit(val)))
+    return df
 
 
 def read_where(spark: SparkSession, table: str, predicates,
@@ -444,24 +496,10 @@ def read_where(spark: SparkSession, table: str, predicates,
     optimization — results equal read_snapshot().filter(...))."""
     from pyspark.sql import functions as F
 
-    kept, files = plan_scan(table, predicates, snapshot_id)
-    if not kept:
-        return read_snapshot(spark, table, snapshot_id).limit(0).filter(F.lit(False))
     sid = snapshot_id if snapshot_id is not None else current_snapshot_id(table)
-    groups, deletes, sctx = _plan_full(table, sid)
-    if not deletes and sctx is None:
-        df = spark.read.parquet(*kept)
-    else:
-        # merge-on-read / schema evolution: apply the equality-delete
-        # anti-joins and era projections to the stats-kept files only
-        # (pruning never changes which rows a delete key removes — it
-        # only skips files with no matching row)
-        df = _apply_deletes(spark, groups, deletes, keep_only=set(kept),
-                            schema_ctx=sctx)
-        if df is None:
-            return read_snapshot(spark, table, sid).limit(0).filter(F.lit(False))
-    for col, op, val in predicates:
-        df = df.filter(getattr(F.col(col), _OPS[op])(F.lit(val)))
+    df = _scan_where(spark, table, predicates, sid)
+    if df is None:
+        return read_snapshot(spark, table, sid).limit(0).filter(F.lit(False))
     return _drop_hidden(df)
 
 
@@ -620,25 +658,20 @@ def commit(df: DataFrame, table: str, partitions: int | None = None,
     elif partitions:
         df = df.repartition(partitions)
     df.write.mode("errorifexists").parquet(str(staging))
-    if delete_keys is not None:
-        # equality-delete files ride in the same snapshot directory as
-        # the data files, under a distinct name prefix — one small
-        # parquet of deleted keys, written before the metadata
-        # transaction (a crash here leaves only invisible staging)
-        dstage = table_p / "data" / f".staging-del-{uuid.uuid4().hex}"
-        (delete_keys.select(delete_key).distinct().coalesce(1)
+    # delete files ride in the same snapshot directory as the data
+    # files, under a distinct name prefix — one small parquet of deleted
+    # keys (equality) or of (file, pos) pairs naming exact rows of exact
+    # data files (positional), written before the metadata transaction
+    # (a crash here leaves only invisible staging)
+    for dels, cols, prefix in ((delete_keys, [delete_key], "delete"),
+                               (pos_deletes, ["file", "pos"], "posdel")):
+        if dels is None:
+            continue
+        dstage = table_p / "data" / f".staging-{prefix}-{uuid.uuid4().hex}"
+        (dels.select(*cols).distinct().coalesce(1)
          .write.mode("errorifexists").parquet(str(dstage)))
         for i, p in enumerate(sorted(dstage.glob("part-*.parquet"))):
-            os.replace(p, staging / f"delete-{i:05d}.parquet")
-        shutil.rmtree(dstage, ignore_errors=True)
-    if pos_deletes is not None:
-        # positional-delete files (Iceberg v2's other MOR flavor):
-        # (file, pos) pairs naming exact rows of exact data files
-        dstage = table_p / "data" / f".staging-pdel-{uuid.uuid4().hex}"
-        (pos_deletes.select("file", "pos").distinct().coalesce(1)
-         .write.mode("errorifexists").parquet(str(dstage)))
-        for i, p in enumerate(sorted(dstage.glob("part-*.parquet"))):
-            os.replace(p, staging / f"posdel-{i:05d}.parquet")
+            os.replace(p, staging / f"{prefix}-{i:05d}.parquet")
         shutil.rmtree(dstage, ignore_errors=True)
     lock = _acquire_commit_lock(meta, lock_timeout, lock_stale_after)
     try:
@@ -661,11 +694,7 @@ def commit(df: DataFrame, table: str, partitions: int | None = None,
             raise CommitConflict(
                 f"{table}: {'branch ' + branch if branch else 'CURRENT'} "
                 f"is at {parent}, expected {expected_parent}")
-        claimed = [int(p.stem.split("-")[1])
-                   for p in meta.glob("snap-*.json")]
-        claimed += [int(d.name.split("-")[1])
-                    for d in (table_p / "data").glob("snap-*") if d.is_dir()]
-        sid = max(claimed, default=0) + 1
+        sid = _claim_id(table)
         data_dir = table_p / "data" / f"snap-{sid}"
         os.replace(staging, data_dir)
         files = sorted(str(p) for p in data_dir.glob("part-*.parquet"))
@@ -711,13 +740,7 @@ def commit(df: DataFrame, table: str, partitions: int | None = None,
         if spec:
             manifest["partition_spec"] = spec
         (meta / f"snap-{sid}.json").write_text(json.dumps(manifest, indent=1))
-        tmp = meta / f"CURRENT.{uuid.uuid4().hex}.tmp"
-        tmp.write_text(str(sid))
-        # the atomic commit point: flip the branch head or CURRENT
-        if branch is not None:
-            os.replace(tmp, _refs_dir(table) / f"branch-{branch}")
-        else:
-            os.replace(tmp, meta / "CURRENT")
+        _flip(table, sid, f"branch-{branch}" if branch is not None else None)
         return sid
     finally:
         lock.unlink(missing_ok=True)
@@ -748,65 +771,71 @@ def compact(spark: SparkSession, table: str,
                   partition_spec=partition_spec)
 
 
-def _plan_full(table: str, to_incl: int):
-    """Full-read plan at ``to_incl``: walk the parent chain honoring
-    'replace' cutoffs and 'overwrite' removed_files, and return
-    ``(groups, deletes)`` where ``groups`` is a list of
-    ``(origin_sid, [data_files])`` (newest first) and ``deletes`` is a
-    list of ``(delete_sid, key_column, [delete_files], key_range)``
-    for every merge-on-read 'rowdelta' snapshot in the view. An
-    equality-delete file at snapshot ``s`` applies to data files whose
-    origin snapshot is STRICTLY OLDER than ``s`` (Iceberg v2 sequence
-    numbers) — a MOR upsert's own inserted rows are never shadowed by
-    its own delete keys.
+def _refuse_expired(man: dict) -> None:
+    if man.get("expired"):
+        raise ValueError(
+            f"snapshot {man['snapshot_id']} was expired by expire_snapshots: "
+            "its read view may reference vacuumed files; anchor at a "
+            "kept snapshot instead")
 
-    The third return value is the schema-evolution context: None on a
-    never-evolved view (the common zero-overhead path), else
-    ``{"current": fields, "eras": [fields-or-None per group]}`` where
-    None means the group was written in the current era (see
-    evolve_schema — an era is the field list the group's files were
-    written under, reconstructed from the evolve manifests passed on
-    the way down)."""
-    groups: list[tuple[int, list[str]]] = []
-    eras: list[list | None] = []
-    deletes: list[tuple[int, str, list[str], tuple | None]] = []
+
+class _View(NamedTuple):
+    """A snapshot's read view, as ``_plan_full`` plans it."""
+
+    groups: list   # [(origin_sid, [live data files], {key: [eq-delete
+    #                files that mask them]})], newest first
+    deletes: list  # [(delete_sid, key, [delete files])] in view, newest
+    #                first; key None marks positional deletes
+    sids: list     # the manifests the view spans, anchor to cutoff
+    stats: dict    # merged file_stats of the view
+    spec: list | None  # partition spec
+    current: list | None  # field list at the anchor; None: never evolved
+    eras: dict     # {data file: write-time field list}; absent or None
+    #                means the current era (the index spans the whole
+    #                chain: read_changes opens files below the cutoff)
+
+    @property
+    def files(self) -> list[str]:
+        """Live data files, root first."""
+        return [f for _, fs, _ in reversed(self.groups) for f in fs]
+
+
+def _plan_full(table: str, sid: int) -> _View:
+    """Plan the full read at ``sid`` under the module's view rules."""
+    groups, deletes, sids = [], [], []
+    stats: dict = {}
     removed: set[str] = set()
-    current_fields: list | None = None
-    running_era: list | None = None  # None == current era
-    sid: int | None = to_incl
-    while sid is not None:
-        man = _read_json(_meta(table) / f"snap-{sid}.json")
-        if man.get("expired") and sid == to_incl:
-            raise ValueError(
-                f"snapshot {sid} was expired by expire_snapshots: its "
-                "read view may reference vacuumed files; anchor at a "
-                "kept snapshot instead")
+    eq: dict[str, list[str]] = {}  # delete files of the rowdeltas above
+    spec = current = running = None
+    eras: dict[str, list | None] = {}
+    in_view = True
+    for man in _chain(table, sid):
+        msid = man["snapshot_id"]
+        if msid == sid:
+            _refuse_expired(man)
         op = man.get("operation", "append")
         if op == "evolve":
-            if current_fields is None:
-                current_fields = man["schema_fields"]
-            running_era = man["prev_fields"]
-            sid = man["parent"]
+            if current is None:
+                current = man["schema_fields"]
+            running = man["prev_fields"]
+        eras.update(dict.fromkeys(man["added_files"], running))
+        if not in_view:
             continue
+        sids.append(msid)
+        spec = spec or man.get("partition_spec")
+        stats.update(man.get("file_stats", {}))
         live = [f for f in man["added_files"] if f not in removed]
         if live:
-            groups.append((sid, live))
-            eras.append(running_era)
+            groups.append((msid, live, eq))
         removed.update(man.get("removed_files", []))
         if op == "rowdelta" and man.get("delete_files"):
-            deletes.append((sid, man["delete_key"], man["delete_files"],
-                            tuple(man["delete_key_range"])
-                            if man.get("delete_key_range") else None))
+            k = man["delete_key"]
+            deletes.append((msid, k, man["delete_files"]))
+            eq = {**eq, k: eq.get(k, []) + man["delete_files"]}
         if op == "rowdelta" and man.get("pos_delete_files"):
-            # positional deletes: key None tags the kind; they bind to
-            # exact (file, pos) coordinates, not key values
-            deletes.append((sid, None, man["pos_delete_files"], None))
-        if op == "replace":
-            break  # full state; nothing older is needed
-        sid = man["parent"]
-    sctx = None if current_fields is None \
-        else {"current": current_fields, "eras": eras}
-    return groups, deletes, sctx
+            deletes.append((msid, None, man["pos_delete_files"]))
+        in_view = op != "replace"
+    return _View(groups, deletes, sids, stats, spec, current, eras)
 
 
 def _norm_file_path(col):
@@ -822,33 +851,61 @@ _OPS = {"=": "__eq__", "<": "__lt__", "<=": "__le__",
         ">": "__gt__", ">=": "__ge__"}
 
 
-def _apply_deletes(spark: SparkSession, groups, deletes,
-                   keep_only: set[str] | None = None,
-                   merge_schema: bool = False,
-                   schema_ctx: dict | None = None,
-                   keep_coords: bool = False) -> DataFrame | None:
-    """Assemble the delete-aware scan: per origin group, anti-join the
-    union of delete-key files COMMITTED AFTER the group's origin.
+def _read_eras(spark: SparkSession, files: list[str], view: _View,
+               coords: bool = False, merge_schema: bool = False) -> DataFrame:
+    """Read ``files`` of ``view``'s chain onto its current schema: one
+    scan per schema era present, each projected by field id, unioned
+    by name — a never-evolved file set is a single plain scan.
+    ``coords`` prepends each row's ``(__f, __p)`` (file, row index)."""
+    import functools
+
+    from pyspark.sql import functions as F
+
+    by_era: dict[str, tuple] = {}
+    for f in files:
+        era = view.eras.get(f)
+        by_era.setdefault(json.dumps(era), (era, []))[1].append(f)
+    parts = []
+    for era, fs in by_era.values():
+        r = spark.read
+        if merge_schema:
+            r = r.option("mergeSchema", "true")
+        seg = r.parquet(*fs)
+        if coords:
+            seg = seg.select(
+                _norm_file_path(F.col("_metadata.file_path")).alias("__f"),
+                F.col("_metadata.row_index").alias("__p"), "*")
+        parts.append(_project_era(seg, era, view.current))
+    return functools.reduce(lambda a, b: a.unionByName(b), parts)
+
+
+def _apply_deletes(spark: SparkSession, view: _View,
+                   keep_only: list[str] | None = None,
+                   keep_coords: bool = False,
+                   merge_schema: bool = False) -> DataFrame | None:
+    """The view's rows: its data files (only those in ``keep_only``,
+    stats pruning, when given) with its deletes applied; None when no
+    file is left. Without deletes this is ``_read_eras`` over the
+    files; with them, each origin group anti-joins the equality-delete
+    keys the plan attached to it, and targeted groups the positional
+    (file, pos) coordinates.
 
     Cost shape at scale: delete files are small by the MOR premise
     (that's why the write chose not to rewrite data files), so every
     anti-join is a broadcast hash anti-join — the data files stream
     through one stage untouched, and the number of distinct plans is
     bounded by the number of rowdelta snapshots since the last
-    compaction (which ``compact`` folds away). ``keep_only``
-    restricts the data files (stats pruning); returns None when
-    nothing survives the restriction."""
+    compaction (which ``compact`` folds away)."""
     import functools
 
     from pyspark.sql import functions as F
 
-    def reader():
-        r = spark.read
-        return r.option("mergeSchema", "true") if merge_schema else r
-
-    eras = (schema_ctx or {}).get("eras")
-    current = (schema_ctx or {}).get("current")
-    pos_files = [f for _sid, k, fs, _ in deletes if k is None for f in fs]
+    if not view.deletes:
+        files = (keep_only if keep_only is not None
+                 else [f for _, fs, _ in view.groups for f in fs])
+        return (_read_eras(spark, files, view, keep_coords, merge_schema)
+                if files else None)
+    pos_files = [f for _, k, fs in view.deletes if k is None for f in fs]
     pd_keys = None
     targeted: set[str] = set()
     if pos_files:
@@ -861,97 +918,30 @@ def _apply_deletes(spark: SparkSession, groups, deletes,
         # coordinate anti-join entirely
         targeted = {r["__f"] for r in pd_keys.select("__f")
                     .distinct().collect()}
+    keep = None if keep_only is None else set(keep_only)
     parts: list[DataFrame] = []
-    for gi, (origin, files) in enumerate(groups):
-        if keep_only is not None:
-            files = [f for f in files if f in keep_only]
+    for _origin, files, eq in view.groups:
+        if keep is not None:
+            files = [f for f in files if f in keep]
         if not files:
             continue
-        seg = reader().parquet(*files)
-        need_pos = pd_keys is not None and (targeted & set(files))
-        if keep_coords or need_pos:
-            seg = seg.select(
-                _norm_file_path(F.col("_metadata.file_path")).alias("__f"),
-                F.col("_metadata.row_index").alias("__p"), "*")
+        need_pos = not targeted.isdisjoint(files)
+        seg = _read_eras(spark, files, view, keep_coords or need_pos,
+                         merge_schema)
         if need_pos:
-            # positional deletes bind to exact (file, row) coordinates:
-            # broadcast anti-join on them (tiny delete side)
             seg = seg.join(F.broadcast(pd_keys), ["__f", "__p"],
                            "left_anti")
             if not keep_coords:
                 seg = seg.drop("__f", "__p")
-        if eras is not None:
-            # schema evolution: map the group's write-time columns
-            # onto the current schema by field id BEFORE the delete
-            # anti-joins (delete keys are guarded against rename, so
-            # their names are era-invariant)
-            keep = ("__f", "__p") if keep_coords else ()
-            seg = _project_era_keep(seg, eras[gi], current, keep)
-        applicable = [(k, fs) for dsid, k, fs, _ in deletes
-                      if k is not None and dsid > origin]
-        by_key: dict[str, list[str]] = {}
-        for k, fs in applicable:
-            by_key.setdefault(k, []).extend(fs)
-        for k, fs in by_key.items():
+        # delete keys are guarded against rename, so their names are
+        # era-invariant
+        for k, fs in eq.items():
             keys = spark.read.parquet(*fs).select(k).distinct()
             seg = seg.join(F.broadcast(keys), k, "left_anti")
         parts.append(seg)
     if not parts:
         return None
     return functools.reduce(lambda a, b: a.unionByName(b), parts)
-
-
-def _chain_files(table: str, from_excl: int | None, to_incl: int,
-                 incremental: bool = False) -> list[str]:
-    """Data files along the parent chain in (from_excl, to_incl].
-
-    Full reads (``incremental=False``) stop at the newest 'replace'
-    (compaction) snapshot — its files ARE the table state below it —
-    and honor 'overwrite' snapshots' ``removed_files``: a file removed
-    by a copy-on-write rewrite above is invisible below. Incremental
-    reads collect added files of 'append'/'overwrite' snapshots only
-    ('replace' adds no rows; an overwrite's added files carry its
-    upserted rows) and still walk to ``from_excl`` to validate
-    ancestry."""
-    files: list[str] = []
-    removed: set[str] = set()
-    sid: int | None = to_incl
-    while sid is not None and sid != from_excl:
-        man = _read_json(_meta(table) / f"snap-{sid}.json")
-        # expired manifests (below an expire_snapshots horizon) are
-        # planning FRAGMENTS: a kept snapshot's walk may pass through
-        # them (its view's files all survived the vacuum), but they
-        # cannot ANCHOR a read, and an incremental range may not
-        # cross them — their own added files may be vacuumed
-        if man.get("expired") and (sid == to_incl or incremental):
-            raise ValueError(
-                f"snapshot {sid} was expired by expire_snapshots: its "
-                "read view may reference vacuumed files; anchor at a "
-                "kept snapshot instead")
-        op = man.get("operation", "append")
-        if incremental:
-            if op == "overwrite" or (op == "rowdelta"
-                                     and (man.get("delete_files")
-                                          or man.get("pos_delete_files"))):
-                raise ValueError(
-                    f"snapshot {sid} is a row-level {op}: an append-only "
-                    "incremental scan over it would surface updated rows "
-                    "without retracting the rows they replace (Iceberg's "
-                    "incremental append scan refuses overwrites the same "
-                    "way) — read the full snapshot or use read_changes "
-                    "for the row-level diff instead")
-            if op == "append":
-                files[:0] = man["added_files"]
-        else:
-            files[:0] = [f for f in man["added_files"] if f not in removed]
-            removed.update(man.get("removed_files", []))
-            if op == "replace":
-                return files  # full state; nothing older is needed
-        sid = man["parent"]
-    if from_excl is not None and sid != from_excl:
-        raise ValueError(
-            f"snapshot {from_excl} is not an ancestor of {to_incl}")
-    return files
 
 
 def read_snapshot(spark: SparkSession, table: str,
@@ -965,17 +955,8 @@ def read_snapshot(spark: SparkSession, table: str,
     sid = snapshot_id if snapshot_id is not None else current_snapshot_id(table)
     if sid is None:
         raise ValueError(f"{table}: empty table (no CURRENT)")
-    groups, deletes, sctx = _plan_full(table, sid)
-    if not deletes and sctx is None:
-        files = [f for _, fs in groups for f in fs]
-        if not files:
-            raise ValueError(f"{table}: snapshot {sid} has no data files")
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return _drop_hidden(reader.parquet(*files))
-    df = _apply_deletes(spark, groups, deletes, merge_schema=merge_schema,
-                        schema_ctx=sctx)
+    df = _apply_deletes(spark, _plan_full(table, sid),
+                        merge_schema=merge_schema)
     if df is None:
         raise ValueError(f"{table}: snapshot {sid} has no data files")
     return _drop_hidden(df)
@@ -985,21 +966,36 @@ def read_incremental(spark: SparkSession, table: str, from_snapshot: int,
                      to_snapshot: int | None = None) -> DataFrame:
     """Rows appended in (from_snapshot, to_snapshot] — the scan opens
     ONLY the files those commits added (no full-table footer reads, no
-    timestamp filter; cost follows the change, not the table size)."""
+    timestamp filter; cost follows the change, not the table size).
+
+    Only 'append' snapshots add rows here ('replace' adds none); an
+    expired manifest may not be crossed (its added files may be
+    vacuumed), and row-level 'overwrite'/'rowdelta' snapshots are
+    refused."""
     to_sid = to_snapshot if to_snapshot is not None else current_snapshot_id(table)
     if to_sid is None:
         raise ValueError(f"{table}: empty table (no CURRENT)")
     if to_sid == from_snapshot:
         return read_snapshot(spark, table, to_sid).limit(0)
-    files = _chain_files(table, from_snapshot, to_sid, incremental=True)
+    files: list[str] = []
+    for man in _chain(table, to_sid, stop=from_snapshot):
+        _refuse_expired(man)
+        op = man.get("operation", "append")
+        if op == "overwrite" or (op == "rowdelta"
+                                 and (man.get("delete_files")
+                                      or man.get("pos_delete_files"))):
+            raise ValueError(
+                f"snapshot {man['snapshot_id']} is a row-level {op}: an "
+                "append-only incremental scan over it would surface "
+                "updated rows without retracting the rows they replace "
+                "(Iceberg's incremental append scan refuses overwrites "
+                "the same way) — read the full snapshot or use "
+                "read_changes for the row-level diff instead")
+        if op == "append":
+            files[:0] = man["added_files"]
     if not files:
         return read_snapshot(spark, table, to_sid).limit(0)
-    current, index = _file_eras(table, to_sid)
-    if current is None:
-        return _drop_hidden(spark.read.parquet(*files))
-    # schema evolution: files appended before an evolve in (or below)
-    # the range carry their era's column names — project per era
-    return _drop_hidden(_read_files_projected(spark, files, current, index))
+    return _drop_hidden(_read_eras(spark, files, _plan_full(table, to_sid)))
 
 
 def expire_snapshots(table: str, keep_last: int = 1) -> dict:
@@ -1022,16 +1018,12 @@ def expire_snapshots(table: str, keep_last: int = 1) -> dict:
     cur = current_snapshot_id(table)
     if cur is None:
         return {"kept": 0, "deleted_manifests": 0, "deleted_data_dirs": 0}
-    # newest keep_last chain snapshots; each kept snapshot's read
-    # closure = its chain walk down to (and including) the first
-    # 'replace' snapshot — a compaction's own files ARE the state
-    # below it, so older history is expendable (as in Iceberg, an
-    # expired snapshot can no longer anchor incremental reads).
-    # expiration is PERMANENT: a manifest stamped expired by an
-    # earlier vacuum may reference already-deleted files, so a later
-    # call with a deeper keep_last must not re-adopt it as an anchor
-    # (it could neither be read nor safely re-activated) — the keep
-    # window is taken over the still-anchorable suffix of the chain
+    # newest keep_last chain snapshots. Expiration is PERMANENT: a
+    # manifest stamped expired by an earlier vacuum may reference
+    # already-deleted files, so a later call with a deeper keep_last
+    # must not re-adopt it as an anchor (it could neither be read nor
+    # safely re-activated) — the keep window is taken over the
+    # still-anchorable suffix of the chain
     chain = [m["snapshot_id"] for m in snapshot_log(table)
              if not m.get("expired")]
     kept_ids = set(chain[-max(keep_last, 1):])
@@ -1039,34 +1031,17 @@ def expire_snapshots(table: str, keep_last: int = 1) -> dict:
     # branch's whole fork) must survive the vacuum — dropping the ref
     # first is how staged-but-discarded data becomes expendable
     kept_ids.update(r["snapshot_id"] for r in list_refs(table).values())
-    # manifests reachable from kept snapshots stay (they plan the kept
-    # reads); everything else is expired
+    # the manifests a kept view spans stay (they plan the kept reads),
+    # and so do exactly the data and delete files some kept view uses:
+    # pre-compaction history and files an overwrite replaced (that
+    # nothing kept can still see) are vacuumed
     reachable: set[int] = set()
-    for sid in list(kept_ids):
-        walk: int | None = sid
-        while walk is not None and walk not in reachable:
-            man = _read_json(_meta(table) / f"snap-{walk}.json")
-            reachable.add(walk)
-            if man.get("operation", "append") == "replace":
-                break  # the compaction carries the full state below it
-            walk = man["parent"]
-    # keep exactly the files some KEPT snapshot's read view uses —
-    # _chain_files honors both compaction cutoffs and overwrite
-    # removed_files, so files an overwrite replaced (and nothing kept
-    # can still see) are vacuumed instead of lingering forever on a
-    # frequently-merged table. Manifests BELOW the kept horizon that
-    # survive (the kept walks plan through them) are no longer
-    # anchorable views — a pre-overwrite file their view references
-    # is gone after this vacuum — so they are stamped "expired" below
-    # and every anchoring read path refuses them up front with a
-    # clear error instead of failing mid-scan on a missing file.
     keep_files: set[str] = set()
     for sid in kept_ids:
-        groups, dels, _sctx = _plan_full(table, sid)
-        keep_files.update(f for _, fs in groups for f in fs)
-        # merge-on-read equality-delete files a kept view still applies
-        # must survive the vacuum with the data files they mask
-        keep_files.update(f for _, _, fs, _ in dels for f in fs)
+        view = _plan_full(table, sid)
+        reachable.update(view.sids)
+        keep_files.update(view.files)
+        keep_files.update(f for _, _, fs in view.deletes for f in fs)
     deleted_manifests = 0
     for p in list(_meta(table).glob("snap-*.json")):
         sid = int(p.stem.split("-")[1])
@@ -1127,31 +1102,22 @@ def snapshot_as_of(table: str, ts: float) -> int:
     time, including evolve (so AS-OF lands on the schema in force at
     ``ts``). Raises if the whole chain is newer than ``ts`` or commit
     times are missing (pre-timestamp tables)."""
-    sid = current_snapshot_id(table)
-    best: tuple[float, int] | None = None
-    while sid is not None:
-        man = _read_json(_meta(table) / f"snap-{sid}.json")
+    # the walk is newest-first: the first hit is the answer
+    for man in _chain(table, current_snapshot_id(table)):
         at = man.get("committed_at")
         if at is not None and at <= ts and not man.get("expired"):
-            best = (at, sid)
-            break  # chain walk is newest-first: first hit is the answer
-        sid = man["parent"]
-    if best is None:
-        raise ValueError(
-            f"{table}: no snapshot committed at or before {ts} "
-            "(chain is newer, expired, or predates commit timestamps)")
-    return best[1]
+            return man["snapshot_id"]
+    raise ValueError(
+        f"{table}: no snapshot committed at or before {ts} "
+        "(chain is newer, expired, or predates commit timestamps)")
 
 
 def rollback(table: str, snapshot_id: int) -> None:
     """Point CURRENT at an earlier reachable snapshot (metadata-only,
     atomic). Later snapshots become unreachable; a subsequent commit
     forks the chain from here with a fresh id."""
-    _chain_files(table, None, snapshot_id)  # validates reachability
-    meta = _meta(table)
-    tmp = meta / f"CURRENT.{uuid.uuid4().hex}.tmp"
-    tmp.write_text(str(snapshot_id))
-    os.replace(tmp, meta / "CURRENT")
+    _plan_full(table, snapshot_id)  # validates reachability
+    _flip(table, snapshot_id)
 
 
 # ------------------- refs: branches and tags -----------------------
@@ -1202,9 +1168,7 @@ def _create_ref(table: str, name: str, kind: str, at: int | None,
         if _ref_file(table, name) is not None:
             raise ValueError(f"{table}: ref {name!r} already exists")
         _refs_dir(table).mkdir(parents=True, exist_ok=True)
-        tmp = meta / f"ref.{uuid.uuid4().hex}.tmp"
-        tmp.write_text(str(sid))
-        os.replace(tmp, _refs_dir(table) / f"{kind}-{name}")
+        _flip(table, sid, f"{kind}-{name}")
         return sid
     finally:
         lock.unlink(missing_ok=True)
@@ -1268,17 +1232,13 @@ def fast_forward(table: str, branch: str,
             raise ValueError(f"{table}: no branch {branch!r}")
         head = int(p.read_text().strip())
         cur = current_snapshot_id(table)
-        walk: int | None = head
-        while walk is not None and walk != cur:
-            walk = _read_json(meta / f"snap-{walk}.json")["parent"]
-        if walk != cur:
+        if cur is not None and cur not in {
+                m["snapshot_id"] for m in _chain(table, head)}:
             raise ValueError(
                 f"fast_forward: CURRENT ({cur}) is not an ancestor of "
                 f"branch {branch!r} head ({head}) — the main line "
                 "diverged; re-branch from the new CURRENT and re-stage")
-        tmp = meta / f"CURRENT.{uuid.uuid4().hex}.tmp"
-        tmp.write_text(str(head))
-        os.replace(tmp, meta / "CURRENT")
+        _flip(table, head)
         return head
     finally:
         lock.unlink(missing_ok=True)
@@ -1322,23 +1282,17 @@ def resolve_fields(table: str, snapshot_id: int | None = None) -> list | None:
     never evolved (plain name-addressed schema, zero overhead)."""
     sid = snapshot_id if snapshot_id is not None \
         else current_snapshot_id(table)
-    while sid is not None:
-        man = _read_json(_meta(table) / f"snap-{sid}.json")
-        if man.get("operation") == "evolve":
-            return man["schema_fields"]
-        sid = man["parent"]
-    return None
+    return next((m["schema_fields"] for m in _chain(table, sid)
+                 if m.get("operation") == "evolve"), None)
 
 
 def _base_fields(table: str, sid: int) -> list[list]:
     """Era for a never-evolved prefix of the chain: synthesized from
     the newest DATA manifest at-or-below ``sid`` (all pre-evolve
     commits share one schema — commit() appends never change it)."""
-    while sid is not None:
-        man = _read_json(_meta(table) / f"snap-{sid}.json")
+    for man in _chain(table, sid):
         if "schema" in man:
             return _fields_from_schema_json(man["schema"])
-        sid = man["parent"]
     raise ValueError(f"{table}: no data manifest below snapshot — "
                      "cannot evolve an empty table")
 
@@ -1389,7 +1343,7 @@ def evolve_schema(table: str, add: list[tuple[str, str]] | None = None,
                 f"columns {sorted(touched & spec_cols)} are partition-spec "
                 "source columns; change the spec (via a 'replace' commit) "
                 "before renaming/dropping them")
-        live_delete_keys = {d[1] for d in _plan_full(table, parent)[1]}
+        live_delete_keys = {d[1] for d in _plan_full(table, parent).deletes}
         if touched & live_delete_keys:
             raise ValueError(
                 f"columns {sorted(touched & live_delete_keys)} are delete "
@@ -1404,15 +1358,10 @@ def evolve_schema(table: str, add: list[tuple[str, str]] | None = None,
         # in the chain (Iceberg's last-column-id): ids are never
         # reused, so re-adding a dropped column's name mints a fresh
         # id and the dead bytes in old files stay invisible
-        high = max((f[0] for f in prev), default=0)
-        walk: int | None = parent
-        while walk is not None:
-            wman = _read_json(meta / f"snap-{walk}.json")
-            if wman.get("operation") == "evolve":
-                for fl in (wman["schema_fields"], wman["prev_fields"]):
-                    high = max(high, max((f[0] for f in fl), default=0))
-            walk = wman["parent"]
-        next_id = high + 1
+        next_id = 1 + max([f[0] for f in prev] + [
+            f[0] for m in _chain(table, parent)
+            if m.get("operation") == "evolve"
+            for f in m["schema_fields"] + m["prev_fields"]], default=0)
         for aname, atype in add:
             new.append([next_id, aname, atype])
             next_id += 1
@@ -1422,11 +1371,7 @@ def evolve_schema(table: str, add: list[tuple[str, str]] | None = None,
                 raise ValueError(f"evolve_schema: duplicate column {name!r} "
                                  "in the resulting schema")
             seen.add(name)
-        claimed = [int(p.stem.split("-")[1]) for p in meta.glob("snap-*.json")]
-        claimed += [int(d.name.split("-")[1])
-                    for d in (Path(table) / "data").glob("snap-*")
-                    if d.is_dir()]
-        sid = max(claimed, default=0) + 1
+        sid = _claim_id(table)
         parent_man = _read_json(meta / f"snap-{parent}.json")
         manifest = {
             "snapshot_id": sid,
@@ -1444,9 +1389,7 @@ def evolve_schema(table: str, add: list[tuple[str, str]] | None = None,
             # _current_spec reads CURRENT's own manifest: inherit
             manifest["partition_spec"] = parent_man["partition_spec"]
         (meta / f"snap-{sid}.json").write_text(json.dumps(manifest, indent=1))
-        tmp = meta / f"CURRENT.{uuid.uuid4().hex}.tmp"
-        tmp.write_text(str(sid))
-        os.replace(tmp, meta / "CURRENT")
+        _flip(table, sid)
         return sid
     finally:
         lock.unlink(missing_ok=True)
@@ -1459,8 +1402,19 @@ def _project_era(seg: DataFrame, era: list | None,
     the era come back as typed NULLs, fields dropped from the current
     schema are simply not selected (column pruning — their bytes are
     never deserialized). Hidden partition columns pass through for the
-    spec machinery."""
-    return _project_era_keep(seg, era, current, ())
+    spec machinery, and so do (file, pos) coordinates ``__f``/``__p``."""
+    if era is None or current is None or era == current:
+        return seg
+    from pyspark.sql import functions as F
+
+    era_by_id = {f[0]: f for f in era}
+    cols = [F.col(c) for c in ("__f", "__p") if c in seg.columns]
+    for fid, name, dtype in current:
+        ef = era_by_id.get(fid)
+        cols.append(F.col(ef[1]).cast(dtype).alias(name) if ef is not None
+                    else F.lit(None).cast(dtype).alias(name))
+    cols += [F.col(c) for c in seg.columns if c.startswith(_P_PREFIX)]
+    return seg.select(*cols)
 
 
 def _translate_preds(preds, era: list | None, current: list) -> list | None:
@@ -1487,52 +1441,6 @@ def _translate_preds(preds, era: list | None, current: list) -> list | None:
     return out
 
 
-def _file_eras(table: str, to_incl: int) -> tuple[list | None, dict]:
-    """(current_fields, {data_file: era_fields}) over the FULL chain
-    from ``to_incl`` to the root — the per-file write-time schema
-    index used by readers that open files from many snapshots
-    (read_changes touches removed_files of older eras). Both values
-    are None/{} on a never-evolved table."""
-    current = resolve_fields(table, to_incl)
-    if current is None:
-        return None, {}
-    index: dict[str, list] = {}
-    running: list | None = None  # None == current era
-    sid: int | None = to_incl
-    while sid is not None:
-        man = _read_json(_meta(table) / f"snap-{sid}.json")
-        if man.get("operation") == "evolve":
-            running = man["prev_fields"]
-        else:
-            era = running if running is not None else current
-            for f in man.get("added_files", []):
-                index[f] = era
-        sid = man["parent"]
-    return current, index
-
-
-def _read_files_projected(spark: SparkSession, files: list[str],
-                          current: list | None, index: dict) -> DataFrame:
-    """Read a file set that may span schema eras: group by era, read
-    each group once, project every group onto the current schema by
-    field id, union by name. One read per era actually present —
-    a never-renamed file set stays a single parquet scan."""
-    import functools
-
-    if current is None:
-        return spark.read.parquet(*files)
-    by_key: dict[str, list[str]] = {}
-    eras: dict[str, list | None] = {}
-    for f in files:
-        era = index.get(f)
-        k = json.dumps(era)
-        by_key.setdefault(k, []).append(f)
-        eras[k] = era
-    parts = [_project_era(spark.read.parquet(*fs), eras[k], current)
-             for k, fs in by_key.items()]
-    return functools.reduce(lambda a, b: a.unionByName(b), parts)
-
-
 def merge_upsert(spark: SparkSession, table: str, updates: DataFrame,
                  key: str, max_retries: int = 3,
                  cluster_by: list[str] | None = None,
@@ -1557,27 +1465,7 @@ def merge_upsert(spark: SparkSession, table: str, updates: DataFrame,
     """
     from pyspark.sql import functions as F
 
-    expected = read_snapshot(spark, table).schema
-    got = updates.schema
-    if [(f.name, f.dataType) for f in expected.fields] != \
-            [(f.name, f.dataType) for f in got.fields]:
-        raise ValueError(
-            f"merge_upsert: updates schema {got.simpleString()} does not "
-            f"match table schema {expected.simpleString()} — a silent "
-            "cast here would fork the column types across data files "
-            "(readers fail on INT32-vs-INT64 parquet mismatches)")
-    bad = (updates.groupBy(key).agg(F.count("*").alias("n"))
-           .filter((F.col("n") > 1) | F.col(key).isNull())
-           .limit(1).collect())
-    if bad:
-        if bad[0][key] is None:
-            raise ValueError(
-                "updates carry a NULL merge key: null never equi-matches, "
-                "so the 'replaced' old row would survive alongside the "
-                "insert — reject up front instead of silently duplicating")
-        raise ValueError(
-            f"updates carry duplicate key {bad[0][key]!r}: one row per "
-            "key is required (MERGE would be ambiguous)")
+    _check_updates(spark, table, updates, key, "merge_upsert")
     updates = updates.localCheckpoint(eager=True)
 
     last_err: Exception | None = None
@@ -1585,28 +1473,20 @@ def merge_upsert(spark: SparkSession, table: str, updates: DataFrame,
         base = current_snapshot_id(table)
         if base is None:
             raise ValueError(f"{table}: empty table (no CURRENT)")
-        files = _chain_files(table, None, base)
-        stats: dict = {}
-        walk: int | None = base
-        while walk is not None:
-            man = _read_json(_meta(table) / f"snap-{walk}.json")
-            if man.get("operation") == "rowdelta" and (
-                    man.get("delete_files") or man.get("pos_delete_files")):
-                raise ValueError(
-                    f"{table}: snapshot {man['snapshot_id']} carries "
-                    "merge-on-read delete files; a copy-on-write merge "
-                    "planned from raw data files would resurrect deleted "
-                    "rows — compact() first (folds the deletes in) or "
-                    "keep merging with mor_upsert/mor_delete")
-            stats.update(man.get("file_stats", {}))
-            if man.get("operation", "append") == "replace":
-                break
-            walk = man["parent"]
+        view = _plan_full(table, base)
+        if view.deletes:
+            raise ValueError(
+                f"{table}: snapshot {view.deletes[0][0]} carries "
+                "merge-on-read delete files; a copy-on-write merge "
+                "planned from raw data files would resurrect deleted "
+                "rows — compact() first (folds the deletes in) or "
+                "keep merging with mor_upsert/mor_delete")
+        stats = view.stats
         # files whose key-range may contain an update key: broadcast
         # the (tiny, manifest-derived) range list against the update
         # keys — one distributed semi-join, no driver-side key set
         ranged, unranged = [], []
-        for f in files:
+        for f in view.files:
             cs = stats.get(f, {}).get("cols", {}).get(key)
             if cs and cs.get("t") not in ("i", "s"):
                 cs = None  # only int/string key ranges join cleanly
@@ -1650,9 +1530,8 @@ def merge_upsert(spark: SparkSession, table: str, updates: DataFrame,
             # write and this merge must not fork column names in the
             # rewritten union; old-era files lack stats under the
             # current key name, so they all land here conservatively)
-            cur_fields, findex = _file_eras(table, base)
-            survivors = (_drop_hidden(_read_files_projected(
-                             spark, sorted(touched), cur_fields, findex))
+            survivors = (_drop_hidden(_read_eras(spark, sorted(touched),
+                                                 view))
                          .join(updates.select(key), key, "left_anti"))
             new_data = survivors.unionByName(updates)
         else:
@@ -1667,27 +1546,33 @@ def merge_upsert(spark: SparkSession, table: str, updates: DataFrame,
     raise last_err if last_err else RuntimeError("merge_upsert failed")
 
 
-def _check_mor_updates(spark: SparkSession, table: str,
-                       updates: DataFrame, key: str) -> None:
-    """Shared validation for the merge-on-read writers: schema must
-    match the table exactly (same reasoning as merge_upsert — a silent
-    cast forks parquet physical types across files), and keys must be
-    unique and non-null (a NULL equality-delete key never matches, so
-    the 'replaced' row would survive beside the insert)."""
+def _check_updates(spark: SparkSession, table: str, updates: DataFrame,
+                   key: str, who: str) -> None:
+    """Validation shared by the upsert writers: the schema must match
+    the table exactly — a silent cast here would fork the parquet
+    physical types across data files — and keys must be unique and
+    non-null (a NULL key never equi-matches, so the 'replaced' row
+    would survive beside the insert)."""
     from pyspark.sql import functions as F
 
     expected = read_snapshot(spark, table).schema
+    got = updates.schema
     if [(f.name, f.dataType) for f in expected.fields] != \
-            [(f.name, f.dataType) for f in updates.schema.fields]:
+            [(f.name, f.dataType) for f in got.fields]:
         raise ValueError(
-            f"mor_upsert: updates schema {updates.schema.simpleString()} "
-            f"does not match table schema {expected.simpleString()}")
+            f"{who}: updates schema {got.simpleString()} does not "
+            f"match table schema {expected.simpleString()} — a silent "
+            "cast here would fork the column types across data files "
+            "(readers fail on INT32-vs-INT64 parquet mismatches)")
     bad = (updates.groupBy(key).agg(F.count("*").alias("n"))
            .filter((F.col("n") > 1) | F.col(key).isNull())
            .limit(1).collect())
     if bad:
         if bad[0][key] is None:
-            raise ValueError("updates carry a NULL merge key")
+            raise ValueError(
+                "updates carry a NULL merge key: null never equi-matches, "
+                "so the 'replaced' old row would survive alongside the "
+                "insert — reject up front instead of silently duplicating")
         raise ValueError(
             f"updates carry duplicate key {bad[0][key]!r}: one row per "
             "key is required (MERGE would be ambiguous)")
@@ -1717,7 +1602,7 @@ def mor_upsert(spark: SparkSession, table: str, updates: DataFrame,
     files the chain holds, so the commit content does not depend on the
     parent snapshot — concurrent mor_upserts serialize on the commit
     lock and compose as last-writer-wins per key."""
-    _check_mor_updates(spark, table, updates, key)
+    _check_updates(spark, table, updates, key, "mor_upsert")
     updates = updates.localCheckpoint(eager=True)
     return commit(updates, table, operation="rowdelta",
                   delete_keys=updates.select(key), delete_key=key)
@@ -1761,21 +1646,14 @@ def mor_delete_where(spark: SparkSession, table: str, predicates) -> int:
     base = current_snapshot_id(table)
     if base is None:
         raise ValueError(f"{table}: empty table (no CURRENT)")
-    kept, _total = plan_scan(table, predicates, base)
-    if not kept:
-        return base
-    groups, deletes, sctx = _plan_full(table, base)
-    # the position scan rides the full delete-aware read (keep_coords
-    # surfaces the (file, pos) coordinates through it), so rows already
-    # hidden by earlier equality/positional deletes are never
-    # re-recorded — repeating the same predicate delete is a no-op and
-    # the CDC feed never emits a delete for a row that was not live
-    live = _apply_deletes(spark, groups, deletes, keep_only=set(kept),
-                          schema_ctx=sctx, keep_coords=True)
+    # the position scan is read_where's delete-aware scan with the
+    # (file, pos) coordinates kept, so rows already hidden by earlier
+    # equality/positional deletes are never re-recorded — repeating the
+    # same predicate delete is a no-op and the CDC feed never emits a
+    # delete for a row that was not live
+    live = _scan_where(spark, table, predicates, base, keep_coords=True)
     if live is None:
         return base
-    for col, op, val in predicates:
-        live = live.filter(getattr(F.col(col), _OPS[op])(F.lit(val)))
     hits = (live.select(F.col("__f").alias("file"),
                         F.col("__p").alias("pos"))
             .localCheckpoint(eager=True))
@@ -1783,24 +1661,6 @@ def mor_delete_where(spark: SparkSession, table: str, predicates) -> int:
         return base
     empty = read_snapshot(spark, table).limit(0).localCheckpoint(eager=True)
     return commit(empty, table, operation="rowdelta", pos_deletes=hits)
-
-
-def _project_era_keep(seg: DataFrame, era, current, keep: tuple):
-    """The era projection (see _project_era), optionally carrying the
-    named passthrough columns (used to keep (file, pos) coordinates
-    through it); hidden partition columns always pass through."""
-    if era is None or current is None or era == current:
-        return seg
-    from pyspark.sql import functions as F
-
-    era_by_id = {f[0]: f for f in era}
-    cols = [F.col(c) for c in keep if c in seg.columns]
-    for fid, name, dtype in current:
-        ef = era_by_id.get(fid)
-        cols.append(F.col(ef[1]).cast(dtype).alias(name) if ef is not None
-                    else F.lit(None).cast(dtype).alias(name))
-    cols += [F.col(c) for c in seg.columns if c.startswith(_P_PREFIX)]
-    return seg.select(*cols)
 
 
 def read_changes(spark: SparkSession, table: str, from_snapshot: int,
@@ -1830,62 +1690,44 @@ def read_changes(spark: SparkSession, table: str, from_snapshot: int,
     to_sid = to_snapshot if to_snapshot is not None else current_snapshot_id(table)
     if to_sid is None:
         raise ValueError(f"{table}: empty table (no CURRENT)")
-    # validate ancestry with an EXPLICIT parent walk: the full-read
-    # file walk (_chain_files incremental=False) returns early at the
-    # first 'replace' snapshot, so with a compaction in the chain it
-    # would bless a from_snapshot that is not an ancestor at all
-    # (orphaned by rollback, or a typo) and the change walk below
-    # would silently run past it to the root, emitting the whole
-    # table history as changes
-    if from_snapshot is not None:
-        walk: int | None = to_sid
-        while walk is not None and walk != from_snapshot:
-            walk = _read_json(_meta(table) / f"snap-{walk}.json")["parent"]
-        if walk != from_snapshot:
-            raise ValueError(
-                f"snapshot {from_snapshot} is not an ancestor of {to_sid}")
-
-    # schema evolution: every file read below is projected onto the
-    # CURRENT-at-to_sid schema by field id (an overwrite's
-    # removed_files may predate an evolve that its added_files
-    # postdate — the per-file era index handles the mix), so change
-    # rows always arrive in one uniform schema
-    cur_fields, findex = _file_eras(table, to_sid)
-
-    def rd(files: list[str]) -> DataFrame:
-        return _drop_hidden(
-            _read_files_projected(spark, files, cur_fields, findex))
-
-    chunks: list[DataFrame] = []
-    sid: int | None = to_sid
-    while sid is not None and sid != from_snapshot:
-        man = _read_json(_meta(table) / f"snap-{sid}.json")
+    # ancestry is validated before any read: a from_snapshot orphaned by
+    # a rollback (or a typo) must raise, never emit the whole history
+    mans = list(_chain(table, to_sid, stop=from_snapshot))
+    for man in mans:
         if man.get("expired"):
             raise ValueError(
                 f"changelog range ({from_snapshot}, {to_sid}] crosses "
-                f"expired snapshot {sid}: its change files may be "
-                "vacuumed; start from a kept snapshot")
+                f"expired snapshot {man['snapshot_id']}: its change files "
+                "may be vacuumed; start from a kept snapshot")
+    # schema evolution: every file read below is projected onto the
+    # CURRENT-at-to_sid schema by field id (an overwrite's
+    # removed_files may predate an evolve that its added_files
+    # postdate), so change rows always arrive in one uniform schema
+    view = _plan_full(table, to_sid)
+
+    def rd(files: list[str]) -> DataFrame:
+        return _drop_hidden(_read_eras(spark, files, view))
+
+    chunks: list[DataFrame] = []
+    for man in mans:
         op = man.get("operation", "append")
-        tag = (F.lit("insert").alias("_change_type"),
-               F.lit(sid).alias("_snapshot_id"))
+        snap = F.lit(man["snapshot_id"]).alias("_snapshot_id")
+        ins = ("*", F.lit("insert").alias("_change_type"), snap)
+        dels = ("*", F.lit("delete").alias("_change_type"), snap)
         if op == "append" and man["added_files"]:
-            chunks.append(rd(man["added_files"]).select("*", *tag))
+            chunks.append(rd(man["added_files"]).select(*ins))
         elif op == "overwrite":
             added = (rd(man["added_files"])
                      if man["added_files"] else None)
             removed = (rd(man["removed_files"])
                        if man.get("removed_files") else None)
             if added is not None and removed is not None:
-                chunks.append(added.exceptAll(removed).select("*", *tag))
-                chunks.append(removed.exceptAll(added).select(
-                    "*", F.lit("delete").alias("_change_type"),
-                    F.lit(sid).alias("_snapshot_id")))
+                chunks.append(added.exceptAll(removed).select(*ins))
+                chunks.append(removed.exceptAll(added).select(*dels))
             elif added is not None:
-                chunks.append(added.select("*", *tag))
+                chunks.append(added.select(*ins))
             elif removed is not None:
-                chunks.append(removed.select(
-                    "*", F.lit("delete").alias("_change_type"),
-                    F.lit(sid).alias("_snapshot_id")))
+                chunks.append(removed.select(*dels))
         elif op == "rowdelta":
             # merge-on-read delta: inserts are the commit's own added
             # rows; deletes are the PARENT-state rows bearing a deleted
@@ -1894,7 +1736,7 @@ def read_changes(spark: SparkSession, table: str, from_snapshot: int,
             # delete-key range recorded in the manifest, so changelog
             # cost follows the delta size on a key-clustered table.
             if man["added_files"]:
-                chunks.append(rd(man["added_files"]).select("*", *tag))
+                chunks.append(rd(man["added_files"]).select(*ins))
             if man.get("pos_delete_files"):
                 # positional delta: the deleted rows ARE the rows at
                 # the recorded (file, pos) coordinates — open only the
@@ -1904,25 +1746,14 @@ def read_changes(spark: SparkSession, table: str, from_snapshot: int,
                 targeted = sorted(r["file"] for r in
                                   pdel.select("file").distinct().collect())
                 live = [f for f in targeted if Path(f).exists()]
-                by_era: dict[str, list[str]] = {}
-                for f in live:
-                    by_era.setdefault(json.dumps(findex.get(f)),
-                                      []).append(f)
                 pk = pdel.select(F.col("file").alias("__f"),
                                  F.col("pos").alias("__p")).distinct()
-                for ek, fs in by_era.items():
-                    prior = spark.read.parquet(*fs).select(
-                        _norm_file_path(
-                            F.col("_metadata.file_path")).alias("__f"),
-                        F.col("_metadata.row_index").alias("__p"), "*")
-                    prior = _project_era_keep(
-                        prior, json.loads(ek), cur_fields, ("__f", "__p"))
-                    chunks.append(
-                        _drop_hidden(
-                            prior.join(F.broadcast(pk), ["__f", "__p"],
-                                       "left_semi").drop("__f", "__p"))
-                        .select("*", F.lit("delete").alias("_change_type"),
-                                F.lit(sid).alias("_snapshot_id")))
+                if live:
+                    prior = _read_eras(spark, live, view, coords=True)
+                    chunks.append(_drop_hidden(
+                        prior.join(F.broadcast(pk), ["__f", "__p"],
+                                   "left_semi").drop("__f", "__p"))
+                        .select(*dels))
             if man.get("delete_files"):
                 k = man["delete_key"]
                 rng = man.get("delete_key_range")
@@ -1936,10 +1767,7 @@ def read_changes(spark: SparkSession, table: str, from_snapshot: int,
                 dk = (spark.read.parquet(*man["delete_files"])
                       .select(k).distinct())
                 chunks.append(
-                    prior.join(F.broadcast(dk), k, "left_semi").select(
-                        "*", F.lit("delete").alias("_change_type"),
-                        F.lit(sid).alias("_snapshot_id")))
-        sid = man["parent"]
+                    prior.join(F.broadcast(dk), k, "left_semi").select(*dels))
     if not chunks:
         empty = read_snapshot(spark, table, to_sid).limit(0)
         return empty.select(
@@ -1967,11 +1795,10 @@ def snapshot_row_count(table: str,
         else current_snapshot_id(table)
     if sid is None:
         return 0
-    groups, deletes, _ = _plan_full(table, sid)
-    if deletes:
+    view = _plan_full(table, sid)
+    if view.deletes:
         return None
-    return sum(pq.ParquetFile(f).metadata.num_rows
-               for _, files in groups for f in files)
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in view.files)
 
 
 def snapshots_table(spark: SparkSession, table: str) -> DataFrame:
@@ -2030,18 +1857,10 @@ def files_table(spark: SparkSession, table: str,
            else current_snapshot_id(table))
     if sid is None:
         raise ValueError(f"{table}: empty table (no CURRENT)")
-    stats: dict = {}
-    walk: int | None = sid
-    while walk is not None:
-        man = _read_json(_meta(table) / f"snap-{walk}.json")
-        stats.update(man.get("file_stats", {}))
-        if man.get("operation", "append") == "replace":
-            break
-        walk = man["parent"]
-    groups, deletes, _sctx = _plan_full(table, sid)
+    view = _plan_full(table, sid)
 
     def _rows_of(f: str) -> int:
-        st = stats.get(f)
+        st = view.stats.get(f)
         if st is not None:
             return int(st.get("rows", -1))
         # delete files are not in the manifests' data-file stats;
@@ -2051,11 +1870,11 @@ def files_table(spark: SparkSession, table: str,
         return int(pq.ParquetFile(f).metadata.num_rows)
 
     rows = []
-    for origin, files in groups:
+    for origin, files, _ in view.groups:
         for f in files:
             rows.append((int(origin), PurePath(f).name, "data",
                          _rows_of(f)))
-    for dsid, key, dfiles, _rng in deletes:
+    for dsid, key, dfiles in view.deletes:
         kind = "eq_delete" if key is not None else "pos_delete"
         for f in dfiles:
             rows.append((int(dsid), PurePath(f).name, kind,

@@ -50,3 +50,27 @@ def test_registered_name_is_function_name(queries):
     from npm_extraction_server_spark.operators.registry import SPARK_QUERIES
 
     assert all(fn.__name__ == name for name, fn in SPARK_QUERIES.items())
+
+
+def test_query_scratch_root_removed_at_exit(tmp_path):
+    """Directories a query writes its tables into live under one
+    per-process root, which is gone once the process exits."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    code = ("from npm_extraction_server_spark.operators.suite import "
+            "_scratch\n"
+            "a, b = _scratch('snaptab_'), _scratch('warcq_')\n"
+            "open(a + '/f.parquet', 'w').write('x')\n"
+            "print(a); print(b)\n")
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, check=True,
+        capture_output=True, text=True,
+        env={**os.environ, "TMPDIR": str(tmp_path)}).stdout.split()
+    a, b = Path(out[0]), Path(out[1])
+    assert a.parent == b.parent and a.parent.parent == tmp_path
+    assert not a.parent.exists()
+    assert list(tmp_path.iterdir()) == []

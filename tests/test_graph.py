@@ -1352,6 +1352,13 @@ def test_pagerank_incremental_bit_exact_and_local(spark):
     with pytest.raises(ValueError, match="history covers"):
         pagerank_incremental(ring, new, hist3, iterations=9,
                              normalized=False)
+    # changelog path: a brand-new node reached only as an added edge's
+    # dst has no out-edge, so the new graph has a sink
+    leaf = spark.createDataFrame([(0, 1000)], "src long, dst long")
+    with pytest.raises(ValueError, match="sink"):
+        pagerank_incremental(ring, ring.unionAll(leaf), hist3, iterations=3,
+                             normalized=False, added=leaf,
+                             removed=leaf.limit(0))
 
 
 def _brandes_reference(edge_list, sources=None):

@@ -1882,3 +1882,54 @@ def test_diff_refs_multiset_and_direction(spark, tmp_path):
     rev = [(r.op, r.k, r.s)
            for r in diff_refs(spark, t, "aud", None).collect()]
     assert sorted(rev) == [("removed", 2, "b"), ("removed", 3, "c")]
+
+
+def test_every_reader_sees_the_same_view(spark, tmp_path):
+    """plan_scan, files_table, read_snapshot and snapshot_row_count
+    read one view: after each kind of commit they name the same files,
+    and the metadata-only row count is withheld exactly while delete
+    files are in view."""
+    from pathlib import PurePath
+
+    from npm_extraction_server_spark.sources.snapshots import (
+        compact,
+        evolve_schema,
+        files_table,
+        merge_upsert,
+        mor_delete,
+        plan_scan,
+        snapshot_row_count,
+    )
+
+    t = str(tmp_path / "views")
+
+    def check(has_deletes):
+        planned = sorted(PurePath(f).name for f in plan_scan(t, [])[1])
+        rows = files_table(spark, t).collect()
+        listed = sorted(r["file_name"] for r in rows if r["kind"] == "data")
+        read = sorted(PurePath(f).name
+                      for f in read_snapshot(spark, t).inputFiles())
+        assert planned == listed
+        # the read opens the view's data files plus its delete files
+        assert read == sorted(r["file_name"] for r in rows)
+        assert any(r["kind"] != "data" for r in rows) == has_deletes
+        assert (snapshot_row_count(t) is None) == has_deletes
+
+    commit(spark.range(20).select(F.col("id"), F.lit(0).alias("v")), t,
+           partitions=2, cluster_by=["id"])
+    check(False)
+    merge_upsert(spark, t, spark.createDataFrame([(3, 1), (25, 2)],
+                                                 "id long, v int"), key="id")
+    assert snapshot_log(t)[-1]["removed_files"]
+    check(False)
+    mor_delete(spark, t, spark.createDataFrame([(4,)], "id long"), key="id")
+    check(True)
+    evolve_schema(t, rename={"v": "w"})
+    check(True)
+    compact(spark, t)
+    check(False)
+    commit(spark.createDataFrame([(30, 5)], "id long, w int"), t)
+    check(False)
+    got = {r["id"]: r["w"] for r in read_snapshot(spark, t).collect()}
+    assert len(got) == 21 and 4 not in got
+    assert got[3] == 1 and got[25] == 2 and got[30] == 5
